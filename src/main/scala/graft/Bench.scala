@@ -80,40 +80,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sf1Mode = args.headOption.contains("sf1")
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // v2 file-output commit: task output renames straight to the
-      // destination at task commit instead of a second serial job-commit
-      // rename pass — one fewer rename per written file on EVERY write job
-      // (icelite staging writes, sinks). Scale-independent: the same
-      // setting is the standard choice on HDFS-like stores; object-store
-      // deployments replace the committer wholesale anyway.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.fs.file.impl", "graft.icelite.NioLocalFs")
-      // streaming offset/commit WALs through the FileSystem API (and thus
-      // NioLocalFs above) instead of the default FileContext manager, whose
-      // local AbstractFileSystem forks a chmod per created WAL file — the
-      // same fork NioLocalFs removes from the data path. Rename-on-commit
-      // atomicity is preserved (RenameBasedFSDataOutputStream either way).
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      // checksum sidecars off: they DOUBLE the file creations per epoch
-      // (one .checksum per WAL file — a fixed per-epoch tax on any store)
-      // to guard tiny single-fsync files whose rename-based commit already
-      // fails loudly on a torn write; deployments on stores with silent
-      // corruption can re-enable per session. StreamingSpec's restart /
-      // exactly-once cases run under this exact configuration.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // fork-free local-FS permissions (see NioLocalFs scaladoc): without
-      // libhadoop every local mkdirs/create forks a chmod process
-      .config("spark.sql.extensions", "graft.icelite.connector.IceLiteExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val sfDir = if (sf1Mode) ensureSf1(spark, baseDir) else baseDir
 
     // untimed warmup — warm whichever tables exist in the target dir
@@ -139,15 +106,14 @@ object Bench {
       }
     }
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run — targeted re-timing while
-    // iterating; the sf1 mode defaults to the 5 heavies
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY")
-        // "all" runs the FULL registry even in sf1 mode (the full-registry
-        // 10x scale artifact), overriding the heavies default below
-        .filter(_.trim != "all")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .orElse(if (sf1Mode && !sys.env.get("SPARK_GRAFT_ONLY").exists(_.trim == "all"))
-          Some(sf1Heavies.toSet) else None)
+    // iterating; the sf1 mode defaults to the sf1 heavies
+    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(_.trim) match {
+      // "all" runs the FULL registry even in sf1 mode (the full-registry
+      // 10x scale artifact), overriding the heavies default
+      case Some("all") => None
+      case Some(list) => Some(list.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      case None => if (sf1Mode) Some(sf1Heavies.toSet) else None
+    }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // two full interleaved passes; per-query min. The session-level dedup

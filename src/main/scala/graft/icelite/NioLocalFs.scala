@@ -22,10 +22,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   * IceLite's layout) are not expressible via PosixFilePermission and are
   * dropped, exactly as documented here.
   *
-  * Wired up as `spark.hadoop.fs.file.impl` in the bench/verify sessions
-  * only — it is a LOCAL-FS concern; HDFS/object-store deployments never
-  * load the `file://` scheme for data paths, so nothing about this
-  * setting is tuned to the benchmark's scale. Checksum behavior is
+  * Wired up as `spark.hadoop.fs.file.impl` in [[graft.Engine]], so every
+  * engine session (mains, tools and the test suites) runs it. It is a
+  * LOCAL-FS concern; HDFS/object-store deployments never load the
+  * `file://` scheme for data paths, so nothing about this setting is tuned
+  * to the benchmark's scale. Checksum behavior is
   * IDENTICAL to the stock LocalFileSystem (this wraps the same
   * ChecksumFileSystem layer; only the raw layer's permission syscall
   * changed), so .crc sidecars and read verification stay as before.

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.SparkShims
 
 /** Isolated-session scoping for iterative query loops (CC, PageRank, BPE).
@@ -45,9 +46,13 @@ private[graft] object LoopSession {
 
   /** Re-root a materialized (localCheckpoint'd) frame into `to`. The plan
     * under such a frame is a self-contained LogicalRDD over blocks in the
-    * shared block manager, so re-rooting is free — it must NOT be used on
-    * lazy plans (they would re-resolve against the target session's
-    * catalog/conf and recompute under its width). */
-  def adopt(df: DataFrame, to: SparkSession): DataFrame =
-    SparkShims.ofRows(to, SparkShims.analyzedPlan(df))
+    * shared block manager, so re-rooting is free. A lazy plan would
+    * re-resolve against the target session's catalog/conf and recompute
+    * under its width, so it is refused. */
+  def adopt(df: DataFrame, to: SparkSession): DataFrame = {
+    val plan = SparkShims.analyzedPlan(df)
+    require(plan.isInstanceOf[LogicalRDD],
+      s"LoopSession.adopt takes only a materialized (localCheckpoint'd) frame; got ${plan.nodeName}")
+    SparkShims.ofRows(to, plan)
+  }
 }

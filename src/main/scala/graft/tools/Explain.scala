@@ -27,14 +27,7 @@ object Explain {
     val name = args(0)
     val mode = if (args.length > 1) args(1) else "formatted"
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.icelite.connector.IceLiteExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session()
     println(explain(name, spark, sfDir, mode))
     spark.stop()
   }

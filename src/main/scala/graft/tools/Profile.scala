@@ -1,10 +1,9 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Empirical per-job profiler (optimization guide §1.1/§1.5): run one
-  * registry query N times on the bench-shaped session and print, for the
+  * registry query N times on the engine session and print, for the
   * LAST run, every Spark job's wall time, task count, first-stage name and
   * the GAP since the previous job ended — the local-mode substitute for the
   * Spark UI (disabled in this sandbox), answering "where do the seconds of
@@ -22,19 +21,8 @@ object Profile {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 3) args(3) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "graft.icelite.NioLocalFs")
-      // fork-free local-FS permissions (see NioLocalFs scaladoc): without
-      // libhadoop every local mkdirs/create forks a chmod process
-      .config("spark.sql.extensions", "graft.icelite.connector.IceLiteExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = if (args.length > 3) args(3).toInt else graft.Engine.Cpus
+    val spark = graft.Engine.session(cpus)
     val fn = graft.Registry.queries(name)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()

@@ -100,14 +100,7 @@ object ScaleUp {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse(DefaultOut)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session()
     println(s"[scaleup] wrote ${ensure(spark, base, out, factor)}")
     spark.stop()
   }

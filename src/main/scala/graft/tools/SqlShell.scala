@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Minimal SQL runner against the mounted IceLite catalog — the dev-loop
   * surface for poking the DSv2 connector by hand:
   *
@@ -15,16 +13,7 @@ object SqlShell {
   def main(args: Array[String]): Unit = {
     val wh = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
       System.getProperty("java.io.tmpdir") + "/icelite_sql_wh")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.icelite", "graft.icelite.connector.IceLiteCatalog")
-      .config("spark.sql.catalog.icelite.warehouse", wh)
-      .config("spark.sql.extensions", "graft.icelite.connector.IceLiteExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Engine.session(iceliteWarehouse = Some(wh))
     args.foreach { sql =>
       println(s"icelite> $sql")
       try spark.sql(sql).show(20, truncate = false)

@@ -77,6 +77,16 @@ class GraphTextOpsSpec extends SparkSpec {
     }
   }
 
+  test("LoopSession.adopt refuses a lazy frame") {
+    val lazyDf = spark.range(10).toDF("id")
+    val e = intercept[IllegalArgumentException](
+      operators.LoopSession.adopt(lazyDf, spark.newSession()))
+    assert(e.getMessage.contains("materialized"))
+    val child = spark.newSession()
+    assert(operators.LoopSession.adopt(lazyDf.localCheckpoint(), child)
+      .sparkSession eq child)
+  }
+
   test("cube levels are mutually consistent") {
     val out = Registry.queries("cube_agg")(spark, sf).collect()
     val byGid = out.groupBy(_.getAs[Long]("gid"))

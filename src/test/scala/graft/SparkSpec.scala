@@ -10,26 +10,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.icelite.connector.IceLiteExtensions")
-      // same streaming-WAL manager as the Bench/Verify engine sessions, so
-      // StreamingSpec's restart/exactly-once cases cover the configuration
-      // the engine actually runs (FileSystem API instead of FileContext;
-      // no checksum sidecars)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // saveAsTable targets (BucketingSpec) must not land in the repo cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_spark_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine session at 4 cores; saveAsTable targets (BucketingSpec)
+    * must not land in the repo cwd. */
+  lazy val session: SparkSession = Engine.session(4, warehouseDir = Some(
+    java.nio.file.Files.createTempDirectory("graft_spark_wh").toString))
 }
