@@ -88,7 +88,7 @@ object Bench {
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings")
         .filter(t => new java.io.File(s"$sfDir/$t.parquet").exists)
-        .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+        .foreach(t => Tables.raw(spark, sfDir, t).count())
       if (new java.io.File(s"$sfDir/events.parquet").exists)
         Tables.events(spark, sfDir).count()
       val wtmp = java.nio.file.Files.createTempDirectory("bench_warm").toString

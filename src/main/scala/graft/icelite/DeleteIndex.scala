@@ -3,10 +3,13 @@ package graft.icelite
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
@@ -92,8 +95,12 @@ final case class DeleteIndex(
         parts += PuffinDv.runsForAny(new Path(del), conf.value, keySet)
       else {
         val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-        val reader = ParquetReader.builder(new GroupReadSupport(), new Path(del))
-          .withConf(conf.value).withFilter(pred).build()
+        // the InputFile builder takes its read options from this conf;
+        // builder(readSupport, path) starts from a fresh Configuration,
+        // a Hadoop XML parse per delete file
+        val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new Path(del), conf.value)) {
+          override protected def getReadSupport: ReadSupport[Group] = new GroupReadSupport()
+        }.withFilter(pred).build()
         try {
           var g = reader.read()
           while (g != null) {

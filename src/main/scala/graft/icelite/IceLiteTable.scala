@@ -3,8 +3,6 @@ package graft.icelite
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -1623,7 +1621,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     while (it.hasNext) {
       val st = it.next()
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        val r = Stats.open(st.getPath, conf)
         val (n, lo, hi) = try {
           // harvest the referenced file_path range from the footer the
           // reader already opened — the delete-manifest pruning summary
@@ -1759,7 +1757,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     while (it.hasNext) {
       val st = it.next()
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        val r = Stats.open(st.getPath, conf)
         val n = try r.getRecordCount finally r.close()
         if (n > 0)
           files += DeleteFile(st.getPath.toString, n, "eq", fields.map(_.id))
@@ -2857,7 +2855,7 @@ object IceLite {
     val src = if (lfs.exists(p)) p
       else if (lfs.exists(dest)) dest // prior attempt finished the rename
       else sys.error(s"staged file $p vanished and $dest does not exist")
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(src, conf))
+    val reader = Stats.open(src, conf)
     val (rows, stats) =
       try (reader.getRecordCount, Stats.fromFooter(reader)) finally reader.close()
     if (src != dest && !lfs.rename(p, dest)) {
@@ -3158,8 +3156,7 @@ object IceLite {
         }
       }.toMap
     def parquetRows(p: String): Long = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
+      val r = Stats.open(new Path(p), conf)
       try r.getRecordCount finally r.close()
     }
     // foreign MERGE-ON-READ deletes carry into the native delete index

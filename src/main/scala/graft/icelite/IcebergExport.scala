@@ -3,8 +3,6 @@ package graft.icelite
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import scala.jdk.CollectionConverters._
@@ -373,7 +371,7 @@ object IcebergExport {
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) parts += st
     }
     val entries = parts.toSeq.sortBy(_.getPath.toString).map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+      val r = Stats.open(st.getPath, conf)
       val rows = try r.getRecordCount finally r.close()
       val dfr = new GenericData.Record(entrySchema.getField("data_file").schema())
       dfr.put("content", 0)

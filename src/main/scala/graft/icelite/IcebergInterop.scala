@@ -396,8 +396,7 @@ object IcebergInterop {
   }
 
   private def fieldNamesByIdRaw(path: String, conf: Configuration): Map[Int, String] = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
+    val r = Stats.open(new Path(path), conf)
     val fields =
       try r.getFooter.getFileMetaData.getSchema.getFields.asScala.toList
       finally r.close()
@@ -425,8 +424,7 @@ object IcebergInterop {
     val hit = footerSchemaCache.get(path)
     if (hit != null) return hit
     driverFooterReads.incrementAndGet()
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
+    val r = Stats.open(new Path(path), conf)
     val msg = try r.getFooter.getFileMetaData.getSchema finally r.close()
     val byId = msg.getFields.asScala.toList
       .flatMap(f => Option(f.getId).map(id => id.intValue() -> f.getName)).toMap

@@ -1,6 +1,10 @@
 package graft.icelite
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -21,6 +25,14 @@ import scala.jdk.CollectionConverters._
   * skipping is purely an IO optimization, never a correctness dependence.
   */
 object Stats {
+
+  /** Open a parquet file with the caller's Hadoop conf.
+    * `ParquetFileReader.open(InputFile)` alone builds its read options
+    * from a fresh `Configuration`, which re-parses the Hadoop default XML
+    * on every open. */
+  def open(p: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf, p).build())
 
   /** Harvest per-column min/max from an open footer; keys are field ids
     * (physical column names are `f<id>`). */

@@ -2,7 +2,7 @@ package graft.icelite.connector
 
 import graft.icelite.IceLiteTable
 import org.apache.spark.sql.{Column, Row, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, CommonExpressionRef, EqualTo, Expression, RuntimeReplaceable, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -140,11 +140,22 @@ object IceLiteDmlRule extends Rule[LogicalPlan] {
     }
     require(!noSub.exists(_.isInstanceOf[SubqueryExpression]),
       s"this subquery shape is unsupported in IceLite DML conditions: ${e.sql}")
+    // Spark 4 resolves BETWEEN into a RuntimeReplaceable whose replacement
+    // is a `With` binding the input once; its common-expression nodes
+    // cannot be re-resolved after the rebinding below. Substitute such
+    // replacements and inline each With, as the optimizer would later
+    val plain = noSub.transformDown {
+      case r: RuntimeReplaceable if r.replacement.exists(_.isInstanceOf[With]) => r.replacement
+    }.transformUp {
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transform { case r: CommonExpressionRef => defs(r.id) }
+    }
     // re-bind attributes by NAME (they resolve against the table's own
     // scan) and wrap the tree directly — NOT a .sql text round-trip,
     // which would render a materialized IN-set of up to 10^6 literals
     // into a multi-megabyte string and feed it back through the parser
-    SparkShims.columnOf(noSub.transform {
+    SparkShims.columnOf(plain.transform {
       case a: AttributeReference =>
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
     })

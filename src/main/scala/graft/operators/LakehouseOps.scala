@@ -1279,7 +1279,7 @@ object LakehouseOps {
     "icelite_timestamp_ns",
     (s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = Tables.raw(s, dir, "events")
       val ns = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => col("ts")
         case _ => unix_micros(col("ts").cast("timestamp")) * 1000L

@@ -339,7 +339,7 @@ object Relational {
     "timestamp_ns",
     (s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = Tables.raw(s, dir, "events")
       val micros = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => expr("ts div 1000")
         case _ => expr("unix_micros(cast(ts as timestamp))")

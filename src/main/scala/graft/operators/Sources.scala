@@ -4,8 +4,6 @@ import java.nio.file.Files
 
 import graft.{Exact, QueryDef, Tables}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -126,7 +124,7 @@ object Sources {
           fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
         else Seq(p)
       val rows = files.flatMap { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val r = graft.icelite.Stats.open(f, conf)
         try {
           r.getFooter.getBlocks.asScala.flatMap(b =>
             b.getColumns.asScala.map(c =>

@@ -49,6 +49,26 @@ object SparkShims {
   def waitForListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver exactly as Spark's schema inference reads it: the same footer
+    * reader (row groups skipped) and `readSchemaFromFooter` with a
+    * converter built from the session's SQLConf. */
+  def parquetFooterSchema(spark: SparkSession, file: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val meta = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Whether a file index skips this name (`.`/`_` prefixes other than
+    * the parquet summary files, in-flight copies). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** A SERIALIZABLE parquet row reader over Spark's own (vectorized)
     * parquet machinery: build once on the driver for a given physical
     * read schema, ship to executors, call with (path, fileLength).
