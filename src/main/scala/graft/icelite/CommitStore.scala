@@ -46,7 +46,9 @@ trait CommitStore {
 final class HadoopCommitStore(f: FileSystem) extends CommitStore {
   override def readString(p: Path): String = {
     val in = f.open(p)
-    try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    // UTF-8, as every writer encodes: the platform default would fail on
+    // (or garble) non-ASCII string stats under a non-UTF-8 locale
+    try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString finally in.close()
   }
   // create(overwrite = false) is NOT atomic on the local filesystem — it
   // is an exists() check followed by an open, so two racing writers can

@@ -1069,10 +1069,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * `firstRowId + row position` / the file's own sequence. Files
     * written before lineage tracking surface null `_row_id`.
     *
-    * Scale shape: the per-file constants ride a broadcast hash join on
-    * the scan's `_metadata.file_path` — O(data files) driver metadata,
-    * the 100 TB data side neither shuffles nor leaves whole-stage
-    * codegen. */
+    * Scale shape: the per-file constants ride a broadcast variable that a
+    * codegen'd lookup expression ([[graft.functions.FileLineage]]) probes
+    * with the scan's `_metadata.file_path` — O(data files) driver
+    * metadata, no Spark job to ship it, and the 100 TB data side neither
+    * joins, shuffles nor leaves whole-stage codegen. */
   def readRowLineage(): DataFrame = {
     val m = meta
     m.currentSnapshot match {
@@ -1118,17 +1119,19 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       snapshotSchema = snapshotSchema, rowLineage = true)
     // all spellings of each path (raw vs file: URI forms), so the
     // probe is spelling-insensitive like the delete index
-    val lookup = spark.createDataFrame(snap.dataFiles.flatMap { f =>
-      val n = IceLite.normPath(f.path)
-      Seq(f.path, n, s"file:$n", s"file://$n").distinct
-        .map(s => (s, f.firstRowId.getOrElse(-1L), f.seq))
-    }).toDF("_lin_path", "_lin_frid", "_lin_seq")
-    df.join(broadcast(lookup), df("_file") === col("_lin_path"), "left")
-      .withColumn(IceLite.RowIdCol,
-        coalesce(col(IceLite.RowIdCol),
-          when(col("_lin_frid") >= 0, col("_lin_frid") + col("_pos"))))
-      .withColumn(IceLite.LastUpdatedCol,
-        coalesce(col(IceLite.LastUpdatedCol), col("_lin_seq")))
+    val index = spark.sparkContext.broadcast(new graft.functions.LineageIndex(
+      snap.dataFiles.flatMap { f =>
+        val n = IceLite.normPath(f.path)
+        val entry = Array(f.firstRowId.getOrElse(-1L), f.seq)
+        Seq(f.path, n, s"file:$n", s"file://$n").distinct.map(_ -> entry)
+      }.toMap))
+    def lineageOf(slot: Int): Column =
+      org.apache.spark.sql.graft.SparkShims.columnOf(graft.functions.FileLineage(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_file"), index, slot))
+    df.withColumn(IceLite.RowIdCol, coalesce(col(IceLite.RowIdCol),
+        lineageOf(graft.functions.LineageIndex.FirstRowId) + col("_pos")))
+      .withColumn(IceLite.LastUpdatedCol, coalesce(col(IceLite.LastUpdatedCol),
+        lineageOf(graft.functions.LineageIndex.Sequence)))
       .select(outCols: _*)
   }
 
@@ -1839,11 +1842,20 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * matching >1 source rows is an error. CoW: rewrites only files holding
     * matched rows; inserts append.
     *
-    * Job shape (kept lean — each scan runs once): the aligned source and
-    * the target's (key, _file) projection are cached; the duplicate-source
-    * check is one small agg over the cached source; touched-file discovery
-    * reuses both caches. At 100 TB the target cache is two columns wide
-    * (key + file path), the column-pruned shape, and spills to disk. */
+    * Job shape: the plan follows the source's form. A source whose rows
+    * already sit on the driver (its optimized plan is a local relation —
+    * a SQL `USING view` over local rows, `Seq.toDF` — within
+    * `spark.sql.autoBroadcastJoinThreshold`) is collected with no job and
+    * planned on the driver: the duplicate check, the key range and the
+    * insert set need no job, discovery is one exchange-free key-filtered
+    * scan, and the rewrite joins the hit files with the local source —
+    * four jobs for a small MERGE into a partitioned table, nothing
+    * cached. Any other source keeps the distributed plan: the source and
+    * the target's (key, _file)
+    * projection are cached (at 100 TB two columns wide, spilling to
+    * disk), one small agg over the cached source serves the duplicate
+    * check and the key range, and discovery and the insert anti-join
+    * reuse both caches. The commit note names the plan that ran. */
   def merge(source: DataFrame, key: String): Unit = { mergeImpl(source, key, None); () }
 
   /** Idempotent streaming upsert: MERGE whose commit also records
@@ -1876,11 +1888,14 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * Clauses apply first-match-wins per row (ANSI MERGE); a matched row no
     * clause applies to is kept unchanged.
     *
-    * Scale shape (same as the star-action path): one semi-join finds the
-    * files holding matched rows, only those are rewritten (CoW); untouched
-    * files carry over by reference. WHEN NOT MATCHED BY SOURCE inspects
-    * every target row, so it rewrites all files — that is its semantics,
-    * not an implementation shortcut. */
+    * Scale shape (same as the star-action path, driver or distributed by
+    * source form — see [[merge]]): discovery finds the files holding
+    * matched rows, only those are rewritten (CoW); untouched files carry
+    * over by reference. WHEN NOT MATCHED BY SOURCE inspects every target
+    * row, so it rewrites all files — that is its semantics, not an
+    * implementation shortcut. A MERGE with only NOT MATCHED clauses
+    * changes no target row, so it rewrites no file and commits the
+    * inserts alone. */
   def mergeClauses(source: DataFrame, targetKey: String, sourceKey: String,
       matched: Seq[IceLite.MergeClause], notMatched: Seq[IceLite.MergeInsert],
       notMatchedBySource: Seq[IceLite.MergeClause] = Seq()): Unit = {
@@ -1902,7 +1917,6 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       batchId.fold(nm)(b => nm.copy(properties = nm.properties + (bkey -> b.toString)))
     val sch = m.currentSchema
     val srcPrefixed = source.select(source.columns.map(c => col(c).as(s"_s_$c")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val sKey = col(s"_s_$sourceKey")
     // `lin = true` appends the two V3 lineage columns (null when the
     // frame lacks them — inserts inherit fresh ids from the file block)
@@ -1933,110 +1947,211 @@ class IceLiteTable(val spark: SparkSession, val location: String,
           }.as(f.name)
         }: _*))
       }
-    try {
-      // ONE pass over the persisted source serves both the ANSI
-      // cardinality check (a target row matching >1 source rows is an
-      // error whenever a matched clause could fire) and the discovery
-      // key range — r10 ran these as two separate jobs, a measurable
-      // fixed overhead per MERGE
-      val srcAgg = srcPrefixed.groupBy(sKey.as("_k")).agg(count(lit(1)).as("_c"))
-        .agg(max(col("_c")),
-          org.apache.spark.sql.functions.min(col("_k")).as("_kmin"),
-          org.apache.spark.sql.functions.max(col("_k")).as("_kmax"))
-        .head
-      if (matched.nonEmpty && !srcAgg.isNullAt(0) && srcAgg.getLong(0) > 1)
-        sys.error(s"MERGE: duplicate source rows on key $sourceKey")
-      m.currentSnapshot match {
-        case None => // empty target: only insert clauses can fire
-          val rows = insertRows(srcPrefixed).map(aligned(_))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(sch.fields.map(f => StructField(f.name, DataType.fromDDL(f.sparkDdl))))))
-          val newFiles = writeFiles(rows, m, m.currentSchemaId, m.defaultSpec)
-          commitFrom(v, withBatch(newSnapshot(m, "merge", newFiles, Seq())),
-            s"merge into empty table: ${newFiles.map(_.rows).sum} inserts")
-        case Some(snap) =>
-          // Iceberg-style dynamic discovery pruning: a matched target row's
-          // key necessarily lies inside [min, max] of the SOURCE keys (one
-          // tiny agg over the persisted source — the small side of a MERGE
-          // by construction), and a target row OUTSIDE that range can
-          // neither match a source row nor change the unmatched-source
-          // anti-join. So on a key-sorted/clustered table a narrow-band
-          // MERGE scans O(matching files), not O(table), during discovery.
-          // NOT MATCHED BY SOURCE inspects every target row — no pruning.
-          val keyRange: Seq[Stats.StatFilter] =
-            if (notMatchedBySource.nonEmpty || srcAgg.isNullAt(1)) Seq()
-            else IceLite.statFiltersFromCondition(
-              col(targetKey) >= lit(srcAgg.get(1)) && col(targetKey) <= lit(srcAgg.get(2)))
-          val tgt = scanSnapshot(m, snap, lineage = true, _ => true, keyRange)
-          val tgtKeys = tgt.select(col(targetKey), col("_file")).persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            // CoW discovery: only files holding matched rows are rewritten —
-            // unless NOT MATCHED BY SOURCE clauses exist, which by
-            // definition inspect every target row
-            val touched =
-              if (notMatchedBySource.nonEmpty) snap.dataFiles.map(f => normPath(f.path)).toSet
-              else tgtKeys.join(srcPrefixed.select(sKey.as("_sk")), col(targetKey) === col("_sk"), "left_semi")
-                .select("_file").distinct().collect().map(r => normPath(r.getString(0))).toSet
-            // pruned candidates when the key range scoped discovery —
-            // forcing snap.dataFiles would undo chunk-scoped CoW (the
-            // NOT MATCHED BY SOURCE branch reads every file by semantics)
-            val hit = (if (notMatchedBySource.nonEmpty) snap.dataFiles
-                       else snap.files.candidates(m, _ => true, keyRange))
-              .filter(f => touched.contains(normPath(f.path)))
-            // V3 row lineage rides the rewrite: kept rows keep both
-            // columns, updated rows keep `_row_id` (the row's identity
-            // survives its update) and re-stamp `_last_updated_sequence_
-            // number` via null-inheritance, inserts start fresh
-            val hitDf = readRowLineageAt(m, snap.copy(dataFiles = hit))
-            val joined = hitDf.join(srcPrefixed, col(targetKey) === sKey, "left_outer")
-            val matchedFlag = sKey.isNotNull // equi-join: non-null iff matched
-            // first-match-wins clause index per row; matched clauses count
-            // from 0, not-matched-by-source from 1000, -1 = keep unchanged
-            val mAct = matched.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), els) =>
-              when(cl.condition.getOrElse(lit(true)), lit(i)).otherwise(els) }
-            val nAct = notMatchedBySource.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), els) =>
-              when(cl.condition.getOrElse(lit(true)), lit(1000 + i)).otherwise(els) }
-            val withAct = joined.withColumn("_act",
-              when(matchedFlag, mAct).otherwise(nAct))
-            val delIdx: Seq[Int] =
-              matched.zipWithIndex.collect { case (_: IceLite.MergeDelete, i) => i } ++
-                notMatchedBySource.zipWithIndex.collect { case (_: IceLite.MergeDelete, i) => 1000 + i }
-            val kept = if (delIdx.isEmpty) withAct
-              else withAct.filter(!col("_act").isInCollection(delIdx))
-            val updates: Seq[(IceLite.MergeUpdate, Int)] =
-              matched.zipWithIndex.collect { case (u: IceLite.MergeUpdate, i) => (u, i) } ++
-                notMatchedBySource.zipWithIndex.collect { case (u: IceLite.MergeUpdate, i) => (u, 1000 + i) }
-            // assignment values convert at the point of use (convertTo):
-            // a TIMESTAMP assigned to a TIMESTAMP_NS field must land as
-            // nanos BEFORE the when() merges it with the BIGINT target
-            // column (type coercion would otherwise corrupt or fail)
-            val mergedTouched = kept.select(sch.fields.map { f =>
-              updates.foldRight(col(f.name)) { case ((u, i), els) =>
-                u.assignments.get(f.name)
-                  .map(a => when(col("_act") === i,
-                    convertTo(a, f, resolvedType(kept, a))).otherwise(els)).getOrElse(els)
-              }.as(f.name)
-            } ++ Seq(col(IceLite.RowIdCol),
-              when(col("_act") === -1, col(IceLite.LastUpdatedCol))
-                .otherwise(lit(null)).as(IceLite.LastUpdatedCol)): _*)
-            // source rows matching NO target row anywhere → insert candidates
-            val srcNoMatch = srcPrefixed.join(
-              tgtKeys.select(col(targetKey).as("_tk")), sKey === col("_tk"), "left_anti")
-            val outRows = insertRows(srcNoMatch)
-              .map(ins => aligned(mergedTouched, lin = true)
-                .unionByName(aligned(ins, lin = true)))
-              .getOrElse(aligned(mergedTouched, lin = true))
-            val newFiles = writeFiles(outRows, m, m.currentSchemaId, m.defaultSpec,
-              extraPhysCols = Seq(IceLite.RowIdCol, IceLite.LastUpdatedCol))
-              .map(_.copy(materializedLineage = true))
-            commitCowRewrite(v, m, snap, touched, newFiles, keyRange, "merge",
-              s"merge rewrote ${hit.size} files", withBatch)
-          } finally tgtKeys.unpersist()
+    // the ANSI cardinality check (a target row matching >1 source rows is
+    // an error whenever a matched clause could fire); null keys count as
+    // one group
+    def rejectDuplicates(found: Boolean): Unit =
+      if (matched.nonEmpty && found) sys.error(s"MERGE: duplicate source rows on key $sourceKey")
+    // an insert-only MERGE changes no target row: it replaces no file
+    val insertOnly = matched.isEmpty && notMatchedBySource.isEmpty
+    // Iceberg-style dynamic discovery pruning: a matched target row's key
+    // necessarily lies inside [min, max] of the SOURCE keys (the small
+    // side of a MERGE by construction), and a target row OUTSIDE that
+    // range can neither match a source row nor change the unmatched-source
+    // insert set. So on a key-sorted/clustered table a narrow-band MERGE
+    // scans O(matching files), not O(table), during discovery. NOT
+    // MATCHED BY SOURCE inspects every target row — no pruning.
+    def keyRangeOf(bounds: Option[(Any, Any)]): Seq[Stats.StatFilter] =
+      bounds.filter(_ => notMatchedBySource.isEmpty).toSeq.flatMap { case (lo, hi) =>
+        IceLite.statFiltersFromCondition(col(targetKey) >= lit(lo) && col(targetKey) <= lit(hi))
       }
-      autoMaintain()
-      true
-    } finally srcPrefixed.unpersist()
+    def mergeIntoEmpty(src: DataFrame): Unit = { // only insert clauses can fire
+      val rows = insertRows(src).map(aligned(_))
+        .getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(sch.fields.map(f => StructField(f.name, DataType.fromDDL(f.sparkDdl))))))
+      val newFiles = writeFiles(rows, m, m.currentSchemaId, m.defaultSpec)
+      commitFrom(v, withBatch(newSnapshot(m, "merge", newFiles, Seq())),
+        s"merge into empty table: ${newFiles.map(_.rows).sum} inserts")
+    }
+    // rewrite the `touched` files joined with `src`, add the insert rows,
+    // commit as one validated copy-on-write rewrite
+    def rewriteAndCommit(snap: Snapshot, touched: Set[String], src: DataFrame,
+        inserts: Option[DataFrame], keyRange: Seq[Stats.StatFilter], plan: String): Unit = {
+      // pruned candidates when the key range scoped discovery — forcing
+      // snap.dataFiles would undo chunk-scoped CoW (the NOT MATCHED BY
+      // SOURCE branch reads every file by semantics)
+      val hit =
+        if (touched.isEmpty) Seq()
+        else (if (notMatchedBySource.nonEmpty) snap.dataFiles
+              else snap.files.candidates(m, _ => true, keyRange))
+          .filter(f => touched.contains(normPath(f.path)))
+      val rewritten = if (hit.isEmpty) None else {
+        // V3 row lineage rides the rewrite: kept rows keep both columns,
+        // updated rows keep `_row_id` (the row's identity survives its
+        // update) and re-stamp `_last_updated_sequence_number` via
+        // null-inheritance, inserts start fresh
+        val hitDf = readRowLineageAt(m, snap.copy(dataFiles = hit))
+        val joined = hitDf.join(src, col(targetKey) === sKey, "left_outer")
+        val matchedFlag = sKey.isNotNull // equi-join: non-null iff matched
+        // first-match-wins clause index per row; matched clauses count
+        // from 0, not-matched-by-source from 1000, -1 = keep unchanged
+        val mAct = matched.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), els) =>
+          when(cl.condition.getOrElse(lit(true)), lit(i)).otherwise(els) }
+        val nAct = notMatchedBySource.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), els) =>
+          when(cl.condition.getOrElse(lit(true)), lit(1000 + i)).otherwise(els) }
+        val withAct = joined.withColumn("_act",
+          when(matchedFlag, mAct).otherwise(nAct))
+        val delIdx: Seq[Int] =
+          matched.zipWithIndex.collect { case (_: IceLite.MergeDelete, i) => i } ++
+            notMatchedBySource.zipWithIndex.collect { case (_: IceLite.MergeDelete, i) => 1000 + i }
+        val kept = if (delIdx.isEmpty) withAct
+          else withAct.filter(!col("_act").isInCollection(delIdx))
+        val updates: Seq[(IceLite.MergeUpdate, Int)] =
+          matched.zipWithIndex.collect { case (u: IceLite.MergeUpdate, i) => (u, i) } ++
+            notMatchedBySource.zipWithIndex.collect { case (u: IceLite.MergeUpdate, i) => (u, 1000 + i) }
+        // assignment values convert at the point of use (convertTo):
+        // a TIMESTAMP assigned to a TIMESTAMP_NS field must land as
+        // nanos BEFORE the when() merges it with the BIGINT target
+        // column (type coercion would otherwise corrupt or fail)
+        Some(aligned(kept.select(sch.fields.map { f =>
+          updates.foldRight(col(f.name)) { case ((u, i), els) =>
+            u.assignments.get(f.name)
+              .map(a => when(col("_act") === i,
+                convertTo(a, f, resolvedType(kept, a))).otherwise(els)).getOrElse(els)
+          }.as(f.name)
+        } ++ Seq(col(IceLite.RowIdCol),
+          when(col("_act") === -1, col(IceLite.LastUpdatedCol))
+            .otherwise(lit(null)).as(IceLite.LastUpdatedCol)): _*), lin = true))
+      }
+      val newFiles = (rewritten ++ inserts.map(aligned(_, lin = true)))
+        .reduceOption(_ unionByName _)
+        .fold(Seq.empty[DataFile])(out =>
+          writeFiles(out, m, m.currentSchemaId, m.defaultSpec,
+            extraPhysCols = Seq(IceLite.RowIdCol, IceLite.LastUpdatedCol))
+            .map(_.copy(materializedLineage = true)))
+      commitCowRewrite(v, m, snap, touched, newFiles, keyRange, "merge",
+        s"merge rewrote ${hit.size} files ($plan plan)", withBatch)
+    }
+    mergeKeyTypeOnDriver(srcPrefixed, sKey, sch, targetKey) match {
+      case Some(keyType) =>
+        // driver plan: the source's local rows are collected (no job),
+        // with the key cast to the type the join compares in
+        val keyCol = "_merge_key"
+        val keyed = srcPrefixed.withColumn(keyCol, sKey.cast(keyType))
+        val rows = keyed.collect()
+        val ki = keyed.schema.fieldIndex(keyCol)
+        // one partition: a local relation scans in up to one partition per
+        // core, and the insert rows would land as that many tiny files
+        def local(rs: Array[org.apache.spark.sql.Row]): DataFrame = spark
+          .createDataFrame(java.util.Arrays.asList(rs: _*), keyed.schema).drop(keyCol)
+          .coalesce(1)
+        val keys = rows.map(_.get(ki))
+        rejectDuplicates(keys.distinct.length < keys.length)
+        val present = keys.filter(_ != null).distinct
+        // the key range in Spark's order: strings compare as UTF-8 bytes,
+        // which differs from Java's UTF-16 order past the BMP
+        val ord: Ordering[Any] = keyType match {
+          case _: org.apache.spark.sql.types.StringType => (a, b) =>
+            org.apache.spark.unsafe.types.UTF8String.fromString(a.toString)
+              .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.toString))
+          case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+        }
+        m.currentSnapshot match {
+          case None => mergeIntoEmpty(local(rows))
+          case Some(snap) =>
+            val keyRange = keyRangeOf(
+              if (present.isEmpty) None else Some((present.min(ord), present.max(ord))))
+            // discovery: one exchange-free scan of the key-range-pruned
+            // candidates (merge-on-read deletes applied) for the target
+            // rows whose key is a source key → (file, key) pairs. Needed
+            // for the touched files and for the insert set.
+            val needPairs = present.nonEmpty &&
+              (notMatched.nonEmpty || (!insertOnly && notMatchedBySource.isEmpty))
+            val tKey = col(targetKey).cast(keyType)
+            val pairs =
+              if (!needPairs) Array.empty[org.apache.spark.sql.Row]
+              else scanSnapshot(m, snap, lineage = true, _ => true, keyRange)
+                .filter(tKey.isin(present.toIndexedSeq: _*))
+                .select(col("_file"), tKey).collect()
+            val touched =
+              if (insertOnly) Set[String]()
+              else if (notMatchedBySource.nonEmpty) snap.dataFiles.map(f => normPath(f.path)).toSet
+              else pairs.map(r => normPath(r.getString(0))).toSet
+            // source rows with a null key or matching NO target row → insert candidates
+            val matchedKeys = pairs.map(_.get(1)).toSet
+            val unmatched = rows.filter(r => r.isNullAt(ki) || !matchedKeys.contains(r.get(ki)))
+            val inserts = if (unmatched.isEmpty) None else insertRows(local(unmatched))
+            rewriteAndCommit(snap, touched, local(rows), inserts, keyRange, "driver")
+        }
+      case None =>
+        val src = srcPrefixed.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          // ONE pass over the persisted source serves both the duplicate
+          // check and the discovery key range
+          val srcAgg = src.groupBy(sKey.as("_k")).agg(count(lit(1)).as("_c"))
+            .agg(max(col("_c")),
+              org.apache.spark.sql.functions.min(col("_k")).as("_kmin"),
+              org.apache.spark.sql.functions.max(col("_k")).as("_kmax"))
+            .head
+          rejectDuplicates(!srcAgg.isNullAt(0) && srcAgg.getLong(0) > 1)
+          m.currentSnapshot match {
+            case None => mergeIntoEmpty(src)
+            case Some(snap) =>
+              val keyRange = keyRangeOf(
+                if (srcAgg.isNullAt(1)) None else Some((srcAgg.get(1), srcAgg.get(2))))
+              val tgtKeys = scanSnapshot(m, snap, lineage = true, _ => true, keyRange)
+                .select(col(targetKey), col("_file")).persist(StorageLevel.MEMORY_AND_DISK)
+              try {
+                val touched =
+                  if (insertOnly) Set[String]()
+                  else if (notMatchedBySource.nonEmpty) snap.dataFiles.map(f => normPath(f.path)).toSet
+                  else tgtKeys.join(src.select(sKey.as("_sk")), col(targetKey) === col("_sk"), "left_semi")
+                    .select("_file").distinct().collect().map(r => normPath(r.getString(0))).toSet
+                // source rows matching NO target row anywhere → insert candidates
+                val inserts = insertRows(src.join(
+                  tgtKeys.select(col(targetKey).as("_tk")), sKey === col("_tk"), "left_anti"))
+                rewriteAndCommit(snap, touched, src, inserts, keyRange, "distributed")
+              } finally tgtKeys.unpersist()
+          }
+        } finally src.unpersist()
+    }
+    autoMaintain()
+    true
+  }
+
+  /** The type a MERGE's key equality compares in, when the MERGE may be
+    * planned on the driver; None selects the distributed plan. The
+    * source's optimized plan must be a local relation, so collecting it
+    * runs no job and copies rows the driver already holds, and its size
+    * estimate must be within `spark.sql.autoBroadcastJoinThreshold` (-1
+    * turns the driver plan off, as it turns off broadcast joins). A file
+    * or computed source always takes the distributed plan, however small:
+    * the driver plan is measured only on local rows. The compared type
+    * must have exact value equality and ordering on the JVM: integral,
+    * decimal, date, timestamp and binary-collated string keys. The type comes from analyzing the
+    * join's own key equality, so the driver compares exactly what the
+    * join would. */
+  private def mergeKeyTypeOnDriver(src: DataFrame, sKey: Column, sch: TableSchema,
+      targetKey: String): Option[DataType] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.types._
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val field = scala.util.Try(sch.fieldByName(targetKey)).toOption
+    val plan = src.queryExecution.optimizedPlan
+    if (field.isEmpty || threshold < 0 || !plan.isInstanceOf[LocalRelation] ||
+        plan.stats.sizeInBytes > BigInt(threshold)) None
+    else (src.select((lit(null).cast(field.get.sparkDdl) === sKey).as("_eq"))
+        .queryExecution.analyzed match {
+      case Project(Seq(Alias(EqualTo(l, _), _)), _) => Some(l.dataType)
+      case _ => None
+    }).filter {
+      case ByteType | ShortType | IntegerType | LongType | _: DecimalType |
+          DateType | TimestampType | TimestampNTZType => true
+      case s: StringType => s == StringType // default (UTF8_BINARY) collation
+      case _ => false
+    }
   }
 
   /** INSERT OVERWRITE: replace the whole table content in one snapshot.

@@ -232,47 +232,63 @@ class DataSkippingSpec extends SparkSpec {
       df.filter(col("x").between(10, 17)).count())
   }
 
+  /** Every live row with its V3 lineage, in key order. */
+  private def lineageRows(t: graft.icelite.IceLiteTable) =
+    t.readRowLineage().collect().toSeq.sortBy(_.getLong(0))
+
   test("MERGE discovery prunes target files by the source key range") {
-    val t = mkTable("dmlmerge")
-    // source keys confined to one file's id range (100–199): dynamic
-    // pruning scans ONE 100-row file during discovery — unpruned
-    // discovery alone reads all 400 rows
-    val src = spark.range(150, 155).toDF("id")
-      .withColumn("name", concat(lit("merged"), col("id")))
-      .withColumn("amount", lit(-5.0))
-    // deterministic pruning assertion: maxPlannedFiles is driver-side
-    // metadata arithmetic (no async task-metric listeners) — every scan
-    // the MERGE runs (discovery AND the hit rewrite) must plan only the
-    // single file whose stats admit the source key range [150, 154]
-    val total = t.meta.currentSnapshot.get.dataFiles.size
-    assert(total == 4, s"fixture expects 4 files, got $total")
-    t.maxPlannedFiles.set(0)
-    t.merge(src, "id")
-    val planned = t.maxPlannedFiles.get
-    assert(planned == 1,
-      s"merge planned $planned of $total files — discovery is not pruned " +
-        "by the source key range")
-    val note = t.meta.metadataLog.last.note
-    assert(note.contains("rewrote 1 files"), s"unexpected commit note: $note")
-    // semantics unchanged: 5 updates in place, no inserts
-    assert(t.read().count() == 400)
-    assert(t.read().filter(col("amount") === -5.0).count() == 5)
-    assert(t.read().filter(col("name") === "merged152").count() == 1)
+    val (driver, distributed) = onBothMergePlans { plan =>
+      val t = mkTable(s"dmlmerge_$plan")
+      // source keys confined to one file's id range (100–199): dynamic
+      // pruning scans ONE 100-row file during discovery — unpruned
+      // discovery alone reads all 400 rows. Local rows, so the default
+      // threshold plans the MERGE on the driver.
+      val src = (150L until 155L).toDF("id")
+        .withColumn("name", concat(lit("merged"), col("id")))
+        .withColumn("amount", lit(-5.0))
+      // deterministic pruning assertion: maxPlannedFiles is driver-side
+      // metadata arithmetic (no async task-metric listeners) — every scan
+      // the MERGE runs (discovery AND the hit rewrite) must plan only the
+      // single file whose stats admit the source key range [150, 154]
+      val total = t.meta.currentSnapshot.get.dataFiles.size
+      assert(total == 4, s"fixture expects 4 files, got $total")
+      t.maxPlannedFiles.set(0)
+      t.merge(src, "id")
+      val planned = t.maxPlannedFiles.get
+      assert(planned == 1,
+        s"$plan plan: merge planned $planned of $total files — discovery is not pruned " +
+          "by the source key range")
+      val note = t.meta.metadataLog.last.note
+      assert(note.contains("rewrote 1 files") && note.contains(s"($plan plan)"),
+        s"unexpected commit note: $note")
+      // semantics unchanged: 5 updates in place, no inserts
+      assert(t.read().count() == 400)
+      assert(t.read().filter(col("amount") === -5.0).count() == 5)
+      assert(t.read().filter(col("name") === "merged152").count() == 1)
+      (planned, lineageRows(t))
+    }
+    assert(driver == distributed, "both MERGE plans plan and produce the same")
   }
 
   test("MERGE with out-of-range insert keys still inserts (pruning misses nothing)") {
-    val t = mkTable("dmlmergeins")
-    // keys 150–154 update file 1; keys 900–901 match nothing → inserts.
-    // the wide source range disables most pruning — correctness must not
-    // depend on it
-    val src = spark.range(150, 155).toDF("id")
-      .union(spark.range(900, 902).toDF("id"))
-      .withColumn("name", concat(lit("m"), col("id")))
-      .withColumn("amount", lit(-7.0))
-    t.merge(src, "id")
-    assert(t.read().count() == 402)
-    assert(t.read().filter(col("amount") === -7.0).count() == 7)
-    assert(t.read().filter(col("id") === 900L).count() == 1)
+    val (driver, distributed) = onBothMergePlans { plan =>
+      val t = mkTable(s"dmlmergeins_$plan")
+      // keys 150–154 update file 1; keys 900–901 match nothing → inserts.
+      // the wide source range disables most pruning — correctness must not
+      // depend on it
+      val src = ((150L until 155L) ++ (900L until 902L)).toDF("id")
+        .withColumn("name", concat(lit("m"), col("id")))
+        .withColumn("amount", lit(-7.0))
+      t.maxPlannedFiles.set(0)
+      t.merge(src, "id")
+      val planned = t.maxPlannedFiles.get
+      assert(t.meta.metadataLog.last.note.contains(s"($plan plan)"), t.meta.metadataLog.last.note)
+      assert(t.read().count() == 402)
+      assert(t.read().filter(col("amount") === -7.0).count() == 7)
+      assert(t.read().filter(col("id") === 900L).count() == 1)
+      (planned, lineageRows(t))
+    }
+    assert(driver == distributed, "both MERGE plans plan and produce the same")
   }
 
   test("pruning is conservative after schema evolution (no stats → keep)") {

@@ -104,23 +104,27 @@ class RowLineageSpec extends SparkSpec {
   }
 
   test("merge keeps target identity: updated rows keep ids + re-stamp, inserts get fresh ids") {
-    val t = IceLite.createFrom(spark, scratch("merge"),
-      Seq((0L, "x")).toDF("id", "v"))
-    t.append((0L until 10L).map(i => (i, s"a$i")).toDF("id", "v").coalesce(1))
-    val before = lineage(t)
-    // updates ids 0/5, inserts ids 100/101
-    t.merge(Seq((0L, "upd0"), (5L, "upd5"), (100L, "new0"), (101L, "new1"))
-      .toDF("id", "v"), "id")
-    val after = lineage(t)
-    Seq(0L, 5L).foreach { i =>
-      assert(after(i)._1 == before(i)._1, s"updated row $i keeps its _row_id")
-      assert(after(i)._2 > before(i)._2, s"updated row $i re-stamps last-updated")
+    val (driver, distributed) = onBothMergePlans { plan =>
+      val t = IceLite.createFrom(spark, scratch(s"merge_$plan"),
+        Seq((0L, "x")).toDF("id", "v"))
+      t.append((0L until 10L).map(i => (i, s"a$i")).toDF("id", "v").coalesce(1))
+      val before = lineage(t)
+      // updates ids 0/5, inserts ids 100/101
+      t.merge(Seq((0L, "upd0"), (5L, "upd5"), (100L, "new0"), (101L, "new1"))
+        .toDF("id", "v"), "id")
+      val after = lineage(t)
+      Seq(0L, 5L).foreach { i =>
+        assert(after(i)._1 == before(i)._1, s"updated row $i keeps its _row_id")
+        assert(after(i)._2 > before(i)._2, s"updated row $i re-stamps last-updated")
+      }
+      (1L until 10L).filter(_ != 5L).foreach(i =>
+        assert(after(i) == before(i), s"untouched row $i unchanged"))
+      val freshIds = Seq(100L, 101L).map(after(_)._1)
+      assert(freshIds.forall(_ >= 10L), "inserted rows draw fresh ids past the old blocks")
+      assert(freshIds.distinct.size == 2)
+      (t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap, after)
     }
-    (1L until 10L).filter(_ != 5L).foreach(i =>
-      assert(after(i) == before(i), s"untouched row $i unchanged"))
-    val freshIds = Seq(100L, 101L).map(after(_)._1)
-    assert(freshIds.forall(_ >= 10L), "inserted rows draw fresh ids past the old blocks")
-    assert(freshIds.distinct.size == 2)
+    assert(driver == distributed, "both MERGE plans give the same rows and lineage")
   }
 
   test("MoR update re-appends updated copies that KEEP their _row_id") {

@@ -7,6 +7,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` under both IceLite MERGE plans and returns both results,
+    * driver plan first: at the default broadcast threshold a source of
+    * local rows is planned on the driver, and `spark.sql.autoBroadcastJoinThreshold=-1`
+    * forces the distributed plan. `body` gets the plan's name ("driver" or
+    * "distributed", as the MERGE commit note spells it) to keep its tables
+    * apart. */
+  def onBothMergePlans[T](body: String => T): (T, T) = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val driver = body("driver")
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try (driver, body("distributed"))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {

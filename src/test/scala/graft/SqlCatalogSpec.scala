@@ -185,27 +185,37 @@ class SqlCatalogSpec extends SparkSpec {
 
   test("SQL MERGE general clauses: differing key names, conditions, NOT MATCHED BY SOURCE") {
     initCatalog()
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS ilsql.mrg2")
-    spark.sql("CREATE TABLE ilsql.mrg2.t (id BIGINT, v DOUBLE, tag STRING)")
-    spark.sql("INSERT INTO ilsql.mrg2.t SELECT id, CAST(id AS DOUBLE), 'old' FROM range(10)")
-    spark.range(6, 14).toDF("sid").createOrReplaceTempView("mrg2_src")
-    spark.sql("""MERGE INTO ilsql.mrg2.t AS t
-                 USING (SELECT sid, CAST(sid AS DOUBLE) * 10 AS sv FROM mrg2_src) AS s
-                 ON t.id = s.sid
-                 WHEN MATCHED AND t.id = 7 THEN DELETE
-                 WHEN MATCHED THEN UPDATE SET v = s.sv, tag = 'upd'
-                 WHEN NOT MATCHED AND s.sid < 12 THEN INSERT (id, v, tag) VALUES (s.sid, s.sv, 'ins')
-                 WHEN NOT MATCHED BY SOURCE AND t.id < 2 THEN DELETE
-                 WHEN NOT MATCHED BY SOURCE AND t.id < 4 THEN UPDATE SET tag = 'stale'""")
-    val rows = spark.sql("SELECT id, v, tag FROM ilsql.mrg2.t ORDER BY id")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
-    // 0,1 deleted (NMBS); 2,3 tagged stale (NMBS); 4,5 untouched; 7 deleted
-    // (matched); 6,8,9 updated; 10,11 inserted; 12,13 insert condition false
-    assert(rows.map(_._1) == Seq(2L, 3L, 4L, 5L, 6L, 8L, 9L, 10L, 11L), s"got $rows")
-    assert(rows.filter(r => Seq(2L, 3L).contains(r._1)).forall(_._3 == "stale"), s"got $rows")
-    assert(rows.filter(r => Seq(4L, 5L).contains(r._1)).forall(r => r._3 == "old" && r._2 == r._1), s"got $rows")
-    assert(rows.filter(r => Seq(6L, 8L, 9L).contains(r._1)).forall(r => r._3 == "upd" && r._2 == r._1 * 10), s"got $rows")
-    assert(rows.filter(r => Seq(10L, 11L).contains(r._1)).forall(r => r._3 == "ins" && r._2 == r._1 * 10), s"got $rows")
+    val (driver, distributed) = onBothMergePlans { plan =>
+      val ns = s"mrg2_$plan"
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS ilsql.$ns")
+      spark.sql(s"CREATE TABLE ilsql.$ns.t (id BIGINT, v DOUBLE, tag STRING)")
+      spark.sql(s"INSERT INTO ilsql.$ns.t SELECT id, CAST(id AS DOUBLE), 'old' FROM range(10)")
+      import spark.implicits._
+      // local rows: the default threshold plans the MERGE on the driver
+      (6L until 14L).toDF("sid").createOrReplaceTempView(s"${ns}_src")
+      spark.sql(s"""MERGE INTO ilsql.$ns.t AS t
+                   USING (SELECT sid, CAST(sid AS DOUBLE) * 10 AS sv FROM ${ns}_src) AS s
+                   ON t.id = s.sid
+                   WHEN MATCHED AND t.id = 7 THEN DELETE
+                   WHEN MATCHED THEN UPDATE SET v = s.sv, tag = 'upd'
+                   WHEN NOT MATCHED AND s.sid < 12 THEN INSERT (id, v, tag) VALUES (s.sid, s.sv, 'ins')
+                   WHEN NOT MATCHED BY SOURCE AND t.id < 2 THEN DELETE
+                   WHEN NOT MATCHED BY SOURCE AND t.id < 4 THEN UPDATE SET tag = 'stale'""")
+      val rows = spark.sql(s"SELECT id, v, tag FROM ilsql.$ns.t ORDER BY id")
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+      // 0,1 deleted (NMBS); 2,3 tagged stale (NMBS); 4,5 untouched; 7 deleted
+      // (matched); 6,8,9 updated; 10,11 inserted; 12,13 insert condition false
+      assert(rows.map(_._1) == Seq(2L, 3L, 4L, 5L, 6L, 8L, 9L, 10L, 11L), s"got $rows")
+      assert(rows.filter(r => Seq(2L, 3L).contains(r._1)).forall(_._3 == "stale"), s"got $rows")
+      assert(rows.filter(r => Seq(4L, 5L).contains(r._1)).forall(r => r._3 == "old" && r._2 == r._1), s"got $rows")
+      assert(rows.filter(r => Seq(6L, 8L, 9L).contains(r._1)).forall(r => r._3 == "upd" && r._2 == r._1 * 10), s"got $rows")
+      assert(rows.filter(r => Seq(10L, 11L).contains(r._1)).forall(r => r._3 == "ins" && r._2 == r._1 * 10), s"got $rows")
+      val t = new graft.icelite.Catalog(spark, wh).loadTable(ns, "t")
+      assert(t.meta.metadataLog.last.note.contains(s"($plan plan)"), t.meta.metadataLog.last.note)
+      t.readRowLineage().collect().toSeq.sortBy(_.getLong(0))
+    }
+    // same rows and the same V3 lineage (`_row_id`, `_last_updated_sequence_number`)
+    assert(driver == distributed)
   }
 
   test("SQL metadata tables: snapshots, history, partitions, files") {

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Differential checks for the round-10 fourth wave (X91–X93): re-derive
-  * each operator's core quantity with an independent formulation and
-  * assert agreement, mirroring Round9OpsSpec / Round10OpsSpec / Round10bOpsSpec.
+/** Differential checks for the text-curation operators — paragraph
+  * dedup, dedup cluster stats and tokenizer fertility: re-derive each
+  * operator's core quantity with an independent formulation and assert
+  * agreement, mirroring Round9OpsSpec / Round10OpsSpec / Round10bOpsSpec.
   */
-class Round10cOpsSpec extends SparkSpec {
+class TextCurationOpsSpec extends SparkSpec {
 
   /** The operator's paragraph stream, rebuilt independently (same
     * construction, no dedup logic). */
