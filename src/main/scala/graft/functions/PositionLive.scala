@@ -18,7 +18,7 @@ import graft.icelite.DeleteIndex
   * a Scala UDF here would cut the whole-stage-codegen span right after the
   * vectorized parquet scan and pay boxing + Row conversion per row; this
   * expression generates an inline run-membership probe
-  * ([[graft.icelite.DvCodec.runContains]] — binary search over packed
+  * ([[graft.icelite.DeleteIndex.runContains]] — binary search over packed
   * [start,len]* runs), so scan→filter→downstream stays one codegen stage.
   *
   * The broadcast carries a [[graft.icelite.DeleteIndex]] — delete-file
@@ -63,13 +63,16 @@ case class PositionLive(
         lastFile = fu.clone() // vectorized readers reuse string buffers
         lastArr = index.value.runsFor(fu)
       }
-      !graft.icelite.DvCodec.runContains(lastArr, p.asInstanceOf[Long])
+      !DeleteIndex.runContains(lastArr, p.asInstanceOf[Long])
     }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bcRef = ctx.addReferenceObj("delIndex", index, classOf[Broadcast[_]].getName)
     val idxCls = classOf[DeleteIndex].getName
+    // the owner comes from the class; the method name stays a string the
+    // compiler cannot check, so only a codegen'd merge-on-read read does
+    val probe = DeleteIndex.getClass.getName + ".MODULE$.runContains"
     // resolve the broadcast once per generated class, not per row
     val idxVar = ctx.addMutableState(idxCls, "delIdx",
       v => s"$v = ($idxCls) ((${classOf[Broadcast[_]].getName}) $bcRef).value();")
@@ -88,7 +91,7 @@ case class PositionLive(
             $lastArrVar = (long[]) $idxVar.runsFor(${fEv.value});
           }
           ${ev.value} =
-            !graft.icelite.DvCodec$$.MODULE$$.runContains($lastArrVar, ${pEv.value});
+            !$probe($lastArrVar, ${pEv.value});
         }""",
       isNull = FalseLiteral)
   }

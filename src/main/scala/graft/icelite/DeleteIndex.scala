@@ -21,11 +21,12 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The driver/broadcast payload is only the snapshot's delete-file PATHS —
   * O(delete files), never O(deleted positions). Each scan task resolves the
-  * sorted position array for ITS OWN data files lazily, executor-side, by
-  * reading the delete parquets with a `file_path = <data file>` predicate
-  * pushed to parquet (row-group stats + dictionary + record-level filter —
-  * delete files are written globally sorted by (file_path, pos), so a task
-  * touches only the row groups covering its file). A 100 TB table with a
+  * deleted-position runs for ITS OWN data files lazily, executor-side:
+  * Puffin deletion vectors by one footer parse + one blob seek, parquet
+  * position deletes with a `file_path = <data file>` predicate pushed to
+  * parquet (row-group stats + dictionary + record-level filter — delete
+  * files are written clustered by (file_path, pos), so a task touches only
+  * the row groups covering its file). A 100 TB table with a
   * billion MoR-deleted rows costs the driver a file listing, not an 8 GB
   * HashMap.
   *
@@ -43,8 +44,8 @@ final case class DeleteIndex(
     * expanded positions, is the cached and probed form everywhere — a
     * dense-delete file (say 90% of 1M rows killed by one predicate) costs
     * a task O(runs) longs, not O(positions), and [[graft.functions
-    * .PositionLive]] probes it with [[DvCodec.runContains]]'s O(log runs)
-    * search. Executor-side. */
+    * .PositionLive]] probes it with [[DeleteIndex.runContains]]'s
+    * O(log runs) search. Executor-side. */
   def runsFor(dataFile: UTF8String): Array[Long] = {
     val key = id + "\u0000" + dataFile.toString
     val hit = DeleteIndex.cache.get(key)
@@ -61,7 +62,7 @@ final case class DeleteIndex(
   /** Sorted deleted positions for `dataFile` — [[runsFor]] expanded.
     * Diagnostic/spec surface; the scan path never materializes this. */
   def positionsFor(dataFile: UTF8String): Array[Long] =
-    DvCodec.expandRuns(runsFor(dataFile))
+    DeleteIndex.expandRuns(runsFor(dataFile))
 
   private def load(dataFile: String): Array[Long] = {
     // NATIVE delete writers record file_path exactly as the scan's
@@ -69,8 +70,8 @@ final case class DeleteIndex(
     // FOREIGN (adopted) delete files may spell the same path differently
     // (raw `/a/b` vs `file:/a/b` URI forms) — the alternates make the
     // probe spelling-insensitive. Cost: the parquet probe ORs a few
-    // literals into one pushed predicate, and DV containers match the
-    // whole key set in ONE header parse — one reader pass per carrier
+    // literals into one pushed predicate, and Puffin containers match the
+    // whole key set in ONE footer parse — one reader pass per carrier
     // either way. All of this runs once per (executor, data file) —
     // memoized above — never per row.
     val keys = {
@@ -84,14 +85,11 @@ final case class DeleteIndex(
     val keySet = keys.toSet
     val parts = scala.collection.mutable.ArrayBuffer[Array[Long]]()
     deleteFiles.foreach { del =>
-      // carrier dispatch: deletion-vector containers (`.ildv` RLE or
-      // `.puffin` Iceberg-V3 roaring) resolve via a header/footer parse +
-      // one blob seek and yield packed runs; parquet position deletes
-      // read via the pushed file_path predicate and RLE-compress on the
-      // way in
-      if (del.endsWith(DvCodec.Ext))
-        parts += DvCodec.runsForAny(new Path(del), conf.value, keySet)
-      else if (del.endsWith(PuffinDv.Ext))
+      // carrier dispatch: Puffin deletion vectors resolve via a footer
+      // parse + one blob seek and yield packed runs; parquet position
+      // deletes read via the pushed file_path predicate and RLE-compress
+      // on the way in
+      if (IceLite.isDvPath(del))
         parts += PuffinDv.runsForAny(new Path(del), conf.value, keySet)
       else {
         val buf = scala.collection.mutable.ArrayBuilder.make[Long]
@@ -112,20 +110,92 @@ final case class DeleteIndex(
         } finally reader.close()
         val arr = buf.result()
         java.util.Arrays.sort(arr)
-        parts += DvCodec.toRuns(arr)
+        parts += DeleteIndex.toRuns(arr)
       }
     }
-    DvCodec.mergeRuns(parts.toSeq)
+    DeleteIndex.mergeRuns(parts.toSeq)
   }
 }
 
 object DeleteIndex {
-  /** Executor-wide (dataFile → sorted positions) memo. Bounded: a full
+  /** Executor-wide (dataFile → packed runs) memo. Bounded: a full
     * clear past the cap is safe because every entry is re-loadable. */
   private val MaxCachedFiles = 8192
   private val cache = new ConcurrentHashMap[String, Array[Long]]()
 
+  /** RLE-encode a SORTED, DISTINCT position array: packed [start, len]*. */
+  def toRuns(sorted: Array[Long]): Array[Long] = {
+    if (sorted.isEmpty) return Array.emptyLongArray
+    val runs = scala.collection.mutable.ArrayBuilder.make[Long]
+    var start = sorted(0); var len = 1L; var i = 1
+    while (i < sorted.length) {
+      if (sorted(i) == start + len) len += 1
+      else { runs += start; runs += len; start = sorted(i); len = 1L }
+      i += 1
+    }
+    runs += start; runs += len
+    runs.result()
+  }
+
+  /** Membership probe over a packed [start,len]* runs array — binary
+    * search on the run starts, then a bound check. This is the read-path
+    * filter shape: O(log runs) per row with O(runs) task memory, where an
+    * expanded position array would cost O(positions) on a dense-delete
+    * file. Static-shaped so codegen calls it directly. */
+  def runContains(runs: Array[Long], p: Long): Boolean = {
+    var lo = 0
+    var hi = runs.length / 2 - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val s = runs(mid << 1)
+      if (p < s) hi = mid - 1
+      else if (p >= s + runs((mid << 1) + 1)) lo = mid + 1
+      else return true
+    }
+    false
+  }
+
+  /** Merge possibly-overlapping packed run arrays (several delete files may
+    * record the same data file) into one sorted, coalesced runs array. */
+  def mergeRuns(parts: Seq[Array[Long]]): Array[Long] = {
+    val nonEmpty = parts.filter(_.nonEmpty)
+    if (nonEmpty.isEmpty) return Array.emptyLongArray
+    if (nonEmpty.size == 1) return nonEmpty.head
+    val pairs = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    nonEmpty.foreach { rs =>
+      var i = 0
+      while (i < rs.length) { pairs += ((rs(i), rs(i + 1))); i += 2 }
+    }
+    val sorted = pairs.sortBy(_._1)
+    val out = scala.collection.mutable.ArrayBuilder.make[Long]
+    var (curS, curL) = sorted.head
+    sorted.tail.foreach { case (s, l) =>
+      if (s <= curS + curL) curL = math.max(curL, s + l - curS)
+      else { out += curS; out += curL; curS = s; curL = l }
+    }
+    out += curS; out += curL
+    out.result()
+  }
+
+  /** Sorted positions a packed runs array stands for — the inverse of
+    * [[toRuns]]. Spec and rewrite surface; the scan path stays on runs. */
+  def expandRuns(runs: Array[Long]): Array[Long] = {
+    var n = 0L
+    var i = 1
+    while (i < runs.length) { n += runs(i); i += 2 }
+    val out = new Array[Long](n.toInt)
+    var o = 0; i = 0
+    while (i < runs.length) {
+      var p = runs(i); val end = runs(i) + runs(i + 1)
+      while (p < end) { out(o) = p; o += 1; p += 1 }
+      i += 2
+    }
+    out
+  }
+
   def build(deleteFiles: Seq[String], spark: SparkSession): DeleteIndex = {
+    // refuse a carrier this build cannot read on the driver, before a task
+    deleteFiles.foreach(IceLite.isDvPath)
     val id = java.util.UUID.nameUUIDFromBytes(
       deleteFiles.sorted.mkString("\n").getBytes("UTF-8")).toString
     DeleteIndex(id, deleteFiles,

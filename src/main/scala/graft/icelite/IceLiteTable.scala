@@ -58,7 +58,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
   /** Manifest chunk IO (chunked file-table metadata, [[ManifestIO]]).
     * Exposed to the pruning specs for its chunk-load instrumentation. */
   private[icelite] val manifestIO =
-    new ManifestIO(store, location, spark.sessionState.newHadoopConf())
+    new ManifestIO(location, spark.sessionState.newHadoopConf())
 
   /** Planning instrumentation: the LARGEST per-scan file count any
     * scanSnapshot admitted since the last reset. Deterministic — driver
@@ -69,8 +69,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
 
   // ---------------------------------------------------------------- metadata
 
-  private def metaAt(v: Int): TableMetadata =
-    MetaJson.fromJson(store.readString(new Path(location, s"metadata/v$v.json")), manifestIO)
+  private def metaAt(v: Int): TableMetadata = {
+    val p = new Path(location, s"metadata/v$v.json")
+    MetaJson.fromJson(store.readString(p), manifestIO, p.toString)
+  }
 
   /** (version, metadata) loaded as ONE consistent unit — the version is
     * read first and the metadata fetched for exactly that version, so a
@@ -1519,19 +1521,18 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     *
     * `write.delete.vector.enabled=true` switches the carrier to bitmap
     * DELETION VECTORS — the V3 representation the reference describes
-    * (README.md:1098–1108): per-data-file bitmaps written executor-side
-    * (positions repartitioned by data file, one container per non-empty
-    * task), O(runs)/O(compressed bitmap) on disk for the contiguous
-    * ranges predicates actually kill. `write.delete.vector.format`
-    * selects the container: `ildv` ([[DvCodec]], the native RLE form,
-    * default) or `puffin` ([[PuffinDv]], the Iceberg-V3 wire format —
-    * roaring bitmaps in a Puffin file, readable by real V3 readers).
-    * Readers dispatch on the extension, so parquet and both DV carriers
-    * coexist in one snapshot and a table migrates live. */
+    * (README.md:1098–1108): per-data-file `deletion-vector-v1` blobs in
+    * Puffin containers ([[PuffinDv]], the Iceberg-V3 wire format, readable
+    * by real V3 readers), written executor-side (positions repartitioned
+    * by data file, one container per non-empty task). Contiguous ranges,
+    * the ones predicates actually kill, serialize as roaring run
+    * containers, so they cost O(runs) on disk. Readers dispatch on the
+    * extension, so parquet and Puffin deletes coexist in one snapshot and
+    * toggling the property migrates a table live. */
   private def writePosDeleteFiles(pos: DataFrame,
       m: TableMetadata): (Path, Seq[DeleteFile]) =
     if (m.properties.get("write.delete.vector.enabled").contains("true"))
-      writeDeleteVectors(pos, dvFormat(m))
+      writeDeleteVectors(pos)
     else
       // hash-cluster by data file + sort within, NOT a global sort: a
       // global sort schedules a range-sampling job per delete (a steady
@@ -1544,21 +1545,15 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       writeDeleteParquet(pos.repartition(col("file_path"))
         .sortWithinPartitions("file_path", "pos"))
 
-  private def dvFormat(m: TableMetadata): String =
-    m.properties.getOrElse("write.delete.vector.format", "ildv") match {
-      case "puffin" => "puffin"
-      case _        => "ildv"
-    }
-
-  /** DV write path: per-file sorted positions → bitmap blobs, one
-    * container per non-empty task partition (`.ildv` RLE or `.puffin`
-    * roaring by `fmt`). Distributed — positions never collect to the
+  /** DV write path: per-file sorted positions → roaring blobs, one
+    * `.puffin` container per non-empty task partition. Distributed —
+    * positions never collect to the
     * driver; the driver sees only per-file (container, file, count)
     * summaries, O(touched files) like the parquet listing walk.
     * `numParts` pins the container count (the delete-file rewrite's
     * merge target); DML paths default to the session shuffle
     * parallelism. */
-  private def writeDeleteVectors(pos: DataFrame, fmt: String,
+  private def writeDeleteVectors(pos: DataFrame,
       numParts: Option[Int] = None): (Path, Seq[DeleteFile]) = {
     val delDir = new Path(location, "deletes")
     fs(spark, location).mkdirs(delDir)
@@ -1588,15 +1583,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
             val arr = b.result(); java.util.Arrays.sort(arr)
             fp -> arr
           }
-          if (fmt == "puffin") {
-            val p = new Path(outStr, s"dv-${UUID.randomUUID()}${PuffinDv.Ext}")
-            val written = PuffinDv.write(p, entries, confB.value)
-            written.iterator.map(bm => (p.toString, bm.refDataFile, bm.cardinality))
-          } else {
-            val p = new Path(outStr, s"dv-${UUID.randomUUID()}${DvCodec.Ext}")
-            val written = DvCodec.write(p, entries, confB.value)
-            written.iterator.map(e => (p.toString, e.filePath, e.count))
-          }
+          val p = new Path(outStr, s"dv-${UUID.randomUUID()}${PuffinDv.Ext}")
+          val written = PuffinDv.write(p, entries, confB.value)
+          written.iterator.map(bm => (p.toString, bm.refDataFile, bm.cardinality))
         }
       }.collect()
     val dels = summaries.groupBy(_._1).toSeq.sortBy(_._1).map { case (dvPath, es) =>
@@ -1699,17 +1688,14 @@ class IceLiteTable(val spark: SparkSession, val location: String,
   }
 
   /** Data-file paths a set of position-delete files references — the
-    * MoR rebase-validation input. Dispatches on the carrier: DV containers
-    * answer from their header index (driver-side, O(index)); parquet
+    * MoR rebase-validation input. Dispatches on the carrier: Puffin
+    * containers answer from their footer (driver-side, O(footer)); parquet
     * deletes from a column-pruned distinct scan. */
   private def referencedDataPaths(dels: Seq[DeleteFile]): Set[String] = {
     val (dv, pq) = dels.map(_.path).partition(IceLite.isDvPath)
     val conf = spark.sessionState.newHadoopConf()
-    val fromDv = dv.flatMap { p =>
-      if (p.endsWith(PuffinDv.Ext))
-        PuffinDv.blobs(new Path(p), conf).map(b => normPath(b.refDataFile))
-      else DvCodec.header(new Path(p), conf).map(e => normPath(e._1))
-    }
+    val fromDv = dv.flatMap(p =>
+      PuffinDv.blobs(new Path(p), conf).map(b => normPath(b.refDataFile)))
     val fromPq =
       if (pq.isEmpty) Seq()
       else spark.read.schema("file_path STRING, pos BIGINT")
@@ -1718,8 +1704,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     (fromDv ++ fromPq).toSet
   }
 
-  /** (file_path, pos) rows of a mixed parquet/DV position-delete set —
-    * what the delete-file rewrite merges. DV containers expand
+  /** (file_path, pos) rows of a mixed parquet/Puffin position-delete set
+    * — what the delete-file rewrite merges. Puffin containers expand
     * executor-side (one task per container). */
   private def posDeleteRows(dels: Seq[DeleteFile]): DataFrame = {
     import spark.implicits._
@@ -1732,10 +1718,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val dvDf =
       if (dv.isEmpty) None
       else Some(spark.createDataset(dv).repartition(math.max(1, dv.size))
-        .flatMap { p =>
-          if (p.endsWith(PuffinDv.Ext)) PuffinDv.expand(new Path(p), confB.value)
-          else DvCodec.expand(new Path(p), confB.value)
-        }
+        .flatMap(p => PuffinDv.expand(new Path(p), confB.value))
         .toDF("file_path", "pos"))
     (pqDf.toSeq ++ dvDf.toSeq).reduce(_ unionByName _)
   }
@@ -2482,9 +2465,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         // persist across the two passes (dangling scan + merged write): at
         // high delete-FILE counts the dominant cost is re-opening thousands
         // of tiny parquets, not the rows themselves. posDeleteRows expands
-        // DV containers too, so the rewrite MATERIALIZES deletion vectors
-        // into the canonical merged parquet — the maintenance path out of
-        // either carrier.
+        // Puffin containers too, so the rewrite can MATERIALIZE deletion
+        // vectors into the canonical merged parquet — the maintenance path
+        // from either carrier to the other.
         val raw = posDeleteRows(posDels)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // dangling filter: delete rows store `_metadata.file_path` strings
@@ -2505,7 +2488,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         val (_, files) =
           try {
             if (m.properties.get("write.delete.vector.enabled").contains("true"))
-              writeDeleteVectors(kept, dvFormat(m), numParts = Some(target))
+              writeDeleteVectors(kept, numParts = Some(target))
             else writeDeleteParquet(kept)
           } finally raw.unpersist()
         val sq = posDels.map(_.seq).max
@@ -2873,10 +2856,17 @@ object IceLite {
       partExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       partNames: Seq[String])
 
-  /** Is this delete-file path a deletion-vector container (either the
-    * native `.ildv` RLE carrier or the Iceberg-V3 `.puffin` form)? */
-  private[icelite] def isDvPath(p: String): Boolean =
-    p.endsWith(DvCodec.Ext) || p.endsWith(PuffinDv.Ext)
+  /** Is this position-delete file a Puffin deletion-vector container
+    * (otherwise it is parquet)? A `.ildv` container, the RLE carrier
+    * earlier IceLite builds wrote, is refused by name here rather than
+    * handed to the parquet reader; every carrier dispatch goes through
+    * this check. */
+  private[icelite] def isDvPath(p: String): Boolean = {
+    require(!p.endsWith(".ildv"),
+      s"unsupported deletion-vector container $p: .ildv is not read; " +
+        "IceLite reads Puffin (.puffin) DVs and parquet position deletes")
+    p.endsWith(PuffinDv.Ext)
+  }
 
   /** Spec-field name for a (source, transform) pair. The name reaches
     * partition DIRECTORY names and from there flattened data-FILE names;

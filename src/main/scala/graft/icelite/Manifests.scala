@@ -23,11 +23,10 @@ import org.apache.hadoop.fs.Path
   * rewrite reuses each parent manifest whose chunk survived intact and
   * rewrites only the chunks it touched ([[ManifestIO.spill]]).
   *
-  * Manifest chunks are written through the SAME [[CommitStore]] contract
-  * as version files (immutable create-once blobs), so the format rides the
-  * store's object-store portability; the chunk payload is the interned
-  * JSON entry shape — swapping it for parquet/avro (Iceberg's choice)
-  * would change no part of the protocol, only the chunk codec.
+  * Manifest chunks are immutable create-once avro files ([[ManifestCodec]],
+  * Iceberg's own manifest format) written through the table's Hadoop
+  * FileSystem, so they ride the same object-store portability as data
+  * files; only the version files go through the [[CommitStore]].
   */
 final case class ManifestRef(
     path: String, fileCount: Long, rowCount: Long, maxSeq: Long,
@@ -197,21 +196,21 @@ object DeleteListing {
   * [[IceLiteTable]]; chunks are immutable, so the read cache never
   * invalidates. `readCount` instruments chunk loads for the pruning specs
   * (a pruned plan must load only surviving chunks). */
-final class ManifestIO(store: CommitStore, location: String,
+final class ManifestIO(location: String,
     conf: org.apache.hadoop.conf.Configuration =
       new org.apache.hadoop.conf.Configuration()) {
   val readCount = new AtomicLong(0)
 
-  /** Chunk payload codec — `write.metadata.manifest.codec` ∈ avro
-    * (default; Iceberg's own manifest format, several× cheaper to parse,
-    * [[ManifestCodec]]) | json (the original text payload). READS dispatch
-    * on the chunk file's extension, so a table written under either
-    * codec — or migrated between them — always loads. */
-  private def codecOf(m: TableMetadata): String =
-    m.properties.getOrElse("write.metadata.manifest.codec", "avro") match {
-      case "json" => "json"
-      case _      => "avro"
-    }
+  /** A chunk ref's path. A `.json` chunk, the text codec earlier IceLite
+    * builds wrote, is refused by name rather than fed to the avro
+    * reader. */
+  private def chunkPath(ref: String): Path = {
+    if (location == null) sys.error("manifest-backed metadata needs a table-bound ManifestIO")
+    require(!ref.endsWith(".json"),
+      s"unsupported manifest chunk $ref: JSON chunks are not read; IceLite manifest chunks are avro")
+    new Path(ref)
+  }
+
   /** Chunks written since last reset — the compaction/CoW specs assert a
     * commit re-chunks only what it must (no double spill). */
   val writeCount = new AtomicLong(0)
@@ -227,10 +226,7 @@ final class ManifestIO(store: CommitStore, location: String,
     if (hit != null) hit
     else {
       readCount.incrementAndGet()
-      val p = new Path(ref.path)
-      val fs =
-        if (ref.path.endsWith(".json")) MetaJson.manifestFromJson(store.readString(p))
-        else ManifestCodec.readData(p, conf)
+      val fs = ManifestCodec.readData(chunkPath(ref.path), conf)
       cache.put(ref.path, fs)
       fs
     }
@@ -251,10 +247,7 @@ final class ManifestIO(store: CommitStore, location: String,
     if (hit != null) hit
     else {
       deleteReadCount.incrementAndGet()
-      val p = new Path(ref.path)
-      val fs =
-        if (ref.path.endsWith(".json")) MetaJson.deleteManifestFromJson(store.readString(p))
-        else ManifestCodec.readDeletes(p, conf)
+      val fs = ManifestCodec.readDeletes(chunkPath(ref.path), conf)
       delCache.put(ref.path, fs)
       fs
     }
@@ -263,11 +256,9 @@ final class ManifestIO(store: CommitStore, location: String,
   /** Write one immutable DELETE manifest chunk with its summaries. */
   def writeDeletes(files: Seq[DeleteFile], m: TableMetadata): DeleteManifestRef = {
     writeCount.incrementAndGet()
-    val codec = codecOf(m)
     val p = new Path(new Path(location, "metadata/manifests"),
-      s"dmf-${java.util.UUID.randomUUID()}.$codec")
-    if (codec == "json") store.createExclusive(p, MetaJson.deleteManifestToJson(files))
-    else ManifestCodec.writeDeletes(p, files, conf)
+      s"dmf-${java.util.UUID.randomUUID()}.avro")
+    ManifestCodec.writeDeletes(p, files, conf)
     val pos = files.filter(_.kind == "pos")
     // path-range summary only when EVERY pos file carries bounds —
     // partial bounds can't prune safely
@@ -284,17 +275,16 @@ final class ManifestIO(store: CommitStore, location: String,
     ref
   }
 
-  /** Write one immutable manifest chunk and compute its summaries. JSON
-    * chunks ride the CommitStore; avro chunks are data-plane files
-    * (referenced only by a version file committed after the write, so a
-    * crashed attempt strands an orphan, never a torn read). */
+  /** Write one immutable manifest chunk and compute its summaries. Avro
+    * chunks ([[ManifestCodec]], Iceberg's own manifest format) are
+    * data-plane files, referenced only by a version file committed after
+    * the write, so a crashed attempt strands an orphan, never a torn
+    * read. */
   def write(files: Seq[DataFile], m: TableMetadata): ManifestRef = {
     writeCount.incrementAndGet()
-    val codec = codecOf(m)
     val p = new Path(new Path(location, "metadata/manifests"),
-      s"mf-${java.util.UUID.randomUUID()}.$codec")
-    if (codec == "json") store.createExclusive(p, MetaJson.manifestToJson(files))
-    else ManifestCodec.writeData(p, files, conf)
+      s"mf-${java.util.UUID.randomUUID()}.avro")
+    ManifestCodec.writeData(p, files, conf)
     val distinctParts = files.map(_.partition).distinct
     val ref = ManifestRef(
       p.toString, files.size, files.map(_.rows).sum,
@@ -436,13 +426,5 @@ object ManifestIO {
   /** For pure-serde contexts (property tests, documents with no manifest
     * refs): forcing a manifest-backed listing without a real store is a
     * programming error, not a silent empty read. */
-  val detached: ManifestIO = new ManifestIO(new CommitStore {
-    private def die = sys.error("manifest-backed metadata needs a table-bound ManifestIO")
-    def readString(p: Path): String = die
-    def createExclusive(p: Path, content: String): Unit = die
-    def replace(p: Path, content: String): Unit = die
-    def exists(p: Path): Boolean = die
-    def modificationTime(p: Path): Long = die
-    def delete(p: Path): Unit = die
-  }, "")
+  val detached: ManifestIO = new ManifestIO(null)
 }

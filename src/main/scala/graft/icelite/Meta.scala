@@ -411,32 +411,6 @@ object MetaJson {
     M.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  /** Serialize one manifest chunk's entries (the side-file payload). */
-  def manifestToJson(files: Seq[DataFile]): String = {
-    val root = M.createObjectNode()
-    val arr = root.putArray("files")
-    files.foreach(f => writeDataFile(arr.addObject(), f))
-    M.writeValueAsString(root)
-  }
-
-  def manifestFromJson(s: String): Seq[DataFile] = {
-    val r = M.readTree(s)
-    r.get("files").elements().asScala.map(readDataFileNode).toSeq
-  }
-
-  /** Serialize one DELETE manifest chunk's entries. */
-  def deleteManifestToJson(files: Seq[DeleteFile]): String = {
-    val root = M.createObjectNode()
-    val arr = root.putArray("deleteFiles")
-    files.foreach(f => writeDeleteFile(arr.addObject(), f))
-    M.writeValueAsString(root)
-  }
-
-  def deleteManifestFromJson(s: String): Seq[DeleteFile] = {
-    val r = M.readTree(s)
-    r.get("deleteFiles").elements().asScala.map(readDeleteFileNode).toSeq
-  }
-
   private def readDataFileNode(fn: JsonNode): DataFile = {
     def strMap(n: JsonNode, k: String): Map[String, String] =
       Option(n.get(k)).map(o => o.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
@@ -461,18 +435,26 @@ object MetaJson {
     * load through the io-bound overload. */
   def fromJson(s: String): TableMetadata = fromJson(s, ManifestIO.detached)
 
-  def fromJson(s: String, io: ManifestIO): TableMetadata = {
+  /** `file` names the document in the error that refuses a format-1
+    * (inline-snapshot) document: earlier IceLite builds wrote that form,
+    * and loading it through the v2+ reader would give snapshots that hold
+    * no files. */
+  def fromJson(s: String, io: ManifestIO, file: String = "document"): TableMetadata = {
     val r = M.readTree(s)
     def arr(n: JsonNode, k: String): Seq[JsonNode] =
       Option(n.get(k)).map(_.elements().asScala.toSeq).getOrElse(Seq())
+    val version = Option(r.get("formatVersion")).map(_.asInt()).getOrElse(1)
+    val inline = arr(r, "snapshots").exists(n => n.has("dataFiles") || n.has("deleteFiles"))
+    require(version >= 2 && !inline,
+      s"unsupported IceLite metadata $file: format $version" +
+        (if (inline) " with inline snapshot files" else "") +
+        "; IceLite reads format 2 and later (shared file tables, manifest refs)")
     def strMap(n: JsonNode, k: String): Map[String, String] =
       Option(n.get(k)).map(o => o.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
         .getOrElse(Map())
-    def readDataFile(fn: JsonNode): DataFile = readDataFileNode(fn)
-    def readDeleteFile(fn: JsonNode): DeleteFile = readDeleteFileNode(fn)
-    // v2 shared file tables (empty for v1 metadata, whose snapshots inline)
-    val dataTable = arr(r, "dataFileTable").map(readDataFile).toIndexedSeq
-    val delTable = arr(r, "deleteFileTable").map(readDeleteFile).toIndexedSeq
+    // shared file tables: each inline entry once, snapshots index into them
+    val dataTable = arr(r, "dataFileTable").map(readDataFileNode).toIndexedSeq
+    val delTable = arr(r, "deleteFileTable").map(readDeleteFileNode).toIndexedSeq
     TableMetadata(
       location = r.get("location").asText(),
       lastFieldId = r.get("lastFieldId").asInt(),
@@ -495,8 +477,7 @@ object MetaJson {
       properties = strMap(r, "properties"),
       currentSnapshotId = Option(r.get("currentSnapshotId")).map(_.asLong()),
       snapshots = arr(r, "snapshots").map { n =>
-        // v3 manifest refs (lazy chunks) + v2 index refs for the inline
-        // tail, falling back to v1 inline entries
+        // v3 manifest refs (lazy chunks) + v2 index refs for the inline tail
         val refs = arr(n, "manifests").map { rn =>
           ManifestRef(
             rn.get("path").asText(), rn.get("fileCount").asLong(),
@@ -521,12 +502,8 @@ object MetaJson {
             Option(rn.get("plo")).map(_.asText()),
             Option(rn.get("phi")).map(_.asText()))
         }
-        val tail =
-          if (n.has("dataFileRefs")) arr(n, "dataFileRefs").map(i => dataTable(i.asInt()))
-          else arr(n, "dataFiles").map(readDataFile)
-        val delTail =
-          if (n.has("deleteFileRefs")) arr(n, "deleteFileRefs").map(i => delTable(i.asInt()))
-          else arr(n, "deleteFiles").map(readDeleteFile)
+        val tail = arr(n, "dataFileRefs").map(i => dataTable(i.asInt()))
+        val delTail = arr(n, "deleteFileRefs").map(i => delTable(i.asInt()))
         new Snapshot(
           n.get("id").asLong(),
           Option(n.get("parentId")).map(_.asLong()),

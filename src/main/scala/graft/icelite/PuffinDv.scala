@@ -8,11 +8,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import scala.jdk.CollectionConverters._
 
-/** Puffin deletion-vector container (`.puffin`) — the INTEROP-GRADE V3
-  * position-delete carrier, byte-compatible with what the Apache Iceberg
-  * V3 spec publishes (the reference teaches DVs at README.md:1098–1108;
-  * [[DvCodec]] is this engine's deliberately-simpler RLE carrier, and
-  * this codec is the same idea in the wire format real readers speak):
+/** Puffin deletion-vector container (`.puffin`) — IceLite's one
+  * deletion-vector carrier, byte-compatible with what the Apache Iceberg
+  * V3 spec publishes (the reference teaches DVs at README.md:1098–1108:
+  * delete info held in bitmap form, applied at read):
   *
   *  - Puffin file layout (Puffin spec): magic `PFA1`, concatenated blob
   *    payloads, then a footer of magic + JSON FooterPayload + payload
@@ -34,16 +33,16 @@ import scala.jdk.CollectionConverters._
   *    then array (u16 values), bitmap (1024 × u64) or run (u16 count +
   *    (start, length-1) u16 pairs) containers in key order.
   *
-  * The WRITER always emits array/bitmap containers (valid portable form;
-  * runs are an optional optimization the spec lets writers skip). The
-  * READER handles all three container types, so DVs produced by real
-  * engines — which do emit run containers — decode too. Reads return
-  * packed [start,len]* runs directly (the scan path's native form — see
-  * [[DvCodec.runContains]]); positions are never materialized.
+  * The WRITER emits a run container wherever that is smaller than the
+  * array/bitmap form, as Iceberg's own DV writer does (it run-optimizes
+  * its bitmap before serializing), so the contiguous ranges row-level DML
+  * kills cost O(runs) on disk. The READER handles all three container
+  * types. Reads return packed [start,len]* runs directly (the scan path's
+  * native form — see [[DeleteIndex.runContains]]); positions are never
+  * materialized.
   *
-  * Resolution cost mirrors [[DvCodec]]: one footer parse + one blob seek
-  * per (container, data file); blob bytes are O(compressed bitmap),
-  * bounded per data file. */
+  * Resolution cost: one footer parse + one blob seek per (container, data
+  * file); blob bytes are O(compressed bitmap), bounded per data file. */
 object PuffinDv {
   val Ext = ".puffin"
   private val Magic = Array[Byte](0x50, 0x46, 0x41, 0x31) // "PFA1"
@@ -58,20 +57,55 @@ object PuffinDv {
 
   // ------------------------------------------------------------- roaring
 
+  /** One 16-bit container's values (sorted, distinct) and its cheapest
+    * portable form: a run container when its bytes (u16 run count + 4 per
+    * run) undercut the array (2 per value, up to 4096 values) or bitmap
+    * (8192) form — the choice Roaring's `runOptimize` makes. */
+  private final class Container(val key: Int, vs: Array[Int]) {
+    val card: Int = vs.length
+    private val runs: Array[Int] = { // packed (start, length-1) pairs
+      val b = scala.collection.mutable.ArrayBuilder.make[Int]
+      var i = 0
+      while (i < vs.length) {
+        var j = i
+        while (j + 1 < vs.length && vs(j + 1) == vs(j) + 1) j += 1
+        b += vs(i); b += j - i
+        i = j + 1
+      }
+      b.result()
+    }
+    private val plainBytes = if (card <= 4096) 2 * card else 8192
+    val isRun: Boolean = 2 + 2 * runs.length < plainBytes
+    val bytes: Int = if (isRun) 2 + 2 * runs.length else plainBytes
+    def writeTo(out: java.io.ByteArrayOutputStream): Unit = {
+      def u16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >>> 8) & 0xFF) }
+      if (isRun) { u16(runs.length / 2); runs.foreach(u16) }
+      else if (card <= 4096) vs.foreach(u16)
+      else {
+        val words = new Array[Long](1024)
+        vs.foreach(v => words(v >>> 6) |= 1L << (v & 63))
+        val bb = ByteBuffer.allocate(8192).order(ByteOrder.LITTLE_ENDIAN)
+        words.foreach(bb.putLong)
+        out.write(bb.array())
+      }
+    }
+  }
+
   /** Serialize SORTED DISTINCT positions as a 64-bit portable roaring
-    * bitmap (array/bitmap containers only — no run containers, which the
-    * format makes optional for writers). */
+    * bitmap. A bucket with no run container keeps cookie 12346 (container
+    * count + offsets header); one with any run container uses cookie 12347
+    * with the count in its high bits, the run-flag bitset, and the offsets
+    * header only at 4 or more containers, as the format specifies. */
   private[icelite] def roaringSerialize(sorted: Array[Long]): Array[Byte] = {
     // bucket by high 32 bits, container by bits 16..31, value = low 16
     val buckets = scala.collection.mutable.LinkedHashMap[Int,
-      scala.collection.mutable.LinkedHashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]]()
+      scala.collection.mutable.LinkedHashMap[Int, scala.collection.mutable.ArrayBuilder.ofInt]]()
     sorted.foreach { p =>
       require(p >= 0, s"negative position $p")
       val hi = (p >>> 32).toInt
       val key = ((p >>> 16) & 0xFFFF).toInt
-      val v = (p & 0xFFFF).toInt
       buckets.getOrElseUpdate(hi, scala.collection.mutable.LinkedHashMap())
-        .getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer()) += v
+        .getOrElseUpdate(key, new scala.collection.mutable.ArrayBuilder.ofInt) += (p & 0xFFFF).toInt
     }
     val out = new java.io.ByteArrayOutputStream()
     def u32(v: Int): Unit = {
@@ -81,29 +115,28 @@ object PuffinDv {
     def u16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >>> 8) & 0xFF) }
     // u64 LE bucket count
     u32(buckets.size); u32(0)
-    buckets.foreach { case (hi, containers) =>
+    buckets.foreach { case (hi, byKey) =>
       u32(hi)
-      val n = containers.size
-      u32(12346) // SERIAL_COOKIE_NO_RUNCONTAINER
-      u32(n)
-      containers.foreach { case (key, vs) => u16(key); u16(vs.size - 1) }
-      // offsets header (always present under cookie 12346): byte offset of
-      // each container from the START of this 32-bit serialization
-      var off = 4 + 4 + 4 * n + 4 * n
-      containers.foreach { case (_, vs) =>
-        u32(off)
-        off += (if (vs.size <= 4096) 2 * vs.size else 8192)
+      val cs = byKey.iterator.map { case (key, b) => new Container(key, b.result()) }.toArray
+      val n = cs.size
+      val anyRun = cs.exists(_.isRun)
+      if (anyRun) {
+        u32(12347 | ((n - 1) << 16)) // SERIAL_COOKIE, count-1 in the high bits
+        val flags = new Array[Byte]((n + 7) / 8)
+        cs.indices.foreach(i => if (cs(i).isRun) flags(i / 8) = (flags(i / 8) | (1 << (i % 8))).toByte)
+        out.write(flags)
+      } else {
+        u32(12346) // SERIAL_COOKIE_NO_RUNCONTAINER
+        u32(n)
       }
-      containers.foreach { case (_, vs) =>
-        if (vs.size <= 4096) vs.foreach(u16)
-        else {
-          val words = new Array[Long](1024)
-          vs.foreach(v => words(v >>> 6) |= 1L << (v & 63))
-          val bb = ByteBuffer.allocate(8192).order(ByteOrder.LITTLE_ENDIAN)
-          words.foreach(bb.putLong)
-          out.write(bb.array())
-        }
+      cs.foreach { c => u16(c.key); u16(c.card - 1) }
+      // offsets header: byte offset of each container from the START of
+      // this 32-bit serialization
+      if (!anyRun || n >= 4) {
+        var off = (if (anyRun) 4 + (n + 7) / 8 else 8) + 8 * n
+        cs.foreach { c => u32(off); off += c.bytes }
       }
+      cs.foreach(_.writeTo(out))
     }
     out.toByteArray
   }
@@ -130,9 +163,9 @@ object PuffinDv {
   }
 
   /** Decode a 64-bit portable roaring bitmap into packed [start,len]*
-    * runs — handles array, bitmap AND run containers (real writers emit
-    * runs; ours doesn't). Runs build STREAMING per container in the
-    * format's ascending order; the position set is never materialized. */
+    * runs — handles array, bitmap AND run containers. Runs build
+    * STREAMING per container in the format's ascending order; the
+    * position set is never materialized. */
   private[icelite] def roaringToRuns(bytes: Array[Byte]): Array[Long] = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val bucketCount = bb.getLong()
@@ -327,7 +360,7 @@ object PuffinDv {
   }
 
   /** Packed runs recorded for `dataFile` (empty when none): one footer
-    * parse + one blob seek, the same shape as [[DvCodec.runsFor]]. */
+    * parse + one blob seek. */
   def runsFor(path: Path, conf: Configuration, dataFile: String): Array[Long] =
     runsForAny(path, conf, Set(dataFile))
 
@@ -343,8 +376,9 @@ object PuffinDv {
     }
 
   /** Every (filePath, pos) pair in the container — rewrite consumption.
-    * Blobs read eagerly (stream closed before the iterator returns, like
-    * [[DvCodec.expand]]); expansion from runs stays lazy. */
+    * Blobs read eagerly, so the stream is closed before the iterator
+    * returns and a consumer that stops early cannot leak the handle;
+    * expansion from runs stays lazy. */
   def expand(path: Path, conf: Configuration): Iterator[(String, Long)] = {
     val metas = blobs(path, conf)
     val runsByFile = metas.map(bm =>

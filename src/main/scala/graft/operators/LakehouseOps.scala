@@ -680,10 +680,13 @@ object LakehouseOps {
         val sn = meta.withArray("snapshots").addObject()
         sn.put("id", 1L); sn.put("timestampMs", System.currentTimeMillis())
         sn.put("operation", "append"); sn.put("schemaId", 0)
-        val dfn = sn.putArray("dataFiles").addObject()
+        // file entries live once in the document's shared file table; a
+        // snapshot lists its files by index into it
+        val fileTable = meta.withArray("dataFileTable")
+        val dfn = fileTable.addObject()
         dfn.put("path", filePath); dfn.put("rows", nRows)
         dfn.put("schemaId", 0); dfn.put("specId", 0); dfn.putObject("partition")
-        sn.putArray("deleteFiles")
+        sn.putArray("dataFileRefs").add(fileTable.size() - 1)
         meta.put("currentSnapshotId", 1L)
         val resp = send(java.net.http.HttpRequest.newBuilder(
           java.net.URI.create(s"http://127.0.0.1:$port/v1/namespaces/db/tables/orders_ext"))
@@ -1297,13 +1300,17 @@ object LakehouseOps {
   /** M3c in the V3 BITMAP representation (README.md:1098–1108: deletion
     * vectors hold delete info in bitmap form, applied at read):
     * `write.delete.vector.enabled` switches the position-delete carrier
-    * to per-data-file RLE containers (`.ildv`, DvCodec) — same
-    * merge-on-read semantics, O(runs) on disk for the contiguous ranges
-    * predicates kill. The oracle is carrier-blind, which is the point. */
-  private val deleteDv = QueryDef(
-    "icelite_delete_dv",
+    * to roaring-bitmap blobs inside Puffin containers
+    * ([[graft.icelite.PuffinDv]] — the byte format the Iceberg V3 spec
+    * publishes and real readers speak), with run containers for the
+    * contiguous ranges predicates kill. Same merge-on-read semantics; the
+    * oracle is carrier-blind, which is the point. `icelite_delete_dv_puffin`
+    * named the Puffin carrier while a native RLE one was the default; both
+    * names stay and now run the same carrier. */
+  private def deleteDvQuery(name: String, tag: String) = QueryDef(
+    name,
     (s, dir) => {
-      val t = mkTable(s, dir, "deldv",
+      val t = mkTable(s, dir, tag,
         props = Map("write.delete.mode" -> "merge-on-read",
           "write.delete.vector.enabled" -> "true"))
       t.delete(col("o_orderkey") % 6 === 0)
@@ -1315,29 +1322,8 @@ object LakehouseOps {
              o_totalprice, CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
              FROM orders WHERE o_orderkey % 6 <> 0 ORDER BY o_orderkey"""),
   )
-
-  /** M3c in the INTEROP-GRADE V3 wire format: `write.delete.vector
-    * .format=puffin` carries the same deletion vectors as roaring-bitmap
-    * blobs inside Puffin containers ([[graft.icelite.PuffinDv]] — the
-    * byte format the Iceberg V3 spec publishes and real readers speak),
-    * where `icelite_delete_dv` uses the native RLE carrier. Same
-    * merge-on-read semantics, same carrier-blind oracle. */
-  private val deleteDvPuffin = QueryDef(
-    "icelite_delete_dv_puffin",
-    (s, dir) => {
-      val t = mkTable(s, dir, "deldvpf",
-        props = Map("write.delete.mode" -> "merge-on-read",
-          "write.delete.vector.enabled" -> "true",
-          "write.delete.vector.format" -> "puffin"))
-      t.delete(col("o_orderkey") % 6 === 0)
-      t.update(col("o_orderkey") % 11 === 0, Map("o_orderstatus" -> lit("V")))
-      state(t)
-    },
-    Some(s"""SELECT o_orderkey, o_custkey,
-             CASE WHEN o_orderkey % 11 = 0 THEN 'V' ELSE o_orderstatus END AS o_orderstatus,
-             o_totalprice, CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
-             FROM orders WHERE o_orderkey % 6 <> 0 ORDER BY o_orderkey"""),
-  )
+  private val deleteDv = deleteDvQuery("icelite_delete_dv", "deldv")
+  private val deleteDvPuffin = deleteDvQuery("icelite_delete_dv_puffin", "deldvpf")
 
   /** Cross-format interop round trip: the IceLite table EXPORTS as a
     * real-format Apache Iceberg table (metadata.json + avro manifest

@@ -33,9 +33,16 @@ private[graft] object LoopSession {
   /** A child session whose shuffle width derives from `rows` (capped at the
     * parent's width, so a `SPARK_GRAFT_CPUS`-shaped parent stays the upper
     * bound) and whose AQE is off only in the one-partition regime. The
-    * parent session's conf is read, never written. */
+    * child starts from the parent's modifiable, explicitly set SQL confs
+    * (`newSession` alone keeps only builder-time options, so a runtime
+    * `spark.sql.session.timeZone` or nanos flag would be lost); the width
+    * and AQE overrides apply on top. The parent session's conf is read,
+    * never written. */
   def forRows(parent: SparkSession, rows: Long): SparkSession = {
     val child = parent.newSession()
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (parent.conf.isModifiable(k)) child.conf.set(k, v)
+    }
     val parentParts = parent.conf.get("spark.sql.shuffle.partitions").toLong
     val nPart = math.max(1L, math.min(parentParts, rows / RowsPerPartition + 1L))
     child.conf.set("spark.sql.shuffle.partitions", nPart.toString)

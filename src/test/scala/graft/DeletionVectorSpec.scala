@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Bitmap deletion vectors ([[DvCodec]], `write.delete.vector.enabled`) —
+/** Bitmap deletion vectors ([[PuffinDv]], `write.delete.vector.enabled`) —
   * the V3 representation the reference describes (README.md:1098–1108:
   * delete info held in bitmap form, applied at read). The carrier must be
   * invisible to every query path: reads, changelog, rewrite and
@@ -27,6 +27,8 @@ class DeletionVectorSpec extends SparkSpec {
     t
   }
 
+  private def expand(runs: Array[Long]): Seq[Long] = DeleteIndex.expandRuns(runs).toSeq
+
   test("DV codec: runs round-trip, header answers without blob reads, seek isolates one file") {
     val conf = new org.apache.hadoop.conf.Configuration()
     val dir = Files.createTempDirectory("dv_codec").toString
@@ -34,64 +36,82 @@ class DeletionVectorSpec extends SparkSpec {
     val a = (100L until 200L).toArray           // one run
     val b = Array(1L, 5L, 6L, 7L, 99L)          // three runs
     val c = Array(0L)                           // one run
-    assert(DvCodec.toRuns(a).toSeq == Seq(100L, 100L))
-    assert(DvCodec.toRuns(b).toSeq == Seq(1L, 1L, 5L, 3L, 99L, 1L))
-    val p = new Path(s"$dir/x${DvCodec.Ext}")
-    DvCodec.write(p, Seq("fA" -> a, "fB" -> b, "fC" -> c), conf)
-    assert(DvCodec.header(p, conf).map(e => (e._1, e._2)) ==
+    assert(DeleteIndex.toRuns(a).toSeq == Seq(100L, 100L))
+    assert(DeleteIndex.toRuns(b).toSeq == Seq(1L, 1L, 5L, 3L, 99L, 1L))
+    val p = new Path(s"$dir/x${PuffinDv.Ext}")
+    val metas = PuffinDv.write(p, Seq("fA" -> a, "fB" -> b, "fC" -> c), conf)
+    assert(PuffinDv.blobs(p, conf).map(e => (e.refDataFile, e.cardinality)) ==
       Seq(("fA", 100L), ("fB", 5L), ("fC", 1L)))
-    assert(DvCodec.positionsFor(p, conf, "fB").toSeq == b.toSeq)
-    assert(DvCodec.positionsFor(p, conf, "fA").toSeq == a.toSeq)
-    assert(DvCodec.positionsFor(p, conf, "missing").isEmpty)
-    assert(DvCodec.expand(p, conf).size == 106)
-    // spelling-insensitive probe: ONE header parse matches any key in the
+    assert(expand(PuffinDv.runsFor(p, conf, "fB")) == b.toSeq)
+    assert(expand(PuffinDv.runsFor(p, conf, "fA")) == a.toSeq)
+    assert(PuffinDv.runsFor(p, conf, "missing").isEmpty)
+    assert(PuffinDv.expand(p, conf).size == 106)
+    // spelling-insensitive probe: ONE footer parse matches any key in the
     // set (the DeleteIndex path for adopted foreign spellings)
-    assert(DvCodec.runsForAny(p, conf, Set("file:fB", "fB")).toSeq
+    assert(PuffinDv.runsForAny(p, conf, Set("file:fB", "fB")).toSeq
       == Seq(1L, 1L, 5L, 3L, 99L, 1L))
-    assert(DvCodec.runsForAny(p, conf, Set("nope", "missing")).isEmpty)
+    assert(PuffinDv.runsForAny(p, conf, Set("nope", "missing")).isEmpty)
+    // corrupt fB's blob: the footer still answers (it reads no blob), fA
+    // and fC still resolve (each seek reads only its own blob), and only
+    // fB's resolution refuses
+    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, conf)
+    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p); try in.readFully(0, bytes) finally in.close()
+    val hit = metas(1).offset.toInt + 9
+    bytes(hit) = (bytes(hit) ^ 1).toByte
+    fs.delete(p, false)
+    val out = fs.create(p, false); try out.write(bytes) finally out.close()
+    assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq("fA", "fB", "fC"))
+    assert(expand(PuffinDv.runsFor(p, conf, "fA")) == a.toSeq)
+    assert(expand(PuffinDv.runsFor(p, conf, "fC")) == c.toSeq)
+    assert(intercept[IllegalArgumentException](PuffinDv.runsFor(p, conf, "fB"))
+      .getMessage.contains("CRC"))
   }
 
   test("DV codec hardening: modified-UTF-8 paths seek exactly; expand decouples from the handle; runs probe") {
     val conf = new org.apache.hadoop.conf.Configuration()
     val dir = Files.createTempDirectory("dv_codec_hard").toString
-    // writeUTF emits MODIFIED UTF-8 (supplementary chars = 6 bytes vs
-    // standard UTF-8's 4; NUL = 2 bytes vs 1) — the reader derives the
-    // blob offset from bytes CONSUMED, so exotic paths cannot skew the
-    // seek into a neighboring blob
+    // paths that Java's modified UTF-8 would spell differently from
+    // standard UTF-8 (a supplementary-plane char, NUL, 2- and 3-byte
+    // classes) must come back from the JSON footer exactly, and each must
+    // resolve its own blob
     val pathA = "data/f_😀_\u0000.parquet" // surrogate pair + NUL
     val pathB = "data/f_é߿.parquet"        // 2-byte class chars
+    val pathC = "data/f_日本_\uFFFD.parquet" // 3-byte class chars
     val a = Array(3L, 4L, 5L, 100L)
     val b = Array(7L)
-    val p = new Path(s"$dir/u${DvCodec.Ext}")
-    DvCodec.write(p, Seq(pathA -> a, pathB -> b), conf)
-    assert(DvCodec.positionsFor(p, conf, pathB).toSeq == Seq(7L),
-      "blob seek skewed by modified-UTF-8 header length")
-    assert(DvCodec.positionsFor(p, conf, pathA).toSeq == a.toSeq)
+    val c = Array(42L)
+    val p = new Path(s"$dir/u${PuffinDv.Ext}")
+    PuffinDv.write(p, Seq(pathA -> a, pathB -> b, pathC -> c), conf)
+    assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq(pathA, pathB, pathC))
+    assert(expand(PuffinDv.runsFor(p, conf, pathB)) == Seq(7L),
+      "blob lookup skewed by a non-ASCII path")
+    assert(expand(PuffinDv.runsFor(p, conf, pathC)) == Seq(42L))
     // the scan path consumes RUNS (packed [start,len]*), never expansions
-    assert(DvCodec.runsFor(p, conf, pathA).toSeq == Seq(3L, 3L, 100L, 1L))
-    assert(DvCodec.runContains(Array(3L, 3L, 100L, 1L), 5L))
-    assert(!DvCodec.runContains(Array(3L, 3L, 100L, 1L), 6L))
-    assert(DvCodec.runContains(Array(3L, 3L, 100L, 1L), 100L))
-    assert(!DvCodec.runContains(Array(3L, 3L, 100L, 1L), 101L))
+    assert(PuffinDv.runsFor(p, conf, pathA).toSeq == Seq(3L, 3L, 100L, 1L))
+    assert(DeleteIndex.runContains(Array(3L, 3L, 100L, 1L), 5L))
+    assert(!DeleteIndex.runContains(Array(3L, 3L, 100L, 1L), 6L))
+    assert(DeleteIndex.runContains(Array(3L, 3L, 100L, 1L), 100L))
+    assert(!DeleteIndex.runContains(Array(3L, 3L, 100L, 1L), 101L))
     // a DENSE delete set stays O(runs): one run describes a million kills
-    val dense = DvCodec.toRuns((0L until 1000000L).toArray)
+    val dense = DeleteIndex.toRuns((0L until 1000000L).toArray)
     assert(dense.length == 2)
-    assert(DvCodec.mergeRuns(Seq(Array(0L, 10L), Array(5L, 10L), Array(20L, 1L))).toSeq
+    assert(DeleteIndex.mergeRuns(Seq(Array(0L, 10L), Array(5L, 10L), Array(20L, 1L))).toSeq
       == Seq(0L, 15L, 20L, 1L))
     // expand() reads the container EAGERLY and closes before returning the
     // iterator — a partial consumer can't leak the handle; proof: delete
     // the file mid-iteration and the remaining positions still stream
-    val it = DvCodec.expand(p, conf)
+    val it = PuffinDv.expand(p, conf)
     assert(it.next()._2 == 3L)
     org.apache.hadoop.fs.FileSystem.get(p.toUri, conf).delete(p, false)
-    assert(it.toSeq.map(_._2) == Seq(4L, 5L, 100L, 7L))
+    assert(it.toSeq.map(_._2) == Seq(4L, 5L, 100L, 7L, 42L))
   }
 
-  test("DV-mode DELETE and UPDATE equal the parquet-delete twin; .ildv files carry the deletes") {
+  test("DV-mode DELETE and UPDATE equal the parquet-delete twin; .puffin files carry the deletes") {
     val tp = mk("pq", dv = false)
     val tv = mk("dv", dv = true)
     for (t <- Seq(tp, tv)) {
-      t.delete(col("id") >= 300 && col("id") < 500) // contiguous range: RLE's case
+      t.delete(col("id") >= 300 && col("id") < 500) // contiguous range: a run container
       t.delete(col("id") % 97 === 0)                // scattered singletons
       t.update(col("id") === 777L, Map("v" -> lit(-1L)))
     }
@@ -99,12 +119,29 @@ class DeletionVectorSpec extends SparkSpec {
     val got = tv.read().select("id", "v").as[(Long, Long)].collect().toSet
     assert(got == want, "DV reads must equal the parquet-delete twin exactly")
     val dels = tv.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
-    assert(dels.nonEmpty && dels.forall(_.path.endsWith(DvCodec.Ext)),
-      s"DV mode must write .ildv carriers, got ${dels.map(_.path)}")
+    assert(dels.nonEmpty && dels.forall(_.path.endsWith(PuffinDv.Ext)),
+      s"DV mode must write .puffin carriers, got ${dels.map(_.path)}")
     assert(dels.forall(d => d.pathLo.isDefined && d.pathHi.isDefined),
       "DV entries must carry path-range summaries for delete-manifest pruning")
     // fresh load exercises the executor-side DV resolution end-to-end
     assert(IceLite.load(spark, tv.location).read().count() == want.size.toLong)
+  }
+
+  test("merge-on-read reads compile PositionLive's generated probe, with no interpreted fallback") {
+    // Spark falls back to interpreted evaluation when generated code fails
+    // to compile, which would hide a stale probe name in PositionLive's
+    // codegen string; with the fallback off, such a probe fails the read
+    val keys = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      for (dv <- Seq(false, true)) {
+        val t = mk(s"cg_$dv", dv)
+        t.delete(col("id") >= 10 && col("id") < 20)
+        assert(t.read().filter(col("v") >= 0).count() == 990L, s"dv=$dv")
+      }
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("changelog over DV deletes reports the same rows as the parquet twin") {
@@ -124,10 +161,10 @@ class DeletionVectorSpec extends SparkSpec {
     val t = mk("rw", dv = true)
     (0 until 4).foreach(i => t.delete(col("id") === (i * 50).toLong))
     val before = t.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
-    assert(before.size >= 4 && before.forall(_.path.endsWith(DvCodec.Ext)))
+    assert(before.size >= 4 && before.forall(_.path.endsWith(PuffinDv.Ext)))
     assert(t.rewritePositionDeletes())
     val after = t.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
-    assert(after.size == 1 && after.head.path.endsWith(DvCodec.Ext),
+    assert(after.size == 1 && after.head.path.endsWith(PuffinDv.Ext),
       s"a DV-enabled table's rewrite must merge into ONE DV container, " +
         s"got ${after.map(_.path)}")
     assert(t.read().select("id").as[Long].collect().toSet ==
@@ -147,8 +184,9 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("a contiguous-range DV is materially smaller than its parquet twin") {
     // range-clustered single file: a predicate range deletes CONTIGUOUS
-    // positions — the shape RLE exists for (hash-partitioned files would
-    // scatter positions and both carriers degrade to O(positions))
+    // positions — the shape run containers exist for (hash-partitioned
+    // files would scatter positions and both carriers degrade to
+    // O(positions))
     def mkClustered(tag: String, dv: Boolean): IceLiteTable = {
       val loc = Files.createTempDirectory(s"dv_$tag").toString + "/t"
       val props = Map("write.delete.mode" -> "merge-on-read") ++
@@ -169,6 +207,6 @@ class DeletionVectorSpec extends SparkSpec {
     }
     val (pq, dv) = (delBytes(tp), delBytes(tv))
     assert(dv * 5 < pq,
-      s"600 contiguous positions must RLE far below parquet rows: dv=$dv pq=$pq")
+      s"600 contiguous positions must run-encode far below parquet rows: dv=$dv pq=$pq")
   }
 }

@@ -87,6 +87,22 @@ class GraphTextOpsSpec extends SparkSpec {
       .sparkSession eq child)
   }
 
+  test("LoopSession child sessions keep the parent's runtime SQL confs") {
+    val parent = spark.newSession()
+    val zone = if (spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo")
+      "America/Lima" else "Asia/Tokyo"
+    parent.conf.set("spark.sql.session.timeZone", zone)
+    parent.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val child = operators.LoopSession.forRows(parent, 10L)
+    assert(child.conf.get("spark.sql.session.timeZone") == zone)
+    assert(child.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(child.sql("SELECT current_timezone()").head.getString(0) == zone)
+    // the width/AQE overrides still apply on top of the copied confs
+    assert(child.conf.get("spark.sql.shuffle.partitions") == "1")
+    assert(child.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(parent.conf.get("spark.sql.adaptive.enabled") != "false")
+  }
+
   test("cube levels are mutually consistent") {
     val out = Registry.queries("cube_agg")(spark, sf).collect()
     val byGid = out.groupBy(_.getAs[Long]("gid"))

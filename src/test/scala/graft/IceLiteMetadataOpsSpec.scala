@@ -5,15 +5,18 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-/** Round-12 fixes: TIMESTAMP_NS conversion unified across every DML
-  * alignment surface, nanos-aware stat-filter normalization, Iceberg-style
-  * 16-unit string bound truncation, and undersized-manifest consolidation.
+/** IceLite metadata operations: TIMESTAMP_NS conversion unified across
+  * every DML alignment surface, nanos-aware stat-filter normalization,
+  * Iceberg-style 16-unit string bound truncation, undersized-manifest
+  * consolidation, the auto-maintenance threshold clamp, and the loud
+  * refusal of on-disk shapes IceLite no longer reads (format-1 metadata,
+  * JSON manifest chunks, `.ildv` deletion vectors).
   */
-class Round12OpsSpec extends graft.SparkSpec {
+class IceLiteMetadataOpsSpec extends graft.SparkSpec {
   import spark.implicits._
 
   private def freshLoc(tag: String) =
-    Files.createTempDirectory(s"r12_$tag").toString + "/t"
+    Files.createTempDirectory(s"meta_$tag").toString + "/t"
 
   // base fixture: nanos NOT divisible by 1000 — bits a µs path destroys
   private val baseNs = 1700000000_000000000L
@@ -153,47 +156,54 @@ class Round12OpsSpec extends graft.SparkSpec {
     assert(MetaJson.fromJson(MetaJson.toJson(t.meta), t.manifestIO) == t.meta)
   }
 
-  test("manifest codec: avro and json chunks interoperate; avro parses faster at size") {
-    val loc = freshLoc("codec")
-    // json-codec table writes .json chunks...
-    val tj = IceLite.create(spark, loc.replace("/t", "/tj"),
-      Seq("id" -> "BIGINT", "v" -> "BIGINT"),
-      properties = Map("write.metadata.manifest.codec" -> "json",
-        "write.metadata.manifest.min-files" -> "2"))
-    tj.append(spark.range(0, 100).select(col("id"), (col("id") * 2).as("v")).repartition(4))
-    val jrefs = tj.meta.currentSnapshot.get.files.manifests
-    assert(jrefs.nonEmpty && jrefs.forall(_.path.endsWith(".json")))
-    // ...then the codec flips to avro: OLD chunks keep reading (by
-    // extension), NEW chunks are avro — a live migration, no rewrite
-    tj.setProperties(Map("write.metadata.manifest.codec" -> "avro"))
-    tj.append(spark.range(100, 200).select(col("id"), (col("id") * 2).as("v")).repartition(4))
-    val mixed = tj.meta.currentSnapshot.get.files.manifests
-    assert(mixed.exists(_.path.endsWith(".json")) && mixed.exists(_.path.endsWith(".avro")),
-      s"expected mixed codecs, got ${mixed.map(_.path.split('.').last)}")
-    assert(tj.read().count() == 200L)
-    assert(tj.read().agg(sum("id")).head.getLong(0) == (0L until 200L).sum)
-
-    // parse-time comparison at 5000 entries/chunk (the default target):
-    // driver-local chunk loads, the planning-path cost at 10M files
-    val entries = (0 until 5000).map(i => DataFile(
-      s"$loc/data/part-$i.parquet", 1000L, 0, 0,
-      Map("k" -> (i % 64).toString),
-      Map(1 -> ColumnStats((i * 10).toString, (i * 10 + 9).toString),
-        2 -> ColumnStats("a" * 12, "z" * 12)), seq = i % 50))
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val pq = new Path(s"$loc/bench-chunk.avro")
-    ManifestCodec.writeData(pq, entries, conf)
-    val js = MetaJson.manifestToJson(entries)
-    def time[T](reps: Int)(body: => T): Double = {
-      body // warmup
-      val t0 = System.nanoTime(); (0 until reps).foreach(_ => body)
-      (System.nanoTime() - t0) / 1e6 / reps
+  test("removed on-disk shapes refuse by name: v1 metadata, a .json manifest chunk, an .ildv delete file") {
+    // rewrite the table's current version file the way an earlier IceLite
+    // build would have written it, then load the table fresh
+    def rewriteCurrent(t: IceLiteTable)(edit: String => String): String = {
+      val f = java.nio.file.Paths.get(
+        new Path(t.location, s"metadata/v${t.currentVersion}.json").toUri.getPath)
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      val edited = edit(text)
+      assert(edited != text, "the edit must change the version file")
+      Files.write(f, edited.getBytes("UTF-8"))
+      f.getFileName.toString
     }
-    val avMs = time(10)(ManifestCodec.readData(pq, conf))
-    val jsMs = time(10)(MetaJson.manifestFromJson(js))
-    info(f"chunk parse at 5000 entries: avro $avMs%.1f ms vs json $jsMs%.1f ms")
-    println(f"[codec-bench] entries=5000 avro_ms=$avMs%.1f json_ms=$jsMs%.1f")
-    assert(ManifestCodec.readData(pq, conf) == entries, "codec must be lossless")
+    def refusal(loc: String)(body: IceLiteTable => Any): String =
+      intercept[IllegalArgumentException](body(IceLite.load(spark, loc))).getMessage
+
+    // metadata format 1: refused at load, naming the version file
+    val tv = IceLite.create(spark, freshLoc("v1"), Seq("id" -> "BIGINT", "v" -> "BIGINT"))
+    tv.append(spark.range(0, 10).select(col("id"), (col("id") * 2).as("v")))
+    val vFile = rewriteCurrent(tv)(_.replace("\"formatVersion\" : 3", "\"formatVersion\" : 1"))
+    val ev = refusal(tv.location)(_.meta)
+    assert(ev.contains(vFile) && ev.contains("format 1"), ev)
+
+    // a .json manifest chunk ref: refused when planning forces the chunk
+    val tj = IceLite.create(spark, freshLoc("json"), Seq("id" -> "BIGINT", "v" -> "BIGINT"),
+      properties = Map("write.metadata.manifest.min-files" -> "2"))
+    tj.append(spark.range(0, 100).select(col("id"), (col("id") * 2).as("v")).repartition(4))
+    val chunk = tj.meta.currentSnapshot.get.files.manifests.head.path
+    assert(chunk.endsWith(".avro"))
+    val jsonChunk = chunk.stripSuffix(".avro") + ".json"
+    rewriteCurrent(tj)(_.replace(chunk, jsonChunk))
+    val ej = refusal(tj.location)(_.read().count())
+    assert(ej.contains(jsonChunk) && ej.contains("JSON chunks are not read"), ej)
+
+    // an .ildv delete file: refused by every carrier dispatch (the read's
+    // DeleteIndex, the delete-file rewrite's posDeleteRows), never handed
+    // to the parquet reader
+    val td = IceLite.create(spark, freshLoc("ildv"), Seq("id" -> "BIGINT", "v" -> "BIGINT"),
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    td.append(spark.range(0, 100).select(col("id"), (col("id") * 2).as("v")).repartition(2))
+    td.delete(col("id") === 1L)
+    td.delete(col("id") === 2L)
+    val dels = td.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos").map(_.path)
+    assert(dels.size == 2 && dels.forall(_.endsWith(".parquet")), dels)
+    val ildv = dels.head.stripSuffix(".parquet") + ".ildv"
+    rewriteCurrent(td)(_.replace(dels.head, ildv))
+    for (msg <- Seq(refusal(td.location)(_.read().count()),
+                    refusal(td.location)(_.rewritePositionDeletes())))
+      assert(msg.contains(ildv) && msg.contains(".ildv is not read"), msg)
   }
 
   test("auto-maintenance rewrite-deletes threshold=1 is clamped, not a silent no-op") {

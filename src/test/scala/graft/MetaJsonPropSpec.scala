@@ -127,7 +127,7 @@ class MetaJsonPropSpec extends AnyFunSuite {
     assert(MetaJson.fromJson(js) == m)
   }
 
-  test("v1 (inline-files) metadata still parses — durability across the format bump") {
+  test("v1 (inline-files) metadata is refused, not loaded as a table of empty snapshots") {
     val v1 = """{
       "formatVersion": 1, "location": "/wh/t", "lastFieldId": 2,
       "currentSchemaId": 0,
@@ -147,13 +147,19 @@ class MetaJsonPropSpec extends AnyFunSuite {
          "deleteFiles": [{"path": "/del/d.parquet", "rows": 2}]}],
       "metadataLog": [{"version": 1, "timestampMs": 1000, "note": "create"}]
     }"""
-    val m = MetaJson.fromJson(v1)
-    assert(m.snapshots.size == 2)
-    assert(m.snapshots.head.dataFiles.head.path == "/data/a.parquet")
-    assert(m.snapshots.head.dataFiles.head.stats(1).max == "9")
-    assert(m.snapshots(1).deleteFiles.head.kind == "pos")
-    assert(m.currentSnapshot.get.id == 2)
-    // and re-serializing upgrades it to v2 losslessly
-    assert(MetaJson.fromJson(MetaJson.toJson(m)) == m)
+    // the v2+ reader reads snapshot files only through the shared file
+    // tables and manifest refs; loading this would give snapshots with no
+    // files, so it refuses, naming the file
+    val e = intercept[IllegalArgumentException](
+      MetaJson.fromJson(v1, ManifestIO.detached, "/wh/t/metadata/v7.json"))
+    assert(e.getMessage.contains("/wh/t/metadata/v7.json") && e.getMessage.contains("format 1"),
+      e.getMessage)
+    // a newer format number does not make inline snapshot files readable
+    val inline3 = v1.replace("\"formatVersion\": 1", "\"formatVersion\": 3")
+    assert(intercept[IllegalArgumentException](MetaJson.fromJson(inline3))
+      .getMessage.contains("inline snapshot files"))
+    // nor is a document with no format number at all
+    assert(intercept[IllegalArgumentException](
+      MetaJson.fromJson(v1.replace("\"formatVersion\": 1,", ""))).getMessage.contains("format 1"))
   }
 }

@@ -12,10 +12,11 @@ import graft.SparkSpec
   * roaring-bitmap blobs in a Puffin container. Byte-level checks pin the
   * published formats (roaring portable cookies/containers, the
   * deletion-vector-v1 length/magic/CRC frame, the Puffin footer); the
-  * reader must also decode RUN containers our writer never emits,
-  * because real engines do. Table-level: the carrier is invisible to
-  * every query path (parquet-twin equality), coexists with `.ildv` in
-  * one snapshot, and the delete-file rewrite honors it. */
+  * writer emits RUN containers where they are smaller, byte-equal to the
+  * RoaringBitmap library's own run-optimized form. Table-level: the
+  * carrier is invisible to every query path (parquet-twin equality),
+  * coexists with parquet position deletes in one snapshot, and the
+  * delete-file rewrite honors it. */
 class PuffinDvSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,11 +31,11 @@ class PuffinDvSpec extends SparkSpec {
     val high = Array(1L, (1L << 33) + 7, (1L << 33) + 8)
     for (ps <- Seq(sparse, dense, high)) {
       val runs = PuffinDv.roaringToRuns(PuffinDv.roaringSerialize(ps))
-      assert(DvCodec.expandRuns(runs).toSeq == ps.toSeq, s"round trip broke for ${ps.take(5).toSeq}…")
+      assert(DeleteIndex.expandRuns(runs).toSeq == ps.toSeq, s"round trip broke for ${ps.take(5).toSeq}…")
     }
     // container boundaries: a run crossing nothing special, value 65535/65536
     val edge = Array(65534L, 65535L, 65536L, 65537L)
-    assert(DvCodec.expandRuns(PuffinDv.roaringToRuns(PuffinDv.roaringSerialize(edge))).toSeq
+    assert(DeleteIndex.expandRuns(PuffinDv.roaringToRuns(PuffinDv.roaringSerialize(edge))).toSeq
       == edge.toSeq)
     val p = new Path(s"$dir/c${PuffinDv.Ext}")
     val metas = PuffinDv.write(p, Seq("fA" -> sparse, "fB" -> dense, "fC" -> high), conf)
@@ -42,17 +43,17 @@ class PuffinDvSpec extends SparkSpec {
       Seq(("fA", 5L), ("fB", 5000L), ("fC", 3L)))
     // footer answers without blob reads; per-file resolution seeks one blob
     assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq("fA", "fB", "fC"))
-    assert(DvCodec.expandRuns(PuffinDv.runsFor(p, conf, "fB")).toSeq == dense.toSeq)
-    assert(DvCodec.expandRuns(PuffinDv.runsFor(p, conf, "fA")).toSeq == sparse.toSeq)
+    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "fB")).toSeq == dense.toSeq)
+    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "fA")).toSeq == sparse.toSeq)
     assert(PuffinDv.runsFor(p, conf, "missing").isEmpty)
     // spelling-insensitive probe: ONE footer parse matches any key in the set
-    assert(DvCodec.expandRuns(
+    assert(DeleteIndex.expandRuns(
       PuffinDv.runsForAny(p, conf, Set("file:fA", "fA"))).toSeq == sparse.toSeq)
     assert(PuffinDv.runsForAny(p, conf, Set("nope", "missing")).isEmpty)
     assert(PuffinDv.expand(p, conf).size == 5008)
   }
 
-  test("reader decodes RUN containers (the form real writers emit, ours does not)") {
+  test("RUN containers: the reader decodes them, the writer emits them where smaller") {
     // hand-built 64-bit portable roaring: 1 bucket, 1 run container with
     // runs [10,14] and [100,100] — cookie 12347, run-flag bitset, no
     // offsets header (run cookie below 4 containers)
@@ -68,6 +69,39 @@ class PuffinDvSpec extends SparkSpec {
       0x64, 0, 0x00, 0           // run (100, len-1=0)
     ).map(_.toByte)
     assert(PuffinDv.roaringToRuns(bytes).toSeq == Seq(10L, 5L, 100L, 1L))
+    // two runs (10 bytes) undercut six array values (12): the writer emits
+    // exactly the hand-built form
+    assert(PuffinDv.roaringSerialize(Array(10L, 11L, 12L, 13L, 14L, 100L)).toSeq == bytes.toSeq)
+
+    // a contiguous range serializes as ONE run container: cookie 12347,
+    // run flag set, key 0, cardinality-1 599, one (start, length-1) pair
+    val range = PuffinDv.roaringSerialize((200L until 800L).toArray)
+    val bb = java.nio.ByteBuffer.wrap(range).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    assert(bb.getLong() == 1L && bb.getInt() == 0 && bb.getInt() == 12347 && bb.get() == 1)
+    assert(bb.getShort() == 0 && bb.getShort() == 599)
+    assert(bb.getShort() == 1 && bb.getShort() == 200 && bb.getShort() == 599)
+    assert(!bb.hasRemaining, s"${range.length} bytes for one run")
+
+    // each 32-bit bucket is the RoaringBitmap library's own portable form
+    // after runOptimize: run and non-run containers mixed, past 4
+    // containers (offsets header present under the run cookie), and
+    // bitmap containers that stay bitmaps
+    val cases = Seq(
+      (0L until 70000L).toArray,                                    // runs over 2 containers
+      (0L until 5L).map(_ * 70000L).toArray ++ (400000L until 400100L), // 6 containers, one run
+      (0L until 9000L).map(_ * 3).toArray,                          // bitmap, no runs
+      (0L until 20L).flatMap(c => (c * 65536 until c * 65536 + 9)).toArray, // 20 run containers
+      Array(1L, 3L, 5L, 7L, 9L) ++ (65536L until 65546L))           // array, then run
+    cases.foreach { ps =>
+      val ref = new org.roaringbitmap.RoaringBitmap()
+      ps.foreach(p => ref.add(p.toInt))
+      ref.runOptimize()
+      val want = new Array[Byte](ref.serializedSizeInBytes())
+      ref.serialize(java.nio.ByteBuffer.wrap(want))
+      val ours = PuffinDv.roaringSerialize(ps)
+      assert(ours.drop(12).toSeq == want.toSeq, s"differs from RoaringBitmap for ${ps.take(5).toSeq}…")
+      assert(DeleteIndex.expandRuns(PuffinDv.roaringToRuns(ours)).toSeq == ps.toSeq)
+    }
   }
 
   test("dense blobs decode to O(runs) packed form, streaming across container boundaries") {
@@ -135,7 +169,7 @@ class PuffinDvSpec extends SparkSpec {
     val blobs = PuffinDv.blobs(mixed, conf)
     assert(blobs.size == 1 && blobs.head.refDataFile == "fX",
       s"only the DV blob should surface, got $blobs")
-    assert(DvCodec.expandRuns(PuffinDv.runsFor(mixed, conf, "fX")).toSeq == positions.toSeq)
+    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(mixed, conf, "fX")).toSeq == positions.toSeq)
   }
 
   test("deletion-vector-v1 frame: corrupted payload refuses on CRC") {
@@ -154,7 +188,7 @@ class PuffinDvSpec extends SparkSpec {
     assert(e.getMessage.contains("CRC"))
   }
 
-  test("puffin-carrier table equals its parquet and ildv twins; rewrite honors the carrier") {
+  test("puffin-carrier table equals its parquet twin; rewrite honors the carrier; parquet and puffin coexist") {
     def mk(tag: String, props: Map[String, String]): IceLiteTable = {
       val loc = Files.createTempDirectory(s"pfdv_$tag").toString + "/t"
       val t = IceLite.createFrom(spark, loc, Seq((0L, 0L)).toDF("id", "v"),
@@ -164,8 +198,7 @@ class PuffinDvSpec extends SparkSpec {
       t
     }
     val tp = mk("pq", Map())
-    val tf = mk("pf", Map("write.delete.vector.enabled" -> "true",
-      "write.delete.vector.format" -> "puffin"))
+    val tf = mk("pf", Map("write.delete.vector.enabled" -> "true"))
     for (t <- Seq(tp, tf)) {
       t.delete(col("id") >= 300 && col("id") < 500)
       t.delete(col("id") % 97 === 0)
@@ -175,25 +208,32 @@ class PuffinDvSpec extends SparkSpec {
     assert(tf.read().select("id", "v").as[(Long, Long)].collect().toSet == want)
     val dels = tf.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
     assert(dels.nonEmpty && dels.forall(_.path.endsWith(PuffinDv.Ext)),
-      s"puffin format must write .puffin carriers, got ${dels.map(_.path)}")
+      s"DV mode must write .puffin carriers, got ${dels.map(_.path)}")
     // fresh load exercises the executor-side roaring resolution end-to-end
     assert(IceLite.load(spark, tf.location).read().count() == want.size.toLong)
 
-    // rewrite merges INTO puffin containers when the format says so
+    // rewrite merges INTO puffin containers while DVs are enabled
     assert(tf.rewritePositionDeletes())
     val after = tf.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
     assert(after.size == 1 && after.head.path.endsWith(PuffinDv.Ext),
       s"rewrite must merge into ONE puffin container, got ${after.map(_.path)}")
     assert(tf.read().select("id", "v").as[(Long, Long)].collect().toSet == want)
 
-    // live migration: switch the format property — old .puffin deletes
-    // keep applying while NEW deletes land as .ildv; the carriers coexist
-    tf.setProperties(Map("write.delete.vector.format" -> "ildv"))
+    // live migration: turn DVs off — old .puffin deletes keep applying
+    // while NEW deletes land as parquet; then back on, and both apply
+    tf.setProperties(Map("write.delete.vector.enabled" -> "false"))
     tf.delete(col("id") === 999L)
     val mixed = tf.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
     assert(mixed.exists(_.path.endsWith(PuffinDv.Ext)) &&
-      mixed.exists(_.path.endsWith(DvCodec.Ext)), mixed.map(_.path).toString)
+      mixed.exists(_.path.endsWith(".parquet")), mixed.map(_.path).toString)
     assert(tf.read().count() == want.size.toLong - 1)
+    tf.setProperties(Map("write.delete.vector.enabled" -> "true"))
+    tf.delete(col("id") === 998L)
+    val back = tf.meta.currentSnapshot.get.deleteFiles.filter(_.kind == "pos")
+    assert(back.count(_.path.endsWith(PuffinDv.Ext)) == 2 &&
+      back.exists(_.path.endsWith(".parquet")), back.map(_.path).toString)
+    assert(IceLite.load(spark, tf.location).read().select("id", "v").as[(Long, Long)]
+      .collect().toSet == want.filterNot(r => r._1 == 999L || r._1 == 998L))
   }
 
   test("changelog over puffin DVs reports the same rows as the parquet twin") {
@@ -206,8 +246,7 @@ class PuffinDvSpec extends SparkSpec {
       t
     }
     val tp = mk("pq", Map())
-    val tf = mk("pf", Map("write.delete.vector.enabled" -> "true",
-      "write.delete.vector.format" -> "puffin"))
+    val tf = mk("pf", Map("write.delete.vector.enabled" -> "true"))
     for (t <- Seq(tp, tf)) t.delete(col("id") >= 100 && col("id") < 120)
     def changes(t: IceLiteTable): Set[(String, Long)] = {
       val snaps = t.meta.snapshots.map(_.id)

@@ -50,13 +50,15 @@ class RamTableSpec extends SparkSpec {
 
     // CoW update rewrites through the store
     t1.update(col("id") < 10, Map("v" -> lit(-1L)))
-    // DV merge-on-read delete: .ildv container lands on ram://
+    // DV merge-on-read delete: the .puffin container lands on ram://
     t1.delete(col("id") >= 290)
     val t2 = IceLite.load(spark, loc)
     val dels = t2.meta.currentSnapshot.get.deletes.all
-    assert(dels.exists(_.path.endsWith(DvCodec.Ext)), dels.map(_.path).toString)
-    assert(dels.filter(_.path.endsWith(DvCodec.Ext))
-      .forall(d => RamFs.files.containsKey(new java.net.URI(d.path).getPath)))
+    assert(dels.exists(_.path.endsWith(PuffinDv.Ext)), dels.map(_.path).toString)
+    assert(dels.filter(_.path.endsWith(PuffinDv.Ext)).forall { d =>
+      val k = new java.net.URI(d.path).getPath
+      RamFs.files.containsKey(k) && !new java.io.File(k).exists()
+    })
 
     val got = t2.read().select("id", "v").as[(Long, Long)].collect().toMap
     assert(got.size == 290)

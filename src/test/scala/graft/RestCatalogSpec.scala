@@ -319,11 +319,14 @@ class RestCatalogSpec extends SparkSpec {
       val sn = meta.withArray("snapshots").addObject()
       sn.put("id", 1L); sn.put("timestampMs", 1700000000000L)
       sn.put("operation", "append"); sn.put("schemaId", 0)
-      val df = sn.putArray("dataFiles").addObject()
+      // file entries live once in the document's shared file table; a
+      // snapshot lists its files by index into it
+      val fileTable = meta.withArray("dataFileTable")
+      val df = fileTable.addObject()
       df.put("path", filePath); df.put("rows", 2L)
       df.put("schemaId", 0); df.put("specId", 0)
       df.putObject("partition")
-      sn.putArray("deleteFiles")
+      sn.putArray("dataFileRefs").add(fileTable.size() - 1)
       meta.put("currentSnapshotId", 1L)
       val commit = post(s"$base/namespaces/db/tables/ext",
         s"""{"expected-version": 1, "metadata": ${M.writeValueAsString(meta)}}""")
