@@ -963,32 +963,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // planned files (all-eq at or below every planned seq, or a pos path
     // range missing every planned path) are never parsed — candidates()
     val (eqDels, posDels) = snap.deletes.candidates(files).partition(_.kind == "eq")
-    val needLineage = lineage || posDels.nonEmpty
-    def scanBySchema(fs: Seq[DataFile]): DataFrame =
-      fs.groupBy(f => (f.schemaId, f.nameMapped)).toSeq.sortBy(_._1)
-        .map { case ((sid, nm), fs0) =>
-          scanGroup(m, fs0, sid, needLineage, proj, nm, rowLineage) }
-        .reduce(_ unionAll _)
-    // equality deletes: an eq delete at sequence S removes matching rows
-    // from data files with seq < S only — rows re-inserted AFTER the
-    // delete (higher seq) survive. Files are grouped by their applicable
-    // delete set (at most a handful of distinct sets: deletes are
-    // monotone in seq, so the groups form a staircase) and each group is
-    // anti-joined against the BROADCAST key set — eq delete files are
-    // key-only and small by construction (the content-addressed delete
-    // exists so delete cost is O(keys), never a scan), so the 100 TB data
-    // side again neither joins nor shuffles.
-    val unioned =
-      if (eqDels.isEmpty) scanBySchema(files)
-      else files
-        .groupBy(f => eqDels.filter(_.seq > f.seq).map(_.path).sorted)
-        .toSeq.sortBy(_._1.mkString(","))
-        .map { case (paths, fs) =>
-          paths.foldLeft(scanBySchema(fs)) { (d, p) =>
-            antiJoinEqKeys(d, eqDels.find(_.path == p).get, m, proj)
-          }
-        }
-        .reduce(_ unionAll _)
+    val needLineage = lineage || posDels.nonEmpty || eqDels.nonEmpty
+    val unioned = files.groupBy(f => (f.schemaId, f.nameMapped)).toSeq.sortBy(_._1)
+      .map { case ((sid, nm), fs0) =>
+        scanGroup(m, fs0, sid, needLineage, proj, nm, rowLineage) }
+      .reduce(_ unionAll _)
     // merge-on-read: positional deletes applied as a BROADCAST per-file
     // position filter inside the scan — the data side never joins or
     // shuffles (the scale-killer a global (_file,_pos) anti-join becomes at
@@ -1004,7 +983,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // no per-row path normalization happens. At extreme delete densities
     // the arrays would be compressed bitmaps (Iceberg's puffin DVs) — same
     // shape — and compaction materializes deletes to keep them bounded.
-    val afterDeletes =
+    val afterPos =
       if (posDels.isEmpty) unioned
       else {
         val bc = spark.sparkContext.broadcast(
@@ -1014,32 +993,78 @@ class IceLiteTable(val spark: SparkSession, val location: String,
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_file"),
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_pos"), bc)))
       }
+    // equality deletes: an eq delete at sequence S removes matching rows
+    // from data files with seq < S only — rows re-inserted AFTER the
+    // delete (higher seq) survive. ONE null-safe anti-join per DISTINCT
+    // equality_ids set (the spec matches NULL keys to NULL): the keys of
+    // all the set's delete files union, each carrying its delete's
+    // sequence, reduced to the max per key — a row is deleted ⟺ some
+    // matching delete has row.seq < delete.seq ⟺ row.seq < max matching
+    // seq. Plan depth is O(distinct key sets) however many delete commits
+    // the table accumulated. Each row's data sequence comes from the
+    // codegen'd per-file lookup (functions.FileLineage), and the key side
+    // is BROADCAST — eq delete files are key-only and small by contract —
+    // so the 100 TB data side neither joins a lookup table nor shuffles.
+    val afterDeletes =
+      if (eqDels.isEmpty) afterPos
+      else {
+        val index = lineageIndex(files)
+        val withSeq = afterPos.withColumn("_iseq", coalesce(
+          org.apache.spark.sql.graft.SparkShims.columnOf(graft.functions.FileLineage(
+            org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_file"), index,
+            graft.functions.LineageIndex.Sequence)),
+          // an unresolved sequence would silently resurrect deleted rows
+          raise_error(concat(lit("data file sequence unresolved for "), col("_file")))
+            .cast("bigint")))
+        eqDels.groupBy(_.eqFieldIds.sorted).toSeq.sortBy(_._1.mkString(","))
+          .foldLeft(withSeq) { case (d, (ids, dels)) =>
+            val fields = ids.map { id =>
+              require(proj.hasId(id), s"equality delete ${dels.head.path} keys field " +
+                s"$id, which schema ${proj.schemaId} does not declare")
+              proj.byId(id)
+            }
+            val keys = dels.sortBy(_.path)
+              .map(del => eqKeys(del, fields).withColumn("_dseq", lit(del.seq)))
+              .reduce(_ unionByName _)
+              .groupBy(fields.map(f => col(s"_k_${f.name}")): _*)
+              .agg(max("_dseq").as("_dseq"))
+            val cond = fields.map(f => d(f.name) <=> keys(s"_k_${f.name}"))
+              .reduce(_ && _) && d("_iseq") < keys("_dseq")
+            d.join(broadcast(keys), cond, "left_anti")
+          }
+          .drop("_iseq")
+      }
     if (lineage) afterDeletes else afterDeletes.drop("_file", "_pos")
   }
 
-  /** Anti-join `d` against one equality delete file's key set. Keys are
-    * stored under physical `f<id>` names — rename/type evolution after the
-    * delete can't break the match (field-id semantics, like data files).
-    * Join keys use NULL-SAFE equality (`<=>`): per the Iceberg v2 spec an
-    * equality delete matches NULL to NULL, so a CDC delete of a NULL-keyed
-    * row deletes it — standard equality would silently keep it. */
-  private def antiJoinEqKeys(d: DataFrame, del: DeleteFile, m: TableMetadata,
-      proj: TableSchema): DataFrame = {
-    val fields = del.eqFieldIds.map(proj.byId)
-    // explicit schema from ONE cached driver-side footer read: a
-    // schema-less spark.read.parquet schedules a footer-inference Spark
-    // job per call — one per eq-delete file per scan construction, a
-    // steady per-read tax on MoR/upsert tables (guide §1.2 step 1). The
-    // footer is the same source inference reads; delete files are
-    // immutable, so the cache is always exact.
-    val (_, fileSchema) = IcebergInterop.parquetFooterSchema(
+  /** The key columns of one equality-delete file as `_k_<name>`, cast to
+    * `fields`' types. A key column resolves by the file's parquet field id
+    * (Iceberg's rule: the key survives a rename after the delete was
+    * written), else by IceLite's physical `f<id>` name, else by the
+    * logical name (id-less foreign writers). The explicit schema comes
+    * from one memoized footer read, so no schema-inference job runs. */
+  private def eqKeys(del: DeleteFile, fields: Seq[Field]): DataFrame = {
+    val (byId, fileSchema) = IcebergInterop.parquetFooterSchema(
       del.path, spark.sessionState.newHadoopConf())
-    val keys = spark.read.schema(fileSchema).parquet(del.path)
-      .select(fields.map(f => col(f.physName).cast(f.sparkDdl).as(s"_k_${f.name}")): _*)
-      .distinct()
-    val cond = fields.map(f => d(f.name) <=> col(s"_k_${f.name}")).reduce(_ && _)
-    d.join(broadcast(keys), cond, "left_anti")
+    val stored = fileSchema.fieldNames.toSet
+    spark.read.schema(fileSchema).parquet(del.path)
+      .select(fields.map { f =>
+        val c = byId.getOrElse(f.id, if (stored(f.physName)) f.physName else f.name)
+        col(c).cast(f.sparkDdl).as(s"_k_${f.name}")
+      }: _*)
   }
+
+  /** Per-file `(firstRowId, seq)` for [[graft.functions.FileLineage]],
+    * under every spelling of each path (raw vs `file:` URI forms), so the
+    * probe is spelling-insensitive like the delete index. */
+  private def lineageIndex(files: Seq[DataFile])
+      : org.apache.spark.broadcast.Broadcast[graft.functions.LineageIndex] =
+    spark.sparkContext.broadcast(new graft.functions.LineageIndex(
+      files.flatMap { f =>
+        val n = IceLite.normPath(f.path)
+        val entry = Array(f.firstRowId.getOrElse(-1L), f.seq)
+        Seq(f.path, n, s"file:$n", s"file://$n").distinct.map(_ -> entry)
+      }.toMap))
 
   /** Read the current snapshot (optionally manifest-pruned by partition
     * values — the pruning happens on the driver against metadata, so a
@@ -1119,14 +1144,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     }
     val df = scanSnapshot(m, snap, lineage = true, _ => true, statFilters,
       snapshotSchema = snapshotSchema, rowLineage = true)
-    // all spellings of each path (raw vs file: URI forms), so the
-    // probe is spelling-insensitive like the delete index
-    val index = spark.sparkContext.broadcast(new graft.functions.LineageIndex(
-      snap.dataFiles.flatMap { f =>
-        val n = IceLite.normPath(f.path)
-        val entry = Array(f.firstRowId.getOrElse(-1L), f.seq)
-        Seq(f.path, n, s"file:$n", s"file://$n").distinct.map(_ -> entry)
-      }.toMap))
+    val index = lineageIndex(snap.dataFiles)
     def lineageOf(slot: Int): Column =
       org.apache.spark.sql.graft.SparkShims.columnOf(graft.functions.FileLineage(
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_file"), index, slot))
@@ -1325,15 +1343,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       if (appl.isEmpty) None
       else {
         val fields = d.eqFieldIds.map(m.currentSchema.byId)
-        // explicit schema via the cached footer read — same reasoning as
-        // antiJoinEqKeys: kills the per-delete-file inference job
-        val (_, fileSchema) = IcebergInterop.parquetFooterSchema(
-          d.path, spark.sessionState.newHadoopConf())
-        val keys = spark.read.schema(fileSchema).parquet(d.path)
-          .select(fields.map(f => col(f.physName).cast(f.sparkDdl).as(s"_k_${f.name}")): _*)
-          .distinct()
-        // null-safe: mirrors antiJoinEqKeys — the changelog reports the
-        // same NULL-keyed rows as deleted that the read path drops
+        val keys = eqKeys(d, fields).distinct()
+        // null-safe: mirrors the read path — the changelog reports the
+        // same NULL-keyed rows as deleted that the read drops
         val visible = scan(prev.copy(dataFiles = appl))
         val cond = fields.map(f => visible(f.name) <=> col(s"_k_${f.name}")).reduce(_ && _)
         Some(visible.join(broadcast(keys), cond, "left_semi"))
@@ -3161,10 +3173,14 @@ object IceLite {
     *
     * Foreign MERGE-ON-READ deletes CARRY IN (reference deletion-vector
     * promise, /root/reference/README.md:1096–1121): position-delete
-    * parquet and Puffin DVs register in place (native carriers);
-    * equality deletes rewrite their small key files to physical `f<id>`
-    * names with data sequence preserved (the v2 seq-scoping rule holds
-    * across the boundary).
+    * parquet, Puffin DVs and equality deletes all register in place —
+    * adoption moves no data. Equality deletes keep their data sequence
+    * (the v2 seq-scoping rule holds across the boundary), and the scan
+    * resolves their key columns by parquet field id, else by name.
+    *
+    * The translation is [[IcebergInterop.toTableMetadata]], the same one
+    * [[IcebergInterop.read]] scans; adoption walks the history through
+    * it and commits the result.
     *
     * Foreign HISTORY adopts too (time travel is the tutorial's
     * centerpiece, README.md:1000–1015): every foreign snapshot
@@ -3186,344 +3202,76 @@ object IceLite {
     val ice = IcebergInterop.loadMeta(metadataJson, conf)
     val snap = ice.currentSnapshotId.flatMap(id => ice.snapshots.find(_.id == id))
       .getOrElse(sys.error(s"iceberg adopt: no current snapshot in $metadataJson"))
-    // EVERY foreign schema registers natively under its OWN schema-id
-    // (Iceberg schema-ids are small dense ints; native evolution later
-    // mints max+1, so the id spaces never collide). That is what lets a
-    // SCHEMA-EVOLVED lineage adopt with full history: each historical
-    // file resolves through the schema it was WRITTEN under (by field
-    // id, exactly like native files), and each historical snapshot
-    // carries its write schema so time travel projects the columns the
-    // table had then. Defaults cross the boundary per schema:
-    // initial-default is carried for read fills (fields added after a
-    // file was written fill from it at scan), and write-default is
-    // HONORED — native appends that omit the column materialize the
-    // foreign writer's declared fill.
-    val readSchemaId = {
-      val head = snap.schemaId.getOrElse(ice.currentSchemaId)
-      // Iceberg's CURRENT read projects the TABLE's current schema even
-      // when the head snapshot predates it (a rename after the last
-      // commit is metadata-only and surfaces immediately)
-      if (ice.schemas.contains(ice.currentSchemaId)) ice.currentSchemaId else head
-    }
-    val schemas = ice.schemas.toSeq.sortBy(_._1).map { case (sid, fs) =>
-      TableSchema(sid, fs.map(f =>
-        Field(f.id, f.name, f.dtype, f.initialDefault, f.writeDefault)))
-    }
-    val sch = schemas.find(_.schemaId == readSchemaId).get
-    // foreign `bucket[N]` tuples were hashed with the Iceberg-spec murmur3;
-    // IceLite's own `bucket[N]` hashes xxhash64 — the adopted spec lifts to
-    // `mbucket[N]` (murmur3 semantics, [[graft.functions.IcebergBucket]]),
-    // so the tuples stay TRUE and new native writes land in the same
-    // buckets the foreign layout used
-    def liftTransform(tr: String): String =
-      if (tr.startsWith("bucket[")) "m" + tr else tr
-    // every spec the live files reference registers (tuples stay
-    // interpretable); the foreign DEFAULT spec continues as the live
-    // spec, so new writes partition natively under the same transforms
-    def mkSpecs(fileSpecIds: Seq[Int]): Seq[PartitionSpec] = {
-      val specIds = (fileSpecIds :+ ice.defaultSpecId).distinct.sorted
-      specIds.map { sid =>
-        PartitionSpec(sid, ice.specs.getOrElse(sid, Seq()).flatMap { sf =>
-          if (sch.hasId(sf.sourceId))
-            Some(SpecField(sf.sourceId, liftTransform(sf.transform),
-              specFieldName(sch.byId(sf.sourceId).name, liftTransform(sf.transform))))
-          else None
-        })
-      }
-    }
-    val numericIdentity = Set("STRING", "VARCHAR", "INT", "INTEGER", "BIGINT", "LONG")
-    def convertTuple(f: IcebergInterop.IceDataFile): Map[String, String] =
-      ice.specs.getOrElse(f.specId, Seq()).flatMap { sf =>
-        if (!sch.hasId(sf.sourceId)) None
-        else f.partition.get(sf.name).flatMap { v =>
-          val tgt = specFieldName(sch.byId(sf.sourceId).name, liftTransform(sf.transform))
-          val srcType = sch.byId(sf.sourceId).dtype.toUpperCase
-          sf.transform match {
-            case "identity" if srcType == "DATE" =>
-              // Iceberg identity(DATE) tuples are epoch days; IceLite's ISO
-              scala.util.Try(java.time.LocalDate.ofEpochDay(v.toLong).toString)
-                .toOption.map(tgt -> _)
-            case "identity" if numericIdentity(srcType) => Some(tgt -> v)
-            case "year" =>
-              scala.util.Try((1970 + v.toInt).toString).toOption.map(tgt -> _)
-            case "month" => scala.util.Try {
-              val m0 = v.toInt
-              f"${1970 + Math.floorDiv(m0, 12)}%04d-${Math.floorMod(m0, 12) + 1}%02d"
-            }.toOption.map(tgt -> _)
-            case "day" => scala.util.Try(
-              java.time.LocalDate.ofEpochDay(v.toLong).toString).toOption.map(tgt -> _)
-            case b if b.startsWith("bucket[") =>
-              // Iceberg murmur3 bucket ordinal, preserved verbatim under
-              // the lifted mbucket transform — exact, never a mis-prune
-              Some(tgt -> v)
-            case _ => None // unknown transform: conservative keep
-          }
-        }
-      }.toMap
-    def parquetRows(p: String): Long = {
-      val r = Stats.open(new Path(p), conf)
-      try r.getRecordCount finally r.close()
-    }
-    // foreign MERGE-ON-READ deletes carry into the native delete index
-    // (adopt used to refuse them):
-    //  - position-delete parquet IS the native shape ((file_path, pos)
-    //    columns per the Iceberg spec) — registered in place;
-    //  - V3 Puffin deletion vectors are a native carrier ([[PuffinDv]]) —
-    //    registered in place;
-    //  - equality deletes store LOGICAL key columns; the native read
-    //    resolves keys by physical `f<id>` names, so the tiny key files
-    //    (O(deleted keys) by contract) rewrite at adoption — the only
-    //    data the migrate moves.
     val f = fs(spark, location)
-    // the occupied-location check runs BEFORE the eq-delete rewrite below
-    // writes anything under the target
     require(!f.exists(new Path(new Path(location, "metadata"), HINT)),
       s"table exists at $location")
-    // one rewrite per distinct foreign eq-delete file across the WHOLE
-    // history walk — manifest lists carry deletes forward by reference,
-    // so the same eq file is live in many snapshots; rewriting it once
-    // keeps adoption cost O(distinct delete files), not O(snapshots)
-    val eqRewriteCache =
-      scala.collection.mutable.Map[(String, Seq[Int], Long), DeleteFile]()
-    // pos-delete row counts: one footer read per distinct file, not per
-    // (snapshot, file) — manifest lists carry deletes forward, so the
-    // same file recurs across the walk
-    val rowsCache = scala.collection.mutable.Map[String, Long]()
-    def adoptDeletes(posDels: Seq[String],
-        dvRefs: Seq[IcebergInterop.DvRef],
-        eqRefs: Seq[IcebergInterop.EqDeleteRef]): Seq[DeleteFile] = {
-      val posD = posDels.distinct.sorted.map(p =>
-        DeleteFile(p, rowsCache.getOrElseUpdate(p, parquetRows(p)), kind = "pos"))
-      val dvD = dvRefs.groupBy(_.path).toSeq.sortBy(_._1).map { case (p, refs) =>
-        require(p.endsWith(PuffinDv.Ext),
-          s"iceberg adopt: unsupported deletion-vector container $p")
-        val paths = refs.map(r => normPath(r.refDataFile))
-        DeleteFile(p, 0L, kind = "pos",
-          pathLo = Some(paths.min), pathHi = Some(paths.max))
-      }
-      val eqD = eqRefs.sortBy(_.path).map { ref =>
-        eqRewriteCache.getOrElseUpdate((ref.path, ref.ids, ref.seq), {
-        val keyFields = ref.ids.map { id =>
-          require(sch.hasId(id),
-            s"iceberg adopt: equality_ids field $id not in the adopted schema")
-          sch.byId(id)
-        }
-        // one footer read yields both the id→name map AND the file's
-        // Spark schema — the explicit-schema read skips the footer-
-        // inference job a schema-less read schedules per foreign eq file
-        val (byId, fileSchema) = IcebergInterop.parquetFooterSchema(ref.path, conf)
-        val phys = spark.read.schema(fileSchema).parquet(ref.path)
-          .select(keyFields.map(kf =>
-            col(byId.getOrElse(kf.id, kf.name)).cast(kf.sparkDdl).as(kf.physName)): _*)
-        val out = new Path(location, s"deletes/adopted-eq-${UUID.randomUUID()}")
-        f.mkdirs(out.getParent)
-        phys.coalesce(1).write.parquet(out.toString)
-        val part = { // the single written parquet part
-          val it = f.listFiles(out, true)
-          var found: Option[Path] = None
-          while (it.hasNext && found.isEmpty) {
-            val st = it.next()
-            if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-              found = Some(st.getPath)
-          }
-          found.getOrElse(sys.error(s"iceberg adopt: empty eq-delete rewrite $out"))
-        }
-        DeleteFile(part.toString, parquetRows(part.toString), kind = "eq",
-          eqFieldIds = ref.ids, seq = ref.seq)
-        })
-      }
-      posD ++ dvD ++ eqD
-    }
-    // inventory + schema-resolvability per snapshot, side-effect-free (the
-    // eq-delete rewrite only runs for snapshots that are actually kept).
-    // One shared manifest cache across the whole history walk: snapshot
-    // k's manifest list references manifests 1..k in the delta shape, so
-    // an uncached walk would re-parse each manifest O(snapshots) times
+    val readSchemaId = IcebergInterop.currentReadSchemaId(ice, snap)
+    // one manifest cache across the whole history walk: snapshot k's
+    // manifest list references manifests 1..k in the delta shape, so an
+    // uncached walk would re-parse each manifest O(snapshots) times
     val manifestCache = scala.collection.mutable.Map[String,
       Seq[org.apache.avro.generic.GenericRecord]]()
-    // id → write-schema, built once: the per-file schema resolution runs
-    // per (snapshot, file) across the whole walk — a linear
-    // snapshots.find there is O(snapshots² × files) on a long lineage
-    val writeSchemaById: Map[Long, Option[Int]] =
-      ice.snapshots.map(s => s.id -> s.schemaId).toMap
-    // footer-based write-schema resolution for files whose ADDING
-    // snapshot the metadata no longer records (expired history — a
-    // normal production shape): the file's parquet field-id→name map
-    // picks the registered schema it matches. A candidate must DECLARE
-    // every field id the file carries (with the matching name) — a
-    // schema missing one of the file's ids can only be a point BEFORE
-    // that column existed, and stamping the file there would make the
-    // scan fill the initial-default over REAL column data. Among
-    // declarers the MINIMAL one wins (fewest fields absent from the
-    // file), so a pre-ADD file is stamped pre-ADD and its read fills
-    // the added column's initial-default rather than null. Id-less
-    // parquet (plain writers) matches nothing → the current read
-    // schema, the name-match shape; a file whose ids match NO declared
-    // schema is unresolvable (None → loud refusal on the head, history
-    // degrade elsewhere). One resolution per distinct file, cached
-    // across the walk — adoption-time only, never per scan.
-    val footerSchemaCache = scala.collection.mutable.Map[String, Option[Int]]()
-    def resolveFooterSchema(byId0: Map[Int, String]): Option[Int] = {
-      // reserved metadata-column ids (the spec's 2147483447+ block — e.g.
-      // materialized `_row_id`) are never part of a declared schema and
-      // must not disqualify candidates
-      val byId = byId0.filter(_._1 < IcebergInterop.ReservedFieldIdFloor)
-      val cands = schemas.filter(s => byId.forall { case (fid, nm) =>
-        s.fields.exists(f => f.id == fid && f.name == nm) })
-      if (byId.isEmpty) Some(readSchemaId)
-      else if (cands.isEmpty) None
-      else Some(cands.minBy(s =>
-        (s.fields.count(f => !byId.contains(f.id)), s.schemaId)).schemaId)
-    }
-    def footerSchemaId(path: String): Option[Int] =
-      footerSchemaCache.getOrElseUpdate(path, resolveFooterSchema(
-        try IcebergInterop.parquetFieldNamesById(path, conf)
-        catch { case _: Exception => Map.empty[Int, String] }))
-    // ONE Spark job per inventory reads every still-unresolved footer
-    // executor-side (IcebergInterop.parquetFieldNamesByIdBatch) — the
-    // head covers nearly all files on an append-shaped lineage, so the
-    // walk's later snapshots are cache hits and issue no job at all.
-    // Per-file DRIVER footer reads would serialize an expired-history
-    // adoption; footerSchemaId above is only the cache-miss safety net.
-    def prefetchFooters(files: Seq[IcebergInterop.IceDataFile]): Unit = {
-      val todo = files
-        .filter(df => writeSchemaById.getOrElse(df.addedSnapshotId, None).isEmpty)
-        .map(_.path).distinct.filterNot(footerSchemaCache.contains)
-      if (todo.nonEmpty)
-        IcebergInterop.parquetFieldNamesByIdBatch(spark, todo, conf).foreach {
-          case (p, byId) => footerSchemaCache(p) = resolveFooterSchema(byId) }
-    }
-    def rawSnapshot(s: IcebergInterop.IceSnapshot, strict: Boolean)
-        : Option[(Seq[DataFile], Seq[String],
-            Seq[IcebergInterop.DvRef], Seq[IcebergInterop.EqDeleteRef])] = {
-      val parsed =
-        try Some(IcebergInterop.fileInventory(ice, s, conf, manifestCache))
-        catch { case e: Exception => if (strict) throw e else None }
-      parsed.flatMap { case (files, posDels, dvRefs, eqRefs) =>
-        prefetchFooters(files)
-        // each file is stamped with the schema it was WRITTEN under (the
-        // adding snapshot's schema-id) — the native scan then resolves
-        // its columns by field id through that schema, so SCHEMA-EVOLVED
-        // lineages adopt in full. Files whose adding snapshot is
-        // unrecorded or EXPIRED from the metadata resolve through their
-        // parquet footer's field-ids instead (Iceberg's own resolution —
-        // the file carries its schema); a write schema the metadata no
-        // longer declares, or footer field-ids matching no declared
-        // schema, are unresolvable — loud on the head, history degrade
-        // elsewhere.
-        def fileSchemaId(df: IcebergInterop.IceDataFile): Option[Int] = {
-          val ws = writeSchemaById.getOrElse(df.addedSnapshotId, None)
-          val ok = ws.forall(ice.schemas.contains)
-          require(ok || !strict,
-            s"iceberg adopt: ${df.path} was written under schema ${ws.getOrElse(-1)}, " +
-              "which the metadata no longer declares — compact the source first")
-          if (!ok) None
-          else ws match {
-            case Some(sid) => Some(sid)
-            case None =>
-              val fid = footerSchemaId(df.path)
-              require(fid.isDefined || !strict,
-                s"iceberg adopt: ${df.path} carries parquet field ids matching " +
-                  "no schema the metadata declares — compact the source first")
-              fid
-          }
-        }
-        val stamped = files.map(df => fileSchemaId(df).map(df -> _))
-        if (stamped.exists(_.isEmpty)) None
-        else Some((stamped.flatten.map { case (df, sid) =>
-          DataFile(df.path, df.records, sid, df.specId,
-            convertTuple(df), Map(), df.seq, nameMapped = true,
-            // V3 row lineage crosses the migrate-in boundary: an explicit
-            // foreign first_row_id keeps serving (inheritance is positional,
-            // and adoption never rewrites the file)
-            firstRowId = df.firstRowId)
-          }, posDels, dvRefs, eqRefs))
-      }
-    }
-    val headRaw = rawSnapshot(snap, strict = true).get
-    def headAdopted = (snap, headRaw._1,
-      adoptDeletes(headRaw._2, headRaw._3, headRaw._4))
+    def inventory(s: IcebergInterop.IceSnapshot) =
+      s -> IcebergInterop.fileInventory(ice, s, conf, manifestCache)
+    val head = inventory(snap)
+    def headOnly = IcebergInterop.toTableMetadata(spark, ice, Seq(head), readSchemaId,
+      lenient = false)
     // HISTORY: real Iceberg writers mint RANDOM snapshot ids, and real
     // histories contain compactions / overwrites / MoR deletes — so the
     // walk must not require monotone ids or pure appends. Every foreign
     // snapshot registers its COMPLETE file + delete set (IceLite
-    // snapshots store full file lists, so replace/overwrite/delete
-    // points are representable as-is, and each one's deletes carry via
-    // adoptDeletes with the per-file eq-rewrite cached across the walk).
-    // Foreign ids are remapped below to a dense monotone 1..N in COMMIT
-    // order (sequence-number, then timestamp — id order means nothing),
-    // because IceLite's range semantics assume id order = time order;
-    // the foreign id is recorded per snapshot in table properties, so
-    // `VERSION AS OF <foreign id>` serves every pre-adoption point.
-    // Falls back to head-only when a historical snapshot fails to parse
-    // or references a write schema the metadata no longer declares. A
-    // current snapshot that is NOT the commit-order tip (a rolled-back
-    // foreign head, or branch commits staged above the published head)
-    // adopts its PREFIX: every snapshot up to and including current
-    // registers, the commit-order successors are ignored — the
-    // published lineage is what migrates, and adopting "future" points
-    // above a rollback would resurrect exactly what the foreign writer
-    // rolled back.
-    val adopted0: Seq[(IcebergInterop.IceSnapshot, Seq[DataFile], Seq[DeleteFile])] = {
+    // snapshots store full file lists, so replace/overwrite/delete points
+    // are representable as-is). A current snapshot that is NOT the
+    // commit-order tip (a rolled-back foreign head, or branch commits
+    // staged above the published head) adopts its PREFIX: adopting
+    // "future" points above a rollback would resurrect exactly what the
+    // foreign writer rolled back. Non-monotone ids remap below to a dense
+    // 1..N in commit order — collision-free ONLY because every foreign id
+    // exceeds N (64-bit random ids); a foreign id inside 1..N would be
+    // ambiguous (native wins in snapshot()), so that shape keeps the head
+    // only, as does a history snapshot that fails to parse or references
+    // a write schema the metadata no longer declares.
+    val chain = {
       val ordered = ice.snapshots.sortBy(s =>
         (s.sequenceNumber.getOrElse(Long.MinValue), s.timestampMs, s.id))
-      val chain = ordered.take(ordered.indexWhere(_.id == snap.id) + 1)
-      if (chain.size > 1) {
-        val rest = chain.init.map(s => s -> rawSnapshot(s, strict = false))
-        if (rest.forall(_._2.isDefined))
-          rest.map { case (s, r) =>
-            (s, r.get._1, adoptDeletes(r.get._2, r.get._3, r.get._4)) } :+
-            headAdopted
-        else Seq(headAdopted)
-      } else Seq(headAdopted)
+      ordered.take(ordered.indexWhere(_.id == snap.id) + 1)
     }
-    val adoptedIds0 = adopted0.map(_._1.id)
-    val monotone = adoptedIds0 == adoptedIds0.sorted &&
-      adoptedIds0.distinct.size == adoptedIds0.size
+    val ids = chain.map(_.id)
+    val monotone = ids == ids.sorted && ids.distinct.size == ids.size
+    val translated =
+      if (chain.size < 2 || (!monotone && ids.min <= chain.size)) headOnly
+      else scala.util.Try(IcebergInterop.toTableMetadata(spark, ice,
+        chain.init.map(inventory) :+ head, readSchemaId, lenient = false))
+        .getOrElse(headOnly)
     // Native id plan. Monotone-in-commit-order foreign ids keep serving
     // VERBATIM (our own exports, sequential writers) — no remap, no
     // lookup indirection. Non-monotone (random) ids remap to a dense
     // 1..N in commit order, recorded per snapshot in table properties so
-    // `VERSION AS OF <foreign id>` still serves — collision-free ONLY
-    // because every foreign id exceeds N (64-bit random ids): a foreign
-    // id that lands inside 1..N would be ambiguous (native wins in
-    // snapshot()), silently serving the WRONG point — that pathological
-    // shape degrades to head-only instead.
-    val adopted =
-      if (adopted0.size > 1 && !monotone && adoptedIds0.min <= adopted0.size)
-        Seq(headAdopted)
-      else adopted0
+    // `VERSION AS OF <foreign id>` still serves.
+    val adopted = translated.snapshots
     val keepIds = monotone || adopted.size == 1
     val nativeIds: Seq[Long] =
-      if (keepIds) adopted.map(_._1.id) else (1L to adopted.size.toLong)
-    val allFiles = adopted.flatMap(_._2)
-    val specs = mkSpecs(allFiles.map(_.specId))
+      if (keepIds) adopted.map(_.id) else (1L to adopted.size.toLong)
     // the foreign operation labels (append/replace/overwrite/delete) are
     // native labels too, so e.g. the changelog keeps skipping pure
     // "replace" (compaction) points. Foreign branch structure is
     // linearized — each snapshot's FILE SET is exact, so time travel to
     // any foreign id is exact; only fabricated parent edges differ.
-    // each snapshot keeps its WRITE schema (snapshot-scoped-schema
-    // semantics survive the migrate: `VERSION AS OF` a pre-evolution
-    // foreign point shows the columns the table had then)
-    val snapshots = adopted.zipWithIndex.map { case ((s, dfs, dels), i) =>
-      Snapshot(nativeIds(i), if (i == 0) None else Some(nativeIds(i - 1)),
-        s.timestampMs, s.operation, dfs, dels,
-        s.schemaId.filter(id => schemas.exists(_.schemaId == id))
-          .getOrElse(readSchemaId))
+    val snapshots = adopted.zip(nativeIds).zipWithIndex.map { case ((s, nid), i) =>
+      s.copy(id = nid, parentId = if (i == 0) None else Some(nativeIds(i - 1)))
     }
+    val sch = translated.currentSchema
     val foreignIdProps =
       if (keepIds) Map.empty[String, String]
-      else adopted.zipWithIndex.map { case ((s, _, _), i) =>
-        s"${TableMetadata.ForeignSnapshotProp}${s.id}" -> nativeIds(i).toString }.toMap
+      else adopted.zip(nativeIds).map { case (s, nid) =>
+        s"${TableMetadata.ForeignSnapshotProp}${s.id}" -> nid.toString }.toMap
     // foreign branches/tags survive the migrate: each ref's snapshot id
     // maps through the same remap and registers as a NATIVE ref (branch
     // = movable head, tag = schema-pinned pin — readRef's semantics).
     // Refs at snapshots the walk dropped (head-only degrade) and names
     // IceLite cannot spell are dropped — a ref that cannot be
     // represented beats one that points at the wrong snapshot.
-    val nativeIdByForeign: Map[Long, Long] =
-      adopted.map(_._1.id).zip(nativeIds).toMap
+    val nativeIdByForeign: Map[Long, Long] = adopted.map(_.id).zip(nativeIds).toMap
     val adoptedRefs: Map[String, Ref] = ice.refs.flatMap { case (name, r) =>
       nativeIdByForeign.get(r.snapshotId).flatMap { nid =>
         if (scala.util.Try(IceLite.validateRefName(name)).isSuccess)
@@ -3572,26 +3320,15 @@ object IceLite {
         .filter(csv => csv.split(",").map(_.trim)
           .forall(c => sch.fields.exists(_.name == c)))
         .map("write.zorder-by" -> _).toMap
-    val now = System.currentTimeMillis()
-    val m = TableMetadata(
+    val m = translated.copy(
       location = location,
-      lastFieldId = schemas.flatMap(_.fields.map(_.id)).max,
-      currentSchemaId = readSchemaId,
-      schemas = schemas,
-      defaultSpecId = ice.defaultSpecId,
-      specs = specs,
       properties = Map("adopted.from" -> metadataJson) ++ foreignIdProps ++
         sortProp ++ zorderProp,
       currentSnapshotId = Some(snapshots.last.id),
       snapshots = snapshots,
-      metadataLog = Seq(MetadataLogEntry(1, now, s"adopt iceberg table ($metadataJson)")),
-      refs = adoptedRefs,
-      // V3 row lineage: resume the foreign id counter (never below the
-      // end of any adopted file's explicit block, so native appends can
-      // never collide with migrated ids even on a sparse foreign counter)
-      nextRowId = math.max(ice.nextRowId,
-        snapshots.flatMap(_.dataFiles).flatMap(df =>
-          df.firstRowId.map(_ + df.rows)).maxOption.getOrElse(0L)))
+      metadataLog = Seq(MetadataLogEntry(1, System.currentTimeMillis(),
+        s"adopt iceberg table ($metadataJson)")),
+      refs = adoptedRefs)
     val metaDir = new Path(location, "metadata")
     f.mkdirs(metaDir)
     val st = new HadoopCommitStore(f)

@@ -6,7 +6,6 @@ import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** Read-only adapter for a REAL Apache Iceberg table's metadata — the
@@ -14,29 +13,32 @@ import scala.jdk.CollectionConverters._
   * teaches Iceberg itself; this proves the v3 IceLite metadata design is
   * genuinely Iceberg-shaped by consuming the real thing).
   *
-  * Parses the Iceberg spec's on-disk artifacts directly — no Iceberg jar:
+  * It parses and translates; IceLite scans. Parsing reads the Iceberg
+  * spec's on-disk artifacts directly — no Iceberg jar:
   *  - `vN.metadata.json` (table metadata: schemas, snapshots, logs) via
   *    Jackson;
   *  - the snapshot's `manifest-list` avro (one row per manifest:
   *    manifest_path, content 0=data/1=deletes, summaries) and each
   *    manifest avro (entries: status, data_file record) via avro's
   *    GenericDatumReader — avro container files EMBED their schema, so
-  *    field access is by spec name and survives writer-side evolution;
-  *  - data files via Spark's parquet reader, projected to the Iceberg
-  *    schema by name.
+  *    field access is by spec name and survives writer-side evolution.
+  *
+  * [[toTableMetadata]] translates snapshots into IceLite's
+  * [[TableMetadata]] in memory. A read ([[read]], [[readPruned]],
+  * [[readAsOf]]) translates the one snapshot it serves and scans it with
+  * IceLite's own scan, and [[IceLite.adopt]] commits the translation of
+  * the whole history — one read path for foreign and native tables.
   *
   * Scope (documented): data manifests with add/existing entries, snapshot
   * selection (current / VERSION AS OF), v1's inline `manifests` list and
   * v2's `manifest-list`, flat primitive + V3 VARIANT schemas, partitioned tables
   * (identity + temporal transforms, spec evolution mid-history, manifest
   * partition tuples surfaced for pruning), and the FULL merge-on-read
-  * delete surface: position deletes in both carriers — (file_path, pos)
-  * parquet and V3 deletion vectors (Puffin roaring blobs via
-  * [[PuffinDv]], manifest-supplied blob ranges honored) — and EQUALITY
-  * deletes (content=2, `equality_ids` resolved by field id, null-safe
-  * key match, applied only to data files whose sequence number precedes
-  * the delete's — the v2 sequence rule, with entry-level inheritance
-  * from the manifest list). */
+  * delete surface, every carrier read in place: position-delete parquet,
+  * V3 deletion vectors (Puffin roaring blobs) and EQUALITY deletes
+  * (`equality_ids` resolved by field id, null-safe key match, applied only
+  * to data files whose sequence number precedes the delete's — the v2
+  * sequence rule, with entry-level inheritance from the manifest list). */
 object IcebergInterop {
   private val M = new ObjectMapper()
 
@@ -245,31 +247,24 @@ object IcebergInterop {
       sortFields, props, refs)
   }
 
-  /** One V3 deletion-vector reference from a delete manifest: the Puffin
-    * container, the data file it deletes from, and the blob range when
-    * the manifest supplies it (offset < 0 ⇒ resolve via the footer). */
-  final case class DvRef(path: String, refDataFile: String,
-      offset: Long, length: Long)
-
-  /** One equality-delete file: its key field ids and its data sequence
-    * number — an eq delete at sequence S removes matching rows only from
-    * data files with sequence < S (Iceberg v2 semantics). */
-  final case class EqDeleteRef(path: String, ids: Seq[Int], seq: Long)
-
-  /** Live file inventory of one snapshot: manifest-list (or v1 inline
-    * list) → manifests → entries with status ∈ {added=1, existing=0}
-    * (status=2 rows are REMOVED files and drop out). Data manifests
-    * (content=0) yield [[IceDataFile]]s with their manifest-recorded
-    * partition tuple + data sequence (per-entry `sequence_number`,
-    * inheriting the manifest-list row's when the entry leaves it null —
-    * the v2 inheritance rule); delete manifests (content=1/2) yield
-    * POSITION-delete parquet paths, V3 deletion-vector refs
-    * (file_format=PUFFIN with referenced_data_file /
-    * content_offset / content_size_in_bytes), or seq-stamped
-    * EQUALITY-delete refs (content=2 with `equality_ids`). */
+  /** Live inventory of one snapshot: manifest-list (or v1 inline list) →
+    * manifests → entries with status ∈ {added=1, existing=0} (status=2
+    * rows are REMOVED files and drop out). Data manifests (content=0)
+    * yield [[IceDataFile]]s with their manifest-recorded partition tuple +
+    * data sequence (per-entry `sequence_number`, inheriting the
+    * manifest-list row's when the entry leaves it null — the v2
+    * inheritance rule). Delete manifests (content=1/2) yield IceLite
+    * [[DeleteFile]]s that name the foreign files in place, with the
+    * manifests' record counts:
+    *  - position-delete parquet (`kind = "pos"`);
+    *  - V3 deletion vectors (file_format=PUFFIN with
+    *    referenced_data_file), one entry per Puffin container carrying
+    *    the normalized path range of the data files its blobs reference;
+    *  - equality deletes (content=2 with `equality_ids`, `kind = "eq"`),
+    *    stamped with their data sequence. */
   private[icelite] def fileInventory(meta: IceMeta, snap: IceSnapshot, conf: Configuration,
       manifestCache: scala.collection.mutable.Map[String, Seq[GenericRecord]] = null)
-      : (Seq[IceDataFile], Seq[String], Seq[DvRef], Seq[EqDeleteRef]) = {
+      : (Seq[IceDataFile], Seq[DeleteFile]) = {
     // callers walking MANY snapshots of one lineage (history adoption)
     // pass a shared cache: in the delta-export shape snapshot k's manifest
     // list references manifests 1..k, so an uncached walk re-parses each
@@ -301,9 +296,9 @@ object IcebergInterop {
       case None => snap.manifests.map(p => (p, 0, 0, 0L, -1L, None))
     }
     val dataFiles = scala.collection.mutable.ArrayBuffer[IceDataFile]()
-    val posDeletes = scala.collection.mutable.ArrayBuffer[String]()
-    val dvRefs = scala.collection.mutable.ArrayBuffer[DvRef]()
-    val eqRefs = scala.collection.mutable.ArrayBuffer[EqDeleteRef]()
+    val deletes = scala.collection.mutable.ArrayBuffer[DeleteFile]()
+    // (Puffin container, referenced data file, cardinality) per DV blob
+    val dvBlobs = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     manifestPaths.foreach { case (mp, manifestContent, specId, mlSeq, mlAddedSnap,
         mlFirstRowId) =>
       // V3 inheritance: a running offset from the manifest's first_row_id.
@@ -320,8 +315,11 @@ object IcebergInterop {
           val df = e.get("data_file").asInstanceOf[GenericRecord]
           val content = optInt(df, "content", 0)
           val format = str(df, "file_format")
+          val path = str(df, "file_path")
           val seq = optField(e, "sequence_number")
             .map(_.asInstanceOf[Number].longValue).getOrElse(mlSeq)
+          val records = optField(df, "record_count")
+            .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
           content match {
             case 0 =>
               require(manifestContent == 0,
@@ -334,29 +332,23 @@ object IcebergInterop {
                     Option(p.get(f.name)).map(v => f.name -> v.toString)).toMap
                 case _ => Map()
               }
-              val records = optField(df, "record_count")
-                .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
               val explicitFrid = optField(df, "first_row_id")
                 .map(_.asInstanceOf[Number].longValue)
               val frid = explicitFrid.orElse(rowIdOffset)
               if (explicitFrid.isEmpty)
                 rowIdOffset = rowIdOffset.map(_ + records)
-              dataFiles += IceDataFile(str(df, "file_path"), specId, part, seq,
+              dataFiles += IceDataFile(path, specId, part, seq,
                 optField(e, "snapshot_id")
                   .map(_.asInstanceOf[Number].longValue).getOrElse(mlAddedSnap),
                 records, frid)
             case 1 if format.equalsIgnoreCase("puffin") =>
-              // V3 deletion vector: one roaring blob inside a Puffin file
-              dvRefs += DvRef(str(df, "file_path"),
-                str(df, "referenced_data_file"),
-                optField(df, "content_offset")
-                  .map(_.asInstanceOf[Number].longValue).getOrElse(-1L),
-                optField(df, "content_size_in_bytes")
-                  .map(_.asInstanceOf[Number].longValue).getOrElse(-1L))
+              require(path.endsWith(PuffinDv.Ext),
+                s"iceberg interop: unsupported deletion-vector container $path")
+              dvBlobs += ((path, str(df, "referenced_data_file"), records))
             case 1 =>
               require(format.equalsIgnoreCase("parquet"),
                 s"iceberg interop: unsupported position-delete format $format")
-              posDeletes += str(df, "file_path")
+              deletes += DeleteFile(path, records, kind = "pos")
             case 2 =>
               require(format.equalsIgnoreCase("parquet"),
                 s"iceberg interop: unsupported equality-delete format $format")
@@ -365,21 +357,26 @@ object IcebergInterop {
                   .map(_.asInstanceOf[Number].intValue).toSeq).getOrElse(Seq())
               require(ids.nonEmpty,
                 s"iceberg interop: equality delete without equality_ids: $mp")
-              eqRefs += EqDeleteRef(str(df, "file_path"), ids, seq)
+              deletes += DeleteFile(path, records, kind = "eq", eqFieldIds = ids, seq = seq)
             case other => sys.error(
               s"iceberg interop: unknown delete content=$other in $mp")
           }
         }
       }
     }
-    (dataFiles.toSeq, posDeletes.toSeq, dvRefs.toSeq, eqRefs.toSeq)
+    val dvs = dvBlobs.groupBy(_._1).toSeq.map { case (p, blobs) =>
+      val refs = blobs.flatMap(b => Option(b._2)).map(IceLite.normPath)
+      DeleteFile(p, blobs.map(_._3).sum, kind = "pos",
+        pathLo = refs.minOption, pathHi = refs.maxOption)
+    }
+    (dataFiles.toSeq, (deletes.toSeq ++ dvs).distinct.sortBy(_.path))
   }
 
-  /** Driver-side footer reads issued through [[parquetFieldNamesById]] —
-    * a spec counter: adoption's expired-history resolution must go
-    * through the batched executor-side path ([[parquetFieldNamesByIdBatch]])
-    * and leave this untouched, or a long lineage serializes O(files)
-    * footer reads on the driver. */
+  /** Driver-side footer reads issued through [[parquetFooterSchema]] — a
+    * spec counter: adoption's write-schema resolution must go through the
+    * batched executor-side path ([[parquetFieldNamesByIdBatch]]) and
+    * leave this untouched, or a long lineage serializes O(files) footer
+    * reads on the driver. */
   private[graft] val driverFooterReads = new java.util.concurrent.atomic.AtomicLong
 
   /** First id of the Iceberg spec's reserved metadata-column block
@@ -388,14 +385,8 @@ object IcebergInterop {
   private[icelite] val ReservedFieldIdFloor: Int = Int.MaxValue - 200
 
   /** field-id → column-name map from a parquet file's own footer schema
-    * (id-less fields skipped) — one footer read per delete file, driver-
-    * side metadata planning bounded by the delete-file count. */
-  private[icelite] def parquetFieldNamesById(path: String, conf: Configuration): Map[Int, String] = {
-    driverFooterReads.incrementAndGet()
-    fieldNamesByIdRaw(path, conf)
-  }
-
-  private def fieldNamesByIdRaw(path: String, conf: Configuration): Map[Int, String] = {
+    * (id-less fields skipped). */
+  private def fieldNamesById(path: String, conf: Configuration): Map[Int, String] = {
     val r = Stats.open(new Path(path), conf)
     val fields =
       try r.getFooter.getFileMetaData.getSchema.getFields.asScala.toList
@@ -405,26 +396,26 @@ object IcebergInterop {
 
   /** One driver-side footer read yielding BOTH the field-id→name map and
     * the file's Spark schema (via Spark's own parquet→Catalyst converter,
-    * the exact mapping schema inference computes). Callers that previously
-    * paired [[parquetFieldNamesById]] with a schema-less
-    * `spark.read.parquet(path)` — which schedules a whole footer-inference
-    * SPARK JOB per call (~150 ms of driver scheduling for a ~5 ms footer
-    * read) — read with this explicit schema instead: same bytes, same
-    * types, one job fewer per delete file per scan (guide §1.2 step 1:
-    * remove work, here a whole scheduled job, before tuning anything).
-    * Cached per path — delete/data files are immutable once written
-    * (UUID-named), so the cache can never serve a stale schema; bounded
-    * so a pathological path census cannot grow without limit. */
+    * the exact mapping schema inference computes). Readers of small side
+    * files (equality-delete keys) read with this explicit schema instead
+    * of a schema-less `spark.read.parquet(path)`, which schedules a whole
+    * footer-inference Spark job per call. Memoized per file identity —
+    * (path, length, mtime), the key `graft.Tables` uses — so a file
+    * rewritten in place is read again; bounded so a pathological path
+    * census cannot grow without limit. */
   private val footerSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[
-      String, (Map[Int, String], org.apache.spark.sql.types.StructType)]()
+      (String, Long, Long), (Map[Int, String], org.apache.spark.sql.types.StructType)]()
 
   private[icelite] def parquetFooterSchema(path: String, conf: Configuration)
       : (Map[Int, String], org.apache.spark.sql.types.StructType) = {
-    val hit = footerSchemaCache.get(path)
+    val p = new Path(path)
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    val key = (path, status.getLen, status.getModificationTime)
+    val hit = footerSchemaCache.get(key)
     if (hit != null) return hit
     driverFooterReads.incrementAndGet()
-    val r = Stats.open(new Path(path), conf)
+    val r = Stats.open(p, conf)
     val msg = try r.getFooter.getFileMetaData.getSchema finally r.close()
     val byId = msg.getFields.asScala.toList
       .flatMap(f => Option(f.getId).map(id => id.intValue() -> f.getName)).toMap
@@ -436,15 +427,14 @@ object IcebergInterop {
         org.apache.spark.sql.internal.SQLConf.get).convert(msg)
     if (footerSchemaCache.size > 4096) footerSchemaCache.clear()
     val out = (byId, st)
-    footerSchemaCache.put(path, out)
+    footerSchemaCache.put(key, out)
     out
   }
 
   /** Footer field-id maps for MANY files as ONE Spark job — the footers
-    * read executor-side (32-way on local[32]; a real cluster fans wider),
-    * where per-file driver reads would serialize an expired-history
-    * adoption on the metadata walk. A file whose footer fails to read
-    * maps to the empty id map, the same shape the driver path yields. */
+    * read executor-side, where per-file driver reads would serialize an
+    * expired-history walk. A file whose footer fails to read maps to the
+    * empty id map. */
   private[icelite] def parquetFieldNamesByIdBatch(spark: SparkSession,
       paths: Seq[String], conf: Configuration): Map[String, Map[Int, String]] = {
     if (paths.isEmpty) return Map.empty
@@ -453,219 +443,168 @@ object IcebergInterop {
     val n = math.max(1,
       math.min(paths.size, spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(paths, n).map { p =>
-      p -> (try fieldNamesByIdRaw(p, bc.value.value)
+      p -> (try fieldNamesById(p, bc.value.value)
             catch { case _: Exception => Map.empty[Int, String] })
     }.collect().toMap
   }
 
-  /** Scheme/authority-stripping normalizer, column form — delete files
-    * record `file_path` as the writer spelled it while Spark's
-    * `_metadata.file_path` renders a full URI; both normalize to the URI
-    * path (same rule as [[IceLite.normPath]]) with codegen'd regex, no UDF. */
-  private def normCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/")
+  /** The schema a CURRENT read projects: the table's current schema, even
+    * when the head snapshot was committed under an older one (a rename
+    * after the last commit is metadata-only and surfaces immediately). */
+  private[icelite] def currentReadSchemaId(ice: IceMeta, head: IceSnapshot): Int =
+    if (ice.schemas.contains(ice.currentSchemaId)) ice.currentSchemaId
+    else head.schemaId.getOrElse(ice.currentSchemaId)
 
-  private def scan(spark: SparkSession, meta: IceMeta, snap: IceSnapshot,
-      prune: Map[String, String] => Boolean,
-      current: Boolean = false): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    // Iceberg semantics: the CURRENT read projects the table's CURRENT
-    // schema even when the head snapshot was committed under an older one
-    // (a rename after the last commit is metadata-only and must surface
-    // immediately); the snapshot's own schema-id scopes TIME TRAVEL only.
-    val schema = meta.schemas(
-      if (current) meta.currentSchemaId
-      else snap.schemaId.getOrElse(meta.currentSchemaId))
-    val (files, posDeletes, dvRefs, eqRefs) = fileInventory(meta, snap, conf)
-    // manifest-level partition pruning: the caller's predicate sees each
-    // file's recorded partition tuple (older-spec files surface THEIR
-    // tuple — a predicate must treat a missing key as "keep", the same
-    // conservative contract as IceLite's own prune)
-    val kept = files.filter(f => prune(f.partition))
-    if (kept.isEmpty) {
-      val st = org.apache.spark.sql.types.StructType(schema.map { f =>
-        org.apache.spark.sql.types.StructField(
-          f.name, org.apache.spark.sql.types.DataType.fromDDL(f.dtype), nullable = true)
-      })
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+  /** Translate foreign snapshots into IceLite's [[TableMetadata]], writing
+    * nothing. `chain` holds the snapshots to register, oldest first, each
+    * with its [[fileInventory]]; the last becomes current, and
+    * `readSchemaId` becomes the current schema.
+    *
+    *  - Every foreign schema registers under its OWN schema-id, with its
+    *    initial-default (read fill) and write-default (native appends).
+    *  - Every spec the files reference registers, plus the foreign
+    *    default spec. `bucket[N]` LIFTS to `mbucket[N]`: the foreign
+    *    tuples were hashed with the Iceberg-spec murmur3
+    *    ([[graft.functions.IcebergBucket]]) while IceLite's own
+    *    `bucket[N]` hashes xxhash64.
+    *  - Partition tuples re-encode into IceLite's encodings where the
+    *    mapping is exact (identity / year / month / day; bucket ordinals
+    *    verbatim); an unknown transform leaves its key out (keep).
+    *  - Each data file is [[DataFile.nameMapped]] and stamped with the
+    *    schema it was WRITTEN under: the adding snapshot's schema-id, or,
+    *    where the metadata no longer records that snapshot, the minimal
+    *    declared schema whose fields cover every field id in the parquet
+    *    footer (read for all such files in one batched job). Id-less
+    *    parquet stamps `readSchemaId` and resolves by name.
+    *  - Deletes register in place as [[fileInventory]] yields them.
+    *
+    * A file whose write schema the metadata no longer declares, or whose
+    * footer ids match no declared schema, fails the translation unless
+    * `lenient`, which stamps it under `readSchemaId` (resolution by name,
+    * the rule a read of such a table has always applied). */
+  private[icelite] def toTableMetadata(spark: SparkSession, ice: IceMeta,
+      chain: Seq[(IceSnapshot, (Seq[IceDataFile], Seq[DeleteFile]))],
+      readSchemaId: Int, lenient: Boolean): TableMetadata = {
+    val schemas = ice.schemas.toSeq.sortBy(_._1).map { case (sid, fs) =>
+      TableSchema(sid, fs.map(f =>
+        Field(f.id, f.name, f.dtype, f.initialDefault, f.writeDefault)))
     }
-    import spark.implicits._
-    val needTag = posDeletes.nonEmpty || dvRefs.nonEmpty || eqRefs.nonEmpty
-    // files group by the schema they were WRITTEN under (the adding
-    // snapshot's schema-id); within a group, read-schema columns resolve
-    // by FIELD ID through the write schema — Iceberg's resolution rule,
-    // which keeps renamed columns readable and fills fields added later
-    // with their V3 initial-default (or null). Files whose write schema
-    // is unrecorded (v1 shapes) or equals the read schema take the
-    // name-resolution fast path. One scan per distinct write schema —
-    // O(schemas) plan nodes, each group vectorized and unioned.
-    val readSchemaId =
-      if (current) meta.currentSchemaId
-      else snap.schemaId.getOrElse(meta.currentSchemaId)
-    // files whose adding snapshot was EXPIRED from the metadata resolve
-    // their write schema through the parquet footer's field ids (same
-    // rule as IceLite.adopt): a candidate schema must DECLARE every
-    // field id the file carries with the matching name, the minimal
-    // declarer wins — a pre-ADD file stamps pre-ADD and fills the added
-    // column's initial-default, a post-ADD file can never be stamped
-    // pre-ADD (the pre-ADD schema does not declare its added ids). One
-    // executor-side Spark job reads all unresolved footers.
-    val footerIds: Map[String, Map[Int, String]] = {
-      val unresolved = kept.filter(f =>
-        meta.snapshots.find(_.id == f.addedSnapshotId).flatMap(_.schemaId).isEmpty)
-        .map(_.path).distinct
-      parquetFieldNamesByIdBatch(spark, unresolved, conf)
-    }
-    def resolveFooterSchema(byId0: Map[Int, String]): Option[Int] = {
-      // reserved metadata-column ids (materialized `_row_id` etc.) are
-      // never part of a declared schema — ignore them when matching
-      val byId = byId0.filter(_._1 < ReservedFieldIdFloor)
-      val cands = meta.schemas.toSeq.filter { case (_, fs) =>
-        byId.forall { case (fid, nm) => fs.exists(f => f.id == fid && f.name == nm) } }
-      if (byId.isEmpty || cands.isEmpty) None
-      else Some(cands.minBy { case (sid, fs) =>
-        (fs.count(f => !byId.contains(f.id)), sid) }._1)
-    }
-    def writeSchemaIdOf(f: IceDataFile): Option[Int] =
-      meta.snapshots.find(_.id == f.addedSnapshotId).flatMap(_.schemaId)
-        .orElse(footerIds.get(f.path).flatMap(resolveFooterSchema))
-        .filter(id => meta.schemas.contains(id) && id != readSchemaId)
-    val groups = kept.groupBy(writeSchemaIdOf).toSeq
-      .sortBy(_._1.getOrElse(Int.MaxValue))
-    // per-group explicit read schema when it is PROVABLY the files' own:
-    // every file's adding snapshot RECORDS its write schema (then the
-    // files carry exactly that schema's columns/types, per the Iceberg
-    // write contract), so the schema-inference job a schema-less
-    // spark.read.parquet schedules per group adds nothing. Groups with
-    // footer-resolved or unresolvable files keep inference — their
-    // physical types are not metadata-attested (e.g. a promoted column
-    // whose write-era schema was dropped from the list).
-    def recordedSchema(wsIdOpt: Option[Int], fs: Seq[IceDataFile])
-        : Option[org.apache.spark.sql.types.StructType] =
-      if (!fs.forall(f => meta.snapshots.find(_.id == f.addedSnapshotId)
-          .flatMap(_.schemaId).isDefined)) None
-      else {
-        val gs = meta.schemas(wsIdOpt.getOrElse(readSchemaId))
-        Some(org.apache.spark.sql.types.StructType(gs.map(f =>
-          org.apache.spark.sql.types.StructField(f.name,
-            org.apache.spark.sql.types.DataType.fromDDL(f.dtype), nullable = true))))
-      }
-    val tagged = groups.map { case (wsIdOpt, fs) =>
-      val reader = recordedSchema(wsIdOpt, fs)
-        .map(spark.read.schema).getOrElse(spark.read)
-      val base = reader.parquet(fs.map(_.path): _*)
-      val withTags =
-        if (!needTag) base
-        else base
-          .withColumn("_ifile", normCol(col("_metadata.file_path")))
-          .withColumn("_ipos", col("_metadata.row_index"))
-      val tagCols = if (needTag) Seq(col("_ifile"), col("_ipos")) else Seq()
-      wsIdOpt match {
-        case None => // written under the read schema: names match as-is
-          if (groups.size == 1) withTags
-          else withTags.select(tagCols ++ schema.map(f => col(f.name)): _*)
-        case Some(wsId) =>
-          val ws = meta.schemas(wsId)
-          withTags.select(tagCols ++ schema.map { f =>
-            ws.find(_.id == f.id) match {
-              case Some(wf) => col(wf.name).cast(f.dtype).as(f.name)
-              case None => f.initialDefault.map(d => expr(d).cast(f.dtype))
-                .getOrElse(lit(null).cast(f.dtype)).as(f.name)
-            }
-          }: _*)
-      }
-    }.reduce(_ unionByName _)
-    // merge-on-read, both delete shapes anti-joined against the tagged
-    // lineage columns. The delete sides are O(deleted rows / keys) and
-    // broadcast when small (AQE); the data side never shuffles.
-    // (IceLite's OWN read path uses the broadcast DeleteIndex +
-    // codegen'd probe instead; the read-only adapter deliberately avoids
-    // assuming foreign writers sorted their delete files the way
-    // IceLite's index relies on.)
-    val afterPos =
-      if (posDeletes.isEmpty && dvRefs.isEmpty) tagged
-      else {
-        val pqDels =
-          if (posDeletes.isEmpty) None
-          else Some(spark.read.schema("file_path STRING, pos BIGINT")
-            .parquet(posDeletes: _*))
-        // V3 deletion vectors: roaring blobs expand EXECUTOR-side into
-        // (file, pos) rows — manifest-supplied blob ranges seek straight
-        // to their blob, rangeless refs resolve through the footer
-        val confB = new org.apache.spark.util.SerializableConfiguration(conf)
-        val dvDels =
-          if (dvRefs.isEmpty) None
-          else Some(spark
-            .createDataset(dvRefs.map(r =>
-              (r.path, Option(r.refDataFile).getOrElse(""), r.offset, r.length)))
-            .repartition(math.max(1, dvRefs.size))
-            .flatMap { case (p, ref, off, len) =>
-              if (off >= 0 && len > 0 && ref.nonEmpty)
-                PuffinDv.runsForBlob(new Path(p), confB.value, off, len)
-                  .grouped(2).flatMap(r => (r(0) until r(0) + r(1)).iterator)
-                  .map(ref -> _)
-              else PuffinDv.expand(new Path(p), confB.value)
-            }
-            .toDF("file_path", "pos"))
-        val dels = (pqDels.toSeq ++ dvDels.toSeq).reduce(_ unionByName _)
-          .select(normCol(col("file_path")).as("_dfile"), col("pos").as("_dpos"))
-          .distinct()
-        tagged
-          .join(dels, col("_ifile") === col("_dfile") && col("_ipos") === col("_dpos"),
-            "left_anti")
-      }
-    // equality deletes (Iceberg v2): a delete at sequence S removes
-    // matching rows from data files with sequence < S only. Each row
-    // learns its file's sequence via a broadcast (path → seq) join —
-    // BOTH join sides normalize through the same normCol, so a writer-
-    // spelled scheme variant can never null the join; a null sequence
-    // after the join would silently resurrect deleted rows, so it fails
-    // loudly instead. Then ONE null-safe anti-join per DISTINCT
-    // equality_ids set (the spec matches NULL keys to NULL): keys from
-    // all the set's delete files union, each carrying its delete's
-    // sequence, reduced to max-per-key (row deleted ⟺ ∃ delete with
-    // matching keys and row.seq < delete.seq ⟺ row.seq < max matching
-    // seq) — plan depth stays O(distinct key-sets) however many delete
-    // commits the foreign table accumulated, not O(delete files).
-    val alive =
-      if (eqRefs.isEmpty) afterPos
-      else {
-        val seqDf = broadcast(kept.map(f => (f.path, f.seq)).toDF("_praw", "_iseq")
-          .select(normCol(col("_praw")).as("_sfile"), col("_iseq")))
-        var cur = afterPos.join(seqDf, col("_ifile") === col("_sfile"), "left")
-          .drop("_sfile")
-          .withColumn("_iseq", when(col("_iseq").isNull, raise_error(concat(
-            lit("iceberg interop: data file sequence unresolved for "), col("_ifile"))))
-            .otherwise(col("_iseq")))
-        eqRefs.groupBy(_.ids.sorted).toSeq.sortBy(_._1.mkString(","))
-          .foreach { case (ids, refs) =>
-            val names = ids.map(id => schema.find(_.id == id).getOrElse(sys.error(
-              s"iceberg interop: equality_ids field $id not in snapshot schema")).name)
-            val keys = refs.sortBy(_.path).map { d =>
-              // key columns resolve by FIELD ID against the delete file's
-              // OWN parquet schema (Iceberg's resolution rule — the key
-              // survives a source-column rename after the delete was
-              // written); name fallback for id-less writers. The SAME
-              // footer read also yields the file's Spark schema, so the
-              // read is explicit — no per-delete-file inference job.
-              val (byId, fileSchema) = parquetFooterSchema(d.path, conf)
-              spark.read.schema(fileSchema).parquet(d.path)
-                .select(ids.zip(names).map { case (id, n) =>
-                  col(byId.getOrElse(id, n)).as(s"_k_$n") }: _*)
-                .withColumn("_dseq", lit(d.seq))
-            }.reduce(_ unionByName _)
-              .groupBy(names.map(n => col(s"_k_$n")): _*)
-              .agg(max("_dseq").as("_dseq"))
-            val cond = names.map(n => cur(n) <=> keys(s"_k_$n")).reduce(_ && _) &&
-              cur("_iseq") < keys("_dseq")
-            cur = cur.join(broadcast(keys), cond, "left_anti")
+    val sch = schemas.find(_.schemaId == readSchemaId).get
+    def liftTransform(tr: String): String =
+      if (tr.startsWith("bucket[")) "m" + tr else tr
+    val numericIdentity = Set("STRING", "VARCHAR", "INT", "INTEGER", "BIGINT", "LONG")
+    def convertTuple(f: IceDataFile): Map[String, String] =
+      ice.specs.getOrElse(f.specId, Seq()).flatMap { sf =>
+        if (!sch.hasId(sf.sourceId)) None
+        else f.partition.get(sf.name).flatMap { v =>
+          val tgt = IceLite.specFieldName(sch.byId(sf.sourceId).name, liftTransform(sf.transform))
+          val srcType = sch.byId(sf.sourceId).dtype.toUpperCase
+          sf.transform match {
+            case "identity" if srcType == "DATE" =>
+              // Iceberg identity(DATE) tuples are epoch days; IceLite's ISO
+              scala.util.Try(java.time.LocalDate.ofEpochDay(v.toLong).toString)
+                .toOption.map(tgt -> _)
+            case "identity" if numericIdentity(srcType) => Some(tgt -> v)
+            case "year" =>
+              scala.util.Try((1970 + v.toInt).toString).toOption.map(tgt -> _)
+            case "month" => scala.util.Try {
+              val m0 = v.toInt
+              f"${1970 + Math.floorDiv(m0, 12)}%04d-${Math.floorMod(m0, 12) + 1}%02d"
+            }.toOption.map(tgt -> _)
+            case "day" => scala.util.Try(
+              java.time.LocalDate.ofEpochDay(v.toLong).toString).toOption.map(tgt -> _)
+            case b if b.startsWith("bucket[") => Some(tgt -> v)
+            case _ => None // unknown transform: conservative keep
           }
-        cur.drop("_iseq")
+        }
+      }.toMap
+    val writeSchemaById: Map[Long, Option[Int]] =
+      ice.snapshots.map(s => s.id -> s.schemaId).toMap
+    val footerIds = parquetFieldNamesByIdBatch(spark,
+      chain.flatMap(_._2._1)
+        .filter(f => writeSchemaById.getOrElse(f.addedSnapshotId, None).isEmpty)
+        .map(_.path).distinct,
+      spark.sessionState.newHadoopConf())
+    // a candidate must DECLARE every field id the file carries (with the
+    // matching name): a schema missing one of them predates that column,
+    // and stamping the file there would fill the initial-default over
+    // real data. The minimal declarer wins, so a pre-ADD file stamps
+    // pre-ADD and fills the added column's initial-default, not null.
+    // Reserved metadata-column ids (materialized `_row_id` …) never
+    // belong to a declared schema and are ignored.
+    def footerSchemaId(path: String): Option[Int] = {
+      val byId = footerIds.getOrElse(path, Map.empty[Int, String])
+        .filter(_._1 < ReservedFieldIdFloor)
+      val cands = schemas.filter(s => byId.forall { case (fid, nm) =>
+        s.fields.exists(f => f.id == fid && f.name == nm) })
+      if (byId.isEmpty) Some(readSchemaId)
+      else if (cands.isEmpty) None
+      else Some(cands.minBy(s =>
+        (s.fields.count(f => !byId.contains(f.id)), s.schemaId)).schemaId)
+    }
+    def schemaIdOf(f: IceDataFile): Int =
+      writeSchemaById.getOrElse(f.addedSnapshotId, None) match {
+        case Some(sid) if ice.schemas.contains(sid) => sid
+        case Some(sid) =>
+          require(lenient, s"iceberg adopt: ${f.path} was written under schema $sid, " +
+            "which the metadata no longer declares — compact the source first")
+          readSchemaId
+        case None => footerSchemaId(f.path).getOrElse {
+          require(lenient, s"iceberg adopt: ${f.path} carries parquet field ids " +
+            "matching no schema the metadata declares — compact the source first")
+          readSchemaId
+        }
       }
-    alive.select(schema.map(f => col(f.name).cast(f.dtype).as(f.name)): _*)
+    val snapshots = chain.zipWithIndex.map { case ((s, (files, dels)), i) =>
+      Snapshot(s.id, if (i == 0) None else Some(chain(i - 1)._1.id),
+        s.timestampMs, s.operation,
+        files.map(f => DataFile(f.path, f.records, schemaIdOf(f), f.specId,
+          convertTuple(f), Map(), f.seq, nameMapped = true,
+          // V3 row lineage crosses the boundary: an explicit or inherited
+          // foreign first_row_id keeps serving (the file is never rewritten)
+          firstRowId = f.firstRowId)),
+        dels, s.schemaId.filter(ice.schemas.contains).getOrElse(readSchemaId))
+    }
+    val dataFiles = snapshots.flatMap(_.dataFiles)
+    val specs = (dataFiles.map(_.specId) :+ ice.defaultSpecId).distinct.sorted.map { sid =>
+      PartitionSpec(sid, ice.specs.getOrElse(sid, Seq()).flatMap { sf =>
+        if (sch.hasId(sf.sourceId))
+          Some(SpecField(sf.sourceId, liftTransform(sf.transform),
+            IceLite.specFieldName(sch.byId(sf.sourceId).name, liftTransform(sf.transform))))
+        else None
+      })
+    }
+    TableMetadata(
+      location = ice.location,
+      lastFieldId = schemas.flatMap(_.fields.map(_.id)).maxOption.getOrElse(0),
+      currentSchemaId = readSchemaId,
+      schemas = schemas,
+      defaultSpecId = ice.defaultSpecId,
+      specs = specs,
+      properties = Map(),
+      currentSnapshotId = snapshots.lastOption.map(_.id),
+      snapshots = snapshots,
+      metadataLog = Seq(),
+      // V3 row lineage: resume the foreign id counter, never below the end
+      // of any file's explicit block, so native ids cannot collide
+      nextRowId = math.max(ice.nextRowId, dataFiles.flatMap(df =>
+        df.firstRowId.map(_ + df.rows)).maxOption.getOrElse(0L)))
+  }
+
+  /** Read one foreign snapshot through IceLite's own scan: its inventory,
+    * narrowed by `prune` on the FOREIGN partition tuples, is translated in
+    * memory ([[toTableMetadata]], lenient) and scanned under
+    * `readSchemaId` — merge-on-read deletes of all three carriers apply
+    * through IceLite's delete index and equality-delete join. Nothing is
+    * written. */
+  private def readSnapshot(spark: SparkSession, metadataJson: String, ice: IceMeta,
+      snap: IceSnapshot, readSchemaId: Int,
+      prune: Map[String, String] => Boolean): DataFrame = {
+    val (files, deletes) = fileInventory(ice, snap, spark.sessionState.newHadoopConf())
+    val m = toTableMetadata(spark, ice,
+      Seq(snap -> (files.filter(f => prune(f.partition)), deletes)), readSchemaId,
+      lenient = true)
+    new IceLiteTable(spark, new Path(metadataJson).getParent.toString).readAt(m)
   }
 
   private def snapOrEmpty(meta: IceMeta): IceSnapshot =
@@ -683,7 +622,8 @@ object IcebergInterop {
   def readPruned(spark: SparkSession, metadataJson: String,
       prune: Map[String, String] => Boolean): DataFrame = {
     val meta = loadMeta(metadataJson, spark.sessionState.newHadoopConf())
-    scan(spark, meta, snapOrEmpty(meta), prune, current = true)
+    val snap = snapOrEmpty(meta)
+    readSnapshot(spark, metadataJson, meta, snap, currentReadSchemaId(meta, snap), prune)
   }
 
   /** The file-level plan a pruned read would scan — the observable the
@@ -695,12 +635,14 @@ object IcebergInterop {
     fileInventory(meta, snapOrEmpty(meta), conf)._1.filter(f => prune(f.partition))
   }
 
-  /** Time travel: VERSION AS OF an Iceberg snapshot id. */
+  /** Time travel: VERSION AS OF an Iceberg snapshot id, projected through
+    * that snapshot's own schema. */
   def readAsOf(spark: SparkSession, metadataJson: String, snapshotId: Long): DataFrame = {
     val meta = loadMeta(metadataJson, spark.sessionState.newHadoopConf())
     val s = meta.snapshots.find(_.id == snapshotId)
       .getOrElse(sys.error(s"no iceberg snapshot $snapshotId"))
-    scan(spark, meta, s, _ => true)
+    readSnapshot(spark, metadataJson, meta, s,
+      s.schemaId.filter(meta.schemas.contains).getOrElse(meta.currentSchemaId), _ => true)
   }
 
   /** Iceberg's encoded partition value for a temporal transform — what a

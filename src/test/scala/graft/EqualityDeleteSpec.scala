@@ -53,6 +53,22 @@ class EqualityDeleteSpec extends SparkSpec {
     assert(ids(t.read()).contains(20L))
   }
 
+  test("eq deletes on one key set plan ONE anti-join and keep the sequence rule") {
+    val t = mkTable("onejoin", sample(0, 30))
+    t.deleteEq(Seq(5L, 6L).toDF("id"))  // kills 5 and 6
+    t.append(sample(5, 6))               // re-inserts 5 after that delete
+    t.upsertEq(Seq((7L, 2, 70.0)).toDF("id", "grp", "amount"), Seq("id"))
+    t.deleteEq(Seq(5L).toDF("id"))      // kills the re-insert
+    val df = t.read()
+    val antiJoins = df.queryExecution.optimizedPlan.toString
+      .linesIterator.count(_.contains("LeftAnti"))
+    assert(antiJoins == 1, s"three eq commits on one key set: $antiJoins anti-joins")
+    assert(ids(df) == (0L until 30L).filterNot(Set(5L, 6L)),
+      "the re-insert of 5 dies to the later delete; 6 stays deleted")
+    assert(df.filter(col("id") === 7L).select("amount").as[Double].collect().toSeq ==
+      Seq(70.0), "the upsert replaced 7 exactly once")
+  }
+
   test("upsertEq updates matched keys and inserts new ones in ONE commit") {
     val t = mkTable("upsert", sample(0, 10))
     val versions = t.meta.snapshots.size

@@ -34,6 +34,8 @@ class IcebergAdoptSpec extends SparkSpec {
     assert(t.read().columns.toSeq == Seq("id", "name", "v"))
     assert(rows(t.read()) == rows(IcebergInterop.read(spark, mj)),
       "at adoption, both readers must agree row-exactly")
+    assert(rows(t.read()) == rows(src.read()),
+      "at adoption, the table reads what the exported source held")
     val adoptedPaths = t.meta.currentSnapshot.get.dataFiles.map(_.path).toSet
     assert(IcebergInterop.planFiles(spark, mj).map(_.path).toSet == adoptedPaths,
       "adoption must register the foreign files in place, not copy them")
@@ -173,9 +175,14 @@ class IcebergAdoptSpec extends SparkSpec {
     // foreign reader's own time travel
     assert(rows(t.readAsOf(s1)) == rows(IcebergInterop.readAsOf(spark, mj, s1)))
     assert(rows(t.readAsOf(s2)) == rows(IcebergInterop.readAsOf(spark, mj, s2)))
+    // …and against the exported source's own time travel, which shares
+    // no translation with either
+    assert(rows(t.readAsOf(s1)) == rows(src.readAsOf(s1)))
+    assert(rows(t.readAsOf(s2)) == rows(src.readAsOf(s2)))
     assert(t.readAsOf(s1).count() == 30L)
     assert(t.readAsOf(s2).count() == 50L)
     assert(rows(t.read()) == rows(IcebergInterop.read(spark, mj)))
+    assert(rows(t.read()) == rows(src.read()))
 
     // the lineage continues: a native append becomes a 4th snapshot whose
     // parent is the adopted head, and old points keep serving
@@ -186,7 +193,7 @@ class IcebergAdoptSpec extends SparkSpec {
     assert(t.read().count() == 56L)
   }
 
-  test("adoption carries foreign equality deletes (rewritten to physical keys) and Puffin DVs (in place)") {
+  test("foreign equality, position and Puffin DV deletes register in place; the foreign read writes nothing") {
     import org.apache.avro.Schema
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
@@ -257,6 +264,8 @@ class IcebergAdoptSpec extends SparkSpec {
     val f3 = write1("data/b3", Seq((203L, "row-3")).toDF("id", "data"))
     // eq delete (seq 2, key field 2 "data" = "row-3"): kills seq-1 id 3 only
     val eqFile = write1("deletes/eq1", Seq("row-3").toDF("data"))
+    // position-delete parquet: position 1 of f1 (id 1) is dead
+    val posFile = write1("deletes/pos1", Seq((f1, 1L)).toDF("file_path", "pos"))
     // Puffin DV: position 0 of f1 (id 0) is dead
     val conf = spark.sessionState.newHadoopConf()
     val dvPath = s"$loc/deletes/dv1${PuffinDv.Ext}"
@@ -279,11 +288,14 @@ class IcebergAdoptSpec extends SparkSpec {
     writeAvro(s"$loc/metadata/dm_eq.avro", eqEntrySchema,
       Seq(eqEntry(2, eqFile, 1, Seq(2))))
     writeAvro(s"$loc/metadata/dm_dv.avro", dvEntrySchema, Seq(dvEntry(dvPath)))
+    writeAvro(s"$loc/metadata/dm_pos.avro", eqEntrySchema,
+      Seq(eqEntry(1, posFile, 1, Seq())))
     writeAvro(s"$loc/metadata/snap-1.avro", mlSchema, Seq(
       mlRow(s"$loc/metadata/m1.avro", 0, 1L),
       mlRow(s"$loc/metadata/m3.avro", 0, 3L),
       mlRow(s"$loc/metadata/dm_eq.avro", 1, 2L),
-      mlRow(s"$loc/metadata/dm_dv.avro", 1, 2L)))
+      mlRow(s"$loc/metadata/dm_dv.avro", 1, 2L),
+      mlRow(s"$loc/metadata/dm_pos.avro", 1, 2L)))
     val mj = s"$loc/metadata/v1.metadata.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(mj),
       s"""{
@@ -299,26 +311,39 @@ class IcebergAdoptSpec extends SparkSpec {
          |    "summary": {"operation": "append"}, "manifest-list": "$loc/metadata/snap-1.avro"}]
          |}""".stripMargin.getBytes("UTF-8"))
 
+    // survivors: 2,4..9 (id 0 DV-dead, id 1 position-dead, id 3 eq-dead
+    // at seq 1) + the seq-3 re-insert (postdates the seq-2 delete)
+    val written = ((2L until 10L).filter(_ != 3L).map(i => (i, s"row-$i")) :+
+      ((203L, "row-3"))).toSet
+    val want = written.map(_._1)
+    // the foreign read goes through the same translation and scan, in
+    // memory: it must not write anything under the table's location
+    def listing(): Set[String] = {
+      val st = Files.walk(java.nio.file.Paths.get(loc))
+      try st.iterator().asScala.map(_.toString).toSet finally st.close()
+    }
+    val before = listing()
+    val foreign = IcebergInterop.read(spark, mj)
+    assert(foreign.as[(Long, String)].collect().toSet == written,
+      "the foreign read applies all three delete carriers")
+    assert(listing() == before, s"the foreign read wrote ${listing() -- before}")
+
     val t = IceLite.adopt(spark, mj, s"$loc/adopted")
-    // survivors: 1,2,4..9 (id 0 DV-dead, id 3 eq-dead at seq 1) + the
-    // seq-3 re-insert (postdates the seq-2 delete)
-    val want = Set(1L, 2L, 4L, 5L, 6L, 7L, 8L, 9L, 203L)
-    assert(t.read().select("id").as[Long].collect().toSet == want,
-      "adopted MoR semantics must match Iceberg's (DV + seq-scoped eq)")
+    assert(t.read().as[(Long, String)].collect().toSet == written,
+      "adopted MoR semantics must match Iceberg's (DV + position + seq-scoped eq)")
     assert(rows(t.read()) == rows(IcebergInterop.read(spark, mj)),
       "post-adopt reads must hash-equal the foreign reader")
     val dels = t.meta.currentSnapshot.get.deleteFiles
     val eqDel = dels.filter(_.kind == "eq")
     assert(eqDel.size == 1 && eqDel.head.eqFieldIds == Seq(2) &&
       eqDel.head.seq == 2L, s"eq delete must carry ids+seq, got $dels")
-    assert(eqDel.head.path.startsWith(s"$loc/adopted") ||
-      eqDel.head.path.startsWith(s"file:$loc/adopted"),
-      "eq keys rewrite under the adopted table (logical → physical names)")
-    assert(spark.read.parquet(eqDel.head.path).columns.toSeq == Seq("f2"),
-      "rewritten eq keys use physical f<id> columns")
+    assert(eqDel.head.path == eqFile,
+      "the foreign eq-delete file registers in place: adoption moves no data")
     val dvDel = dels.filter(d => d.kind == "pos" && d.path.endsWith(PuffinDv.Ext))
     assert(dvDel.size == 1 && dvDel.head.path == dvPath,
       "the Puffin DV registers in place — it is a native carrier")
+    assert(dels.exists(d => d.kind == "pos" && d.path == posFile),
+      "the position-delete parquet registers in place")
     // the lineage continues: a new append's rows postdate the eq delete
     t.append(Seq((3L, "row-3")).toDF("id", "data"))
     assert(t.read().select("id").as[Long].collect().toSet == (want + 3L),
@@ -562,10 +587,19 @@ class IcebergAdoptSpec extends SparkSpec {
     assert(t.meta.snapshots.map(_.operation) ==
       Seq("append", "append", "delete", "replace", "append"))
     assert(t.meta.currentSnapshotId.contains(5L))
-    // VERSION AS OF every FOREIGN id hash-matches the foreign reader
-    for (fid <- Seq(idA, idB, idC, idD, idE))
+    // VERSION AS OF every FOREIGN id hash-matches the foreign reader AND
+    // the rows the fixture wrote for that point
+    def written(ids: Seq[Int]): Seq[Seq[Any]] = ids.map(i => Seq(i.toLong, s"row-$i"))
+    val expected = Map(
+      idA -> written(0 until 50), idB -> written(0 until 100),
+      idC -> written(5 until 100), idD -> written(5 until 100),
+      idE -> written(5 until 120))
+    for (fid <- Seq(idA, idB, idC, idD, idE)) {
       assert(rows(t.readAsOf(fid)) == rows(IcebergInterop.readAsOf(spark, mj, fid)),
         s"foreign id $fid must time-travel hash-identical to the foreign reader")
+      assert(rows(t.readAsOf(fid)) == expected(fid),
+        s"foreign id $fid must serve the rows the fixture wrote for it")
+    }
     assert(t.readAsOf(idA).count() == 50)
     assert(t.readAsOf(idB).count() == 100)
     assert(t.readAsOf(idC).count() == 95, "the MoR delete point serves survivors")
@@ -651,10 +685,13 @@ class IcebergAdoptSpec extends SparkSpec {
       s"pre-evolution time travel shows the columns the table had then, " +
         s"got ${t.readAsOf(r1).columns.toSeq}")
     assert(rows(t.readAsOf(r1)) == rows(IcebergInterop.readAsOf(spark, mj, r1)))
+    assert(rows(t.readAsOf(r1)) == rows(src.readAsOf(s1)),
+      "the pre-evolution point serves what the source held then")
     // the head serves under the evolved schema: rename surfaced, the
     // added column filling its initial-default on pre-evolution files
     assert(t.read().columns.toSeq == Seq("id", "label", "ch"))
     assert(rows(t.read()) == rows(IcebergInterop.read(spark, mj)))
+    assert(rows(t.read()) == rows(src.read()))
     val byId = t.read().collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
     assert(byId(0L) == ("a0", "web"), "pre-evolution rows fill the initial-default")
     assert(byId(25L) == ("b25", "app"))

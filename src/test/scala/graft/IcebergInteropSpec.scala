@@ -607,6 +607,26 @@ class IcebergInteropSpec extends SparkSpec {
     assert(got.count() == 100 + 1 - 22 - 2 - 1) // 76
   }
 
+  test("the footer-schema memo is keyed on file identity: a file rewritten in place is read again") {
+    val dir = Files.createTempDirectory("footer_memo").toString
+    val conf = spark.sessionState.newHadoopConf()
+    val p = dataFile(dir, "first", 0 until 5)
+    assert(IcebergInterop.parquetFooterSchema(p, conf)._2.fieldNames.toSeq ==
+      Seq("id", "data"))
+    // the same path, another schema (and another length and mtime)
+    val other = s"$dir/second"
+    Seq((1, 2.0, true, "x")).toDF("a", "b", "c", "d").coalesce(1).write.parquet(other)
+    val otherFile = Files.list(Paths.get(other)).toArray.map(_.toString)
+      .find(_.endsWith(".parquet")).get
+    val target = Paths.get(p)
+    val mtime = Files.getLastModifiedTime(target).toMillis
+    Files.copy(Paths.get(otherFile), target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(mtime + 5000))
+    Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
+    assert(IcebergInterop.parquetFooterSchema(p, conf)._2.fieldNames.toSeq ==
+      Seq("a", "b", "c", "d"), "a rewritten file must not be served its old schema")
+  }
+
   test("reads an Iceberg v1 table (single schema, inline manifest list)") {
     val loc = Files.createTempDirectory("iceberg_v1").toString
     Files.createDirectories(Paths.get(s"$loc/metadata"))

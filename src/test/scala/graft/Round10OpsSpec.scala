@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Differential checks for the round-10 operators, mirroring the
-  * Round9OpsSpec pattern: re-derive each operator's core quantity with an
+  * TextQualityOpsSpec pattern: re-derive each operator's core quantity with an
   * independent formulation and assert agreement.
   */
 class Round10OpsSpec extends SparkSpec {

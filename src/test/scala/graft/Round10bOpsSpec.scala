@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Differential checks for the round-10 second wave (X84–X86): re-derive
   * each operator's core quantity with an independent formulation and
-  * assert agreement, mirroring Round9OpsSpec / Round10OpsSpec.
+  * assert agreement, mirroring TextQualityOpsSpec / Round10OpsSpec.
   */
 class Round10bOpsSpec extends SparkSpec {
 

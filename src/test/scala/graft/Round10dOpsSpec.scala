@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Differential checks for the round-10 fifth wave (X94–X96): re-derive
   * each operator's core quantity with an independent formulation and
-  * assert agreement, mirroring Round9OpsSpec / Round10{,b,c}OpsSpec.
+  * assert agreement, mirroring TextQualityOpsSpec / Round10{,b,c}OpsSpec.
   */
 class Round10dOpsSpec extends SparkSpec {
 

@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Differential checks for the round-9 operators: each re-derives the
-  * operator's core quantity with an independent formulation (explode +
-  * groupBy where the engine uses a narrow kernel, 2-arg full levenshtein
-  * where the engine uses the banded threshold form) and asserts agreement
-  * on the fixture corpus — the engine-side twin of the DuckDB oracle.
+/** Differential checks for the text-quality and decontamination
+  * operators (Gopher quality rules, rare bigrams, edit-distance pairs, URL
+  * canonical dedup, cross-source overlap, decontamination agreement): each
+  * re-derives the operator's core quantity with an independent formulation
+  * (explode + groupBy where the engine uses a narrow kernel, 2-arg full
+  * levenshtein where the engine uses the banded threshold form) and
+  * asserts agreement on the fixture corpus — the engine-side twin of the
+  * DuckDB oracle.
   */
-class Round9OpsSpec extends SparkSpec {
+class TextQualityOpsSpec extends SparkSpec {
 
   test("gopher_quality_rules repetition flag agrees with an exploded recount") {
     val out = Registry.queries("gopher_quality_rules")(spark, sf)
