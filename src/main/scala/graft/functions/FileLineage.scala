@@ -9,11 +9,14 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-data-file V3 lineage constants, keyed by every spelling of the
-  * file's path: `(firstRowId, dataSequence)`, a negative value meaning
-  * "none". O(data files) driver metadata, broadcast once per read. */
+/** Per-data-file V3 lineage constants, keyed by the file's canonical
+  * path: `(firstRowId, dataSequence)`, a negative value meaning "none".
+  * O(data files) driver metadata, broadcast once per read. `lookup` takes
+  * the scan's URI-encoded `_metadata.file_path` and is called once per
+  * file, behind [[FileLineage]]'s memo. */
 final class LineageIndex(byPath: Map[String, Array[Long]]) extends Serializable {
-  def lookup(path: UTF8String): Array[Long] = byPath.getOrElse(path.toString, null)
+  def lookup(path: UTF8String): Array[Long] =
+    byPath.getOrElse(graft.icelite.IceLite.canonicalUri(path.toString), null)
 }
 
 object LineageIndex {

@@ -30,13 +30,22 @@ import org.apache.spark.util.SerializableConfiguration
   * billion MoR-deleted rows costs the driver a file listing, not an 8 GB
   * HashMap.
   *
+  * Every path compares in its canonical spelling ([[IceLite.canonicalPath]]).
+  * A parquet delete file IceLite wrote (`sorted`: its recorded `file_path`
+  * bounds are canonical) stores canonical paths, so the probe pushes one
+  * exact `file_path` predicate. Any other delete file — foreign, or written
+  * without bounds — is read whole and each stored path made canonical as it
+  * is read, so a foreign spelling of the same file still applies (a missed
+  * match would resurrect deleted rows).
+  *
   * Loaded arrays are memoized in an executor-wide cache keyed by
   * (index id, data file), so each executor pays the delete-file probe once
   * per data file it scans, not once per task. The cache is size-capped and
   * re-loadable, so eviction is always safe.
   */
 final case class DeleteIndex(
-    id: String, deleteFiles: Seq[String], conf: SerializableConfiguration)
+    id: String, deleteFiles: Seq[String], sorted: Set[String],
+    conf: SerializableConfiguration)
     extends Serializable {
 
   /** Packed [start,len]* deleted-position RUNS recorded for `dataFile`;
@@ -45,7 +54,8 @@ final case class DeleteIndex(
     * dense-delete file (say 90% of 1M rows killed by one predicate) costs
     * a task O(runs) longs, not O(positions), and [[graft.functions
     * .PositionLive]] probes it with [[DeleteIndex.runContains]]'s
-    * O(log runs) search. Executor-side. */
+    * O(log runs) search. `dataFile` is the scan's URI-encoded
+    * `_metadata.file_path`. Executor-side. */
   def runsFor(dataFile: UTF8String): Array[Long] = {
     val key = id + "\u0000" + dataFile.toString
     val hit = DeleteIndex.cache.get(key)
@@ -65,32 +75,21 @@ final case class DeleteIndex(
     DeleteIndex.expandRuns(runsFor(dataFile))
 
   private def load(dataFile: String): Array[Long] = {
-    // NATIVE delete writers record file_path exactly as the scan's
-    // `_metadata.file_path` spells it, so the first spelling always hits.
-    // FOREIGN (adopted) delete files may spell the same path differently
-    // (raw `/a/b` vs `file:/a/b` URI forms) — the alternates make the
-    // probe spelling-insensitive. Cost: the parquet probe ORs a few
-    // literals into one pushed predicate, and Puffin containers match the
-    // whole key set in ONE footer parse — one reader pass per carrier
-    // either way. All of this runs once per (executor, data file) —
-    // memoized above — never per row.
-    val keys = {
-      val n = IceLite.normPath(dataFile)
-      Seq(dataFile, n, s"file:$n", s"file://$n").distinct
-    }
+    // runs once per (executor, data file) — memoized above — never per row
+    val key = IceLite.canonicalUri(dataFile)
     val pred = FilterCompat.get(
-      keys.map(k => FilterApi.eq(FilterApi.binaryColumn("file_path"),
-        Binary.fromString(k)): org.apache.parquet.filter2.predicate.FilterPredicate)
-        .reduce(FilterApi.or))
-    val keySet = keys.toSet
+      FilterApi.eq(FilterApi.binaryColumn("file_path"), Binary.fromString(key)))
     val parts = scala.collection.mutable.ArrayBuffer[Array[Long]]()
     deleteFiles.foreach { del =>
       // carrier dispatch: Puffin deletion vectors resolve via a footer
       // parse + one blob seek and yield packed runs; parquet position
-      // deletes read via the pushed file_path predicate and RLE-compress
-      // on the way in
+      // deletes read their rows (pushed file_path predicate when sorted)
+      // and RLE-compress on the way in
       if (IceLite.isDvPath(del))
-        parts += PuffinDv.runsForAny(new Path(del), conf.value, keySet)
+        parts += PuffinDv.blobs(new Path(del), conf.value)
+          .find(bm => IceLite.canonicalPath(bm.refDataFile) == key)
+          .fold(Array.emptyLongArray)(bm =>
+            PuffinDv.runsForBlob(new Path(del), conf.value, bm.offset, bm.length))
       else {
         val buf = scala.collection.mutable.ArrayBuilder.make[Long]
         // the InputFile builder takes its read options from this conf;
@@ -98,13 +97,17 @@ final case class DeleteIndex(
         // a Hadoop XML parse per delete file
         val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new Path(del), conf.value)) {
           override protected def getReadSupport: ReadSupport[Group] = new GroupReadSupport()
-        }.withFilter(pred).build()
+        }.withFilter(if (sorted(del)) pred else FilterCompat.NOOP).build()
         try {
+          // the stored path is made canonical once per run of equal
+          // values (IceLite writes its rows clustered by file)
+          var raw: String = null
+          var hit = false
           var g = reader.read()
           while (g != null) {
-            // the record-level filter already guarantees the match; the field
-            // check is a free invariant guard on already-filtered rows
-            if (keySet.contains(g.getString("file_path", 0))) buf += g.getLong("pos", 0)
+            val fp = g.getString("file_path", 0)
+            if (fp != raw) { raw = fp; hit = IceLite.canonicalPath(fp) == key }
+            if (hit) buf += g.getLong("pos", 0)
             g = reader.read()
           }
         } finally reader.close()
@@ -193,12 +196,14 @@ object DeleteIndex {
     out
   }
 
-  def build(deleteFiles: Seq[String], spark: SparkSession): DeleteIndex = {
+  def build(deleteFiles: Seq[DeleteFile], spark: SparkSession): DeleteIndex = {
+    val paths = deleteFiles.map(_.path)
     // refuse a carrier this build cannot read on the driver, before a task
-    deleteFiles.foreach(IceLite.isDvPath)
+    paths.foreach(IceLite.isDvPath)
     val id = java.util.UUID.nameUUIDFromBytes(
-      deleteFiles.sorted.mkString("\n").getBytes("UTF-8")).toString
-    DeleteIndex(id, deleteFiles,
+      paths.sorted.mkString("\n").getBytes("UTF-8")).toString
+    DeleteIndex(id, paths,
+      deleteFiles.filter(d => IceLite.canonicalBounds(d.pathLo, d.pathHi)).map(_.path).toSet,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 }

@@ -47,7 +47,7 @@ import org.apache.spark.util.SerializableConfiguration
   */
 class IceLiteTable(val spark: SparkSession, val location: String,
     commitStore: Option[CommitStore] = None) {
-  import IceLite.{HINT, fs, normPath}
+  import IceLite.{HINT, fs}
 
   /** Commit control plane — all metadata atomicity flows through this
     * ([[CommitStore]] documents the exact guarantees the protocol needs;
@@ -153,7 +153,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         s.files.tail.map { f =>
           if (f.firstRowId.isDefined) f
           else f.copy(firstRowId = Some(assigned.getOrElseUpdate(
-            normPath(f.path), { val id = ctr; ctr += f.rows; id })))
+            f.path, { val id = ctr; ctr += f.rows; id })))
         }, manifestIO))
     }
     m.copy(snapshots = snaps, nextRowId = ctr)
@@ -247,10 +247,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // overwhelming majority) never forces a pruned chunk — first-attempt
     // cost stays O(admitted chunks), the chunks the discovery scan already
     // loaded and cached.
-    lazy val scannedDels = scanned.deleteFiles.map(d => normPath(d.path)).toSet
+    lazy val scannedDels = scanned.deleteFiles.map(_.path).toSet
     val scannedDelRefs = scanned.deletes.manifests.map(_.path).toSet
     val scannedRefPaths = scanned.files.manifests.map(_.path).toSet
-    lazy val scannedData = scanned.dataFiles.map(f => normPath(f.path)).toSet
+    lazy val scannedData = scanned.dataFiles.map(_.path).toSet
     def chunkMayHoldHits(r: ManifestRef, cur: TableSchema): Boolean =
       condFilters.isEmpty ||
         condFilters.forall(f => Stats.summaryMayContain(r.stats, cur, f))
@@ -264,11 +264,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       scanned.files.manifests.foreach { r =>
         if (chunkMayHoldHits(r, loadedMeta.currentSchema))
           manifestIO.read(r).foreach { f =>
-            val p = normPath(f.path); if (hitPaths.contains(p)) mp(p) = Some(r.path)
+            val p = f.path; if (hitPaths.contains(p)) mp(p) = Some(r.path)
           }
       }
       scanned.files.tail.foreach { f =>
-        val p = normPath(f.path); if (hitPaths.contains(p)) mp(p) = None
+        val p = f.path; if (hitPaths.contains(p)) mp(p) = None
       }
       mp.toMap
     }
@@ -290,11 +290,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         if (!chunkMayHoldHits(r, m.currentSchema)) keptRefs += r
         else {
           val entries = manifestIO.read(r)
-          if (!entries.exists(f => hitPaths.contains(normPath(f.path)))) keptRefs += r
-          else loose ++= entries.filterNot(f => hitPaths.contains(normPath(f.path)))
+          if (!entries.exists(f => hitPaths.contains(f.path))) keptRefs += r
+          else loose ++= entries.filterNot(f => hitPaths.contains(f.path))
         }
       }
-      loose ++= cs.files.tail.filterNot(f => hitPaths.contains(normPath(f.path)))
+      loose ++= cs.files.tail.filterNot(f => hitPaths.contains(f.path))
       loose ++= newFiles.map(_.copy(seq = sq))
       val next = newSnapshotDL(m, op,
         FileListing(keptRefs.toSeq, loose.toSeq, manifestIO), cs.deletes)
@@ -311,10 +311,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
           // the winner still references is live by immutability; otherwise
           // search only the winner's tail + NEW chunks (O(changed chunks))
           val ncsRefPaths = ncs.files.manifests.map(_.path).toSet
-          val ncsTail = ncs.files.tail.map(f => normPath(f.path)).toSet
+          val ncsTail = ncs.files.tail.map(_.path).toSet
           lazy val newChunkFiles: Set[String] = ncs.files.manifests
             .filterNot(r => scannedRefPaths.contains(r.path))
-            .flatMap(r => manifestIO.read(r).map(f => normPath(f.path))).toSet
+            .flatMap(r => manifestIO.read(r).map(_.path)).toSet
           val allLive = hitPaths.forall { p =>
             (hitContainer.get(p).flatten match {
               case Some(chunk) => ncsRefPaths.contains(chunk)
@@ -335,7 +335,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
           // scannedData — conservative, never a miss)
           val added = (ncs.files.tail ++ ncs.files.manifests
             .filterNot(r => scannedRefPaths.contains(r.path)).flatMap(manifestIO.read))
-            .filterNot(f => scannedData.contains(normPath(f.path)))
+            .filterNot(f => scannedData.contains(f.path))
           val unsafeAdd = added.exists(f => condFilters.isEmpty ||
             condFilters.forall(flt =>
               Stats.mayContain(f, nm.schema(f.schemaId), nm.currentSchema, flt)))
@@ -358,9 +358,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * manifest list. */
   private def hasNewDeletesSince(cur: Snapshot, scannedRefPaths: Set[String],
       scannedDelPaths: Set[String]): Boolean =
-    cur.deletes.tail.exists(d => !scannedDelPaths.contains(normPath(d.path))) ||
+    cur.deletes.tail.exists(d => !scannedDelPaths.contains(d.path)) ||
       cur.deletes.manifests.exists(r => !scannedRefPaths.contains(r.path) &&
-        manifestIO.readDeletes(r).exists(d => !scannedDelPaths.contains(normPath(d.path))))
+        manifestIO.readDeletes(r).exists(d => !scannedDelPaths.contains(d.path)))
 
   /** Optimistic-retry commit for operations whose intent can be REBUILT on
     * top of a newer table state (append's add-files, MoR delete's
@@ -978,16 +978,16 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // delete parquets' row groups — they are written sorted by file_path).
     // Each data row then does a codegen'd memoized binary search
     // (functions.PositionLive — keeps the vectorized scan inside one
-    // whole-stage-codegen span, where a UDF would cut it). Lookups key on
-    // the raw `_metadata.file_path` strings the delete files recorded, so
-    // no per-row path normalization happens. At extreme delete densities
+    // whole-stage-codegen span, where a UDF would cut it). The index makes
+    // each task's `_metadata.file_path` canonical once per file, behind its
+    // memo, so no per-row path work happens. At extreme delete densities
     // the arrays would be compressed bitmaps (Iceberg's puffin DVs) — same
     // shape — and compaction materializes deletes to keep them bounded.
     val afterPos =
       if (posDels.isEmpty) unioned
       else {
         val bc = spark.sparkContext.broadcast(
-          DeleteIndex.build(posDels.map(_.path), spark))
+          DeleteIndex.build(posDels, spark))
         unioned.filter(org.apache.spark.sql.graft.SparkShims.columnOf(
           graft.functions.PositionLive(
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_file"),
@@ -1055,16 +1055,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
   }
 
   /** Per-file `(firstRowId, seq)` for [[graft.functions.FileLineage]],
-    * under every spelling of each path (raw vs `file:` URI forms), so the
-    * probe is spelling-insensitive like the delete index. */
+    * one entry per file under its canonical path. */
   private def lineageIndex(files: Seq[DataFile])
       : org.apache.spark.broadcast.Broadcast[graft.functions.LineageIndex] =
     spark.sparkContext.broadcast(new graft.functions.LineageIndex(
-      files.flatMap { f =>
-        val n = IceLite.normPath(f.path)
-        val entry = Array(f.firstRowId.getOrElse(-1L), f.seq)
-        Seq(f.path, n, s"file:$n", s"file://$n").distinct.map(_ -> entry)
-      }.toMap))
+      files.map(f => f.path -> Array(f.firstRowId.getOrElse(-1L), f.seq)).toMap))
 
   /** Read the current snapshot (optionally manifest-pruned by partition
     * values — the pruning happens on the driver against metadata, so a
@@ -1194,7 +1189,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       s"from $fromSnapshotId must be <= to $toSnapshotId")
     val from = m.snapshot(fromSnapshotId)
     val to = m.snapshot(toSnapshotId)
-    val before = from.dataFiles.map(f => normPath(f.path)).toSet
+    val before = from.dataFiles.map(_.path).toSet
     // every snapshot in the range must only ADD files (append, MoR delete,
     // metadata DDL): a CoW rewrite / compaction / rollback in the range
     // re-adds carried rows as "new" files, which is not "appended rows" —
@@ -1203,13 +1198,13 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     var prev = before
     m.snapshots.filter(s => s.id > fromSnapshotId && s.id <= toSnapshotId)
       .sortBy(_.id).foreach { s =>
-        val cur = s.dataFiles.map(f => normPath(f.path)).toSet
+        val cur = s.dataFiles.map(_.path).toSet
         require(prev.subsetOf(cur),
           s"incremental read across snapshot ${s.id} (${s.operation}) is ambiguous: " +
             "it rewrote or removed files; read full snapshots instead")
         prev = cur
       }
-    val added = to.dataFiles.filterNot(f => before.contains(normPath(f.path)))
+    val added = to.dataFiles.filterNot(f => before.contains(f.path))
     if (rowLineage) readRowLineageAt(m, to.copy(dataFiles = added))
     else scanSnapshot(m, to.copy(dataFiles = added), lineage = false, _ => true)
   }
@@ -1283,10 +1278,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
   /** One changelog step: net changes prev → cur (see readChangesBetween). */
   private def stepChanges(m: TableMetadata, prev: Snapshot, cur: Snapshot,
       names: Seq[String], rowLineage: Boolean = false): Seq[DataFrame] = {
-    val prevSet = prev.dataFiles.map(f => normPath(f.path)).toSet
-    val curSet = cur.dataFiles.map(f => normPath(f.path)).toSet
-    val added = cur.dataFiles.filterNot(f => prevSet(normPath(f.path)))
-    val removed = prev.dataFiles.filterNot(f => curSet(normPath(f.path)))
+    val prevSet = prev.dataFiles.map(_.path).toSet
+    val curSet = cur.dataFiles.map(_.path).toSet
+    val added = cur.dataFiles.filterNot(f => prevSet(f.path))
+    val removed = prev.dataFiles.filterNot(f => curSet(f.path))
     // lineage mode: diff and stamp over the V3 identity columns too
     val outCols =
       if (rowLineage) names ++ Seq(IceLite.RowIdCol, IceLite.LastUpdatedCol)
@@ -1312,10 +1307,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     }
     // merge-on-read: delete files added this step kill rows in SURVIVING
     // data files — scan those as of prev, keep rows the new index marks dead
-    val prevDel = prev.deleteFiles.map(d => normPath(d.path)).toSet
-    val newDel = cur.deleteFiles.filterNot(d => prevDel(normPath(d.path)))
+    val prevDel = prev.deleteFiles.map(_.path).toSet
+    val newDel = cur.deleteFiles.filterNot(d => prevDel(d.path))
     val (newEqDel, newPosDel) = newDel.partition(_.kind == "eq")
-    val common = cur.dataFiles.filter(f => prevSet(normPath(f.path)))
+    val common = cur.dataFiles.filter(f => prevSet(f.path))
     val morDel =
       if (newPosDel.isEmpty || common.isEmpty) None
       else {
@@ -1325,7 +1320,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
           else scanSnapshot(m, prev.copy(dataFiles = common),
             lineage = true, _ => true)
         val bc = spark.sparkContext.broadcast(
-          DeleteIndex.build(newPosDel.map(_.path), spark))
+          DeleteIndex.build(newPosDel, spark))
         Some(visPrev.filter(!org.apache.spark.sql.graft.SparkShims.columnOf(
           graft.functions.PositionLive(
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("_file"),
@@ -1399,7 +1394,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val matched = df.filter(cond).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val pos0 = matched.select(col("_file").as("file_path"), col("_pos").as("pos"))
+      val pos0 = canonicalFilePaths(
+        matched.select(col("_file").as("file_path"), col("_pos").as("pos")), IceLite.canonicalUri)
       // same observe-on-the-write-pass shape as deleteMor: the touched
       // set for rebase validation rides the delete write, no second read
       val obs = org.apache.spark.sql.Observation(s"mor-upd-${UUID.randomUUID()}")
@@ -1419,11 +1415,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         .map(_.copy(materializedLineage = true))
       val touchedPaths = IceLite.observedPaths(obs, "touched")
         .getOrElse(referencedDataPaths(dels))
-      val scannedDeletes = snap.deleteFiles.map(d => normPath(d.path)).toSet
+      val scannedDeletes = snap.deleteFiles.map(_.path).toSet
       val scannedDelRefs = snap.deletes.manifests.map(_.path).toSet
       try commitWithRetry { cur =>
         val cs = cur.currentSnapshot.getOrElse(sys.error("table emptied concurrently"))
-        val live = cs.dataFiles.map(d => normPath(d.path)).toSet
+        val live = cs.dataFiles.map(_.path).toSet
         if (!touchedPaths.subsetOf(live))
           throw new IceLite.ConcurrentRewriteException(
             "merge-on-read update conflicts with a concurrent rewrite: " +
@@ -1457,13 +1453,12 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val filters = IceLite.statFiltersFromCondition(cond)
     val df = scanSnapshot(m, snap, lineage = true, _ => true, filters)
     val touched = df.filter(cond).select("_file").distinct().collect()
-      .map(r => normPath(r.getString(0))).toSet
+      .map(r => IceLite.canonicalUri(r.getString(0))).toSet
     if (touched.isEmpty) return
     // hit resolution goes through the SAME pruned candidate set the scan
     // used (cache hits), never snap.dataFiles — forcing the full file
     // table here would undo the chunk-scoped CoW on a 10M-file table
-    val hit = snap.files.candidates(m, _ => true, filters)
-      .filter(f => touched.contains(normPath(f.path)))
+    val hit = touchedFiles(snap.files.candidates(m, _ => true, filters), touched)
     // V3 row lineage: carried AND updated rows keep their `_row_id` (the
     // row's identity survives an update — that's what lineage is for);
     // updated rows null their `_last_updated_sequence_number` so the
@@ -1484,6 +1479,16 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       IceLite.statFiltersFromCondition(cond), "update", s"update rewrote ${hit.size} files")
   }
 
+  /** The entries of the files a copy-on-write scan `touched`; a touched
+    * file without one would have its rows silently skipped. */
+  private def touchedFiles(candidates: Seq[DataFile], touched: Set[String]): Seq[DataFile] = {
+    val hit = candidates.filter(f => touched.contains(f.path))
+    val missing = touched -- hit.map(_.path)
+    require(missing.isEmpty,
+      s"icelite: scanned files with no manifest entry: ${missing.take(3).mkString(", ")}")
+    hit
+  }
+
   /** DELETE WHERE — copy-on-write (README.md:959–960) or merge-on-read
     * deletion vectors (README.md:1111–1121) per
     * `write.delete.mode` (README.md:1113, M18). */
@@ -1500,11 +1505,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val filters = IceLite.statFiltersFromCondition(cond)
     val df = scanSnapshot(m, snap, lineage = true, _ => true, filters)
     val touched = df.filter(cond).select("_file").distinct().collect()
-      .map(r => normPath(r.getString(0))).toSet
+      .map(r => IceLite.canonicalUri(r.getString(0))).toSet
     if (touched.isEmpty) return
     // pruned candidates, not snap.dataFiles — see updateCow
-    val hit = snap.files.candidates(m, _ => true, filters)
-      .filter(f => touched.contains(normPath(f.path)))
+    val hit = touchedFiles(snap.files.candidates(m, _ => true, filters), touched)
     // V3 row lineage: the surviving (carried) rows keep their ids —
     // materialized into the rewritten files
     val hitDf = readRowLineageAt(m, snap.copy(dataFiles = hit))
@@ -1601,7 +1605,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         }
       }.collect()
     val dels = summaries.groupBy(_._1).toSeq.sortBy(_._1).map { case (dvPath, es) =>
-      val paths = es.map(e => normPath(e._2))
+      val paths = es.map(_._2)
       DeleteFile(dvPath, es.map(_._3).sum, kind = "pos",
         pathLo = Some(paths.min), pathHi = Some(paths.max))
     }
@@ -1629,8 +1633,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         val (n, lo, hi) = try {
           // harvest the referenced file_path range from the footer the
           // reader already opened — the delete-manifest pruning summary
-          // rides along for free (bounds normalized so planning compares
-          // them against DataFile paths directly)
+          // rides along for free (the rows are canonical, so planning
+          // compares the bounds against DataFile paths directly)
           var lo0: Option[String] = None; var hi0: Option[String] = None
           var ok = true
           import scala.jdk.CollectionConverters._
@@ -1649,8 +1653,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
             }
           }
           (r.getRecordCount,
-            if (ok) lo0.map(normPath) else None,
-            if (ok) hi0.map(normPath) else None)
+            if (ok) lo0 else None,
+            if (ok) hi0 else None)
         } finally r.close()
         if (n > 0)
           files += DeleteFile(st.getPath.toString, n, pathLo = lo, pathHi = hi)
@@ -1663,7 +1667,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val snap = m.currentSnapshot.getOrElse(return)
     val df = scanSnapshot(m, snap, lineage = true, _ => true,
       IceLite.statFiltersFromCondition(cond))
-    val pos0 = df.filter(cond).select(col("_file").as("file_path"), col("_pos").as("pos"))
+    val pos0 = canonicalFilePaths(
+      df.filter(cond).select(col("_file").as("file_path"), col("_pos").as("pos")),
+      IceLite.canonicalUri)
     // observe the touched data-file set ON the delete-write pass itself —
     // the validation input rides the job that must run anyway instead of
     // a second read over the just-written delete files (one fewer
@@ -1685,7 +1691,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       .getOrElse(referencedDataPaths(files.toSeq))
     try commitWithRetry { cur =>
       val cs = cur.currentSnapshot.getOrElse(sys.error("table emptied concurrently"))
-      val live = cs.dataFiles.map(df => normPath(df.path)).toSet
+      val live = cs.dataFiles.map(_.path).toSet
       if (!touchedPaths.subsetOf(live))
         throw new IceLite.ConcurrentRewriteException(
           "merge-on-read delete conflicts with a concurrent rewrite: " +
@@ -1707,18 +1713,34 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val (dv, pq) = dels.map(_.path).partition(IceLite.isDvPath)
     val conf = spark.sessionState.newHadoopConf()
     val fromDv = dv.flatMap(p =>
-      PuffinDv.blobs(new Path(p), conf).map(b => normPath(b.refDataFile)))
+      PuffinDv.blobs(new Path(p), conf).map(_.refDataFile))
     val fromPq =
       if (pq.isEmpty) Seq()
       else spark.read.schema("file_path STRING, pos BIGINT")
         .parquet(pq: _*)
-        .select("file_path").distinct().collect().map(r => normPath(r.getString(0))).toSeq
+        .select("file_path").distinct().collect().map(_.getString(0)).toSeq
     (fromDv ++ fromPq).toSet
   }
 
+  /** A (file_path, pos) frame with `file_path` made canonical by `canon`,
+    * once per run of equal paths (a task emits one file's rows together). */
+  private def canonicalFilePaths(pos: DataFrame, canon: String => String): DataFrame = {
+    import spark.implicits._
+    pos.select(col("file_path").cast("string"), col("pos").cast("long")).as[(String, Long)]
+      .mapPartitions { it =>
+        var raw: String = null
+        var key: String = null
+        it.map { case (f, p) =>
+          if (f != raw) { raw = f; key = canon(f) }
+          (key, p)
+        }
+      }.toDF("file_path", "pos")
+  }
+
   /** (file_path, pos) rows of a mixed parquet/Puffin position-delete set
-    * — what the delete-file rewrite merges. Puffin containers expand
-    * executor-side (one task per container). */
+    * — what the delete-file rewrite merges — with every stored path made
+    * canonical, so foreign and native rows for one data file merge.
+    * Puffin containers expand executor-side (one task per container). */
   private def posDeleteRows(dels: Seq[DeleteFile]): DataFrame = {
     import spark.implicits._
     val (dv, pq) = dels.map(_.path).partition(IceLite.isDvPath)
@@ -1732,7 +1754,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       else Some(spark.createDataset(dv).repartition(math.max(1, dv.size))
         .flatMap(p => PuffinDv.expand(new Path(p), confB.value))
         .toDF("file_path", "pos"))
-    (pqDf.toSeq ++ dvDf.toSeq).reduce(_ unionByName _)
+    canonicalFilePaths((pqDf.toSeq ++ dvDf.toSeq).reduce(_ unionByName _), IceLite.canonicalPath)
   }
 
   /** Write one equality-delete key set under deletes/ (physical `f<id>`
@@ -1978,9 +2000,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       // SOURCE branch reads every file by semantics)
       val hit =
         if (touched.isEmpty) Seq()
-        else (if (notMatchedBySource.nonEmpty) snap.dataFiles
-              else snap.files.candidates(m, _ => true, keyRange))
-          .filter(f => touched.contains(normPath(f.path)))
+        else touchedFiles(
+          if (notMatchedBySource.nonEmpty) snap.dataFiles
+          else snap.files.candidates(m, _ => true, keyRange), touched)
       val rewritten = if (hit.isEmpty) None else {
         // V3 row lineage rides the rewrite: kept rows keep both columns,
         // updated rows keep `_row_id` (the row's identity survives its
@@ -2071,8 +2093,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
                 .select(col("_file"), tKey).collect()
             val touched =
               if (insertOnly) Set[String]()
-              else if (notMatchedBySource.nonEmpty) snap.dataFiles.map(f => normPath(f.path)).toSet
-              else pairs.map(r => normPath(r.getString(0))).toSet
+              else if (notMatchedBySource.nonEmpty) snap.dataFiles.map(_.path).toSet
+              else pairs.map(r => IceLite.canonicalUri(r.getString(0))).toSet
             // source rows with a null key or matching NO target row → insert candidates
             val matchedKeys = pairs.map(_.get(1)).toSet
             val unmatched = rows.filter(r => r.isNullAt(ki) || !matchedKeys.contains(r.get(ki)))
@@ -2100,9 +2122,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
               try {
                 val touched =
                   if (insertOnly) Set[String]()
-                  else if (notMatchedBySource.nonEmpty) snap.dataFiles.map(f => normPath(f.path)).toSet
+                  else if (notMatchedBySource.nonEmpty) snap.dataFiles.map(_.path).toSet
                   else tgtKeys.join(src.select(sKey.as("_sk")), col(targetKey) === col("_sk"), "left_semi")
-                    .select("_file").distinct().collect().map(r => normPath(r.getString(0))).toSet
+                    .select("_file").distinct().collect().map(r => IceLite.canonicalUri(r.getString(0))).toSet
                 // source rows matching NO target row anywhere → insert candidates
                 val inserts = insertRows(src.join(
                   tgtKeys.select(col(targetKey).as("_tk")), sKey === col("_tk"), "left_anti"))
@@ -2482,13 +2504,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         // from either carrier to the other.
         val raw = posDeleteRows(posDels)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // dangling filter: delete rows store `_metadata.file_path` strings
-        // (file:///x) while DataFile.path is Hadoop-style (file:/x) —
-        // normalize driver-side on the bounded referenced-file set rather
-        // than per row, then subtract with a literal list (O(files))
-        val liveNorm = snap.dataFiles.map(f => normPath(f.path)).toSet
+        // dangling filter: subtract the rows of files no longer live with
+        // a literal list (O(files)); posDeleteRows made the paths canonical
+        val live = snap.dataFiles.map(_.path).toSet
         val dangling = raw.select("file_path").distinct().collect()
-          .map(_.getString(0)).filterNot(p => liveNorm.contains(normPath(p)))
+          .map(_.getString(0)).filterNot(live.contains)
         val kept = (if (dangling.isEmpty) raw
                     else raw.filter(!col("file_path").isInCollection(dangling)))
           .dropDuplicates("file_path", "pos")
@@ -2607,18 +2627,18 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       if (dead.isEmpty) { toDelete = Seq(); manifestsToDelete = Seq(); (m, "expire 0 snapshots") }
       else {
         val liveFiles = live.flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path))
-          .map(normPath).toSet
+          .toSet
         toDelete = dead.flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path))
-          .filterNot(p => liveFiles.contains(normPath(p))).distinct
+          .filterNot(liveFiles.contains).distinct
         // manifest chunks (data AND delete) referenced ONLY by dead
         // snapshots go too — ref paths come from the listings, no chunk
         // load needed
         val liveManifests = live.flatMap(s =>
-          s.files.manifests.map(r => normPath(r.path)) ++
-            s.deletes.manifests.map(r => normPath(r.path))).toSet
+          s.files.manifests.map(_.path) ++
+            s.deletes.manifests.map(_.path)).toSet
         manifestsToDelete = dead.flatMap(s =>
           s.files.manifests.map(_.path) ++ s.deletes.manifests.map(_.path))
-          .filterNot(p => liveManifests.contains(normPath(p))).distinct
+          .filterNot(liveManifests.contains).distinct
         // adopted foreign-snapshot mappings whose native target just
         // expired go too: left behind they resolve `VERSION AS OF
         // <foreign id>` to a missing snapshot with a confusing indirect
@@ -2646,9 +2666,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
   def removeOrphanFiles(
       olderThanMs: Long = System.currentTimeMillis() - IceLite.OrphanGraceMs): Seq[String] = {
     val m = meta
+    // a listing is canonical; stored paths are made so to compare (an
+    // adopted delete file keeps its foreign spelling)
     val referenced = m.snapshots
       .flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path))
-      .map(normPath).toSet
+      .map(IceLite.canonicalPath).toSet
     val f = fs(spark, location)
     val removed = scala.collection.mutable.ArrayBuffer[String]()
     for (dir <- Seq("data", "deletes")) {
@@ -2657,7 +2679,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         val it = f.listFiles(d, true)
         while (it.hasNext) {
           val st = it.next()
-          if (st.isFile && !referenced.contains(normPath(st.getPath.toString)) &&
+          if (st.isFile && !referenced.contains(st.getPath.toString) &&
             st.getModificationTime < olderThanMs) {
             f.delete(st.getPath, false)
             removed += st.getPath.toString
@@ -2669,14 +2691,14 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // referenced-set = every snapshot's manifest refs (paths only),
     // data and delete manifests alike
     val refManifests = m.snapshots.flatMap(s =>
-      s.files.manifests.map(r => normPath(r.path)) ++
-        s.deletes.manifests.map(r => normPath(r.path))).toSet
+      s.files.manifests.map(_.path) ++
+        s.deletes.manifests.map(_.path)).map(IceLite.canonicalPath).toSet
     val mfDir = new Path(location, "metadata/manifests")
     if (f.exists(mfDir)) {
       val it = f.listFiles(mfDir, false)
       while (it.hasNext) {
         val st = it.next()
-        if (st.isFile && !refManifests.contains(normPath(st.getPath.toString)) &&
+        if (st.isFile && !refManifests.contains(st.getPath.toString) &&
           st.getModificationTime < olderThanMs) {
           f.delete(st.getPath, false)
           removed += st.getPath.toString
@@ -2956,14 +2978,13 @@ object IceLite {
       conf: org.apache.hadoop.conf.Configuration, stagingPrefix: String,
       dataDir: String, schemaId: Int, specId: Int, pStr: String): DataFile = {
     val p = new Path(pStr)
-    // listFiles returns scheme-qualified paths (file:/x) while Path.toString
-    // on a constructed dir may be scheme-less (/x) — strip on the normalized
-    // URI path of BOTH sides or rel keeps a "file:" prefix whose colon makes
-    // the dest Path an invalid relative-path-in-absolute-URI.
-    val rel = normPath(pStr).stripPrefix(normPath(stagingPrefix)).stripPrefix("/")
+    // a listed staged file is qualified (file:/x) while a constructed
+    // staging dir may be scheme-less (/x): strip on both canonical forms
+    val rel = canonicalPath(pStr).stripPrefix(canonicalPath(stagingPrefix)).stripPrefix("/")
+    // partition dir names carry Spark's path-name escaping (`:` → %3A)
     val partVals = rel.split("/").dropRight(1).filter(_.contains("=")).map { seg =>
       val Array(k, v) = seg.split("=", 2)
-      k.stripPrefix("_p_") -> v
+      k.stripPrefix("_p_") -> org.apache.spark.sql.graft.SparkShims.unescapePathName(v)
     }.toMap
     // flatten "part=value/" dirs into the name: deterministic AND unique
     // within the write (same part-file basename appears under many dirs)
@@ -2979,32 +3000,52 @@ object IceLite {
       // lost a rename race with a speculative twin — fine iff the twin won
       if (!lfs.exists(dest)) sys.error(s"rename $p -> $dest failed")
     }
-    DataFile(dest.toString, rows, schemaId, specId, partVals, stats)
+    DataFile(canonicalPath(dest.toString), rows, schemaId, specId, partVals, stats)
   }
 
   private[icelite] def fs(spark: SparkSession, location: String): FileSystem =
     new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** `_metadata.file_path` renders as `file:///x` while Hadoop `Path
-    * .toString` renders `file:/x` — normalize both to the URI path before
-    * comparing, or CoW file matching silently misses everything. (Static:
-    * also called from executor-side closures.) */
-  def normPath(p: String): String =
-    try new java.net.URI(p).getPath catch { case _: Exception => p }
+  /** The one spelling IceLite keys a file by: the qualified Hadoop `Path`
+    * string (`file:/tmp/a table é/t/data/x.parquet`). Paths are made
+    * canonical where they enter metadata or a lookup, and compared
+    * exactly after that. `canonicalPath` takes a Hadoop path string (as
+    * IceLite and Iceberg store them); `canonicalUri` a URI-encoded one (as
+    * Spark renders `_metadata.file_path`: `file:/a%20b`, `file:///a`),
+    * which must never go through `new Path(String)`. A scheme-less path
+    * is a local file; a string naming no absolute path throws, naming it. */
+  def canonicalPath(p: String): String = canonical(p, new Path(p))
 
-  /** Normalized path set from a completed query Observation (the MoR
-    * DML validation input, harvested on the delete-write pass itself).
-    * None when the metric didn't materialize — callers fall back to
-    * reading the written delete files; never silently empty. */
+  def canonicalUri(u: String): String = canonical(u, new Path(new java.net.URI(u)))
+
+  private def canonical(raw: String, parse: => Path): String = {
+    val u = (try parse catch {
+      case e @ (_: IllegalArgumentException | _: java.net.URISyntaxException) =>
+        throw new IllegalArgumentException(s"icelite: cannot make '$raw' a canonical path", e)
+    }).toUri
+    require(u.getPath != null && u.getPath.startsWith("/"),
+      s"icelite: cannot make '$raw' a canonical path: not absolute")
+    new Path(Option(u.getScheme).getOrElse("file"), u.getAuthority, u.getPath).toString
+  }
+
+  /** Do recorded position-delete `file_path` bounds bound canonical paths?
+    * Bounds recorded before paths were canonical are scheme-less. */
+  def canonicalBounds(lo: Option[String], hi: Option[String]): Boolean =
+    Seq(lo, hi).forall(_.exists(b => scala.util.Try(canonicalPath(b)).toOption.contains(b)))
+
+  /** Path set from a completed query Observation (the MoR DML
+    * validation input, harvested on the delete-write pass itself, whose
+    * paths are already canonical). None when the metric didn't
+    * materialize — callers fall back to reading the written delete files;
+    * never silently empty. */
   private[icelite] def observedPaths(obs: org.apache.spark.sql.Observation,
       key: String): Option[Set[String]] =
     try obs.getAsJava.get(key) match {
-      case s: scala.collection.Seq[_] =>
-        Some(s.map(v => normPath(v.toString)).toSet)
-      case a: Array[_] => Some(a.map(v => normPath(v.toString)).toSet)
+      case s: scala.collection.Seq[_] => Some(s.map(_.toString).toSet)
+      case a: Array[_] => Some(a.map(_.toString).toSet)
       case l: java.util.List[_] =>
         Some(scala.jdk.CollectionConverters.ListHasAsScala(l).asScala
-          .map(v => normPath(v.toString)).toSet)
+          .map(_.toString).toSet)
       case _ => None
     } catch { case scala.util.control.NonFatal(_) => None }
 

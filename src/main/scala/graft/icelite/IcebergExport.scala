@@ -320,19 +320,6 @@ object IcebergExport {
     else None
   }
 
-  /** Undo Spark's partition-directory escaping (`%xx` per escaped char). */
-  private def unescapeDirValue(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length)
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   /** Write one snapshot's data files + manifest: parquet under
     * `dest/data/snap-<sid>` (partitioned by TEMP `_p_<name>` columns holding
@@ -391,7 +378,7 @@ object IcebergExport {
         partFields.foreach { pf =>
           segs.get(s"_p_${pf.name}").foreach { raw =>
             if (raw != "__HIVE_DEFAULT_PARTITION__")
-              pt.put(pf.name, pf.decode(unescapeDirValue(raw)))
+              pt.put(pf.name, pf.decode(org.apache.spark.sql.graft.SparkShims.unescapePathName(raw)))
           }
         }
         dfr.put("partition", pt)

@@ -365,7 +365,7 @@ object IcebergInterop {
       }
     }
     val dvs = dvBlobs.groupBy(_._1).toSeq.map { case (p, blobs) =>
-      val refs = blobs.flatMap(b => Option(b._2)).map(IceLite.normPath)
+      val refs = blobs.flatMap(b => Option(b._2)).map(IceLite.canonicalPath)
       DeleteFile(p, blobs.map(_._3).sum, kind = "pos",
         pathLo = refs.minOption, pathHi = refs.maxOption)
     }
@@ -555,10 +555,12 @@ object IcebergInterop {
           readSchemaId
         }
       }
+    // foreign data-file paths enter IceLite's metadata here, made
+    // canonical; delete files register in place under their own spelling
     val snapshots = chain.zipWithIndex.map { case ((s, (files, dels)), i) =>
       Snapshot(s.id, if (i == 0) None else Some(chain(i - 1)._1.id),
         s.timestampMs, s.operation,
-        files.map(f => DataFile(f.path, f.records, schemaIdOf(f), f.specId,
+        files.map(f => DataFile(IceLite.canonicalPath(f.path), f.records, schemaIdOf(f), f.specId,
           convertTuple(f), Map(), f.seq, nameMapped = true,
           // V3 row lineage crosses the boundary: an explicit or inherited
           // foreign first_row_id keeps serving (the file is never rewritten)

@@ -80,10 +80,9 @@ final class FileListing private (
     val pRefs = parent.manifests.map(_.path).toSet
     val childRefs = manifests.map(_.path).toSet
     val removedParentChunks = parent.manifests.filterNot(r => childRefs(r.path))
-    val pFiles = (parent.tail ++ removedParentChunks.flatMap(io.read))
-      .map(f => IceLite.normPath(f.path)).toSet
+    val pFiles = (parent.tail ++ removedParentChunks.flatMap(io.read)).map(_.path).toSet
     val fromNewChunks = manifests.filterNot(r => pRefs(r.path)).flatMap(io.read)
-    (fromNewChunks ++ tail).filterNot(f => pFiles(IceLite.normPath(f.path)))
+    (fromNewChunks ++ tail).filterNot(f => pFiles(f.path))
   }
 
   def fileCount: Long = manifests.map(_.fileCount).sum + tail.size
@@ -118,9 +117,10 @@ object FileListing {
   * Summaries serve three pruning/bookkeeping rules without a chunk load:
   *  - `maxSeq` vs the scan's min data seq: an all-eq chunk whose deletes
   *    are all at or below every planned file's sequence cannot apply;
-  *  - `pathLo`/`pathHi` (aggregated normalized file_path bounds of the
+  *  - `pathLo`/`pathHi` (aggregated canonical file_path bounds of the
   *    chunk's POSITION deletes): a scan whose planned data files all fall
-  *    outside the range skips the chunk (None ⇒ conservative keep);
+  *    outside the range skips the chunk (None, or bounds recorded before
+  *    paths were canonical ⇒ conservative keep);
   *  - `posCount` / `eqFieldIds`: maintenance thresholds and the
   *    drop-column eq-key guard read counts/ids from summaries alone. */
 final case class DeleteManifestRef(
@@ -167,7 +167,7 @@ final class DeleteListing private (
   def candidates(planned: Seq[DataFile]): Seq[DeleteFile] = {
     if (manifests.isEmpty) return tail
     val minSeq = planned.iterator.map(_.seq).minOption.getOrElse(Long.MaxValue)
-    val paths = planned.map(f => IceLite.normPath(f.path)).sorted.toIndexedSeq
+    val paths = planned.map(_.path).sorted.toIndexedSeq
     def intersects(lo: String, hi: String): Boolean = {
       var l = 0; var r = paths.length
       while (l < r) { val mid = (l + r) >>> 1; if (paths(mid) < lo) l = mid + 1 else r = mid }
@@ -175,10 +175,9 @@ final class DeleteListing private (
     }
     val live = manifests.filter { ref =>
       val eqMayApply = (ref.fileCount - ref.posCount) > 0 && ref.maxSeq > minSeq
-      val posMayApply = ref.posCount > 0 && ((ref.pathLo, ref.pathHi) match {
-        case (Some(lo), Some(hi)) => intersects(lo, hi)
-        case _                    => true // unknown bounds: conservative keep
-      })
+      val posMayApply = ref.posCount > 0 && (
+        !IceLite.canonicalBounds(ref.pathLo, ref.pathHi) || // unknown: keep
+          intersects(ref.pathLo.get, ref.pathHi.get))
       eqMayApply || posMayApply
     }
     live.flatMap(io.readDeletes) ++ tail

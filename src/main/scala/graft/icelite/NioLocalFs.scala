@@ -39,16 +39,30 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     * Spark's InMemoryFileIndex and committers — forces that load, so an
     * 81-file staged write paid 81 forks inside one driver gap. A file
     * racing deletion between the two reads keeps the stock lazy status. */
-  private def filled(st: org.apache.hadoop.fs.FileStatus): org.apache.hadoop.fs.FileStatus =
+  private def filled(st: org.apache.hadoop.fs.FileStatus): org.apache.hadoop.fs.FileStatus = {
+    val f = nioPath(st.getPath)
     try {
       val attrs = java.nio.file.Files.readAttributes(
-        pathToFile(st.getPath).toPath,
-        classOf[java.nio.file.attribute.PosixFileAttributes])
+        f, classOf[java.nio.file.attribute.PosixFileAttributes])
       new org.apache.hadoop.fs.FileStatus(st.getLen, st.isDirectory,
         st.getReplication, st.getBlockSize, st.getModificationTime,
         st.getAccessTime, NioLocalFs.fsPermission(attrs.permissions),
         attrs.owner.getName, attrs.group.getName, st.getPath)
     } catch { case scala.util.control.NonFatal(_) => st }
+  }
+
+  /** `p` as a java.nio path. A name the JVM's file-name charset
+    * (`sun.jnu.encoding`, from the locale it started under) cannot
+    * represent fails here, naming the path and the charset. */
+  private def nioPath(p: Path): java.nio.file.Path =
+    try pathToFile(p).toPath
+    catch {
+      case e: java.nio.file.InvalidPathException =>
+        throw new java.io.IOException(
+          s"local path $p cannot be represented in the JVM's file-name encoding " +
+            s"sun.jnu.encoding=${System.getProperty("sun.jnu.encoding")}; " +
+            "start the JVM under a UTF-8 locale (e.g. LC_ALL=C.UTF-8)", e)
+    }
 
   override def getFileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
     filled(super.getFileStatus(p))
@@ -57,7 +71,7 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     super.listStatus(p).map(filled)
 
   override def setPermission(p: Path, permission: FsPermission): Unit = {
-    val f = pathToFile(p).toPath
+    val f = nioPath(p)
     try java.nio.file.Files.setPosixFilePermissions(
       f, NioLocalFs.posixPerms(permission))
     catch {

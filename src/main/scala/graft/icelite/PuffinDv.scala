@@ -362,15 +362,7 @@ object PuffinDv {
   /** Packed runs recorded for `dataFile` (empty when none): one footer
     * parse + one blob seek. */
   def runsFor(path: Path, conf: Configuration, dataFile: String): Array[Long] =
-    runsForAny(path, conf, Set(dataFile))
-
-  /** [[runsFor]] matching ANY of `keys` — the same data file under
-    * different path spellings (raw vs `file:` URI forms). ONE footer
-    * parse for the whole key set; the common no-match probe (a container
-    * holding deletes for other files) pays one parse, not one per
-    * spelling. */
-  def runsForAny(path: Path, conf: Configuration, keys: Set[String]): Array[Long] =
-    blobs(path, conf).find(bm => keys.contains(bm.refDataFile)) match {
+    blobs(path, conf).find(_.refDataFile == dataFile) match {
       case Some(bm) => runsForBlob(path, conf, bm.offset, bm.length)
       case None     => Array.emptyLongArray
     }

@@ -1093,7 +1093,7 @@ object PipelineOps {
     * checksum is a commutative sum, two writers that partition the corpus
     * differently produce byte-identical manifests, which is exactly what
     * makes the manifest usable as a cross-run integrity check
-    * (Round10dOpsSpec asserts the invariance; WebDataset-style shard
+    * (TrainingMixOpsSpec asserts the invariance; WebDataset-style shard
     * listings carry the same per-shard digests).
     *
     * Scale: one narrow scan (shard/hash are per-row projections) into a
@@ -1144,7 +1144,7 @@ object PipelineOps {
     * sampling, pinned by localCheckpoint so both passes see identical
     * partitions), pass 1 ships ONE count per partition to the driver,
     * pass 2 is a narrow map adding each partition's exact start offset.
-    * Output is partition-count-invariant (Round10dOpsSpec asserts 3 vs 8)
+    * Output is partition-count-invariant (TrainingMixOpsSpec asserts 3 vs 8)
     * and equals the single-window formulation, which is what the DuckDB
     * oracle computes. */
   private[graft] def curriculumOrderOp(d: DataFrame, numParts: Int): DataFrame = {

@@ -126,7 +126,11 @@ object SparkShims {
   /** Hive-style partition-value escaping (`ExternalCatalogUtils` is
     * `private[sql]`): the streaming sink renders partition dirs with the
     * SAME spelling `partitionBy` uses on the batch path, so pruning
-    * compares one set of strings. */
+    * compares one set of strings, and `unescapePathName` reads a staged
+    * dir name back into the value. */
   def escapePathName(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
+
+  def unescapePathName(v: String): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
 }

@@ -30,7 +30,7 @@ class CodegenNoFallbackSpec extends SparkSpec {
   // `spark.range(n)`'s `id`, the expected value for an id)
   private def cases: Seq[(String, Column, Long => Any)] = {
     val lineage = spark.sparkContext.broadcast(new LineageIndex(
-      (0 until 3).map(k => s"f$k" -> Array(k * 100L, k + 1L)).toMap))
+      (0 until 3).map(k => s"file:/f$k" -> Array(k * 100L, k + 1L)).toMap))
     val word = concat(lit("é-"), col("id").cast("string"))
     Seq(
       ("RollingFingerprint.hash", SparkShims.columnOf(RollingFingerprint(e(word))),
@@ -57,7 +57,7 @@ class CodegenNoFallbackSpec extends SparkSpec {
         (i: Long) => ZorderBuckets.bucket(i.toDouble, bounds)),
       ("FileLineage -> LineageIndex.lookup",
         SparkShims.columnOf(FileLineage(
-          e(concat(lit("f"), (col("id") % 4).cast("string"))), lineage,
+          e(concat(lit("file:/f"), (col("id") % 4).cast("string"))), lineage,
           LineageIndex.Sequence)),
         (i: Long) => if (i % 4 == 3) null else i % 4 + 1))
   }

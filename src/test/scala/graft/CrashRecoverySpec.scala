@@ -117,16 +117,14 @@ class CrashRecoverySpec extends SparkSpec {
     val removed = t.removeOrphanFiles(olderThanMs = System.currentTimeMillis() + 1)
     assert(removed.nonEmpty, s"$rounds kills must have leaked at least one data file")
     val live = t.meta.snapshots
-      .flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path))
-      .map(IceLite.normPath).toSet
-    removed.foreach(r =>
-      assert(!live.contains(IceLite.normPath(r)), s"reclaimed a LIVE file: $r"))
+      .flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path)).toSet
+    removed.foreach(r => assert(!live.contains(r), s"reclaimed a LIVE file: $r"))
     val f = IceLite.fs(spark, loc)
     val it = f.listFiles(new Path(loc, "data"), true)
     while (it.hasNext) {
       val st = it.next()
       if (st.isFile)
-        assert(live.contains(IceLite.normPath(st.getPath.toString)),
+        assert(live.contains(st.getPath.toString),
           s"unreferenced file survived reclaim: ${st.getPath}")
     }
     assert(t.read().select("id").as[Long].collect().toSet == expected,
@@ -192,10 +190,8 @@ class CrashRecoverySpec extends SparkSpec {
     val removed = t.removeOrphanFiles(olderThanMs = System.currentTimeMillis() + 1)
     assert(removed.nonEmpty, s"$rounds kills must have leaked at least one merged delete file")
     val live = t.meta.snapshots
-      .flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path))
-      .map(IceLite.normPath).toSet
-    removed.foreach(r =>
-      assert(!live.contains(IceLite.normPath(r)), s"reclaimed a LIVE file: $r"))
+      .flatMap(s => s.dataFiles.map(_.path) ++ s.deleteFiles.map(_.path)).toSet
+    removed.foreach(r => assert(!live.contains(r), s"reclaimed a LIVE file: $r"))
     assert(t.read().select("id").as[Long].collect().toSet == expected,
       "reclaim changed the table contents")
   }

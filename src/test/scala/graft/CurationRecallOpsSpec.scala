@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Differential checks for the round-10 operators, mirroring the
-  * TextQualityOpsSpec pattern: re-derive each operator's core quantity with an
-  * independent formulation and assert agreement.
+/** Differential checks for the near-dup and recall-report operators (DCT
+  * pHash near-dup, the incremental curation funnel, ANN recall), mirroring
+  * the TextQualityOpsSpec pattern: re-derive each operator's core quantity
+  * with an independent formulation and assert agreement.
   */
-class Round10OpsSpec extends SparkSpec {
+class CurationRecallOpsSpec extends SparkSpec {
 
   import graft.operators.Multimodal
 

@@ -108,9 +108,9 @@ class DeleteManifestSpec extends SparkSpec {
     t.append(spark.range(100, 200).select(col("id"), (col("id") * 3).as("v")).coalesce(1))
     val m0 = t.meta
     val snap0 = m0.currentSnapshot.get
-    val files = snap0.dataFiles.sortBy(f => IceLite.normPath(f.path))
+    val files = snap0.dataFiles.sortBy(_.path)
     assert(files.size == 2)
-    val Seq(fA, fB) = files.map(f => IceLite.normPath(f.path))
+    val Seq(fA, fB) = files.map(_.path)
     val (loF, hiF) = (files.minBy(_.stats(1).min.toLong), files.maxBy(_.stats(1).min.toLong))
 
     // real pos-delete parquet masking pos 0 of the LOW-id file
@@ -123,8 +123,8 @@ class DeleteManifestSpec extends SparkSpec {
       .toDF("file_path", "pos").coalesce(1).write.parquet(realDelDir)
     val realDel = listParquetUnder(loc, realDelDir).map(p =>
       DeleteFile(p.toString, 1L, kind = "pos", seq = 5L,
-        pathLo = Some(IceLite.normPath(loF.path)),
-        pathHi = Some(IceLite.normPath(loF.path))))
+        pathLo = Some(loF.path),
+        pathHi = Some(loF.path)))
 
     // poisoned chunks: fake delete paths behind summaries that the pruning
     // rules must refute — (a) pos chunks whose path range sits strictly

@@ -46,11 +46,6 @@ class DeletionVectorSpec extends SparkSpec {
     assert(expand(PuffinDv.runsFor(p, conf, "fA")) == a.toSeq)
     assert(PuffinDv.runsFor(p, conf, "missing").isEmpty)
     assert(PuffinDv.expand(p, conf).size == 106)
-    // spelling-insensitive probe: ONE footer parse matches any key in the
-    // set (the DeleteIndex path for adopted foreign spellings)
-    assert(PuffinDv.runsForAny(p, conf, Set("file:fB", "fB")).toSeq
-      == Seq(1L, 1L, 5L, 3L, 99L, 1L))
-    assert(PuffinDv.runsForAny(p, conf, Set("nope", "missing")).isEmpty)
     // corrupt fB's blob: the footer still answers (it reads no blob), fA
     // and fC still resolve (each seek reads only its own blob), and only
     // fB's resolution refuses

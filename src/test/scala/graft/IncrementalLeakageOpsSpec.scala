@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Differential checks for the round-10 second wave (X84–X86): re-derive
-  * each operator's core quantity with an independent formulation and
-  * assert agreement, mirroring TextQualityOpsSpec / Round10OpsSpec.
+/** Differential checks for the split-leakage and incremental curation
+  * operators (X84–X86: leakage guard, n-gram novelty, hard negatives,
+  * incremental MinHash / pHash): re-derive each operator's core quantity
+  * with an independent formulation and assert agreement, mirroring
+  * TextQualityOpsSpec / CurationRecallOpsSpec.
   */
-class Round10bOpsSpec extends SparkSpec {
+class IncrementalLeakageOpsSpec extends SparkSpec {
 
   test("split_leakage_guard: guarded split leaks zero pairs, partitions the probe set, and clusters move together") {
     val s = spark

@@ -40,7 +40,7 @@ class ManifestSpec extends graft.SparkSpec {
     // pruning ever loads and scans them, the read crashes loudly
     t0.append(Seq.tabulate(10)(i => (i.toLong, 7L)).toDF("id", "k").coalesce(1))
     val proto = t0.meta.currentSnapshot.get.dataFiles.head
-    val protoLocal = java.nio.file.Paths.get(IceLite.normPath(proto.path))
+    val protoLocal = java.nio.file.Paths.get(new Path(proto.path).toUri)
     val dataDir = java.nio.file.Paths.get(s"$loc/data")
     val m0 = t0.meta
     val all: Seq[DataFile] = (0 until 100).flatMap { p =>

@@ -122,7 +122,7 @@ class MorDeleteLoadSpec extends SparkSpec {
     // here IS the "load once per executor, not once per task" claim; the
     // cold cost is inside posReadSec (each data file's first task walks
     // all delete parquets with a pushed file_path predicate)
-    val idx = DeleteIndex.build(delFiles.map(_.path), spark)
+    val idx = DeleteIndex.build(delFiles, spark)
     val probeFile = lineage.head._1
     val t1 = System.nanoTime()
     val positions = idx.positionsFor(org.apache.spark.unsafe.types.UTF8String.fromString(probeFile))
@@ -239,10 +239,10 @@ class MorDeleteLoadSpec extends SparkSpec {
       "rewrite must not touch data files")
 
     // exactness of the merged content: exactly the live positions, sorted
-    val liveNorm = snapR.dataFiles.map(f => IceLite.normPath(f.path)).toSet
+    val live = snapR.dataFiles.map(_.path).toSet
     val expectedKept = posDeleted
-      .filter { case (f, _, _) => liveNorm.contains(IceLite.normPath(f)) }
-      .map { case (f, p, _) => (f, p) }.toSet
+      .map { case (f, p, _) => (IceLite.canonicalUri(f), p) }
+      .filter { case (f, _) => live.contains(f) }.toSet
     assert(expectedKept.size < posDeleted.size, "update must have stranded some positions")
     val merged = spark.read.parquet(posAfter.head.path)
       .select("file_path", "pos").as[(String, Long)].collect()

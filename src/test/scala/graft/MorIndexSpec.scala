@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.icelite.{DeleteIndex, IceLite}
+import graft.icelite.{DeleteFile, DeleteIndex, IceLite}
 
 /** Merge-on-read delete index: the driver/broadcast payload must be
   * O(delete files), never O(deleted positions) — the scale contract for
@@ -26,7 +26,7 @@ class MorIndexSpec extends SparkSpec {
       .write.parquet(dir)
     val parts = new java.io.File(dir).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-    val idx = DeleteIndex.build(parts, spark)
+    val idx = DeleteIndex.build(parts.map(DeleteFile(_, 0L)), spark)
     assert(idx.positionsFor(UTF8String.fromString("file:/data/a.parquet"))
       .toSeq == Seq(1L, 5L))
     assert(idx.positionsFor(UTF8String.fromString("file:/data/c.parquet"))

@@ -46,10 +46,6 @@ class PuffinDvSpec extends SparkSpec {
     assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "fB")).toSeq == dense.toSeq)
     assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "fA")).toSeq == sparse.toSeq)
     assert(PuffinDv.runsFor(p, conf, "missing").isEmpty)
-    // spelling-insensitive probe: ONE footer parse matches any key in the set
-    assert(DeleteIndex.expandRuns(
-      PuffinDv.runsForAny(p, conf, Set("file:fA", "fA"))).toSeq == sparse.toSeq)
-    assert(PuffinDv.runsForAny(p, conf, Set("nope", "missing")).isEmpty)
     assert(PuffinDv.expand(p, conf).size == 5008)
   }
 

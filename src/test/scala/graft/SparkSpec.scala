@@ -26,7 +26,14 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   /** The engine session at 4 cores; saveAsTable targets (BucketingSpec)
-    * must not land in the repo cwd. */
-  lazy val session: SparkSession = Engine.session(4, warehouseDir = Some(
-    java.nio.file.Files.createTempDirectory("graft_spark_wh").toString))
+    * must not land in the repo cwd. Codegen fallback is off: generated
+    * code that fails to compile fails the query instead of silently
+    * running interpreted, so every suite checks the codegen paths it
+    * reaches. */
+  lazy val session: SparkSession = {
+    val s = Engine.session(4, warehouseDir = Some(
+      java.nio.file.Files.createTempDirectory("graft_spark_wh").toString))
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Differential checks for the text-curation operators — paragraph
   * dedup, dedup cluster stats and tokenizer fertility: re-derive each
   * operator's core quantity with an independent formulation and assert
-  * agreement, mirroring TextQualityOpsSpec / Round10OpsSpec / Round10bOpsSpec.
+  * agreement, mirroring TextQualityOpsSpec / CurationRecallOpsSpec / IncrementalLeakageOpsSpec.
   */
 class TextCurationOpsSpec extends SparkSpec {
 

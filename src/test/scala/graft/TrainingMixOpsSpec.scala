@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Differential checks for the round-10 fifth wave (X94–X96): re-derive
-  * each operator's core quantity with an independent formulation and
-  * assert agreement, mirroring TextQualityOpsSpec / Round10{,b,c}OpsSpec.
+/** Differential checks for the training-mix preparation operators
+  * (X94–X96: mixing schedule, shard manifest, curriculum order, packing,
+  * dataset card, embedding drift): re-derive each operator's core quantity
+  * with an independent formulation and assert agreement, mirroring
+  * TextQualityOpsSpec / CurationRecallOpsSpec / IncrementalLeakageOpsSpec.
   */
-class Round10dOpsSpec extends SparkSpec {
+class TrainingMixOpsSpec extends SparkSpec {
 
   test("mixing_schedule: weights equal mixture_weights'; the drawn mass exhausts the 2-epoch budget up to per-source floors") {
     val sched = Registry.queries("mixing_schedule")(spark, sf).localCheckpoint()
