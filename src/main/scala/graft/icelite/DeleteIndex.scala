@@ -86,10 +86,7 @@ final case class DeleteIndex(
       // deletes read their rows (pushed file_path predicate when sorted)
       // and RLE-compress on the way in
       if (IceLite.isDvPath(del))
-        parts += PuffinDv.blobs(new Path(del), conf.value)
-          .find(bm => IceLite.canonicalPath(bm.refDataFile) == key)
-          .fold(Array.emptyLongArray)(bm =>
-            PuffinDv.runsForBlob(new Path(del), conf.value, bm.offset, bm.length))
+        parts += PuffinDv.runsFor(new Path(del), conf.value, key)
       else {
         val buf = scala.collection.mutable.ArrayBuilder.make[Long]
         // the InputFile builder takes its read options from this conf;

@@ -1394,8 +1394,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val matched = df.filter(cond).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val pos0 = canonicalFilePaths(
-        matched.select(col("_file").as("file_path"), col("_pos").as("pos")), IceLite.canonicalUri)
+      val pos0 = matched
+        .select(canonicalCol("_file", IceLite.canonicalUri).as("file_path"), col("_pos").as("pos"))
       // same observe-on-the-write-pass shape as deleteMor: the touched
       // set for rebase validation rides the delete write, no second read
       val obs = org.apache.spark.sql.Observation(s"mor-upd-${UUID.randomUUID()}")
@@ -1667,9 +1667,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val snap = m.currentSnapshot.getOrElse(return)
     val df = scanSnapshot(m, snap, lineage = true, _ => true,
       IceLite.statFiltersFromCondition(cond))
-    val pos0 = canonicalFilePaths(
-      df.filter(cond).select(col("_file").as("file_path"), col("_pos").as("pos")),
-      IceLite.canonicalUri)
+    val pos0 = df.filter(cond)
+      .select(canonicalCol("_file", IceLite.canonicalUri).as("file_path"), col("_pos").as("pos"))
     // observe the touched data-file set ON the delete-write pass itself —
     // the validation input rides the job that must run anyway instead of
     // a second read over the just-written delete files (one fewer
@@ -1722,20 +1721,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     (fromDv ++ fromPq).toSet
   }
 
-  /** A (file_path, pos) frame with `file_path` made canonical by `canon`,
-    * once per run of equal paths (a task emits one file's rows together). */
-  private def canonicalFilePaths(pos: DataFrame, canon: String => String): DataFrame = {
-    import spark.implicits._
-    pos.select(col("file_path").cast("string"), col("pos").cast("long")).as[(String, Long)]
-      .mapPartitions { it =>
-        var raw: String = null
-        var key: String = null
-        it.map { case (f, p) =>
-          if (f != raw) { raw = f; key = canon(f) }
-          (key, p)
-        }
-      }.toDF("file_path", "pos")
-  }
+  /** Path column `c` made canonical by `canon`, once per run of equal
+    * paths ([[graft.functions.CanonicalPath]]). */
+  private def canonicalCol(c: String, canon: String => String): Column =
+    org.apache.spark.sql.graft.SparkShims.columnOf(graft.functions.CanonicalPath(
+      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(c), canon))
 
   /** (file_path, pos) rows of a mixed parquet/Puffin position-delete set
     * — what the delete-file rewrite merges — with every stored path made
@@ -1754,7 +1744,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       else Some(spark.createDataset(dv).repartition(math.max(1, dv.size))
         .flatMap(p => PuffinDv.expand(new Path(p), confB.value))
         .toDF("file_path", "pos"))
-    canonicalFilePaths((pqDf.toSeq ++ dvDf.toSeq).reduce(_ unionByName _), IceLite.canonicalPath)
+    (pqDf.toSeq ++ dvDf.toSeq).reduce(_ unionByName _)
+      .select(canonicalCol("file_path", IceLite.canonicalPath).as("file_path"), col("pos"))
   }
 
   /** Write one equality-delete key set under deletes/ (physical `f<id>`
@@ -3003,8 +2994,13 @@ object IceLite {
     DataFile(canonicalPath(dest.toString), rows, schemaId, specId, partVals, stats)
   }
 
-  private[icelite] def fs(spark: SparkSession, location: String): FileSystem =
-    new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
+  private[icelite] def fs(spark: SparkSession, location: String): FileSystem = {
+    val f = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())
+    // a scheme-less path is canonically a local file (canonicalPath)
+    require(new Path(location).toUri.getScheme != null || f.getUri.getScheme == "file",
+      s"icelite: location '$location' has no scheme but fs.defaultFS is ${f.getUri}; name its scheme")
+    f
+  }
 
   /** The one spelling IceLite keys a file by: the qualified Hadoop `Path`
     * string (`file:/tmp/a table é/t/data/x.parquet`). Paths are made
@@ -3013,7 +3009,9 @@ object IceLite {
     * IceLite and Iceberg store them); `canonicalUri` a URI-encoded one (as
     * Spark renders `_metadata.file_path`: `file:/a%20b`, `file:///a`),
     * which must never go through `new Path(String)`. A scheme-less path
-    * is a local file; a string naming no absolute path throws, naming it. */
+    * is a local file, whatever `fs.defaultFS` says (a table on another
+    * file system names its scheme in its location; [[fs]] refuses one
+    * that doesn't); a string naming no absolute path throws, naming it. */
   def canonicalPath(p: String): String = canonical(p, new Path(p))
 
   def canonicalUri(u: String): String = canonical(u, new Path(new java.net.URI(u)))

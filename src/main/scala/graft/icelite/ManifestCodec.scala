@@ -97,7 +97,7 @@ object ManifestCodec {
       openSeekable(p, conf), new GenericDatumReader[GenericRecord]())
     try r.iterator().asScala.map { g =>
       DataFile(
-        g.get("path").toString, g.get("rows").asInstanceOf[Long],
+        IceLite.canonicalPath(g.get("path").toString), g.get("rows").asInstanceOf[Long],
         g.get("schema_id").asInstanceOf[Int], g.get("spec_id").asInstanceOf[Int],
         g.get("part").asInstanceOf[java.util.Map[AnyRef, AnyRef]].asScala
           .map { case (k, v) => k.toString -> v.toString }.toMap,

@@ -73,7 +73,11 @@ final case class ColumnStats(min: String, max: String)
   * IceLite's physical `f<fieldId>` — the shape of ADOPTED foreign
   * Iceberg data files ([[IceLite.adopt]], Iceberg's own `migrate`
   * keeps files in place the same way). The scan resolves such files
-  * through their schema's field names; native writes stay physical. */
+  * through their schema's field names; native writes stay physical.
+  *
+  * `path` is canonical ([[IceLite.canonicalPath]]): made so where a file
+  * enters metadata and again where stored metadata is decoded, so a
+  * table written with scheme-less paths meets the same keys. */
 final case class DataFile(
     path: String, rows: Long, schemaId: Int, specId: Int,
     partition: Map[String, String],
@@ -98,7 +102,7 @@ final case class DataFile(
   *    in `eqFieldIds`); removes ALL matching rows from data files with
   *    seq < this file's seq. The content-addressed delete streaming
   *    upserts need — no scan at delete time.
-  * `pathLo`/`pathHi` (pos only): normalized min/max of the referenced
+  * `pathLo`/`pathHi` (pos only): canonical min/max of the referenced
   * `file_path` column, harvested from the delete parquet's own footer at
   * write — the delete-side pruning summary (a scan whose planned data
   * files all fall outside the range never loads the delete chunk). */
@@ -416,7 +420,7 @@ object MetaJson {
       Option(n.get(k)).map(o => o.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
         .getOrElse(Map())
     DataFile(
-      fn.get("path").asText(), fn.get("rows").asLong(),
+      IceLite.canonicalPath(fn.get("path").asText()), fn.get("rows").asLong(),
       fn.get("schemaId").asInt(), fn.get("specId").asInt(),
       strMap(fn, "partition"),
       Option(fn.get("stats")).map(sn =>

@@ -359,10 +359,12 @@ object PuffinDv {
     } finally in.close()
   }
 
-  /** Packed runs recorded for `dataFile` (empty when none): one footer
-    * parse + one blob seek. */
+  /** Packed runs recorded for the canonical path `dataFile` (empty when
+    * none): one footer parse + one blob seek. A blob's
+    * `referenced-data-file` is compared in its canonical spelling, so a
+    * foreign writer's spelling of the same file still matches. */
   def runsFor(path: Path, conf: Configuration, dataFile: String): Array[Long] =
-    blobs(path, conf).find(_.refDataFile == dataFile) match {
+    blobs(path, conf).find(bm => IceLite.canonicalPath(bm.refDataFile) == dataFile) match {
       case Some(bm) => runsForBlob(path, conf, bm.offset, bm.length)
       case None     => Array.emptyLongArray
     }

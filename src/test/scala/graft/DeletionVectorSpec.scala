@@ -39,12 +39,12 @@ class DeletionVectorSpec extends SparkSpec {
     assert(DeleteIndex.toRuns(a).toSeq == Seq(100L, 100L))
     assert(DeleteIndex.toRuns(b).toSeq == Seq(1L, 1L, 5L, 3L, 99L, 1L))
     val p = new Path(s"$dir/x${PuffinDv.Ext}")
-    val metas = PuffinDv.write(p, Seq("fA" -> a, "fB" -> b, "fC" -> c), conf)
+    val metas = PuffinDv.write(p, Seq("file:/fA" -> a, "file:/fB" -> b, "file:/fC" -> c), conf)
     assert(PuffinDv.blobs(p, conf).map(e => (e.refDataFile, e.cardinality)) ==
-      Seq(("fA", 100L), ("fB", 5L), ("fC", 1L)))
-    assert(expand(PuffinDv.runsFor(p, conf, "fB")) == b.toSeq)
-    assert(expand(PuffinDv.runsFor(p, conf, "fA")) == a.toSeq)
-    assert(PuffinDv.runsFor(p, conf, "missing").isEmpty)
+      Seq(("file:/fA", 100L), ("file:/fB", 5L), ("file:/fC", 1L)))
+    assert(expand(PuffinDv.runsFor(p, conf, "file:/fB")) == b.toSeq)
+    assert(expand(PuffinDv.runsFor(p, conf, "file:/fA")) == a.toSeq)
+    assert(PuffinDv.runsFor(p, conf, "file:/missing").isEmpty)
     assert(PuffinDv.expand(p, conf).size == 106)
     // corrupt fB's blob: the footer still answers (it reads no blob), fA
     // and fC still resolve (each seek reads only its own blob), and only
@@ -56,10 +56,10 @@ class DeletionVectorSpec extends SparkSpec {
     bytes(hit) = (bytes(hit) ^ 1).toByte
     fs.delete(p, false)
     val out = fs.create(p, false); try out.write(bytes) finally out.close()
-    assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq("fA", "fB", "fC"))
-    assert(expand(PuffinDv.runsFor(p, conf, "fA")) == a.toSeq)
-    assert(expand(PuffinDv.runsFor(p, conf, "fC")) == c.toSeq)
-    assert(intercept[IllegalArgumentException](PuffinDv.runsFor(p, conf, "fB"))
+    assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq("file:/fA", "file:/fB", "file:/fC"))
+    assert(expand(PuffinDv.runsFor(p, conf, "file:/fA")) == a.toSeq)
+    assert(expand(PuffinDv.runsFor(p, conf, "file:/fC")) == c.toSeq)
+    assert(intercept[IllegalArgumentException](PuffinDv.runsFor(p, conf, "file:/fB"))
       .getMessage.contains("CRC"))
   }
 
@@ -70,9 +70,9 @@ class DeletionVectorSpec extends SparkSpec {
     // standard UTF-8 (a supplementary-plane char, NUL, 2- and 3-byte
     // classes) must come back from the JSON footer exactly, and each must
     // resolve its own blob
-    val pathA = "data/f_😀_\u0000.parquet" // surrogate pair + NUL
-    val pathB = "data/f_é߿.parquet"        // 2-byte class chars
-    val pathC = "data/f_日本_\uFFFD.parquet" // 3-byte class chars
+    val pathA = "file:/data/f_😀_\u0000.parquet" // surrogate pair + NUL
+    val pathB = "file:/data/f_é߿.parquet"        // 2-byte class chars
+    val pathC = "file:/data/f_日本_\uFFFD.parquet" // 3-byte class chars
     val a = Array(3L, 4L, 5L, 100L)
     val b = Array(7L)
     val c = Array(42L)

@@ -34,7 +34,7 @@ class MetaJsonPropSpec extends AnyFunSuite {
   } yield PartitionSpec(sid, fields)
 
   private val genDataFile = for {
-    path <- Gen.identifier.map(p => s"/data/$p.parquet")
+    path <- Gen.identifier.map(p => s"file:/data/$p.parquet")
     rows <- Gen.choose(0L, 1000000L)
     sid <- Gen.choose(0, 10)
     spec <- Gen.choose(0, 5)
@@ -92,6 +92,12 @@ class MetaJsonPropSpec extends AnyFunSuite {
         .getOrElse(sys.error(s"gen failed at seed $i"))
       val back = MetaJson.fromJson(MetaJson.toJson(m))
       assert(back == m, s"roundtrip mismatch at seed $i:\n$m\nvs\n$back")
+      // a data file stored scheme-less (tables written before paths were
+      // canonical) decodes to its canonical path
+      val old = m.copy(snapshots = m.snapshots.map(s =>
+        s.copy(dataFiles = s.dataFiles.map(f => f.copy(path = f.path.stripPrefix("file:"))))))
+      assert(MetaJson.toJson(old) != MetaJson.toJson(m) || m.snapshots.forall(_.dataFiles.isEmpty))
+      assert(MetaJson.fromJson(MetaJson.toJson(old)) == m, s"scheme-less paths at seed $i")
     }
   }
 
@@ -107,6 +113,9 @@ class MetaJsonPropSpec extends AnyFunSuite {
       val dp = new org.apache.hadoop.fs.Path(s"$dir/mf-$i.avro")
       ManifestCodec.writeData(dp, dfs, conf)
       assert(ManifestCodec.readData(dp, conf) == dfs, s"data codec mismatch at seed $i")
+      val op = new org.apache.hadoop.fs.Path(s"$dir/mf-old-$i.avro")
+      ManifestCodec.writeData(op, dfs.map(f => f.copy(path = f.path.stripPrefix("file:"))), conf)
+      assert(ManifestCodec.readData(op, conf) == dfs, s"scheme-less data paths at seed $i")
       val ep = new org.apache.hadoop.fs.Path(s"$dir/dmf-$i.avro")
       ManifestCodec.writeDeletes(ep, dels, conf)
       assert(ManifestCodec.readDeletes(ep, conf) == dels, s"delete codec mismatch at seed $i")
@@ -114,7 +123,7 @@ class MetaJsonPropSpec extends AnyFunSuite {
   }
 
   test("v2 file table: a file carried across N snapshots is serialized once") {
-    val f = DataFile("/data/shared.parquet", 100, 0, 0, Map(), Map(), seq = 1)
+    val f = DataFile("file:/data/shared.parquet", 100, 0, 0, Map(), Map(), seq = 1)
     val snaps = (1 to 20).map(i =>
       Snapshot(i.toLong, if (i > 1) Some(i - 1L) else None, i * 1000L, "append",
         Seq(f), Seq()))

@@ -1,10 +1,12 @@
-package graft
+package graft.icelite
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.icelite.{IceLite, IcebergExport, IcebergInterop, PuffinDv}
+import graft.SparkSpec
 
 /** IceLite keys every file by one canonical path (the qualified Hadoop
   * `Path` string). Table locations whose names Spark URI-encodes in
@@ -23,13 +25,15 @@ class PathSpellingSpec extends SparkSpec {
     "pathsp"
   }
 
+  private def rows(df: DataFrame): Set[(Long, Long)] = {
+    import spark.implicits._
+    df.select(col("id").cast("bigint"), col("v").cast("bigint")).as[(Long, Long)].collect().toSet
+  }
+
   for (dir <- Seq("a table", "a table é", "a+b%c"))
     test(s"create, MoR deletes, SQL UPDATE, maintenance and export/adopt under '$dir'") {
       import spark.implicits._
       val loc = s"$base/$dir/t"
-      def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-        df.select(col("id").cast("bigint"), col("v").cast("bigint"))
-          .as[(Long, Long)].collect().toSet
       val t = IceLite.create(spark, loc, Seq("id" -> "BIGINT", "v" -> "BIGINT"),
         properties = Map("write.delete.mode" -> "merge-on-read"))
       t.append(spark.range(0, 20).select(col("id"), col("id").as("v")).coalesce(1))
@@ -79,7 +83,53 @@ class PathSpellingSpec extends SparkSpec {
       assert(rows(adopted.read()) == expected.filterNot(_._1 == 30))
     }
 
-  test("a string that names no absolute file path fails, naming it") {
+  test("a table stored with scheme-less paths keeps its lineage, deletes and DML") {
+    import spark.implicits._
+    // the stored shape of a table at a plain-path location written before
+    // paths were canonical: scheme-less data-file paths and `file_path`
+    // bounds, forged into a new metadata version
+    val loc = s"$base/legacy/t"
+    val t = IceLite.create(spark, loc, Seq("id" -> "BIGINT", "v" -> "BIGINT"),
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    t.append(spark.range(0, 20).select(col("id"), col("id").as("v")).coalesce(1))
+    t.append(spark.range(20, 40).select(col("id"), col("id").as("v")).coalesce(1))
+    t.delete(col("id") < 3)
+    t.deleteEq(Seq(10L, 30L).toDF("id"))
+    val (v, m) = (t.currentVersion, t.meta)
+    def plain(p: String) = p.stripPrefix("file:")
+    val next = m.copy(
+      snapshots = m.snapshots.map(s => s.copy(
+        dataFiles = s.dataFiles.map(f => f.copy(path = plain(f.path))),
+        deleteFiles = s.deleteFiles.map(d =>
+          d.copy(pathLo = d.pathLo.map(plain), pathHi = d.pathHi.map(plain))))),
+      metadataLog = m.metadataLog :+ MetadataLogEntry(v + 1, System.currentTimeMillis(), "forged"))
+    val json = MetaJson.toJson(next)
+    assert(json.contains(s"\"$loc/data/") && !json.contains(s"\"file:$loc/data/"))
+    t.store.createExclusive(new Path(loc, s"metadata/v${v + 1}.json"), json)
+    IceLite.swapHintForward(t.store, new Path(loc, s"metadata/${IceLite.HINT}"), v + 1)
+
+    val old = IceLite.load(spark, loc)
+    assert(old.currentVersion == v + 1)
+    assert(old.meta.currentSnapshot.get.dataFiles.forall(_.path.startsWith(s"file:$loc/data/")))
+    // position and equality deletes apply (the latter needs each file's
+    // data sequence, looked up by path)
+    var expected = (0L until 40L).filterNot(Set(0L, 1L, 2L, 10L, 30L)).map(i => (i, i)).toSet
+    assert(rows(old.read()) == expected)
+    val lin = old.readRowLineage()
+      .select(col(IceLite.RowIdCol), col(IceLite.LastUpdatedCol)).collect()
+    assert(lin.length == expected.size && lin.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      "row lineage resolves for every file")
+    assert(lin.map(_.getLong(0)).distinct.length == lin.length)
+    // merge-on-read, then copy-on-write DML on the old files
+    old.delete(col("id") === 15)
+    old.setProperties(Map("write.delete.mode" -> "copy-on-write"))
+    old.delete(col("id") === 25)
+    expected = expected.filterNot(r => r._1 == 15 || r._1 == 25)
+    assert(rows(old.read()) == expected)
+    assert(rows(IceLite.load(spark, loc).read()) == expected)
+  }
+
+  test("a string naming no absolute file path, or a plain location on a non-local fs, fails naming it") {
     val enc = intercept[IllegalArgumentException](IceLite.canonicalUri("file:/tmp/a b/x.parquet"))
     assert(enc.getMessage.contains("'file:/tmp/a b/x.parquet'"), enc.getMessage)
     val rel = intercept[IllegalArgumentException](IceLite.canonicalPath("data/x.parquet"))
@@ -88,5 +138,14 @@ class PathSpellingSpec extends SparkSpec {
     assert(IceLite.canonicalUri("file:/tmp/a%20b%25c/x.parquet") == "file:/tmp/a b%c/x.parquet")
     assert(IceLite.canonicalUri("file:///tmp/a+b/x.parquet") == "file:/tmp/a+b/x.parquet")
     assert(IceLite.canonicalPath("/tmp/a b%c/x.parquet") == "file:/tmp/a b%c/x.parquet")
+    // a scheme-less location is a local file, so a table is refused one
+    // that would resolve against a non-local default file system
+    val other = spark.newSession()
+    other.conf.set("fs.ram.impl", classOf[RamFileSystem].getName)
+    other.conf.set("fs.defaultFS", "ram://wh")
+    val fsErr = intercept[IllegalArgumentException](IceLite.fs(other, s"$base/plain/t"))
+    assert(fsErr.getMessage.contains(s"'$base/plain/t'") && fsErr.getMessage.contains("ram:"),
+      fsErr.getMessage)
+    assert(IceLite.fs(other, s"file:$base/plain/t").getUri.getScheme == "file")
   }
 }

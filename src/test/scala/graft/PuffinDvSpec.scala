@@ -38,14 +38,14 @@ class PuffinDvSpec extends SparkSpec {
     assert(DeleteIndex.expandRuns(PuffinDv.roaringToRuns(PuffinDv.roaringSerialize(edge))).toSeq
       == edge.toSeq)
     val p = new Path(s"$dir/c${PuffinDv.Ext}")
-    val metas = PuffinDv.write(p, Seq("fA" -> sparse, "fB" -> dense, "fC" -> high), conf)
+    val metas = PuffinDv.write(p, Seq("file:/fA" -> sparse, "file:/fB" -> dense, "file:/fC" -> high), conf)
     assert(metas.map(m => (m.refDataFile, m.cardinality)) ==
-      Seq(("fA", 5L), ("fB", 5000L), ("fC", 3L)))
+      Seq(("file:/fA", 5L), ("file:/fB", 5000L), ("file:/fC", 3L)))
     // footer answers without blob reads; per-file resolution seeks one blob
-    assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq("fA", "fB", "fC"))
-    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "fB")).toSeq == dense.toSeq)
-    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "fA")).toSeq == sparse.toSeq)
-    assert(PuffinDv.runsFor(p, conf, "missing").isEmpty)
+    assert(PuffinDv.blobs(p, conf).map(_.refDataFile) == Seq("file:/fA", "file:/fB", "file:/fC"))
+    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "file:/fB")).toSeq == dense.toSeq)
+    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(p, conf, "file:/fA")).toSeq == sparse.toSeq)
+    assert(PuffinDv.runsFor(p, conf, "file:/missing").isEmpty)
     assert(PuffinDv.expand(p, conf).size == 5008)
   }
 
@@ -133,7 +133,7 @@ class PuffinDvSpec extends SparkSpec {
     val dir = Files.createTempDirectory("puffin_mixed").toString
     val src = new Path(s"$dir/src${PuffinDv.Ext}")
     val positions = Array(5L, 6L, 7L, 42L)
-    val metas = PuffinDv.write(src, Seq("fX" -> positions), conf)
+    val metas = PuffinDv.write(src, Seq("file:/fX" -> positions), conf)
     val fs = org.apache.hadoop.fs.FileSystem.get(src.toUri, conf)
     val dvBytes = {
       val in = fs.open(src)
@@ -150,7 +150,7 @@ class PuffinDvSpec extends SparkSpec {
       s""""sequence-number":0,"offset":4,"length":${foreign.length},"properties":{}},""" +
       s"""{"type":"deletion-vector-v1","fields":[],"snapshot-id":0,"sequence-number":0,""" +
       s""""offset":${4 + foreign.length},"length":${dvBytes.length},""" +
-      s""""properties":{"referenced-data-file":"fX","cardinality":"4"}}]}""").getBytes("UTF-8")
+      s""""properties":{"referenced-data-file":"file:/fX","cardinality":"4"}}]}""").getBytes("UTF-8")
     try {
       out.write(Array[Byte](0x50, 0x46, 0x41, 0x31)) // PFA1
       out.write(foreign)
@@ -163,15 +163,15 @@ class PuffinDvSpec extends SparkSpec {
       out.write(Array[Byte](0x50, 0x46, 0x41, 0x31))
     } finally out.close()
     val blobs = PuffinDv.blobs(mixed, conf)
-    assert(blobs.size == 1 && blobs.head.refDataFile == "fX",
+    assert(blobs.size == 1 && blobs.head.refDataFile == "file:/fX",
       s"only the DV blob should surface, got $blobs")
-    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(mixed, conf, "fX")).toSeq == positions.toSeq)
+    assert(DeleteIndex.expandRuns(PuffinDv.runsFor(mixed, conf, "file:/fX")).toSeq == positions.toSeq)
   }
 
   test("deletion-vector-v1 frame: corrupted payload refuses on CRC") {
     val dir = Files.createTempDirectory("puffin_crc").toString
     val p = new Path(s"$dir/c${PuffinDv.Ext}")
-    val metas = PuffinDv.write(p, Seq("f" -> Array(1L, 2L, 3L)), conf)
+    val metas = PuffinDv.write(p, Seq("file:/f" -> Array(1L, 2L, 3L)), conf)
     val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, conf)
     val len = fs.getFileStatus(p).getLen
     val all = new Array[Byte](len.toInt)
@@ -180,7 +180,7 @@ class PuffinDvSpec extends SparkSpec {
     all(metas.head.offset.toInt + 9) = (all(metas.head.offset.toInt + 9) ^ 1).toByte
     fs.delete(p, false)
     val out = fs.create(p, false); try out.write(all) finally out.close()
-    val e = intercept[IllegalArgumentException](PuffinDv.runsFor(p, conf, "f"))
+    val e = intercept[IllegalArgumentException](PuffinDv.runsFor(p, conf, "file:/f"))
     assert(e.getMessage.contains("CRC"))
   }
 
