@@ -20,10 +20,12 @@ object Engine {
     "spark.ui.enabled" -> "false",
     // v2 file-output commit: task output renames straight to the
     // destination at task commit instead of a second serial job-commit
-    // rename pass — one fewer rename per written file on EVERY write job
-    // (icelite staging writes, sinks). Scale-independent: the same
-    // setting is the standard choice on HDFS-like stores; object-store
-    // deployments replace the committer wholesale anyway.
+    // rename pass — one fewer rename per written file on every write job
+    // that goes through Spark's file committer (DataFrame parquet writes,
+    // the Iceberg export's data files). IceLite's own writes do not: its
+    // tasks write their files in place (TaskWriter). Scale-independent:
+    // the same setting is the standard choice on HDFS-like stores;
+    // object-store deployments replace the committer wholesale anyway.
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
     // fork-free local-FS permissions (see NioLocalFs scaladoc): without
     // libhadoop every local mkdirs/create forks a chmod process

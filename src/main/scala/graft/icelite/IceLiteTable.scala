@@ -7,7 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.SerializableConfiguration
 
 /** IceLite: a Spark-native lakehouse table (SURVEY.md §7.3, reproducing the
   * Iceberg semantics the reference teaches at
@@ -30,9 +29,9 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Scale design: all data moves through DataFrames (distributed); the
   * driver only touches metadata (file lists, row counts — KBs per commit).
-  * Per-file footer stats are harvested EXECUTOR-side (one distributed job
-  * over the staged files), so a 10k-file commit doesn't serialize minutes
-  * of footer reads on the driver. CoW rewrites read ONLY the affected files
+  * Per-file footer stats are harvested EXECUTOR-side, by the task that
+  * wrote the file ([[TaskWriter]]), so a 10k-file commit doesn't
+  * serialize minutes of footer reads on the driver. CoW rewrites read ONLY the affected files
   * (manifest-pruned scan), so an UPDATE touching one partition of a 100 TB
   * table rewrites one partition. Merge-on-read DELETE writes positions
   * only — no data rewrite at all — and the read path applies them as a
@@ -474,11 +473,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
   }
 
   /** Write `df` (current-schema column names) as new data files under the
-    * given spec; returns manifest entries. Data flows executor-side via a
-    * normal distributed parquet write; the staged files are then finalized
-    * (footer row-count/min-max harvest + rename into data/) by a SECOND
-    * distributed job — the driver never opens a footer, so commit metadata
-    * cost is O(files/parallelism), not O(files) serial. */
+    * given spec; returns manifest entries. One distributed job: each task
+    * writes its files straight into data/ through the one
+    * [[TaskWriter]] and reports their entries (rows, partition tuple,
+    * footer stats) — the driver opens no footer and lists nothing. */
   private def writeFiles(df: DataFrame, m: TableMetadata, schemaId: Int, spec: PartitionSpec,
       targetFiles: Option[Int] = None,
       // extra columns written into the parquet UNDER THEIR OWN NAMES,
@@ -490,9 +488,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val phys = df.select(sch.fields.map(f =>
       col(f.name).cast(f.sparkDdl).as(f.physName)) ++
       extraPhysCols.map(c => col(c).cast("bigint").as(c)): _*)
-    val stagingDir = new Path(location, s"staging-${UUID.randomUUID()}")
-    val f = fs(spark, location)
-    val partCols = spec.fields.map(sf => "_p_" + sf.name)
+    val partCols = spec.fields.map(sf => col("_p_" + sf.name))
     // write.sort-order (setSortOrder): cluster rows so each file covers a
     // TIGHT, near-disjoint range of the sort key — that turns the manifest
     // min/max stats into a real index (a point/range predicate on the sort
@@ -517,71 +513,28 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       case (k, v) if k.startsWith(bloomKey) =>
         s"parquet.bloom.filter.enabled#${sch.fieldByName(k.stripPrefix(bloomKey)).physName}" -> v
     }
-    def writer(d: DataFrame) = writeOpts.foldLeft(d.write)((w, kv) => w.option(kv._1, kv._2))
-    if (spec.fields.isEmpty) {
-      if (sortCols.isEmpty) writer(phys).parquet(stagingDir.toString)
-      else writer(targetFiles.fold(phys.repartitionByRange(sortCols: _*))(
-          n => phys.repartitionByRange(n, sortCols: _*))
-        .sortWithinPartitions(sortCols: _*))
-        .parquet(stagingDir.toString)
-    } else {
-      val withP = spec.fields.foldLeft(phys) { (d, sf) =>
-        d.withColumn("_p_" + sf.name, transformExpr(sf, col(m.schema(schemaId).byId(sf.sourceId).physName)))
-      }
-      // cluster rows by partition value first: without this, every input
-      // partition writes a sliver of every partition value (N_input × N_values
-      // tiny files — metadata and read-path poison at scale); with it, file
-      // count ≈ distinct partition values.
-      val clustered =
-        if (sortCols.isEmpty) withP.repartition(partCols.map(col): _*)
-        else withP.repartition(partCols.map(col): _*)
-          .sortWithinPartitions(partCols.map(col) ++ sortCols: _*)
-      writer(clustered).partitionBy(partCols: _*).parquet(stagingDir.toString)
-    }
-    // enumerate staged parquet files; partition values derive from dir names
-    val it = f.listFiles(stagingDir, true)
-    val staged = scala.collection.mutable.ArrayBuffer[String]()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) staged += st.getPath.toString
-    }
-    // PATH order, not OS listing order: part file names encode the writing
-    // partition (part-00000 < part-00001 …), so sorting makes the file
-    // sequence — and therefore V3 row-id BLOCK assignment (tail order at
-    // commit) — deterministic for a deterministic write. NUMERIC part
-    // index, not lexicographic: past 99,999 parts "part-100000" sorts
-    // before "part-99999" as a string, which would silently reshuffle
-    // block order on a >100k-file single write (100 TB at 1 GB/file).
-    val stagedSorted = staged.sortBy(IceLite.stagedOrderKey)
-    val dataDir = new Path(location, "data")
-    f.mkdirs(dataDir)
-    val stagingPrefix = stagingDir.toString
-    val dataDirStr = dataDir.toString
-    val specId = spec.specId
-    val confBc = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    // IceLite.finalizeStaged is a static helper so the task closure captures
-    // only (strings, ints, SerializableConfiguration) — never `this`, whose
-    // SparkSession doesn't serialize.
-    // adaptive cutoff: a local footer read is ~5–10 ms, a Spark job costs
-    // ~150 ms to schedule — driver-side wins below ~16 files; a 10k-file
-    // commit (the 100 TB case) runs O(files/64) per executor instead of
-    // O(files) serial on the driver
-    val out =
-      if (stagedSorted.size <= 16)
-        stagedSorted.toSeq.map(p =>
-          IceLite.finalizeStaged(confBc.value, stagingPrefix, dataDirStr, schemaId, specId, p))
-      else
-        spark.sparkContext
-          .parallelize(stagedSorted.toSeq, math.min(stagedSorted.size, 64))
-          .map(p =>
-            IceLite.finalizeStaged(confBc.value, stagingPrefix, dataDirStr, schemaId, specId, p))
-          .collect().toSeq
-    f.delete(stagingDir, true)
+    val arranged =
+      if (spec.fields.isEmpty) {
+        if (sortCols.isEmpty) phys
+        else targetFiles.fold(phys.repartitionByRange(sortCols: _*))(
+            n => phys.repartitionByRange(n, sortCols: _*))
+          .sortWithinPartitions(sortCols: _*)
+      } else
+        // cluster rows by partition value first: without this, every input
+        // partition writes a sliver of every partition value (N_input ×
+        // N_values tiny files — metadata and read-path poison at scale);
+        // with it, file count ≈ distinct partition values. The sort groups
+        // each task's rows by tuple, so a task keeps one file open.
+        spec.fields.foldLeft(phys) { (d, sf) =>
+          d.withColumn("_p_" + sf.name, transformExpr(sf, col(sch.byId(sf.sourceId).physName)))
+        }.repartition(partCols: _*).sortWithinPartitions(partCols ++ sortCols: _*)
     // stamp the data sequence from the op's loaded metadata; rebasing
     // commit paths re-stamp from the winner's state (see nextSeq).
     // nextSeq walks the whole manifest log — evaluate once, not per file
     val sq = nextSeq(m)
-    out.filter(_.rows > 0).map(_.copy(seq = sq))
+    TaskWriter.write(arranged, new Path(location, "data").toString,
+      spec.fields.map(_.name), writeOpts)
+      .map(_.dataFile(schemaId, spec.specId).copy(seq = sq))
   }
 
   /** INSERT/append (README.md:1136–1138): new files + add-files snapshot.
@@ -682,48 +635,34 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       BindReferences.bindReference(e: Expression, AttributeSeq(childOut)))
     val physSchema = StructType(sch.fields.map(f =>
       StructField(f.physName, DataType.fromDDL(f.sparkDdl), nullable = true)))
-    IceLite.StreamWritePlan(m.currentSchemaId, spec.specId, physSchema,
-      bound.take(sch.fields.size), bound.drop(sch.fields.size),
-      spec.fields.map(_.name))
+    // rows arrive unclustered: the writer fans out, one open file per
+    // partition tuple the task sees (auto-compaction folds the small
+    // files behind the commit)
+    IceLite.StreamWritePlan(m.currentSchemaId, spec.specId,
+      TaskWriter.layout(spark, new Path(location, "data").toString, physSchema,
+        bound.take(sch.fields.size), bound.drop(sch.fields.size),
+        spec.fields.map(_.name), clustered = false))
   }
 
-  /** Commit one streaming epoch's executor-staged parquet files as an
+  /** Commit the parquet files one streaming epoch's tasks wrote as an
     * append snapshot, exactly once: the epoch ledger (`key` → last
     * committed epoch id) advances INSIDE the same atomic commit, so a
     * Spark-replayed epoch (restart between the table commit and the
     * checkpoint commit) detects the replay and deletes its duplicate
-    * staged files instead of double-appending — [[appendIfNewBatch]]'s
-    * protocol, driven from the DSv2 StreamingWrite commit hook. Footer
-    * stats harvest + rename into data/ reuses the batch writer's
-    * adaptive driver/executor finalize. Returns false on replay. */
+    * files instead of double-appending — [[appendIfNewBatch]]'s
+    * protocol, driven from the DSv2 StreamingWrite commit hook. The tasks
+    * already reported each file's entry; nothing is read or moved here.
+    * Returns false on replay. */
   private[icelite] def commitStreamEpoch(key: String, epochId: Long,
-      stagingPrefix: String, stagedPaths0: Seq[String],
-      schemaId: Int, specId: Int): Boolean = {
+      written: Seq[WrittenFile], schemaId: Int, specId: Int): Boolean = {
     val f = fs(spark, location)
-    val stagedPaths = stagedPaths0.sortBy(IceLite.stagedOrderKey)
+    val files = written.map(_.dataFile(schemaId, specId))
     val m = meta
     if (m.properties.get(key).exists(_.toLong >= epochId)) {
-      stagedPaths.foreach(p => f.delete(new Path(p), false))
+      files.foreach(d => f.delete(new Path(d.path), false))
       return false
     }
-    val dataDir = new Path(location, "data")
-    f.mkdirs(dataDir)
-    val dataDirStr = dataDir.toString
-    val confBc = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val files0 =
-      if (stagedPaths.size <= 16)
-        stagedPaths.map(p =>
-          IceLite.finalizeStaged(confBc.value, stagingPrefix, dataDirStr, schemaId, specId, p))
-      else spark.sparkContext
-        .parallelize(stagedPaths, math.min(stagedPaths.size, 64))
-        .map(p =>
-          IceLite.finalizeStaged(confBc.value, stagingPrefix, dataDirStr, schemaId, specId, p))
-        .collect().toSeq
-    val files = files0.filter(_.rows > 0)
-    if (files.isEmpty) { // empty epoch: no snapshot; a replay is vacuous
-      files0.foreach(d => f.delete(new Path(d.path), false))
-      return true
-    }
+    if (files.isEmpty) return true // empty epoch: no snapshot; a replay is vacuous
     // UPSERT mode (Iceberg's `write.upsert.enabled`): each epoch also
     // writes EQUALITY deletes on the declared key columns, so a key's
     // newer version retires every older row merge-on-read — the
@@ -759,18 +698,13 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         epochKeyRead()
           .select(upsertKeys.map(fl => col(fl.physName).as(fl.name)): _*),
         upsertKeys)
-    def discardAll(): Unit = {
-      files.foreach(d => f.delete(new Path(d.path), false))
-      // eq-delete keys live in their own deletes/eq-<uuid> directory —
-      // drop the whole dir or the abort strands it until the orphan sweep
-      dels.map(d => new Path(d.path).getParent).distinct
-        .foreach(dir => f.delete(dir, true))
-    }
+    def discardAll(): Unit =
+      (files.map(_.path) ++ dels.map(_.path)).foreach(p => f.delete(new Path(p), false))
     // the CDC "at most one row per key per epoch" check, for FREE from
     // counts already in hand: writeEqDeleteFiles writes DISTINCT keys
     // (null-safe, like the groupBy it replaces) and reports their count
     // from its own footer, while the epoch's total rows come from the
-    // staged footers — distinct keys < rows ⟺ some key repeats. The
+    // data files' footers — distinct keys < rows ⟺ some key repeats. The
     // standalone groupBy/count job this replaces was one extra scheduled
     // Spark job per micro-batch, a steady per-epoch tax (guide §1.2
     // step 1; the error contract is unchanged).
@@ -1382,7 +1316,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * removed (resurrection): the delete's positions mask only the OLD
     * copies, never the update's fresh files. Iceberg's MoR update
     * validation (validateNoNewDeleteFiles) aborts for the same reason.
-    * Either conflict aborts and cleans its staging. */
+    * Either conflict aborts and deletes the files it wrote. */
   private def updateMor(m: TableMetadata, cond: Column,
       assignments: Map[String, Column]): Unit = {
     val snap = m.currentSnapshot.getOrElse(return)
@@ -1400,9 +1334,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       // set for rebase validation rides the delete write, no second read
       val obs = org.apache.spark.sql.Observation(s"mor-upd-${UUID.randomUUID()}")
       val pos = pos0.observe(obs, collect_set(col("file_path")).as("touched"))
-      val (out, dels) = writePosDeleteFiles(pos, m)
-      val f = fs(spark, location)
-      if (dels.isEmpty) { f.delete(out, true); return }
+      val dels = writePosDeleteFiles(pos, m)
+      if (dels.isEmpty) return
       // every matched row satisfies cond — apply assignments directly
       val rewritten = matched.select(m.currentSchema.fields.map { fld =>
         assignments.get(fld.name)
@@ -1438,8 +1371,9 @@ class IceLiteTable(val spark: SparkSession, val location: String,
           s"update (mor) ${dels.map(_.rows).sum} positions")
       } catch {
         case e: IceLite.ConcurrentRewriteException =>
-          f.delete(out, true) // stale positions must never commit
-          newFiles.foreach(nf => f.delete(new Path(nf.path), false))
+          // stale positions must never commit
+          val f = fs(spark, location)
+          (dels.map(_.path) ++ newFiles.map(_.path)).foreach(p => f.delete(new Path(p), false))
           throw e
       }
     } finally matched.unpersist()
@@ -1532,8 +1466,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * Globally sorted by (file_path, pos): a scan task resolving its own
     * file's positions (DeleteIndex) prunes to the row groups covering
     * that file via parquet min/max stats, and the loaded runs are sorted.
-    * Returns the staging dir + one manifest entry per non-empty part
-    * (empty when no positions matched — caller cleans the dir).
+    * Returns one manifest entry per written file (none when no positions
+    * matched).
     *
     * `write.delete.vector.enabled=true` switches the carrier to bitmap
     * DELETION VECTORS — the V3 representation the reference describes
@@ -1546,7 +1480,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * extension, so parquet and Puffin deletes coexist in one snapshot and
     * toggling the property migrates a table live. */
   private def writePosDeleteFiles(pos: DataFrame,
-      m: TableMetadata): (Path, Seq[DeleteFile]) =
+      m: TableMetadata): Seq[DeleteFile] =
     if (m.properties.get("write.delete.vector.enabled").contains("true"))
       writeDeleteVectors(pos)
     else
@@ -1565,17 +1499,13 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * `.puffin` container per non-empty task partition. Distributed —
     * positions never collect to the
     * driver; the driver sees only per-file (container, file, count)
-    * summaries, O(touched files) like the parquet listing walk.
+    * summaries, O(touched files).
     * `numParts` pins the container count (the delete-file rewrite's
     * merge target); DML paths default to the session shuffle
     * parallelism. */
   private def writeDeleteVectors(pos: DataFrame,
-      numParts: Option[Int] = None): (Path, Seq[DeleteFile]) = {
-    val delDir = new Path(location, "deletes")
-    fs(spark, location).mkdirs(delDir)
-    val out = new Path(delDir, s"${UUID.randomUUID()}")
-    fs(spark, location).mkdirs(out)
-    val outStr = out.toString
+      numParts: Option[Int] = None): Seq[DeleteFile] = {
+    val outStr = new Path(location, "deletes").toString
     val confB = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
     import spark.implicits._
@@ -1604,64 +1534,25 @@ class IceLiteTable(val spark: SparkSession, val location: String,
           written.iterator.map(bm => (p.toString, bm.refDataFile, bm.cardinality))
         }
       }.collect()
-    val dels = summaries.groupBy(_._1).toSeq.sortBy(_._1).map { case (dvPath, es) =>
+    summaries.groupBy(_._1).toSeq.sortBy(_._1).map { case (dvPath, es) =>
       val paths = es.map(_._2)
-      DeleteFile(dvPath, es.map(_._3).sum, kind = "pos",
+      DeleteFile(IceLite.canonicalPath(dvPath), es.map(_._3).sum, kind = "pos",
         pathLo = Some(paths.min), pathHi = Some(paths.max))
     }
-    (out, dels)
   }
 
-  /** Write an already-arranged (file_path, pos) frame under `deletes/` and
-    * list the produced parquet parts as [[DeleteFile]]s (zero-row parts are
-    * dropped). Callers choose the arrangement: DML paths globally sort so
-    * DeleteIndex's per-data-file predicate prunes to contiguous row groups;
-    * the delete-file rewrite range-partitions itself. */
-  private def writeDeleteParquet(pos: DataFrame): (Path, Seq[DeleteFile]) = {
-    val delDir = new Path(location, "deletes")
-    fs(spark, location).mkdirs(delDir)
-    val out = new Path(delDir, s"${UUID.randomUUID()}")
-    pos.write.parquet(out.toString)
-    val f = fs(spark, location)
-    val it = f.listFiles(out, true)
-    val files = scala.collection.mutable.ArrayBuffer[DeleteFile]()
-    val conf = spark.sessionState.newHadoopConf()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val r = Stats.open(st.getPath, conf)
-        val (n, lo, hi) = try {
-          // harvest the referenced file_path range from the footer the
-          // reader already opened — the delete-manifest pruning summary
-          // rides along for free (the rows are canonical, so planning
-          // compares the bounds against DataFile paths directly)
-          var lo0: Option[String] = None; var hi0: Option[String] = None
-          var ok = true
-          import scala.jdk.CollectionConverters._
-          for (block <- r.getFooter.getBlocks.asScala;
-               c <- block.getColumns.asScala
-               if c.getPath.toDotString == "file_path") {
-            val stt = c.getStatistics
-            if (stt == null || stt.isEmpty || !stt.hasNonNullValue) ok = false
-            else {
-              val mn = stt.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                .toStringUsingUTF8
-              val mx = stt.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                .toStringUsingUTF8
-              lo0 = Some(lo0.fold(mn)(v => if (v <= mn) v else mn))
-              hi0 = Some(hi0.fold(mx)(v => if (v >= mx) v else mx))
-            }
-          }
-          (r.getRecordCount,
-            if (ok) lo0 else None,
-            if (ok) hi0 else None)
-        } finally r.close()
-        if (n > 0)
-          files += DeleteFile(st.getPath.toString, n, pathLo = lo, pathHi = hi)
-      }
-    }
-    (out, files.toSeq)
-  }
+  /** Write an already-arranged (file_path, pos) frame under `deletes/`
+    * through the one [[TaskWriter]]: one file per non-empty task, each
+    * reporting its row count and its `file_path` range, harvested from
+    * the footer it just wrote — the delete-manifest pruning summary (the
+    * rows are canonical, so planning compares the bounds against
+    * DataFile paths directly). Callers choose the arrangement: DML paths
+    * cluster by data file and sort within, so DeleteIndex's per-data-file
+    * predicate prunes to contiguous row groups; the delete-file rewrite
+    * range-partitions itself. */
+  private def writeDeleteParquet(pos: DataFrame): Seq[DeleteFile] =
+    TaskWriter.write(pos, new Path(location, "deletes").toString).map(w =>
+      DeleteFile(w.path, w.rows, pathLo = w.pathBounds.map(_._1), pathHi = w.pathBounds.map(_._2)))
 
   private def deleteMor(m: TableMetadata, cond: Column): Unit = {
     val snap = m.currentSnapshot.getOrElse(return)
@@ -1676,9 +1567,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // fallback if the observation doesn't materialize
     val obs = org.apache.spark.sql.Observation(s"mor-del-${UUID.randomUUID()}")
     val pos = pos0.observe(obs, collect_set(col("file_path")).as("touched"))
-    val (out, files) = writePosDeleteFiles(pos, m)
-    val f = fs(spark, location)
-    if (files.isEmpty) { f.delete(out, true); return }
+    val files = writePosDeleteFiles(pos, m)
+    if (files.isEmpty) return
     // The positions reference specific data files of the scanned snapshot.
     // A rebase is only sound while those files are still live: a concurrent
     // CoW rewrite / compaction / rollback replaces them, and attaching the
@@ -1687,7 +1577,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // touched paths from the write pass's observation (metadata-scale) and
     // verify them inside every retry attempt.
     val touchedPaths = IceLite.observedPaths(obs, "touched")
-      .getOrElse(referencedDataPaths(files.toSeq))
+      .getOrElse(referencedDataPaths(files))
     try commitWithRetry { cur =>
       val cs = cur.currentSnapshot.getOrElse(sys.error("table emptied concurrently"))
       val live = cs.dataFiles.map(_.path).toSet
@@ -1695,11 +1585,13 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         throw new IceLite.ConcurrentRewriteException(
           "merge-on-read delete conflicts with a concurrent rewrite: " +
             "referenced data files were replaced; re-run the delete")
-      (newSnapshotDL(cur, "delete", cs.files, cs.deletes.append(files.toSeq)),
+      (newSnapshotDL(cur, "delete", cs.files, cs.deletes.append(files)),
         s"delete (mor) ${files.map(_.rows).sum} positions")
     } catch {
       case e: IceLite.ConcurrentRewriteException =>
-        f.delete(out, true) // the positions are stale; never commit them
+        // the positions are stale; never commit them
+        val f = fs(spark, location)
+        files.foreach(d => f.delete(new Path(d.path), false))
         throw e
     }
   }
@@ -1755,27 +1647,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     val phys = keys.distinct()
       .select(fields.map(f => convertTo(col(f.name), f,
         scala.util.Try(keys.schema(f.name).dataType).toOption).as(f.physName)): _*)
-    val delDir = new Path(location, "deletes")
-    val f = fs(spark, location)
-    f.mkdirs(delDir)
-    val out = new Path(delDir, s"eq-${UUID.randomUUID()}")
     // key sets are broadcast at read — they are small by contract, and one
     // file keeps the read-side group count at one per delete commit
-    phys.coalesce(1).write.parquet(out.toString)
-    val it = f.listFiles(out, true)
-    val files = scala.collection.mutable.ArrayBuffer[DeleteFile]()
-    val conf = spark.sessionState.newHadoopConf()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val r = Stats.open(st.getPath, conf)
-        val n = try r.getRecordCount finally r.close()
-        if (n > 0)
-          files += DeleteFile(st.getPath.toString, n, "eq", fields.map(_.id))
-      }
-    }
-    if (files.isEmpty) f.delete(out, true)
-    files.toSeq
+    TaskWriter.write(phys.coalesce(1), new Path(location, "deletes").toString)
+      .map(w => DeleteFile(w.path, w.rows, "eq", fields.map(_.id)))
   }
 
   /** Merge-on-read equality DELETE: drop every row whose key columns match
@@ -2508,7 +2383,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         // the rewrite HONORS the table's chosen carrier: a DV-enabled
         // table merges into `target` DV containers, others into the
         // canonical merged parquet
-        val (_, files) =
+        val files =
           try {
             if (m.properties.get("write.delete.vector.enabled").contains("true"))
               writeDeleteVectors(kept, numParts = Some(target))
@@ -2651,8 +2526,8 @@ class IceLiteTable(val spark: SparkSession, val location: String,
 
   /** remove_orphan_files (README.md:1028): FS listing ∖ referenced files,
     * restricted to files OLDER than the grace threshold (default 3 h) — an
-    * in-flight append that has renamed files into data/ but not yet
-    * committed must never be reclaimed (the same guard as Iceberg's
+    * in-flight write whose tasks have written files into data/ but whose
+    * commit has not landed yet must never be reclaimed (the same guard as Iceberg's
     * remove_orphan_files `older_than`). */
   def removeOrphanFiles(
       olderThanMs: Long = System.currentTimeMillis() - IceLite.OrphanGraceMs): Seq[String] = {
@@ -2857,29 +2732,12 @@ object IceLite {
     * the version-file prune's resumable low-water mark. */
   private[icelite] val PruneFloorProp = "metadata.prune-low-water"
 
-  private val PartNumRe = """part-(\d+)""".r
-
-  /** Sort key for staged part files: (parent dir, parsed part number,
-    * file name). Spark part indices are numeric — "part-100000" must
-    * order AFTER "part-99999", which plain string order gets wrong. Files
-    * without a parsable part index sort after all numbered ones, by name. */
-  private[icelite] def stagedOrderKey(p: String): (String, Long, String) = {
-    val slash = p.lastIndexOf('/')
-    val (dir, name) = if (slash >= 0) (p.substring(0, slash), p.substring(slash + 1)) else ("", p)
-    val idx = PartNumRe.findFirstMatchIn(name).map(_.group(1).toLong).getOrElse(Long.MaxValue)
-    (dir, idx, name)
-  }
-
-  /** Everything the DSv2 streaming sink's executor writers need, planned
-    * once on the driver ([[IceLiteTable.planStreamingWrite]]): bound,
-    * SparkSession-free Catalyst expressions from the input row to the
-    * physical storage columns (`physExprs`, in `physSchema` order) and to
-    * the partition-value strings (`partExprs`, named `partNames`). */
-  final case class StreamWritePlan(
-      schemaId: Int, specId: Int, physSchema: StructType,
-      physExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      partExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      partNames: Seq[String])
+  /** What the DSv2 streaming sink's tasks need, planned once on the
+    * driver ([[IceLiteTable.planStreamingWrite]]): the pinned schema and
+    * spec ids the epoch's entries carry, and the [[TaskWriter]] layout
+    * whose bound, SparkSession-free expressions map an input row to the
+    * physical storage columns and the partition-value strings. */
+  final case class StreamWritePlan(schemaId: Int, specId: Int, layout: WriteLayout)
 
   /** Is this position-delete file a Puffin deletion-vector container
     * (otherwise it is parquet)? A `.ildv` container, the RLE carrier
@@ -2894,7 +2752,7 @@ object IceLite {
   }
 
   /** Spec-field name for a (source, transform) pair. The name reaches
-    * partition DIRECTORY names and from there flattened data-FILE names;
+    * the partition DIRECTORY names of the Iceberg export's data files;
     * Spark %-escapes partition VALUES but not keys, so glob
     * metacharacters in a transform spelling (bucket[4] → "[4]") would
     * poison every later spark.read of the written files — sanitize the
@@ -2954,45 +2812,6 @@ object IceLite {
   /** Thrown inside the retry loop when another writer already committed the
     * same streaming batch — the append aborts without a commit. */
   private[icelite] final class BatchReplayedException(msg: String) extends RuntimeException(msg)
-
-  /** Finalize one staged parquet file (executor-side): harvest footer
-    * row-count + column stats, rename into data/, return the manifest
-    * entry. Static so RDD closures capture no table/session state.
-    *
-    * IDEMPOTENT under task retry/speculation: the destination name is a
-    * deterministic function of the staged path (Spark part-file names are
-    * already unique per write job), so a re-run whose first attempt already
-    * renamed the file finds source-gone + dest-present and harvests the
-    * footer from the destination instead of failing — on a real cluster a
-    * routine executor loss must not fail a 10k-file commit. */
-  private[icelite] def finalizeStaged(
-      conf: org.apache.hadoop.conf.Configuration, stagingPrefix: String,
-      dataDir: String, schemaId: Int, specId: Int, pStr: String): DataFile = {
-    val p = new Path(pStr)
-    // a listed staged file is qualified (file:/x) while a constructed
-    // staging dir may be scheme-less (/x): strip on both canonical forms
-    val rel = canonicalPath(pStr).stripPrefix(canonicalPath(stagingPrefix)).stripPrefix("/")
-    // partition dir names carry Spark's path-name escaping (`:` → %3A)
-    val partVals = rel.split("/").dropRight(1).filter(_.contains("=")).map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      k.stripPrefix("_p_") -> org.apache.spark.sql.graft.SparkShims.unescapePathName(v)
-    }.toMap
-    // flatten "part=value/" dirs into the name: deterministic AND unique
-    // within the write (same part-file basename appears under many dirs)
-    val dest = new Path(dataDir, rel.split('/').mkString("_"))
-    val lfs = p.getFileSystem(conf)
-    val src = if (lfs.exists(p)) p
-      else if (lfs.exists(dest)) dest // prior attempt finished the rename
-      else sys.error(s"staged file $p vanished and $dest does not exist")
-    val reader = Stats.open(src, conf)
-    val (rows, stats) =
-      try (reader.getRecordCount, Stats.fromFooter(reader)) finally reader.close()
-    if (src != dest && !lfs.rename(p, dest)) {
-      // lost a rename race with a speculative twin — fine iff the twin won
-      if (!lfs.exists(dest)) sys.error(s"rename $p -> $dest failed")
-    }
-    DataFile(canonicalPath(dest.toString), rows, schemaId, specId, partVals, stats)
-  }
 
   private[icelite] def fs(spark: SparkSession, location: String): FileSystem = {
     val f = new Path(location).getFileSystem(spark.sessionState.newHadoopConf())

@@ -36,8 +36,8 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     * syscall: the stock statuses load them LAZILY by forking `ls -ld`
     * per file (DeprecatedRawLocalFileStatus.loadPermissionInfo), and
     * anything that builds LocatedFileStatus — FileSystem.listFiles,
-    * Spark's InMemoryFileIndex and committers — forces that load, so an
-    * 81-file staged write paid 81 forks inside one driver gap. A file
+    * Spark's InMemoryFileIndex and committers — forces that load, so
+    * listing 81 files paid 81 forks inside one driver gap. A file
     * racing deletion between the two reads keeps the stock lazy status. */
   private def filled(st: org.apache.hadoop.fs.FileStatus): org.apache.hadoop.fs.FileStatus = {
     val f = nioPath(st.getPath)
@@ -63,6 +63,20 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
             s"sun.jnu.encoding=${System.getProperty("sun.jnu.encoding")}; " +
             "start the JVM under a UTF-8 locale (e.g. LC_ALL=C.UTF-8)", e)
     }
+
+  // the name is checked before the disk is touched: java.io.File would
+  // otherwise create it with each unrepresentable character replaced by
+  // `?` and only the permission step after it would fail
+  override def mkdirs(p: Path): Boolean = { nioPath(p); super.mkdirs(p) }
+
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
+    nioPath(p); super.mkdirs(p, permission)
+  }
+
+  override protected def createOutputStreamWithMode(p: Path, append: Boolean,
+      permission: FsPermission): java.io.OutputStream = {
+    nioPath(p); super.createOutputStreamWithMode(p, append, permission)
+  }
 
   override def getFileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
     filled(super.getFileStatus(p))

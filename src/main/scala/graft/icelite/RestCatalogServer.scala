@@ -385,33 +385,21 @@ class RestCatalogServer(spark: SparkSession, warehouse: String) {
 }
 
 object RestCatalogServer {
-  /** Is `ml` a path STRICTLY under `warehouse`? Normalizes through
-    * java.nio (URI.getPath preserves `..` segments, so a prefix check
-    * alone is traversal-bypassable) and compares scheme+authority too —
-    * a different host/bucket with a matching path must not pass.
-    *
-    * Each side becomes (scheme, authority, normalized path) — URI-parsed
-    * when legal, raw filesystem path otherwise (paths with spaces are
-    * URI-illegal but filesystem-legal; they must still commit).
-    * Unparseable under both readings → not confined. */
+  /** Is `ml` a path STRICTLY under `warehouse`? Both sides are read by
+    * the one path rule, [[IceLite.canonicalPath]], and their paths
+    * normalized through java.nio (a `..` at the root survives the Hadoop
+    * parse, so a prefix check alone is traversal-bypassable); scheme and
+    * authority are compared too — a different host/bucket with a
+    * matching path must not pass. A trailing `/` names the same path and
+    * gives a scheme-only warehouse (`s3://bucket`) its root. A string
+    * that has no canonical form → not confined. */
   private[icelite] def confinedUnder(warehouse: String, ml: String): Boolean = {
     def parts(s: String): Option[(String, String, java.nio.file.Path)] =
-      (try {
-        val u = new java.net.URI(s)
-        val rawPath = Option(u.getPath).getOrElse("")
-        // a warehouse like "s3://bucket" parses with an EMPTY path —
-        // keep the scheme/authority and treat the path as the root,
-        // rather than discarding the parse and mislabeling it as a
-        // local filesystem path (which would reject every staged
-        // commit under it: scheme/authority could never match)
-        if (u.getScheme == null && rawPath.isEmpty) None
-        else Some((Option(u.getScheme).getOrElse("file"),
-          Option(u.getAuthority).getOrElse(""),
-          java.nio.file.Paths.get(if (rawPath.isEmpty) "/" else rawPath).normalize()))
-      } catch { case _: java.net.URISyntaxException => None })
-        .orElse(
-          try Some(("file", "", java.nio.file.Paths.get(s).normalize()))
-          catch { case _: java.nio.file.InvalidPathException => None })
+      try {
+        val u = new org.apache.hadoop.fs.Path(IceLite.canonicalPath(s + "/")).toUri
+        Some((u.getScheme, Option(u.getAuthority).getOrElse(""),
+          java.nio.file.Paths.get(u.getPath).normalize()))
+      } catch { case _: IllegalArgumentException => None } // InvalidPathException is one
     (parts(warehouse), parts(ml)) match {
       case (Some((rs, ra, rp)), Some((ms, ma, mp))) =>
         rs == ms && ra == ma && mp.startsWith(rp) && mp != rp

@@ -65,6 +65,23 @@ object Stats {
     }.toMap
   }
 
+  /** Untruncated (min, max) of a string column across an open footer's
+    * row groups; None when the file has no such column or a row group
+    * carries no bounds for it. Position-delete files record their
+    * `file_path` range this way, for delete-manifest pruning. */
+  def stringBounds(reader: ParquetFileReader, column: String): Option[(String, String)] = {
+    val chunks = reader.getFooter.getBlocks.asScala.toSeq
+      .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == column))
+    val bounds = chunks.map { c =>
+      val st = c.getStatistics
+      if (st == null || st.isEmpty || !st.hasNonNullValue) None
+      else Some((st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+        st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
+    }
+    if (bounds.isEmpty || bounds.exists(_.isEmpty)) None
+    else Some((bounds.flatten.map(_._1).min, bounds.flatten.map(_._2).max))
+  }
+
   /** Iceberg-style bound truncation for STRING stats (write.metadata
     * .metrics truncate(16)): long text columns must not put full document
     * prefixes into every manifest entry and chunk summary — on a 100 TB

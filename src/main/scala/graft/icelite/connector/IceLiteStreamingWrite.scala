@@ -1,34 +1,22 @@
 package graft.icelite.connector
 
-import java.util.UUID
-
-import graft.icelite.{IceLite, IceLiteTable}
-import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import graft.icelite.{IceLite, IceLiteTable, TaskWriter, WriteLayout, WrittenFiles}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
-
-/** One task's staged files for one epoch. */
-private[connector] case class IceLiteStreamCommitMessage(paths: Seq[String])
-  extends WriterCommitMessage
 
 /** Structured-Streaming SINK over an IceLite table — the write-side
   * closure of the DSv2 loop ([[IceLiteMicroBatchStream]] is the read
   * side): `df.writeStream.toTable("icelite.db.t")`, no foreachBatch.
   *
-  * Executors write parquet directly into the table's staging area
-  * through Spark's own parquet write path (same codec/config as a batch
-  * write), FANNING OUT per partition value — the Iceberg streaming
-  * writer's shape, so a partitioned table ingests without a per-batch
-  * shuffle. The driver's per-epoch `commit` finalizes the staged files
-  * (executor-parallel footer-stats harvest, same as the batch path) and
+  * Executors write parquet straight into the table's data/ through
+  * IceLite's one writer ([[TaskWriter]], the batch path's writer too),
+  * FANNING OUT per partition value — the Iceberg streaming writer's
+  * shape, so a partitioned table ingests without a per-batch shuffle.
+  * Each task reports its files' manifest entries (rows, partition tuple,
+  * footer stats) in its commit message. The driver's per-epoch `commit`
   * appends them in ONE atomic table commit that also advances the
   * per-query epoch ledger — a Spark-replayed epoch (restart between the
   * table commit and the checkpoint commit) detects the replay and
@@ -36,12 +24,12 @@ private[connector] case class IceLiteStreamCommitMessage(paths: Seq[String])
   * exactly-once end to end.
   *
   * Scale shape: no driver data movement at any point — rows flow
-  * task→parquet, the driver touches only file paths and footer stats
-  * (KBs per epoch). Auto-maintenance (small-file compaction) runs after
-  * each commit, which is exactly the workload compaction exists for.
-  * Column alignment, write-defaults and partition transforms are planned
-  * ONCE as bound Catalyst expressions ([[IceLiteTable.planStreamingWrite]])
-  * — the hot path is two UnsafeProjections per row.
+  * task→parquet, the driver touches only the reported entries (KBs per
+  * epoch). Auto-maintenance (small-file compaction) runs after each
+  * commit, which is exactly the workload compaction exists for. Column
+  * alignment, write-defaults and partition transforms are planned ONCE
+  * as bound Catalyst expressions ([[IceLiteTable.planStreamingWrite]]) —
+  * the hot path is two UnsafeProjections per row.
   *
   * Reference: /root/reference/README.md:1136–1150 (streaming upsert into
   * the lakehouse table; this is that loop as a first-class DSv2 sink). */
@@ -58,100 +46,34 @@ class IceLiteStreamingWrite(
     * ledger and a restart keeps replay protection. */
   private val epochKey = s"streaming.sink.$queryId.last-epoch"
 
-  // one staging dir per query run; epoch ids inside file names keep
-  // concurrent-epoch files distinct
-  private val stagingDir = s"$location/staging-stream-${UUID.randomUUID()}"
-
   // pinned at query start (see planStreamingWrite scaladoc)
   private val plan = table.planStreamingWrite(inputSchema)
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val (owf, conf) = SparkShims.parquetWriterFactory(spark, plan.physSchema)
-    IceLiteStreamWriterFactory(stagingDir, plan.physSchema,
-      plan.physExprs, plan.partExprs, plan.partNames, owf, conf)
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    IceLiteStreamWriterFactory(plan.layout)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.toSeq
-      .collect { case m: IceLiteStreamCommitMessage => m.paths }.flatten
-    table.commitStreamEpoch(epochKey, epochId, stagingDir, staged,
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    table.commitStreamEpoch(epochKey, epochId, written(messages),
       plan.schemaId, plan.specId)
-  }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val f = IceLite.fs(spark, location)
-    messages.collect { case m: IceLiteStreamCommitMessage => m.paths }
-      .flatten.foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), false))
+    written(messages).foreach(w => f.delete(new org.apache.hadoop.fs.Path(w.path), false))
   }
+
+  /** The epoch's files, in task order. */
+  private def written(messages: Array[WriterCommitMessage]) =
+    messages.toSeq.collect { case m: WrittenFiles => m.files }.flatten
 }
 
-/** Serializable factory: everything executor-side is (bound expressions,
-  * an OutputWriterFactory, a conf) — no SparkSession, no table handle. */
-private[connector] case class IceLiteStreamWriterFactory(
-    stagingDir: String,
-    physSchema: StructType,
-    physExprs: Seq[Expression],
-    partExprs: Seq[Expression],
-    partNames: Seq[String],
-    owf: OutputWriterFactory,
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
+/** Serializable factory: everything executor-side is the writer layout
+  * (bound expressions, an OutputWriterFactory, a conf) — no
+  * SparkSession, no table handle. */
+private[connector] case class IceLiteStreamWriterFactory(layout: WriteLayout)
+    extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new IceLiteFanoutWriter(this, partitionId, taskId, epochId)
-}
-
-/** Fanout writer: one open parquet file per partition value seen by this
-  * task this epoch (unpartitioned tables: exactly one). Rows arrive
-  * unclustered — the fanout bounds file count at
-  * (tasks × distinct partition values), and auto-compaction folds the
-  * small files behind the commit. */
-private[connector] class IceLiteFanoutWriter(
-    f: IceLiteStreamWriterFactory, partitionId: Int, taskId: Long,
-    epochId: Long) extends DataWriter[InternalRow] {
-
-  private val physProj = UnsafeProjection.create(f.physExprs)
-  private val partProj = UnsafeProjection.create(f.partExprs)
-  private val writers =
-    scala.collection.mutable.LinkedHashMap[String, (String, org.apache.spark.sql.execution.datasources.OutputWriter)]()
-  private val ctx = new TaskAttemptContextImpl(f.conf.value,
-    new TaskAttemptID("icelite-stream", epochId.toInt, TaskType.MAP,
-      partitionId, taskId.toInt))
-
-  private def writerFor(relDir: String) = writers.getOrElseUpdate(relDir, {
-    val dir = if (relDir.isEmpty) f.stagingDir else s"${f.stagingDir}/$relDir"
-    val path = f"$dir/part-$partitionId%05d-e$epochId-t$taskId-${UUID.randomUUID()}.parquet"
-    (path, f.owf.newInstance(path, f.physSchema, ctx))
-  })._2
-
-  override def write(row: InternalRow): Unit = {
-    val relDir =
-      if (f.partNames.isEmpty) ""
-      else {
-        val pv = partProj(row)
-        f.partNames.indices.map { i =>
-          val v = if (pv.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
-            else SparkShims.escapePathName(pv.getUTF8String(i).toString)
-          s"_p_${f.partNames(i)}=$v"
-        }.mkString("/")
-      }
-    writerFor(relDir).write(physProj(row))
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_._2.close())
-    IceLiteStreamCommitMessage(writers.values.map(_._1).toSeq)
-  }
-
-  override def abort(): Unit = {
-    writers.values.foreach { case (path, w) =>
-      try w.close() catch { case _: Exception => () }
-      val p = new org.apache.hadoop.fs.Path(path)
-      try p.getFileSystem(f.conf.value).delete(p, false)
-      catch { case _: Exception => () }
-    }
-  }
-
-  override def close(): Unit = ()
+    new TaskWriter(layout, partitionId, taskId)
 }

@@ -104,33 +104,48 @@ object SparkShims {
   }
 
   /** A SERIALIZABLE parquet writer factory over Spark's own parquet
-    * write path (same codec/committer config a batch `df.write.parquet`
-    * gets): build once on the driver, ship to executors, open per-file
-    * writers with `newInstance(path, schema, taskAttemptContext)` against
-    * the returned job configuration — the DSv2 streaming sink's fanout
-    * writers are built on this instead of hand-rolling a parquet encoder.
-    * The config is returned alongside because `prepareWrite` records the
-    * write support + compression INTO it; a fresh conf would miss them. */
+    * write path (the codec and settings a batch `df.write.parquet` gets,
+    * writer `options` applied as `df.write.option` applies them): build
+    * once on the driver, ship to executors, open per-file writers with
+    * `newInstance(path, schema, taskAttemptContext)` against the returned
+    * job configuration — IceLite's [[graft.icelite.TaskWriter]] is built
+    * on this instead of hand-rolling a parquet encoder. The config is
+    * returned alongside because `prepareWrite` records the write support +
+    * compression INTO it; a fresh conf would miss them. */
   def parquetWriterFactory(spark: SparkSession,
-      dataSchema: org.apache.spark.sql.types.StructType)
+      dataSchema: org.apache.spark.sql.types.StructType,
+      options: Map[String, String] = Map.empty)
       : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
          org.apache.spark.util.SerializableConfiguration) = {
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConf())
+      spark.sessionState.newHadoopConfWithOptions(options))
     val fmt = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val factory = fmt.prepareWrite(
-      spark.asInstanceOf[ClassicSparkSession], job, Map.empty, dataSchema)
+      spark.asInstanceOf[ClassicSparkSession], job, options, dataSchema)
     (factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
   }
 
-  /** Hive-style partition-value escaping (`ExternalCatalogUtils` is
-    * `private[sql]`): the streaming sink renders partition dirs with the
-    * SAME spelling `partitionBy` uses on the batch path, so pruning
-    * compares one set of strings, and `unescapePathName` reads a staged
-    * dir name back into the value. */
-  def escapePathName(v: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
+  /** Run `body` over `df`'s internal rows as one tracked SQL execution,
+    * as a Dataset action runs: execution listeners fire at its end, so an
+    * `Observation` on `df` completes (a bare `toRdd` job never would). */
+  def withExecution[T](df: DataFrame, name: String)(
+      body: org.apache.spark.rdd.RDD[InternalRow] => T): T = {
+    val qe = df.asInstanceOf[ClassicDataset[Row]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
+  }
 
+  /** Add written bytes and records to the running task's output metrics
+    * (the `OutputMetrics` setters are `private[spark]`). */
+  def addTaskOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { c =>
+      val m = c.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
+
+  /** Undo Hive-style partition-value escaping (`ExternalCatalogUtils` is
+    * `private[sql]`): the Iceberg export reads partition values back from
+    * the directory names its `partitionBy` write laid down. */
   def unescapePathName(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
 }

@@ -2,14 +2,11 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Date
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types._
 
 import graft.icelite.{IceLite, IceLiteTable}
@@ -56,18 +53,6 @@ class MergePlanSpec extends SparkSpec {
   private def sqlMerge(table: String, view: String): Unit =
     spark.sql(s"""MERGE INTO $table t USING $view s ON t.o_orderkey = s.o_orderkey
                   WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
-
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    SparkShims.waitForListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; SparkShims.waitForListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   private def lastNote(t: IceLiteTable): String = t.meta.metadataLog.last.note
 

@@ -32,7 +32,10 @@ object RamFs {
   val dirs: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
   dirs.add("/")
 
-  def clear(): Unit = { files.clear(); dirs.clear(); dirs.add("/"); () }
+  /** Every rename, as `source -> destination` keys, in call order. */
+  val renames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def clear(): Unit = { files.clear(); dirs.clear(); dirs.add("/"); renames.clear(); () }
 
   /** Register the scheme on a Hadoop conf (idempotent). */
   def install(conf: Configuration): Unit = {
@@ -144,6 +147,7 @@ final class RamFileSystem extends FileSystem {
   override def rename(src: Path, dst: Path): Boolean = {
     val ks = key(src)
     var kd = key(dst)
+    RamFs.renames.add(s"$ks -> $kd")
     if (ks == kd) return RamFs.files.containsKey(ks) || RamFs.dirs.contains(ks)
     if (RamFs.dirs.contains(kd)) kd = kd + "/" + src.getName // move INTO dir
     if (RamFs.files.containsKey(ks)) {

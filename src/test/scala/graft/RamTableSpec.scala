@@ -101,4 +101,45 @@ class RamTableSpec extends SparkSpec {
     val ml = meta.snapshots.last.manifestList.get
     assert(ml.startsWith("ram://") && RamFs.files.containsKey(new java.net.URI(ml).getPath))
   }
+
+  test("no write renames a file under data/ or deletes/: append, MoR DML, deleteEq, compact, a sink epoch") {
+    import spark.implicits._
+    ram()
+    val wh = s"ram://wr/${java.util.UUID.randomUUID()}"
+    spark.conf.set("spark.sql.catalog.ram_wr", "graft.icelite.connector.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.ram_wr.warehouse", wh)
+    val t = new Catalog(spark, wh).createTable("db", "t",
+      Seq("id" -> "BIGINT", "v" -> "BIGINT"),
+      properties = Map(
+        "write.delete.mode" -> "merge-on-read",
+        "write.update.mode" -> "merge-on-read"))
+    val tablePath = new java.net.URI(t.location).getPath
+    def planeRenames(): Seq[String] =
+      scala.jdk.CollectionConverters.CollectionHasAsScala(RamFs.renames).asScala.toSeq
+        .filter(r => r.contains(s"$tablePath/data/") || r.contains(s"$tablePath/deletes/"))
+    val before = RamFs.renames.size
+
+    t.append((0L until 100L).map(i => (i, i)).toDF("id", "v").repartition(4))
+    t.delete(col("id") < 5)
+    t.update(col("id") === 10, Map("v" -> lit(-1L)))
+    t.deleteEq(Seq(20L).toDF("id"))
+    t.compact(target = 1)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
+    val q = mem.toDF().toDF("id", "v").writeStream
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ram_wr_ckpt").toString)
+      .toTable("ram_wr.db.t")
+    try {
+      mem.addData((1000L, 1L), (1001L, 2L))
+      q.processAllAvailable()
+    } finally q.stop()
+
+    val back = IceLite.load(spark, t.location).read().select("id", "v").as[(Long, Long)]
+      .collect().toMap
+    assert(back.size == 95 - 1 + 2 && back(10L) == -1L && !back.contains(20L) &&
+      back(1001L) == 2L)
+    assert(RamFs.renames.size > before, "the commit plane's renames must be counted")
+    assert(planeRenames().isEmpty, s"data-plane renames: ${planeRenames()}")
+  }
 }

@@ -22,6 +22,20 @@ trait SparkSpec extends AnyFunSuite {
     try (driver, body("distributed"))
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** Spark jobs `body` starts, counted once the listener bus drains. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.SparkShims.waitForListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.sql.graft.SparkShims.waitForListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
 }
 
 object SparkSpec {

@@ -2,46 +2,11 @@ package graft.icelite
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pure-function internals that guard at-scale and security invariants:
-  * staged part-file ordering (V3 row-id block determinism past 99,999
-  * parts) and REST metadata-location confinement (scheme-only warehouse
-  * shapes, traversal). No SparkSession needed.
+/** Pure-function internals that guard security invariants: REST
+  * metadata-location confinement (scheme-only warehouse shapes,
+  * traversal, non-ASCII names). No SparkSession needed.
   */
 class InternalsSpec extends AnyFunSuite {
-
-  test("stagedOrderKey orders part files numerically past 99,999") {
-    // lexicographic order would put part-100000 BEFORE part-99999,
-    // silently reshuffling V3 row-id block assignment on a >100k-file
-    // single write
-    val names = Seq(
-      "/wh/t/.staging/part-100000-uuid-c000.snappy.parquet",
-      "/wh/t/.staging/part-00001-uuid-c000.snappy.parquet",
-      "/wh/t/.staging/part-99999-uuid-c000.snappy.parquet",
-      "/wh/t/.staging/part-00000-uuid-c000.snappy.parquet")
-    val sorted = names.sortBy(IceLite.stagedOrderKey)
-    assert(sorted.map(_.split("part-")(1).takeWhile(_.isDigit).toLong) ==
-      Seq(0L, 1L, 99999L, 100000L))
-    // sanity: the lexicographic sort really is wrong here (the guard is
-    // not vacuous)
-    assert(names.sorted.map(_.split("part-")(1).takeWhile(_.isDigit).toLong) !=
-      Seq(0L, 1L, 99999L, 100000L))
-  }
-
-  test("stagedOrderKey groups by partition dir first, index second") {
-    val names = Seq(
-      "/wh/t/.staging/p=b/part-00000-x.parquet",
-      "/wh/t/.staging/p=a/part-00001-x.parquet",
-      "/wh/t/.staging/p=a/part-00000-x.parquet")
-    assert(names.sortBy(IceLite.stagedOrderKey) == Seq(
-      "/wh/t/.staging/p=a/part-00000-x.parquet",
-      "/wh/t/.staging/p=a/part-00001-x.parquet",
-      "/wh/t/.staging/p=b/part-00000-x.parquet"))
-    // a file without a parsable part index sorts after numbered ones in
-    // its directory — deterministically, by name
-    val mixed = Seq("/d/zz.parquet", "/d/part-00002-x.parquet")
-    assert(mixed.sortBy(IceLite.stagedOrderKey) ==
-      Seq("/d/part-00002-x.parquet", "/d/zz.parquet"))
-  }
 
   test("confinement accepts a scheme-only warehouse (s3://bucket) and keeps blocking traversal") {
     val ok = RestCatalogServer.confinedUnder _
@@ -62,5 +27,16 @@ class InternalsSpec extends AnyFunSuite {
     // URI-illegal but filesystem-legal (spaces) still commits
     assert(ok("/wh with space", "/wh with space/db/t/metadata/v1.metadata.json"))
     assert(!ok("/wh with space", "/wh with space/../etc/passwd"))
+  }
+
+  test("confinement reads a warehouse whose path has a space and a non-ASCII name") {
+    val ok = RestCatalogServer.confinedUnder _
+    val wh = "/tmp/a table \u00e9/wh"
+    assert(ok(wh, s"$wh/db/t/metadata/v1.metadata.json"))
+    assert(ok(s"file:$wh", s"$wh/db/t/metadata/v1.metadata.json"),
+      "a qualified and a plain spelling of one local path are one path")
+    assert(!ok(wh, s"$wh/../etc/passwd"))
+    assert(!ok(wh, "/tmp/a table e/wh/db/t/metadata/v1.metadata.json"))
+    assert(!ok(wh, wh))
   }
 }
