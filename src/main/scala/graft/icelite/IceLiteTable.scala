@@ -775,13 +775,10 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       true
     } catch {
       case _: IceLite.BatchReplayedException =>
+        // this batch's files only, one by one: they sit beside the
+        // table's committed files in data/ and deletes/
         val f = fs(spark, location)
-        files.foreach(df0 => f.delete(new Path(df0.path), false))
-        // eq-delete keys live in their own deletes/eq-<uuid> directory
-        // (with a _SUCCESS marker): drop the whole directory, not just the
-        // parquet part, or the abort strands it until the orphan sweep
-        dels.map(d => new Path(d.path).getParent).distinct
-          .foreach(dir => f.delete(dir, true))
+        (files.map(_.path) ++ dels.map(_.path)).foreach(p => f.delete(new Path(p), false))
         false
     }
   }
@@ -2528,7 +2525,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     * restricted to files OLDER than the grace threshold (default 3 h) — an
     * in-flight write whose tasks have written files into data/ but whose
     * commit has not landed yet must never be reclaimed (the same guard as Iceberg's
-    * remove_orphan_files `older_than`). */
+    * remove_orphan_files `older_than`). That holds only while the write,
+    * from its first task to its commit, is shorter than the grace period:
+    * a threshold later than a running write's start (a write longer than
+    * the default, or an explicit near-now threshold) can delete files
+    * that write then commits, leaving the commit with missing files. */
   def removeOrphanFiles(
       olderThanMs: Long = System.currentTimeMillis() - IceLite.OrphanGraceMs): Seq[String] = {
     val m = meta

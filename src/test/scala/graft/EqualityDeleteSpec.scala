@@ -1,10 +1,23 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+import scala.concurrent.ExecutionContext.Implicits.global
 
 import graft.icelite.{IceLite, MetaJson}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+/** Gate shared between EqualityDeleteSpec and a batch's value UDF (same
+  * JVM in local mode): holds an upsert between its batch-id check and its
+  * commit until a racing committer has claimed the same batch id. */
+object EqUpsertRaceGate {
+  @volatile var entered: CountDownLatch = _
+  @volatile var go: CountDownLatch = _
+}
 
 /** Equality-delete (Iceberg v2 `kind="eq"`) semantics: sequence-number
   * scoping, re-insert survival, one-commit upserts, interaction with
@@ -20,6 +33,8 @@ class EqualityDeleteSpec extends SparkSpec {
     spark.range(from, to).toDF("id")
       .withColumn("grp", (col("id") % 5).cast("int"))
       .withColumn("amount", (col("id") * 7 % 100).cast("double"))
+
+  private def localFile(p: String) = new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath)
 
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).sorted.toSeq
@@ -236,5 +251,49 @@ class EqualityDeleteSpec extends SparkSpec {
     assert(t.read().count() == 60)
     t.compact(2)
     assert(t.read().count() == 60)
+  }
+
+  test("an eq upsert batch that loses its batch id to a racer drops only its own files") {
+    val loc = scratch("eqrace")
+    val seed = IceLite.createFrom(spark, loc, sample(0, 10))
+    seed.append(sample(0, 10))
+    // batch 0 commits an eq-delete file the lost batch must leave alone
+    assert(seed.upsertEqIfNewBatch(0L, Seq((1L, 1, 11.0)).toDF("id", "grp", "amount"), Seq("id")))
+    val committed = seed.meta.currentSnapshot.get
+    val before = seed.read().orderBy("id").collect().toSeq
+    assert(committed.deleteFiles.nonEmpty)
+    EqUpsertRaceGate.entered = new CountDownLatch(1)
+    EqUpsertRaceGate.go = new CountDownLatch(1)
+    val gated = udf { (v: Double) =>
+      EqUpsertRaceGate.entered.countDown()
+      EqUpsertRaceGate.go.await(60, TimeUnit.SECONDS)
+      v
+    }
+    val batch = Seq((2L, 2, 22.0)).toDF("id", "grp", "amount")
+      .withColumn("amount", gated(col("amount")))
+    val racer = Future(seed.upsertEqIfNewBatch(1L, batch, Seq("id")))
+    try {
+      assert(EqUpsertRaceGate.entered.await(60, TimeUnit.SECONDS), "batch never ran")
+      // the racer: another handle lands batch 1 after the check passed
+      IceLite.load(spark, loc)
+        .setProperties(Map("streaming.last-committed-batch-id" -> "1"))
+    } finally EqUpsertRaceGate.go.countDown()
+    assert(!Await.result(racer, 2.minutes), "the lost batch must report a replay")
+    val now = seed.meta.currentSnapshot.get
+    assert(now.dataFiles.map(_.path).toSet == committed.dataFiles.map(_.path).toSet)
+    assert(now.deleteFiles.map(_.path).toSet == committed.deleteFiles.map(_.path).toSet)
+    (now.dataFiles.map(_.path) ++ now.deleteFiles.map(_.path)).foreach { p =>
+      assert(localFile(p).exists(), s"committed file $p was removed")
+    }
+    assert(seed.read().orderBy("id").collect().toSeq == before,
+      "rows deleted by batch 0 came back")
+    // and the lost batch left nothing behind
+    val onDisk = Seq("data", "deletes").flatMap { d =>
+      Option(new java.io.File(loc, d).listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.getCanonicalPath)
+    }.toSet
+    val referenced = (now.dataFiles.map(_.path) ++ now.deleteFiles.map(_.path))
+      .map(localFile(_).getCanonicalPath).toSet
+    assert(onDisk == referenced, s"stray files: ${onDisk -- referenced}")
   }
 }
