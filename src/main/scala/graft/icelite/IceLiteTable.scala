@@ -871,10 +871,11 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // CHUNKS are discarded against their partition/stat summaries first
     // (skipped chunks are never parsed — candidates()), then the surviving
     // chunks' entries are pruned file-by-file on partition values +
-    // per-file column stats
-    val files = snap.files.candidates(m, prune, statFilters).filter(df =>
+    // per-file column stats. Filters name columns of `proj`, so a
+    // time-travel filter resolves through the snapshot's own schema
+    val files = snap.files.candidates(proj, prune, statFilters).filter(df =>
       prune(df.partition) && statFilters.forall(flt =>
-        Stats.mayContain(df, m.schema(df.schemaId), m.currentSchema, flt)))
+        Stats.mayContain(df, m.schema(df.schemaId), proj, flt)))
     maxPlannedFiles.updateAndGet(prev => math.max(prev, files.size))
     if (files.isEmpty) {
       val empty = StructType(proj.fields.map(f =>
@@ -1086,15 +1087,23 @@ class IceLiteTable(val spark: SparkSession, val location: String,
 
   /** [[readAsOf]] against a caller-pinned metadata — see [[readAt]]. */
   private[icelite] def readAsOfAt(m: TableMetadata, snapshotId: Long): DataFrame =
-    scanSnapshot(m, m.snapshot(snapshotId), lineage = false, _ => true,
-      snapshotSchema = true)
+    readSnapshotAt(m, Some(m.snapshot(snapshotId)))
 
   /** Time travel: TIMESTAMP AS OF (README.md:1010) — latest snapshot ≤ ts. */
   def readAsOfTimestamp(ms: Long): DataFrame = {
     val m = meta
-    val snap = m.snapshots.filter(_.timestampMs <= ms).maxByOption(_.id)
-      .getOrElse(sys.error(s"no snapshot at or before $ms"))
-    scanSnapshot(m, snap, lineage = false, _ => true, snapshotSchema = true)
+    readSnapshotAt(m, Some(m.snapshotAt(ms)))
+  }
+
+  /** One snapshot of a caller-pinned metadata, manifest-pruned by
+    * `statFilters`: the current snapshot (`asOf = None`) through the
+    * current schema, or a time-travel snapshot through its own schema.
+    * The SQL scan ([[connector.IceLiteScan]]) reads through here. */
+  private[icelite] def readSnapshotAt(m: TableMetadata, asOf: Option[Snapshot],
+      statFilters: Seq[Stats.StatFilter] = Seq()): DataFrame = asOf match {
+    case None       => readAt(m, statFilters = statFilters)
+    case Some(snap) => scanSnapshot(m, snap, lineage = false, _ => true,
+      statFilters, snapshotSchema = true)
   }
 
   private def readWithLineage(m: TableMetadata, snap: Snapshot): DataFrame =
@@ -1389,7 +1398,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
     // hit resolution goes through the SAME pruned candidate set the scan
     // used (cache hits), never snap.dataFiles — forcing the full file
     // table here would undo the chunk-scoped CoW on a 10M-file table
-    val hit = touchedFiles(snap.files.candidates(m, _ => true, filters), touched)
+    val hit = touchedFiles(snap.files.candidates(m.currentSchema, _ => true, filters), touched)
     // V3 row lineage: carried AND updated rows keep their `_row_id` (the
     // row's identity survives an update — that's what lineage is for);
     // updated rows null their `_last_updated_sequence_number` so the
@@ -1439,7 +1448,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
       .map(r => IceLite.canonicalUri(r.getString(0))).toSet
     if (touched.isEmpty) return
     // pruned candidates, not snap.dataFiles — see updateCow
-    val hit = touchedFiles(snap.files.candidates(m, _ => true, filters), touched)
+    val hit = touchedFiles(snap.files.candidates(m.currentSchema, _ => true, filters), touched)
     // V3 row lineage: the surviving (carried) rows keep their ids —
     // materialized into the rewritten files
     val hitDf = readRowLineageAt(m, snap.copy(dataFiles = hit))
@@ -1865,7 +1874,7 @@ class IceLiteTable(val spark: SparkSession, val location: String,
         if (touched.isEmpty) Seq()
         else touchedFiles(
           if (notMatchedBySource.nonEmpty) snap.dataFiles
-          else snap.files.candidates(m, _ => true, keyRange), touched)
+          else snap.files.candidates(m.currentSchema, _ => true, keyRange), touched)
       val rewritten = if (hit.isEmpty) None else {
         // V3 row lineage rides the rewrite: kept rows keep both columns,
         // updated rows keep `_row_id` (the row's identity survives its

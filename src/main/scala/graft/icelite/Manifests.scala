@@ -95,11 +95,11 @@ final class FileListing private (
     * summary refutes a filter, is skipped WITHOUT loading its entries),
     * then the surviving chunks' entries plus the tail. Callers re-apply
     * the same predicates per file — this is a superset, never a miss. */
-  def candidates(m: TableMetadata, prune: Map[String, String] => Boolean,
+  def candidates(schema: TableSchema, prune: Map[String, String] => Boolean,
       statFilters: Seq[Stats.StatFilter]): Seq[DataFile] = {
     val live = manifests.filter { r =>
       r.partitions.forall(_.exists(prune)) &&
-        statFilters.forall(f => Stats.summaryMayContain(r.stats, m.currentSchema, f))
+        statFilters.forall(f => Stats.summaryMayContain(r.stats, schema, f))
     }
     live.flatMap(io.read) ++ tail
   }

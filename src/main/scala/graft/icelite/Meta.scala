@@ -238,6 +238,10 @@ final case class TableMetadata(
       case (None, None) => sys.error(s"no snapshot $id")
     }
   }
+  /** TIMESTAMP AS OF: the latest snapshot committed at or before `ms`. */
+  def snapshotAt(ms: Long): Snapshot =
+    snapshots.filter(_.timestampMs <= ms).maxByOption(_.id)
+      .getOrElse(sys.error(s"no snapshot at or before $ms"))
 }
 
 object TableMetadata {

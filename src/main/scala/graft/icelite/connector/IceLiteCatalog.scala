@@ -84,17 +84,11 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Procedure
     new IceLiteSparkTable(load(ident), None)
   }
 
-  /** VERSION AS OF <snapshotId> (README.md:1007). */
-  /** `VERSION AS OF <n | 'ref'>`: a numeric version is a snapshot id; a
-    * string names a branch or tag (Iceberg's ref time travel). */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val t = load(ident)
-    val snapId = version.toLongOption.getOrElse {
-      t.meta.refs.getOrElse(version,
-        sys.error(s"no branch or tag '$version' on ${ident.name}")).snapshotId
-    }
-    new IceLiteSparkTable(t, Some(Left(snapId)))
-  }
+  /** `VERSION AS OF <n | 'ref'>` (README.md:1007): a numeric version is a
+    * snapshot id; a string names a branch or tag (Iceberg's ref time
+    * travel), resolved against the table's pinned metadata. */
+  override def loadTable(ident: Identifier, version: String): Table =
+    new IceLiteSparkTable(load(ident), Some(Left(version)))
 
   /** TIMESTAMP AS OF — Spark hands micros since epoch (README.md:1010). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table =

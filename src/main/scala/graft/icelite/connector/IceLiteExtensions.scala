@@ -2,11 +2,13 @@ package graft.icelite.connector
 
 import graft.icelite.IceLiteTable
 import org.apache.spark.sql.{Column, Row, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, CommonExpressionRef, EqualTo, Expression, RuntimeReplaceable, With}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.graft.SparkShims
 
@@ -23,17 +25,18 @@ import org.apache.spark.sql.graft.SparkShims
   *   WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
   * }}}
   *
-  * Two post-hoc resolution rules, in order:
-  *  1. [[IceLiteDmlRule]] — rewrites resolved UPDATE/DELETE/MERGE plans over
-  *     IceLite relations into runnable commands delegating to the table's
-  *     copy-on-write / merge-on-read DML (the analyzer-extension route the
-  *     DSv2 row-level API also ends at, without its group-coordination
-  *     machinery — our DML already rewrites only touched files).
-  *  2. [[IceLiteReadSubstitution]] — splices the table's native parquet
-  *     scan plan in place of the DSv2 relation for READS, so SQL queries
-  *     keep parquet vectorization, pushed filters and whole-stage codegen
-  *     instead of crossing the V1 `df.rdd` bridge (row-by-row
-  *     InternalRow→Row→InternalRow — ~3× slower at sf0.1).
+  * Two injections:
+  *  1. [[IceLiteDmlRule]] (post-hoc resolution) — rewrites resolved
+  *     UPDATE/DELETE/MERGE plans over IceLite relations into runnable
+  *     commands delegating to the table's copy-on-write / merge-on-read DML
+  *     (the analyzer-extension route the DSv2 row-level API also ends at,
+  *     without its group-coordination machinery — our DML already rewrites
+  *     only touched files).
+  *  2. [[IceLiteScanStrategy]] (planner) — plans a pushed-down
+  *     [[IceLiteScan]] as the table's own parquet scan, so SQL reads keep
+  *     manifest pruning, parquet vectorization, pushed filters and
+  *     whole-stage codegen. A session without it fails such a read loudly
+  *     (`IceLiteScan.toBatch`).
   */
 class IceLiteExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -41,7 +44,7 @@ class IceLiteExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPostHocResolutionRule(_ => IceLiteDmlRule)
-    ext.injectPostHocResolutionRule(_ => IceLiteReadSubstitution)
+    ext.injectPlannerStrategy(_ => IceLiteScanStrategy)
     // the library's native expressions, injected at session build so ANY
     // SQL user of a graft-extended session has them — the per-query
     // register() calls stay for sessions built without the extension
@@ -106,9 +109,8 @@ object IceLiteDmlRule extends Rule[LogicalPlan] {
     * clauses, and the error says so. */
   private val MaxInSubqueryValues = 1000000
 
-  /** Re-express a resolved expression against the table's own DataFrame:
-    * strip qualifiers (they name the catalog relation, not the scan) and
-    * round-trip through SQL text so attribute ids re-resolve. Covers every
+  /** Re-express a resolved expression against the table's own DataFrame
+    * ([[IceLiteScan.rebind]]: attributes re-bind by name). Covers every
     * deterministic scalar condition/assignment. UNCORRELATED subqueries
     * (`WHERE id IN (SELECT …)`, scalar comparisons) are materialized here —
     * the command runs eagerly anyway, so evaluating the subquery at
@@ -140,25 +142,10 @@ object IceLiteDmlRule extends Rule[LogicalPlan] {
     }
     require(!noSub.exists(_.isInstanceOf[SubqueryExpression]),
       s"this subquery shape is unsupported in IceLite DML conditions: ${e.sql}")
-    // Spark 4 resolves BETWEEN into a RuntimeReplaceable whose replacement
-    // is a `With` binding the input once; its common-expression nodes
-    // cannot be re-resolved after the rebinding below. Substitute such
-    // replacements and inline each With, as the optimizer would later
-    val plain = noSub.transformDown {
-      case r: RuntimeReplaceable if r.replacement.exists(_.isInstanceOf[With]) => r.replacement
-    }.transformUp {
-      case w: With =>
-        val defs = w.defs.map(d => d.id -> d.child).toMap
-        w.child.transform { case r: CommonExpressionRef => defs(r.id) }
-    }
-    // re-bind attributes by NAME (they resolve against the table's own
-    // scan) and wrap the tree directly — NOT a .sql text round-trip,
-    // which would render a materialized IN-set of up to 10^6 literals
-    // into a multi-megabyte string and feed it back through the parser
-    SparkShims.columnOf(plain.transform {
-      case a: AttributeReference =>
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
-    })
+    // re-bind by NAME and wrap the tree directly — NOT a .sql text
+    // round-trip, which would render a materialized IN-set of up to 10^6
+    // literals into a multi-megabyte string and feed it back through the parser
+    IceLiteScan.rebind(noSub)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
@@ -236,38 +223,25 @@ object IceLiteDmlRule extends Rule[LogicalPlan] {
   }
 }
 
-/** Replaces read-position IceLite DSv2 relations with the table's own
-  * analyzed parquet scan plan (aliased onto the relation's attribute ids).
-  * The result is a plain FileSourceScan: Catalyst pushes filters and
-  * prunes columns into the parquet reader, rows stay columnar, and the
-  * whole query compiles into whole-stage codegen. Write targets
-  * (AppendData et al. keep `table` out of `children`) and DML nodes
-  * (consumed by [[IceLiteDmlRule]] first) are never substituted.
-  *
-  * Scale note: the spliced plan enumerates the snapshot's files from the
-  * manifest (no directory listing); data skipping happens per-task via
-  * parquet row-group stats. The programmatic `IceLiteTable.read(statFilters)`
-  * path additionally prunes whole files driver-side from manifest stats —
-  * at 100 TB, pair a selective SQL predicate with a partitioned table so
-  * partition values land in the file paths Spark prunes natively.
-  */
-object IceLiteReadSubstitution extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = substitute(plan)
-
-  private def substitute(p: LogicalPlan): LogicalPlan = p match {
-    // DML nodes that survive (non-IceLite targets): leave the target
-    // relation alone; IceLite ones were already rewritten to commands.
-    case d: DeleteFromTable => d
-    case u: UpdateTable     => u
-    case m: MergeIntoTable  =>
-      m.copy(sourceTable = substitute(m.sourceTable))
-    case r: DataSourceV2Relation if r.table.isInstanceOf[IceLiteSparkTable] =>
-      val tbl = r.table.asInstanceOf[IceLiteSparkTable]
-      val scan = SparkShims.analyzedPlan(tbl.baseDf)
-      Project(
-        r.output.zip(scan.output).map { case (o, a) =>
+/** Plans a DSv2 scan relation over an [[IceLiteScan]] as the scan's own
+  * optimized plan (a FileSourceScan with the pushed predicates, under the
+  * merge-on-read filters), aliased onto the relation's attribute ids, with
+  * the projections and residual filters above it — the operator chain
+  * Spark's own DSv2 strategy would otherwise claim for a `BatchScanExec`.
+  * A planner strategy, not an optimizer rule: the extension API's optimizer
+  * hooks run before Spark's V2 pushdown, so no logical rule sees the
+  * pushed scan. */
+object IceLiteScanStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalOperation(projects, filters, r: DataSourceV2ScanRelation) => r.scan match {
+      case s: IceLiteScan =>
+        val scan = ProjectExec(r.output.zip(s.plan.output).map { case (o, a) =>
           Alias(a, o.name)(exprId = o.exprId, qualifier = o.qualifier)
-        }, scan)
-    case other => other.mapChildren(substitute)
+        }, planLater(s.plan))
+        val filtered = filters.reduceOption(And).fold[SparkPlan](scan)(FilterExec(_, scan))
+        (if (projects == r.output) filtered else ProjectExec(projects, filtered)) :: Nil
+      case _ => Nil
+    }
+    case _ => Nil
   }
 }

@@ -2,33 +2,52 @@ package graft.icelite.connector
 
 import java.util
 
-import graft.icelite.IceLiteTable
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import graft.icelite.{IceLite, IceLiteTable, Snapshot, TableMetadata}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.graft.SparkShims
+import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
-/** DSv2 Table over an IceLite table, reading/writing through the V1
-  * fallback bridges (V1Scan / V1Write).
+/** DSv2 Table over an IceLite table, pinned to the metadata version it was
+  * loaded at: schema, columns, properties, the AS OF snapshot and every
+  * scan read that one version, so a SQL read sees the snapshot it was
+  * analyzed against however many commits land before it runs.
   *
-  * Read path: pushed filters and column pruning are translated back onto
-  * the library's DataFrame scan — which is a parquet scan, so the
-  * predicates continue down into the parquet reader (PushedFilters) and
-  * manifest pruning applies for identity-partition equality. All pushed
-  * filters are also reported back as residuals, so Spark re-applies them:
-  * translation gaps cost performance only, never correctness.
+  * Read path: Spark's V2 pushdown hands the scan builder the query's
+  * predicates and required columns, and the [[IceLiteScan]] it builds is
+  * planned by [[IceLiteScanStrategy]] as the table's own parquet scan
+  * (manifest stat pruning, merge-on-read deletes, PushedFilters,
+  * whole-stage codegen). Every pushed predicate is also reported back as a
+  * residual, so Spark re-applies it: a predicate the stats cannot use costs
+  * performance only, never correctness. Write path: SQL INSERT crosses
+  * `V1Write` into `tbl.append` / `tbl.overwrite` with the whole DataFrame —
+  * the library's one batch write.
   *
-  * `asOf`: Left(snapshotId) for VERSION AS OF, Right(tsMillis) for
-  * TIMESTAMP AS OF.
+  * `asOf`: Left(version) for VERSION AS OF (a snapshot id, else a branch
+  * or tag name), Right(tsMillis) for TIMESTAMP AS OF.
   */
-class IceLiteSparkTable(tbl: IceLiteTable, asOf: Option[Either[Long, Long]])
+class IceLiteSparkTable(tbl: IceLiteTable, asOf: Option[Either[String, Long]])
     extends Table with SupportsRead with SupportsWrite {
+
+  /** The one metadata version this relation reads. */
+  private val pinned: TableMetadata = tbl.meta
+
+  /** The AS OF snapshot, resolved against [[pinned]]; None reads the
+    * current snapshot. */
+  private val asOfSnapshot: Option[Snapshot] = asOf.map {
+    case Left(version) => pinned.snapshot(version.toLongOption.getOrElse(
+      pinned.refs.getOrElse(version,
+        sys.error(s"no branch or tag '$version' on ${tbl.location}")).snapshotId))
+    case Right(tsMillis) => pinned.snapshotAt(tsMillis)
+  }
 
   /** The engine-side table handle — IceLiteDmlRule delegates SQL
     * UPDATE/DELETE/MERGE here. */
@@ -36,24 +55,12 @@ class IceLiteSparkTable(tbl: IceLiteTable, asOf: Option[Either[Long, Long]])
 
   override def name(): String = tbl.location
 
-  private def resolvedSchema: graft.icelite.TableSchema = {
-    // time travel projects the SNAPSHOT's schema (the engine's
-    // snapshot-scoped-schema semantics, IceLiteTable.readAsOf) — the
-    // relation must advertise the SAME columns or post-evolution
-    // VERSION/TIMESTAMP AS OF reads fail analysis on the schema mismatch
-    val m = tbl.meta
-    asOf match {
-      case None => m.currentSchema
-      case Some(sel) =>
-        val snap = sel match {
-          case Left(id) => m.snapshot(id)
-          case Right(ts) => m.snapshots.filter(_.timestampMs <= ts)
-            .maxByOption(_.id)
-            .getOrElse(sys.error(s"no snapshot at or before $ts"))
-        }
-        if (snap.schemaId >= 0) m.schema(snap.schemaId) else m.currentSchema
-    }
-  }
+  // time travel projects the SNAPSHOT's schema (the engine's
+  // snapshot-scoped-schema semantics, IceLiteTable.readAsOf) — the
+  // relation must advertise the SAME columns or post-evolution
+  // VERSION/TIMESTAMP AS OF reads fail analysis on the schema mismatch
+  private def resolvedSchema: graft.icelite.TableSchema =
+    asOfSnapshot.filter(_.schemaId >= 0).fold(pinned.currentSchema)(s => pinned.schema(s.schemaId))
 
   override def schema(): StructType =
     StructType(resolvedSchema.fields.map(f =>
@@ -85,98 +92,33 @@ class IceLiteSparkTable(tbl: IceLiteTable, asOf: Option[Either[Long, Long]])
     }.toArray
   }
 
-  override def properties(): util.Map[String, String] = tbl.meta.properties.asJava
+  override def properties(): util.Map[String, String] = pinned.properties.asJava
 
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE).asJava
 
-  /** The snapshot scan this relation reads (honoring AS OF) —
-    * IceLiteReadSubstitution splices its analyzed plan into SQL queries. */
-  def baseDf: DataFrame = asOf match {
-    case None                  => tbl.read()
-    case Some(Left(snapshot))  => tbl.readAsOf(snapshot)
-    case Some(Right(tsMillis)) => tbl.readAsOfTimestamp(tsMillis)
-  }
-
-  /** sources.Filter → Column for the common shapes; None = not translated
-    * (Spark re-applies it post-scan anyway). */
-  private def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = f match {
-    case sources.EqualTo(a, v)            => Some(col(a) === v)
-    case sources.GreaterThan(a, v)        => Some(col(a) > v)
-    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= v)
-    case sources.LessThan(a, v)           => Some(col(a) < v)
-    case sources.LessThanOrEqual(a, v)    => Some(col(a) <= v)
-    case sources.In(a, vs)                => Some(col(a).isInCollection(vs.toSeq))
-    case sources.IsNull(a)                => Some(col(a).isNull)
-    case sources.IsNotNull(a)             => Some(col(a).isNotNull)
-    case sources.StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case sources.And(l, r) =>
-      for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-    case sources.Or(l, r) =>
-      for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-    case sources.Not(c) => toColumn(c).map(!_)
-    case _              => None
-  }
-
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-      private var pushed: Array[Filter] = Array.empty
+    new ScanBuilder with SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns {
+      private var pushed: Seq[Expression] = Seq()
       private var required: StructType = schema()
 
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+      override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
         pushed = filters
         filters // everything is also a residual — correctness never depends on us
       }
-      override def pushedFilters(): Array[Filter] = pushed
-      // keep an EMPTY required schema too: count(*) prunes to zero
-      // columns, and honoring that spares the V1 row bridge from
-      // deserializing every column of a wide table just to count rows
+      override def pushedFilters: Array[Predicate] =
+        pushed.flatMap(SparkShims.v2Predicate).toArray
+      // top-level columns only: a nested-pruned struct would not match the
+      // full struct the scan reads. An EMPTY required schema stays empty
+      // (count(*) reads no column)
       override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
+        required = StructType(requiredSchema.fieldNames.map(schema()(_)))
 
-      /** Pushed comparison filters double as manifest stat-pruners: the
-        * file list shrinks on the driver before Spark lists anything. */
-      private def toStatFilters(fs: Array[Filter]): Seq[graft.icelite.Stats.StatFilter] = {
-        import graft.icelite.Stats._
-        fs.toSeq.flatMap {
-          case sources.EqualTo(a, v)            => Seq(Eq(a, v))
-          case sources.GreaterThan(a, v)        => Seq(Gt(a, v))
-          case sources.GreaterThanOrEqual(a, v) => Seq(Ge(a, v))
-          case sources.LessThan(a, v)           => Seq(Lt(a, v))
-          case sources.LessThanOrEqual(a, v)    => Seq(Le(a, v))
-          case sources.And(l, r)                => toStatFilters(Array(l, r))
-          case _                                => Seq()
-        }
-      }
-
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        /** `spark.readStream.table(...)`: the snapshot log serves as the
-          * offset ledger — appended rows per micro-batch, checkpoint-
-          * recovered, pruned to the required columns. Time travel and
-          * streams don't compose (a pinned past cannot grow). */
-        override def toMicroBatchStream(checkpointLocation: String)
-            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-          require(asOf.isEmpty, "icelite stream: cannot stream VERSION/TIMESTAMP AS OF")
-          new IceLiteMicroBatchStream(tbl.location, required,
-            options.asScala.toMap)
-        }
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val statPruned = asOf match {
-            case None => tbl.read(statFilters = toStatFilters(pushed))
-            case _    => baseDf // time-travel reads skip stat pruning (rare path)
-          }
-          val filtered = pushed.flatMap(toColumn).foldLeft(statPruned)(_ filter _)
-          // empty required = zero-column projection (count-style scans)
-          val projected =
-            filtered.select(required.fields.map(f => col(f.name)).toSeq: _*)
-          new IceLiteV1Relation(context, required, projected).asInstanceOf[T]
-        }
-      }
+      override def build(): Scan =
+        new IceLiteScan(tbl, pinned, asOfSnapshot, pushed, required, options.asScala.toMap)
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -203,8 +145,74 @@ class IceLiteSparkTable(tbl: IceLiteTable, asOf: Option[Either[Long, Long]])
     }
 }
 
-class IceLiteV1Relation(
-    val sqlContext: SQLContext, override val schema: StructType, df: DataFrame)
-    extends BaseRelation with TableScan {
-  override def buildScan(): RDD[Row] = df.rdd
+/** The one IceLite read: a pinned snapshot (current or AS OF), the
+  * predicates Spark pushed and the columns the query needs. A batch read
+  * is planned by [[IceLiteScanStrategy]] as [[plan]]; a stream read gets
+  * [[toMicroBatchStream]]. */
+class IceLiteScan(tbl: IceLiteTable, m: TableMetadata, asOf: Option[Snapshot],
+    pushed: Seq[Expression], required: StructType, options: Map[String, String])
+    extends Scan with SupportsReportStatistics {
+
+  override def readSchema(): StructType = required
+
+  /** The optimized plan of the snapshot scan, manifest-pruned by the pushed
+    * predicates' stat filters, filtered by them (parquet gets them as
+    * PushedFilters) and projected to the required columns. Built once, so
+    * statistics, planning and AQE re-planning all see the same plan. */
+  lazy val plan: LogicalPlan = {
+    val conds = pushed.map(IceLiteScan.rebind)
+    val statFilters = conds.flatMap(IceLite.statFiltersFromCondition)
+    conds.foldLeft(tbl.readSnapshotAt(m, asOf, statFilters))(_ filter _)
+      .select(required.fieldNames.map(n => SparkShims.columnOf(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(n))).toSeq: _*)
+      .queryExecution.optimizedPlan
+  }
+
+  /** The inner plan's own estimate, so joins size this side by its files
+    * rather than by `spark.sql.defaultSizeInBytes`. */
+  override def estimateStatistics(): Statistics = {
+    val st = plan.stats
+    new Statistics {
+      override def sizeInBytes(): util.OptionalLong =
+        util.OptionalLong.of(st.sizeInBytes.min(Long.MaxValue).toLong)
+      override def numRows(): util.OptionalLong =
+        st.rowCount.fold(util.OptionalLong.empty())(n => util.OptionalLong.of(n.toLong))
+    }
+  }
+
+  override def toBatch: Batch = throw new UnsupportedOperationException(
+    s"IceLite table ${tbl.location}: SQL batch reads are planned by the session " +
+      "extension; set spark.sql.extensions=graft.icelite.connector.IceLiteExtensions")
+
+  /** `spark.readStream.table(...)`: the snapshot log serves as the
+    * offset ledger — appended rows per micro-batch, checkpoint-
+    * recovered, pruned to the required columns. Time travel and
+    * streams don't compose (a pinned past cannot grow). */
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    require(asOf.isEmpty, "icelite stream: cannot stream VERSION/TIMESTAMP AS OF")
+    new IceLiteMicroBatchStream(tbl.location, required, options)
+  }
+}
+
+object IceLiteScan {
+  /** A resolved expression as a Column over the table's own scan: each
+    * attribute re-binds by NAME (the ids belong to the catalog relation),
+    * and Spark 4's BETWEEN — a RuntimeReplaceable whose replacement is a
+    * `With` binding the input once — is inlined first, as the optimizer
+    * would, because its common-expression refs cannot re-resolve. */
+  private[connector] def rebind(e: Expression): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CommonExpressionRef, RuntimeReplaceable, With}
+    val plain = e.transformDown {
+      case r: RuntimeReplaceable if r.replacement.exists(_.isInstanceOf[With]) => r.replacement
+    }.transformUp {
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transform { case r: CommonExpressionRef => defs(r.id) }
+    }
+    SparkShims.columnOf(plain.transform {
+      case a: AttributeReference =>
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
+    })
+  }
 }

@@ -16,8 +16,8 @@ object SparkShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
-  /** The analyzed logical plan under a DataFrame (for splicing an IceLite
-    * scan into a SQL query plan). */
+  /** The analyzed logical plan under a DataFrame (for re-rooting a frame
+    * in another session). */
   def analyzedPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataset[Row]].queryExecution.analyzed
 
@@ -43,6 +43,12 @@ object SparkShims {
   def literalValue(v: Any, dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.connector.expressions.Literal[Any] =
     org.apache.spark.sql.connector.expressions.LiteralValue(v, dt)
+
+  /** A Catalyst predicate as the DSv2 Predicate a scan builder reports as
+    * pushed — the translator is `private[sql]`. */
+  def v2Predicate(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[org.apache.spark.sql.connector.expressions.filter.Predicate] =
+    org.apache.spark.sql.execution.datasources.v2.DataSourceV2Strategy.translateFilterV2(e)
 
   /** Drain the listener bus — lets tests assert "zero jobs ran" without
     * racing event delivery. */

@@ -83,6 +83,25 @@ class DataSkippingSpec extends SparkSpec {
         f.relation.location.inputFiles.length }
     assert(nFiles.exists(n => n < total), s"no pruning: $nFiles of $total")
     assert(pruned.filter(col("id") >= 350).count() == 50)
+    // the SQL query's own executed scan lists fewer files than the snapshot
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def sqlScanFiles(q: String, rows: Long): Seq[Int] = {
+      val df = spark.sql(q)
+      assert(df.collect().head.getLong(0) == rows, q)
+      helper.collect(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.inputFiles.length }
+    }
+    val sqlFiles = sqlScanFiles("SELECT count(*) FROM ilskip.db.t WHERE id >= 350", 50)
+    assert(sqlFiles.nonEmpty && sqlFiles.forall(_ < total),
+      s"SQL read planned $sqlFiles of $total files")
+    // time travel prunes against the snapshot's own manifests
+    val v = t.meta.currentSnapshot.get.id
+    spark.sql("INSERT INTO ilskip.db.t SELECT id, id*1.0 FROM range(400, 500)")
+    val asOfFiles =
+      sqlScanFiles(s"SELECT count(*) FROM ilskip.db.t VERSION AS OF $v WHERE id >= 350", 50)
+    assert(asOfFiles.nonEmpty && asOfFiles.forall(_ < total),
+      s"VERSION AS OF read planned $asOfFiles of $total files")
   }
 
   test("CoW DML conditions translate to manifest stat filters") {

@@ -529,4 +529,95 @@ class SqlCatalogSpec extends SparkSpec {
     assert(messages(e).exists(m => m != null && m.contains("db.table")),
       s"expected a 'db.table' format hint, got: ${e.getMessage}")
   }
+
+  test("a SQL read returns the snapshot it was analyzed against") {
+    initCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ilsql.pin")
+    spark.sql("CREATE TABLE ilsql.pin.t (id BIGINT)")
+    spark.sql("INSERT INTO ilsql.pin.t SELECT id FROM range(5)")
+    val df = spark.sql("SELECT id FROM ilsql.pin.t WHERE id >= 0")
+    spark.sql("INSERT INTO ilsql.pin.t SELECT id FROM range(5, 10)")
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L),
+      "the read must not move to a snapshot committed after analysis")
+    assert(spark.sql("SELECT count(*) FROM ilsql.pin.t").head.getLong(0) == 10)
+  }
+
+  test("IceLite tables as DML sources: MERGE USING a table, DELETE with an IN subquery over one") {
+    initCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ilsql.src")
+    spark.sql("CREATE TABLE ilsql.src.a (id BIGINT, v DOUBLE)")
+    spark.sql("CREATE TABLE ilsql.src.b (id BIGINT, v DOUBLE)")
+    spark.sql("INSERT INTO ilsql.src.a SELECT id, 1.0 FROM range(10)")
+    spark.sql("INSERT INTO ilsql.src.b SELECT id, 2.0 FROM range(5, 15)")
+    spark.sql("""MERGE INTO ilsql.src.a AS t USING ilsql.src.b AS s ON t.id = s.id
+                 WHEN MATCHED THEN UPDATE SET v = s.v
+                 WHEN NOT MATCHED THEN INSERT *""")
+    def rows = spark.sql("SELECT id, v FROM ilsql.src.a ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(rows == (0L until 15L).map(i => (i, if (i < 5) 1.0 else 2.0)), s"got $rows")
+    spark.sql(
+      "DELETE FROM ilsql.src.a WHERE id IN (SELECT id FROM ilsql.src.b WHERE id >= 12)")
+    assert(rows == (0L until 12L).map(i => (i, if (i < 5) 1.0 else 2.0)), s"got $rows")
+  }
+
+  test("merge-on-read SQL reads equal the library read and run no more jobs") {
+    initCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ilsql.mor")
+    spark.sql("""CREATE TABLE ilsql.mor.t (id BIGINT, v DOUBLE)
+                 TBLPROPERTIES ('write.delete.mode'='merge-on-read')""")
+    spark.sql("INSERT INTO ilsql.mor.t SELECT id, id * 0.5 FROM range(200)")
+    spark.sql("DELETE FROM ilsql.mor.t WHERE id % 7 = 0") // parquet position deletes
+    spark.sql("ALTER TABLE ilsql.mor.t SET TBLPROPERTIES ('write.delete.vector.enabled'='true')")
+    spark.sql("DELETE FROM ilsql.mor.t WHERE id % 11 = 0") // Puffin deletion vectors
+    val t = new graft.icelite.Catalog(spark, wh).loadTable("mor", "t")
+    import spark.implicits._
+    t.deleteEq(Seq(1L, 2L, 3L).toDF("id"))                 // equality deletes
+    val kinds = t.meta.currentSnapshot.get.deleteFiles
+    assert(kinds.exists(_.kind == "eq") && kinds.exists(_.path.endsWith(".puffin")) &&
+      kinds.exists(d => d.kind != "eq" && d.path.endsWith(".parquet")), s"delete files $kinds")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+    val want = sorted(t.read())
+    assert(want.map(_._1) == (4L until 200L).filterNot(i => i % 7 == 0 || i % 11 == 0),
+      s"library read kept ${want.size} rows")
+    assert(sorted(spark.sql("SELECT * FROM ilsql.mor.t")) == want)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val lib = jobsOf(t.read().collect())
+    val sql = jobsOf(spark.sql("SELECT * FROM ilsql.mor.t").collect())
+    assert(sql <= lib, s"SQL read ran $sql jobs, the library read $lib")
+  }
+
+  test("a SQL join sizes an IceLite side by its files and broadcasts it") {
+    initCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ilsql.stats")
+    spark.sql("CREATE TABLE ilsql.stats.small (id BIGINT, tag STRING)")
+    spark.sql("INSERT INTO ilsql.stats.small VALUES (1, 'a'), (500000, 'b'), (999999, 'c')")
+    val df = spark.sql("""SELECT s.tag, r.id FROM ilsql.stats.small s
+                          JOIN range(1000000) r ON s.id = r.id""")
+    assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("a", "b", "c"))
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val joins = helper.collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, s"expected one broadcast hash join:\n${df.queryExecution.executedPlan}")
+    val build = if (joins.head.buildSide == BuildLeft) joins.head.left else joins.head.right
+    assert(helper.collect(build) { case f: FileSourceScanExec => f }.nonEmpty,
+      s"the broadcast side is not the IceLite scan:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("without the session extension a SQL batch read fails naming it") {
+    initCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS ilsql.noext")
+    spark.sql("CREATE TABLE ilsql.noext.t (id BIGINT)")
+    val cat = new graft.icelite.connector.IceLiteCatalog()
+    cat.initialize("ilsql_noext", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("warehouse", wh)))
+    val scan = cat.loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array("noext"), "t"))
+      .asInstanceOf[graft.icelite.connector.IceLiteSparkTable]
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+    val e = intercept[UnsupportedOperationException](scan.toBatch)
+    assert(e.getMessage.contains("spark.sql.extensions=graft.icelite.connector.IceLiteExtensions"),
+      e.getMessage)
+  }
 }
